@@ -154,10 +154,24 @@ def staging_buckets(spark: SparkSession) -> int:
     parallelism by default (local[4] oracle runs get 4, the bench's
     local[N] gets N, a cluster gets its core count), overridable with
     $SPARK_GRAFT_STAGING_BUCKETS for production layouts where buckets
-    should track data volume rather than momentary cluster width."""
+    should track data volume rather than momentary cluster width.  An
+    override that is not an integer of at least 1 warns and falls back
+    to the default."""
     env = os.environ.get("SPARK_GRAFT_STAGING_BUCKETS")
     if env:
-        return int(env)
+        try:
+            n = int(env)
+        except ValueError:
+            n = 0
+        if n >= 1:
+            return n
+        import warnings
+
+        warnings.warn(
+            f"SPARK_GRAFT_STAGING_BUCKETS={env!r} is not a positive "
+            "integer; using defaultParallelism",
+            stacklevel=2,
+        )
     return int(spark.sparkContext.defaultParallelism)
 
 

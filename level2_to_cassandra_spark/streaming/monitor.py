@@ -8,15 +8,16 @@ whether any carried a broken upsert key.  This module wraps any
 ``foreachBatch`` sink callback to append one audit row per
 (batch, table) to a parquet metrics table beside the sink.
 
-Cost model: the micro-batch is persisted once and both the sink write
-and the metrics aggregate read the cache — the standard foreachBatch
-multi-consumer idiom (Spark's own docs recommend it whenever a batch
-feeds more than one action).  The cache is bounded by the trigger size
-(maxFilesPerTrigger / maxOffsetsPerTrigger), not by table size, so it
-holds at any corpus scale.  (``Observation``-based metrics would avoid
-the cache entirely, but Spark does not deliver Observation results
-inside streaming foreachBatch callbacks — the listener that populates
-them never fires there; verified on Spark 4.)
+Cost model: the four counters are observed metrics
+(``DataFrame.observe``) on the batch handed to the sink, so they are
+computed inside the sink write's own job — no cache, no second job
+over the batch.  Spark delivers an ``Observation``'s result once the
+first action over the observed frame finishes, and does so inside
+``foreachBatch`` too: each callback gets a fresh ``Observation`` and
+reads it after the wrapped write returns.  The only other job per
+batch is the one-row journal append, built from a pandas frame that
+crosses to the JVM through Arrow (a Python list would go through a
+pickled Python RDD, several times slower per append).
 
 Delivery semantics: the metrics append runs AFTER the wrapped sink
 write succeeds, inside the same at-least-once foreachBatch attempt —
@@ -30,7 +31,8 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Window
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 #: audit-table schema (kept flat + scalar so any engine can read it)
@@ -55,43 +57,53 @@ def foreach_batch_with_metrics(
 ) -> Callable[[DataFrame, int], None]:
     """Wrap a foreachBatch callback with per-batch audit telemetry.
 
-    The batch is cached so the wrapped sink write and the metrics
-    aggregate share one source read (see module docstring for why
-    ``Observation`` cannot carry this in streaming callbacks).
+    ``inner`` receives the batch with the counters attached as observed
+    metrics (see module docstring), so it must run at least one action
+    over it, as every sink does; the counts cover the batch as
+    delivered, before the sink's upsert dedup.
     """
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            inner(batch_df, batch_id)
-            m = batch_df.agg(
+        obs = Observation()
+        inner(
+            batch_df.observe(
+                obs,
                 F.count(F.lit(1)).alias("n_rows"),
-                F.sum(
-                    F.when(F.col(key_col).isNull(), 1).otherwise(0)
-                ).alias("n_null_key"),
-                F.min(F.col(ts_col)).alias("min_event_ts"),
-                F.max(F.col(ts_col)).alias("max_event_ts"),
-            ).first()
-            row = batch_df.sparkSession.createDataFrame(
-                [
-                    (
-                        int(batch_id),
-                        table_suffix,
-                        int(m["n_rows"]),
-                        int(m["n_null_key"] or 0),
-                        m["min_event_ts"],
-                        m["max_event_ts"],
-                    )
-                ],
-                METRICS_SCHEMA,
-            )
-            row.coalesce(1).write.mode("append").parquet(
-                f"{metrics_path(base_path)}/{table_suffix}"
-            )
-        finally:
-            batch_df.unpersist()
+                F.count(F.when(F.col(key_col).isNull(), 1))
+                .alias("n_null_key"),
+                F.unix_micros(F.min(ts_col)).alias("min_us"),
+                F.unix_micros(F.max(ts_col)).alias("max_us"),
+            ),
+            batch_id,
+        )
+        m = _observed(obs)
+        row = pd.DataFrame({
+            "batch_id": [int(batch_id)],
+            "table_suffix": [table_suffix],
+            "n_rows": [m.get("n_rows", 0)],
+            "n_null_key": [m.get("n_null_key", 0)],
+            "min_event_ts": pd.to_datetime([m.get("min_us")], unit="us",
+                                           utc=True),
+            "max_event_ts": pd.to_datetime([m.get("max_us")], unit="us",
+                                           utc=True),
+        })
+        batch_df.sparkSession.createDataFrame(
+            row, METRICS_SCHEMA
+        ).coalesce(1).write.mode("append").parquet(
+            f"{metrics_path(base_path)}/{table_suffix}"
+        )
 
     return _write
+
+
+def _observed(obs: Observation) -> dict:
+    """An ``Observation``'s metrics, or ``{}`` when the optimizer pruned
+    the observed node: a batch it can prove empty (a local empty
+    relation) completes the observation with an empty row, which
+    ``Observation.get`` cannot convert."""
+    if obs._jo.getRow().length() == 0:
+        return {}
+    return obs.get
 
 
 def _read_journal(spark, path: str, schema: str) -> DataFrame:
@@ -163,9 +175,10 @@ def foreach_batch_with_drift(
     production ingest runs continuously: the alarm fires while the
     drifted batches are landing, not at the next offline audit.
 
-    Cost/delivery semantics are :func:`foreach_batch_with_metrics`'s:
-    the batch is persisted once and shared by the sink write and the
-    scoring aggregate (trigger-bounded cache); the audit append runs
+    Cost: the batch is persisted once and shared by the sink write and
+    the scoring aggregate (trigger-bounded cache; the scoring is a
+    join, which observed metrics cannot carry).  Delivery semantics
+    are :func:`foreach_batch_with_metrics`'s: the audit append runs
     after the wrapped write succeeds inside the same at-least-once
     attempt, so replayed batches duplicate their audit rows and
     readers dedup on ``(batch_id, key)``.  The reference relation is

@@ -44,9 +44,9 @@ class PipelineConfig:
     metrics: bool = False              # APP_METRICS: per-batch audit rows
     dlq: bool = False                  # APP_DLQ: quarantine malformed payloads
     #: micro-batch sizing — THE memory bound of the whole pipeline
-    #: (sink writes, the metrics cache, and state updates are all
-    #: per-batch): file sources cap files/trigger, Kafka caps
-    #: offsets/trigger.  None = Spark defaults (drain everything
+    #: (sink writes and state updates are both per-batch): file
+    #: sources cap files/trigger, Kafka caps offsets/trigger.
+    #: None = Spark defaults (drain everything
     #: available), the right call for bounded CI drains; a live
     #: deployment sets both.
     max_files_per_trigger: int | None = None   # TRIGGER_MAX_FILES
@@ -242,9 +242,9 @@ def build_streaming_pipeline(envelope: DataFrame, cfg: PipelineConfig,
                 foreach_batch_with_metrics,
             )
 
-            # metrics cost one persist + one small agg per micro-batch
-            # (monitor.py — Observation/observe() is unusable inside
-            # foreachBatch, so it cannot ride the sink write's action)
+            # the audit counters ride the sink write's own job as
+            # observed metrics; the only added job per micro-batch is
+            # the one-row journal append (monitor.py)
             callback = foreach_batch_with_metrics(
                 callback, cfg.out_path, suffix
             )

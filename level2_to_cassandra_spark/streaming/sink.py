@@ -13,8 +13,9 @@ Here the CI-testable default sink is parquet with the same semantics:
   provides one, e.g. a Kafka offset) — "last" must be a real ordering,
   not an accident of file layout;
 * ``partitionBy(topic)`` + ``repartition(symbol)`` +
-  ``sortWithinPartitions(time DESC)`` — the file-layout equivalent of
-  the Cassandra partition/clustering contract (main.rs:87-88);
+  ``sortWithinPartitions(topic, time DESC)`` — the file-layout
+  equivalent of the Cassandra partition/clustering contract
+  (main.rs:87-88);
 * dynamic per-topic routing falls out of partitionBy (the reference's
   DDL-per-topic, main.rs:90,148, becomes directory-per-topic).
 
@@ -131,6 +132,20 @@ def upsert_dedup(df: DataFrame, key: Sequence[str] = UPSERT_KEY) -> DataFrame:
     return latest_by_key(df, keys=list(key), order=_write_order(df))
 
 
+def upsert_layout(df: DataFrame) -> DataFrame:
+    """Last-write-wins dedup laid out for the sink: ONE hash exchange on
+    ``symbol`` feeds both the dedup window (clustered on the upsert key,
+    which a ``symbol`` partitioning already satisfies) and the file
+    layout, then each partition is sorted by (topic, time DESC).  The
+    leading ``topic`` is the writer's ``partitionBy`` order: without it
+    the writer re-sorts by topic and the time-descending order inside
+    each file is lost."""
+    return (
+        upsert_dedup(df.repartition("symbol"))
+        .sortWithinPartitions("topic", F.desc("time"))
+    )
+
+
 def write_upsert_parquet(df: DataFrame, path: str, table_suffix: str,
                          batch_id: int = 0) -> None:
     """Write one micro-batch (or batch) with the reference's layout
@@ -138,9 +153,7 @@ def write_upsert_parquet(df: DataFrame, path: str, table_suffix: str,
     ``{topic}_book`` / ``{topic}_tick`` naming; parquet append with
     in-batch key-dedup, cross-batch dedup happens at read."""
     (
-        upsert_dedup(df.withColumn(BATCH_COL, F.lit(batch_id)))
-        .repartition("topic", "symbol")
-        .sortWithinPartitions(F.desc("time"))
+        upsert_layout(df.withColumn(BATCH_COL, F.lit(batch_id)))
         .write.mode("append")
         .partitionBy("topic")
         .parquet(f"{path}/{table_suffix}")
@@ -213,23 +226,30 @@ def foreach_batch_cassandra(keyspace: str, table_suffix: str,
     pulled to the driver, and exceeding the ceiling raises."""
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        deduped = upsert_dedup(batch_df.withColumn(BATCH_COL, F.lit(batch_id)))
-        topics = [
-            r.topic
-            for r in deduped.select("topic").distinct()
-            .limit(MAX_SINK_TOPICS + 1).collect()
-        ]
-        if len(topics) > MAX_SINK_TOPICS:
-            raise ValueError(
-                f"micro-batch routes to more than {MAX_SINK_TOPICS} "
-                "distinct topics — topic column is unbounded or corrupt "
-                "(reference topics are a fixed config list)"
-            )
-        for topic in topics:
-            write_upsert_cassandra(
-                deduped.where(F.col("topic") == topic),
-                keyspace, topic, table_suffix, connector,
-            )
+        # one action per topic: cache the deduped batch so the batch's
+        # plan (for tick, the stateful running-sum update) runs once
+        deduped = upsert_dedup(
+            batch_df.withColumn(BATCH_COL, F.lit(batch_id))
+        ).persist()
+        try:
+            topics = [
+                r.topic
+                for r in deduped.select("topic").distinct()
+                .limit(MAX_SINK_TOPICS + 1).collect()
+            ]
+            if len(topics) > MAX_SINK_TOPICS:
+                raise ValueError(
+                    f"micro-batch routes to more than {MAX_SINK_TOPICS} "
+                    "distinct topics — topic column is unbounded or corrupt "
+                    "(reference topics are a fixed config list)"
+                )
+            for topic in topics:
+                write_upsert_cassandra(
+                    deduped.where(F.col("topic") == topic),
+                    keyspace, topic, table_suffix, connector,
+                )
+        finally:
+            deduped.unpersist()
 
     return _write
 
@@ -337,8 +357,8 @@ def compact_sink(spark, path: str, table_suffix: str,
     incremental), so batches appended AFTER a compaction still shadow
     compacted rows under the same ``_write_order`` — compaction is
     invisible to readers except in cost.  The rewrite re-applies the
-    layout contract (repartition by (topic, symbol), time-descending
-    within partitions, directory-partitioned by topic).
+    layout contract (:func:`upsert_layout`, directory-partitioned by
+    topic).
 
     Swap discipline — versioned dirs + manifest-pointer flip (the
     local twin of a table format's REPLACE commit):
@@ -389,12 +409,10 @@ def compact_sink(spark, path: str, table_suffix: str,
         # footer merging would either fail the base/append union or
         # silently drop the new column from pre-merge files — pass
         # True after a schema evolution (see read_sink_latest)
-        before = upsert_dedup(_read_sink_raw(spark, src, merge_schema))
         obs = Observation()
         (
-            before.observe(obs, F.count(F.lit(1)).alias("n"))
-            .repartition("topic", "symbol")
-            .sortWithinPartitions(F.desc("time"))
+            upsert_layout(_read_sink_raw(spark, src, merge_schema))
+            .observe(obs, F.count(F.lit(1)).alias("n"))
             .write.mode("overwrite")
             .partitionBy("topic")
             .parquet(f"{src}/{new_version}")

@@ -16,9 +16,9 @@ implement the deterministic intent: state scoped per (symbol, UTC day).
   This is also the ORACLE for the streaming form in tests.
 * :func:`cumulative_streaming` — ``applyInPandasWithState`` keyed by
   (symbol, day): state is two floats per key; day-in-the-key makes the
-  reset implicit (a new day is a new key, old keys expire via TTL
-  timeout).  Emits one output row per input row (update mode), exactly
-  like the reference's per-tick insert.
+  reset implicit (a new day is a new key; a key idle past its TTL
+  timeout is removed).  Emits one output row per input row (update
+  mode), exactly like the reference's per-tick insert.
 """
 
 from __future__ import annotations
@@ -76,99 +76,46 @@ def _with_day(ticks: DataFrame) -> DataFrame:
 
 def _cum_update_factory(ttl_ms: int | None):
     """Build the per-(symbol, day) state-update function: replay the
-    reference's per-tick fold (main.rs:122-130) over the micro-batch,
-    sorted by event time for in-batch determinism.  ``ttl_ms`` arms a
-    processing-time timeout that expires idle day keys (continuous
-    deployments); ``None`` leaves timeouts unset (bounded drains)."""
+    reference's per-tick fold (main.rs:122-130) over the key's rows of
+    the micro-batch, sorted by event time for in-batch determinism.
+    The rows arrive as one pandas frame per Arrow batch
+    (``spark.sql.execution.arrow.maxRecordsPerBatch``), so a hot key
+    spans several; they are concatenated and sorted once, or a later
+    chunk's earlier tick would be summed after a later one.
+
+    ``ttl_ms`` arms a processing-time timeout that expires idle day
+    keys (continuous deployments): a key that saw no tick for
+    ``ttl_ms`` is called once with no rows and ``hasTimedOut`` set,
+    and its state is removed with nothing emitted.  ``None`` leaves
+    timeouts unset (bounded drains)."""
 
     def _cum_update(
         key: tuple[Any, ...],
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            return
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        sort_cols = [c for c in ("time", "seq") if c in pdf.columns]
+        pdf = pdf.sort_values(sort_cols, kind="mergesort", ignore_index=True)
         cumbuy, cumsell = state.get if state.exists else (0, 0)
-        out = []
-        for pdf in pdfs:
-            sort_cols = [c for c in ("time", "seq") if c in pdf.columns]
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            buys = (pdf["trade_type"] == BUY) * pdf["volume"]
-            sells = (pdf["trade_type"] == SELL) * pdf["volume"]
-            pdf = pdf.copy()
-            pdf["cumbuy"] = (buys.cumsum() + cumbuy).astype("int64")
-            pdf["cumsell"] = (sells.cumsum() + cumsell).astype("int64")
-            pdf["cumdelta"] = pdf["cumbuy"] - pdf["cumsell"]
-            cumbuy = int(pdf["cumbuy"].iloc[-1])
-            cumsell = int(pdf["cumsell"].iloc[-1])
-            out.append(pdf)
-        state.update((cumbuy, cumsell))
+        buys = (pdf["trade_type"] == BUY) * pdf["volume"]
+        sells = (pdf["trade_type"] == SELL) * pdf["volume"]
+        pdf["cumbuy"] = (buys.cumsum() + cumbuy).astype("int64")
+        pdf["cumsell"] = (sells.cumsum() + cumsell).astype("int64")
+        pdf["cumdelta"] = pdf["cumbuy"] - pdf["cumsell"]
+        state.update((int(pdf["cumbuy"].iloc[-1]),
+                      int(pdf["cumsell"].iloc[-1])))
         if ttl_ms is not None:
             # Key = (symbol, day): a new day is a fresh key ⇒ implicit
-            # daily reset; expired days drop after ttl of no activity.
+            # daily reset; the old day's key times out after ttl_ms of
+            # no activity and is removed above.
             state.setTimeoutDuration(ttl_ms)
-        yield from out
+        yield pdf
 
     return _cum_update
-
-
-def cumulative_streaming_tws(ticks: DataFrame) -> DataFrame:
-    """Spark-4 ``transformWithStateInPandas`` form of
-    :func:`cumulative_streaming` — same semantics, newer state API
-    (explicit ValueState handle + TTL instead of GroupState timeouts).
-
-    NOTE: the TWS driver worker needs a functional ``google.protobuf``
-    Python package; environments without it (like this CI container)
-    fail at stream start with STREAMING_PYTHON_RUNNER_INITIALIZATION_
-    FAILURE — use :func:`cumulative_streaming` there.  The parity test
-    skips itself when protobuf is unavailable."""
-    from level2_to_cassandra_spark.session import ensure_package_on_workers
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    ensure_package_on_workers(ticks.sparkSession)
-    with_day = _with_day(ticks)
-    out_schema = T.StructType(
-        with_day.schema.fields
-        + [
-            T.StructField("cumbuy", T.LongType()),
-            T.StructField("cumsell", T.LongType()),
-            T.StructField("cumdelta", T.LongType()),
-        ]
-    )
-
-    class CumSum(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "cums", _STATE_SCHEMA, ttlDurationMs=36 * 3600 * 1000
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            cumbuy, cumsell = (
-                self._state.get() if self._state.exists() else (0, 0)
-            )
-            for pdf in rows:
-                sort_cols = [c for c in ("time", "seq") if c in pdf.columns]
-                pdf = pdf.sort_values(sort_cols, kind="mergesort").copy()
-                buys = (pdf["trade_type"] == BUY) * pdf["volume"]
-                sells = (pdf["trade_type"] == SELL) * pdf["volume"]
-                pdf["cumbuy"] = (buys.cumsum() + cumbuy).astype("int64")
-                pdf["cumsell"] = (sells.cumsum() + cumsell).astype("int64")
-                pdf["cumdelta"] = pdf["cumbuy"] - pdf["cumsell"]
-                cumbuy = int(pdf["cumbuy"].iloc[-1])
-                cumsell = int(pdf["cumsell"].iloc[-1])
-                yield pdf
-            self._state.update((cumbuy, cumsell))
-
-        def close(self) -> None:
-            pass
-
-    return with_day.groupBy("symbol", "day").transformWithStateInPandas(
-        statefulProcessor=CumSum(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
 
 
 def cumulative_streaming(ticks: DataFrame,
@@ -178,9 +125,10 @@ def cumulative_streaming(ticks: DataFrame,
     cumbuy/cumsell/cumdelta appended — update semantics, matching the
     reference's insert-per-tick (main.rs:155-165).
 
-    ``state_ttl_hours`` arms a processing-time timeout that expires
-    idle (symbol, day) keys — REQUIRED for continuous deployments or
-    state grows by one key per symbol per day forever.  Pass ``None``
+    ``state_ttl_hours`` arms a processing-time timeout that removes
+    (symbol, day) keys idle that long, emitting nothing for them —
+    REQUIRED for continuous deployments or state grows by one key per
+    symbol per day forever.  Pass ``None``
     for bounded ``availableNow`` drains: their state dies with the
     query, and pending processing-time timeouts would keep the drain
     alive in no-data state-cleanup micro-batches until the timeout

@@ -202,3 +202,22 @@ def test_documents_text_never_empty(spark):
         F.col("text").isNull() | (F.trim(F.col("text")) == "")
     ).count()
     assert bad == 0
+
+
+@pytest.mark.parametrize("raw", ["0", "-3", "four", "2.5"])
+def test_staging_buckets_rejects_bad_override(spark, monkeypatch, raw):
+    """$SPARK_GRAFT_STAGING_BUCKETS below 1 or not an integer warns and
+    falls back to defaultParallelism instead of reaching the writer."""
+    from level2_to_cassandra_spark.catalog import staging_buckets
+
+    monkeypatch.setenv("SPARK_GRAFT_STAGING_BUCKETS", raw)
+    with pytest.warns(UserWarning, match="SPARK_GRAFT_STAGING_BUCKETS"):
+        n = staging_buckets(spark)
+    assert n == spark.sparkContext.defaultParallelism
+
+
+def test_staging_buckets_honours_valid_override(spark, monkeypatch):
+    from level2_to_cassandra_spark.catalog import staging_buckets
+
+    monkeypatch.setenv("SPARK_GRAFT_STAGING_BUCKETS", "7")
+    assert staging_buckets(spark) == 7

@@ -1556,3 +1556,26 @@ def test_bucketed_staging_verify_copartitioned_at_scale(spark):
                 + tree)
             depth = updepth
     assert found >= 2  # both verify joins read the bucketed postings
+
+
+def test_sink_write_single_shuffle(spark):
+    """write_upsert_parquet writes ``sink.upsert_layout``: ONE hash
+    exchange on symbol feeds both the last-write-wins window (clustered
+    on the (symbol, time, price) key) and the (topic, time DESC) file
+    sort; the writer itself adds no exchange."""
+    from pyspark.sql import functions as F
+
+    from level2_to_cassandra_spark.streaming.sink import (
+        BATCH_COL,
+        upsert_layout,
+    )
+
+    batch = spark.range(100).selectExpr(
+        "IF(id % 2 = 0, 'btcusd', 'ethusd') AS topic",
+        "CAST(id % 7 AS string) AS symbol",
+        "timestamp_seconds(id % 13) AS time",
+        "CAST(id % 3 AS double) AS price", "id AS seq",
+    ).withColumn(BATCH_COL, F.lit(1))
+    plan = plan_of(upsert_layout(batch), "simple")
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "hashpartitioning(symbol#" in plan, plan

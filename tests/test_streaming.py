@@ -25,6 +25,7 @@ from level2_to_cassandra_spark.streaming.pipeline import (
     build_batch_pipeline,
     build_streaming_pipeline,
     tick_rows_batch,
+    tick_rows_streaming,
 )
 from level2_to_cassandra_spark.streaming.sink import read_sink_latest
 
@@ -295,6 +296,12 @@ def test_sink_file_layout_contract(spark, fixture_dir, tmp_path):
         p.name for p in pathlib.Path(path, "book").iterdir() if p.is_dir()
     }
     assert topics == {"topic=btcusd", "topic=ethusd"}
+    # clustering time DESC (main.rs:87-88): newest first in every file
+    import pyarrow.parquet as pq
+
+    for f in pathlib.Path(path, "book").glob("topic=*/*.parquet"):
+        times = pq.read_table(f).column("time").to_pylist()
+        assert times == sorted(times, reverse=True), f
 
 
 def test_observe_ingest_metrics_batch(spark, fixture_dir):
@@ -344,51 +351,114 @@ def test_observe_ingest_metrics_streaming(spark, fixture_dir, tmp_path):
     assert totals.get("n_malformed_tick") == 1
 
 
-def _protobuf_available() -> bool:
+def test_hot_key_running_sums_span_arrow_batches(spark, tmp_path):
+    """One (symbol, day) key with more rows in a trigger than
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` reaches the state
+    update as several pandas chunks; the running sums must still follow
+    event time across chunks.  Arrival order is the reverse of event
+    time, so summing chunk by chunk gives wrong values."""
+    import os
+
+    d = tmp_path / "hot"
+    d.mkdir()
+    lines = [
+        json.dumps({"topic": "btcusd", "msg_type": "TICK", "seq": seq,
+                    "payload": _tick("AAA", DAY1 + 60 * (30 - seq),
+                                     seq + 1, "BS"[seq % 3 == 0])})
+        for seq in range(30)
+    ]
+    (d / "part-000.jsonl").write_text("\n".join(lines))
+    os.utime(d / "part-000.jsonl")
+    cfg = PipelineConfig(mode="tick", out_path="", checkpoint="")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "4")
     try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithStateInPandas needs google.protobuf "
-    "(driver-worker RPC); unavailable in this container",
-)
-def test_transform_with_state_parity(spark, fixture_dir, tmp_path):
-    """The Spark-4 transformWithStateInPandas cumsum must equal the
-    batch window oracle, like the applyInPandasWithState form."""
-    from level2_to_cassandra_spark.streaming.state import (
-        cumulative_streaming_tws,
-    )
-
-    env = file_envelope_stream(spark, fixture_dir, max_files_per_trigger=1)
-    _, tick_raw, _ = ingest.demux(env)
-    ticks = ingest.parse_tick(tick_raw, extra_cols=("seq",))
-    out = cumulative_streaming_tws(ticks)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_sink")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "stream did not finish within 120s"
+        q = (
+            tick_rows_streaming(file_envelope_stream(spark, str(d)), cfg,
+                                state_ttl_hours=None)
+            .writeStream.format("memory")
+            .queryName("hot_key_sink")
+            .outputMode("update")
+            .option("checkpointLocation", str(tmp_path / "hot_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120), "stream did not finish within 120s"
+    finally:
+        spark.conf.set(key, saved)
     got = {
         int(r["seq"]): (r.cumbuy, r.cumsell, r.cumdelta)
-        for r in spark.sql("SELECT * FROM tws_sink").collect()
+        for r in spark.sql("SELECT * FROM hot_key_sink").collect()
     }
-    cfg = PipelineConfig(mode="tick", out_path="", checkpoint="")
-    batch = tick_rows_batch(file_envelope_batch(spark, fixture_dir), cfg)
     want = {
         int(r["seq"]): (r.cumbuy, r.cumsell, r.cumdelta)
-        for r in batch.collect()
+        for r in tick_rows_batch(file_envelope_batch(spark, str(d)),
+                                 cfg).collect()
     }
+    assert len(want) == 30
     assert got == want
+
+
+def _group_state(value, timed_out):
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    from level2_to_cassandra_spark.streaming.state import _STATE_SCHEMA
+
+    return GroupState(
+        optionalValue=value, batchProcessingTimeMs=1_000,
+        eventTimeWatermarkMs=-1,
+        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        hasTimedOut=timed_out, watermarkPresent=False,
+        defined=value is not None, updated=False, removed=False,
+        timeoutTimestamp=-1, keyAsUnsafe=b"", valueSchema=_STATE_SCHEMA,
+    )
+
+
+def test_cum_update_removes_timed_out_key():
+    """A (symbol, day) key idle past its TTL is called with no rows and
+    ``hasTimedOut`` set: its state is removed, nothing is emitted, and
+    no new timeout is armed (no Spark session needed)."""
+    from level2_to_cassandra_spark.streaming.state import (
+        _cum_update_factory,
+    )
+
+    st = _group_state((5, 3), timed_out=True)
+    out = list(_cum_update_factory(3_600_000)(("AAA", None), iter([]), st))
+    assert out == []
+    js = json.loads(st.json())
+    assert js["removed"] and not js["updated"] and not st.exists
+    assert js["timeoutTimestamp"] == -1
+
+
+def test_cum_update_sorts_across_chunks():
+    """The update function sorts a key's chunks as one frame: two
+    chunks whose event times interleave give the same running sums as
+    one sorted chunk, carried on from the stored state."""
+    import pandas as pd
+
+    from level2_to_cassandra_spark.streaming.state import (
+        _cum_update_factory,
+    )
+
+    def chunk(times, vols, types):
+        return pd.DataFrame({
+            "time": pd.to_datetime(times, unit="s"), "seq": times,
+            "volume": vols, "trade_type": types,
+        })
+
+    st = _group_state((5, 3), timed_out=False)
+    [out] = _cum_update_factory(3_600_000)(
+        ("AAA", None),
+        iter([chunk([30, 10], [3, 1], ["B", "S"]),
+              chunk([40, 20], [4, 2], ["S", "B"])]),
+        st,
+    )
+    assert list(out["seq"]) == [10, 20, 30, 40]
+    assert list(out["cumbuy"]) == [5, 7, 10, 10]
+    assert list(out["cumsell"]) == [4, 4, 4, 8]
+    assert st.get == (10, 8)
+    assert json.loads(st.json())["timeoutTimestamp"] == 3_601_000
 
 
 def test_rate_source_smoke(spark, tmp_path):
@@ -843,8 +913,8 @@ def test_compact_sink_dead_holder_lock_is_inert(spark, tmp_path):
 
 def test_ingest_metrics_audit_table(spark, fixture_dir, tmp_path):
     """APP_METRICS=1: every micro-batch appends one audit row per sink
-    table via monitor.py's persist + one small aggregate (Observation
-    is unusable inside foreachBatch) — the per-batch n_rows must sum
+    table, its counters observed on the sink write's own job
+    (monitor.py) — the per-batch n_rows must sum
     to the batch pipeline's pre-dedup input count, event-time bounds
     must match, and no upsert key is null."""
     from level2_to_cassandra_spark.streaming.monitor import read_metrics
@@ -876,6 +946,105 @@ def test_ingest_metrics_audit_table(spark, fixture_dir, tmp_path):
         hi = max(r.max_event_ts for r in m if r.max_event_ts)
         want = rows_df.agg(F.min("time"), F.max("time")).first()
         assert (lo, hi) == (want[0], want[1])
+
+
+def _static_batch(spark, rows):
+    return spark.createDataFrame(
+        rows, "topic string, symbol string, t long, price double, "
+        "volume long, seq long",
+    ).selectExpr("topic", "symbol", "timestamp_seconds(t) AS time",
+                 "price", "volume", "seq")
+
+
+def test_metrics_wrapper_observes_batch_before_dedup(spark, tmp_path):
+    """The audit counters ride the sink write as observed metrics: the
+    wrapped sink runs once, and the journal row counts the batch as
+    delivered — the duplicate upsert key twice, the null symbol once —
+    with its event-time range; the sink itself keeps the LWW winner."""
+    from level2_to_cassandra_spark.streaming.monitor import (
+        foreach_batch_with_metrics,
+        read_metrics,
+    )
+    from level2_to_cassandra_spark.streaming.sink import (
+        foreach_batch_upsert,
+    )
+
+    out = str(tmp_path / "sink")
+    batch = _static_batch(spark, [
+        ("btcusd", "AAA", DAY1, 1.0, 5, 0),
+        ("btcusd", "AAA", DAY1, 1.0, 6, 1),      # same key, later write
+        ("btcusd", None, DAY1 + 60, 2.0, 7, 2),  # broken upsert key
+        ("btcusd", "BBB", DAY2, 3.0, 8, 3),
+    ])
+    calls = []
+    write = foreach_batch_upsert(out, "tick")
+
+    def inner(df, batch_id):
+        calls.append(batch_id)
+        write(df, batch_id)
+
+    foreach_batch_with_metrics(inner, out, "tick")(batch, 7)
+    assert calls == [7]
+    [m] = read_metrics(spark, out, "tick").collect()
+    assert (m.batch_id, m.table_suffix, m.n_rows, m.n_null_key) == (
+        7, "tick", 4, 1)
+    want = batch.agg(F.min("time"), F.max("time")).first()
+    assert (m.min_event_ts, m.max_event_ts) == (want[0], want[1])
+    sink = read_sink_latest(spark, out, "tick")
+    assert sink.where("symbol = 'AAA'").first().volume == 6
+    assert sink.count() == 3
+
+
+def test_metrics_wrapper_over_cassandra_sink(spark, monkeypatch,
+                                             tmp_path):
+    """The Cassandra callback caches its deduped batch and runs one
+    action per topic; the observed counters still arrive once, from
+    the job that fills the cache."""
+    from level2_to_cassandra_spark.streaming import sink as S
+    from level2_to_cassandra_spark.streaming.monitor import (
+        foreach_batch_with_metrics,
+        read_metrics,
+    )
+
+    written = {}
+    monkeypatch.setattr(
+        S, "write_upsert_cassandra",
+        lambda df, ks, topic, suffix, connector=None:
+        written.setdefault(topic, df.count()),
+    )
+    out = str(tmp_path / "sink")
+    batch = _static_batch(spark, [
+        ("btcusd", "AAA", DAY1, 1.0, 5, 0),
+        ("btcusd", "AAA", DAY1, 1.0, 6, 1),
+        ("ethusd", None, DAY2, 2.0, 7, 2),
+    ])
+    foreach_batch_with_metrics(
+        S.foreach_batch_cassandra("ks", "tick"), out, "tick"
+    )(batch, 4)
+    assert written == {"btcusd": 1, "ethusd": 1}
+    [m] = read_metrics(spark, out, "tick").collect()
+    assert (m.batch_id, m.n_rows, m.n_null_key) == (4, 3, 1)
+
+
+def test_metrics_wrapper_empty_batch(spark, tmp_path):
+    """An empty batch still journals one row: zero counts, no event
+    time (the optimizer prunes the observed node of a provably empty
+    relation, which completes the Observation with an empty row)."""
+    from level2_to_cassandra_spark.streaming.monitor import (
+        foreach_batch_with_metrics,
+        read_metrics,
+    )
+    from level2_to_cassandra_spark.streaming.sink import (
+        foreach_batch_upsert,
+    )
+
+    out = str(tmp_path / "sink")
+    foreach_batch_with_metrics(
+        foreach_batch_upsert(out, "tick"), out, "tick"
+    )(_static_batch(spark, []), 0)
+    [m] = read_metrics(spark, out, "tick").collect()
+    assert (m.batch_id, m.n_rows, m.n_null_key) == (0, 0, 0)
+    assert m.min_event_ts is None and m.max_event_ts is None
 
 
 def test_metrics_config_from_env():
