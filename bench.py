@@ -587,18 +587,13 @@ def main() -> None:
     out_local = dict(out)
     out_local["queries_median"] = medians
     if "baseline" in out and isinstance(out.get("baseline"), dict):
+        # "baseline" is set only where the guarded block above parsed
+        # the file into bl_med and built the numeric common set
         bl_full = dict(out["baseline"])
-        bl_med_src = json.loads(bl_path.read_text()).get(
-            "queries_median", {})
-        common = [
-            n for n in names
-            if isinstance(medians.get(n), (int, float))
-            and isinstance(bl_med_src.get(n), (int, float))
-        ]
         bl_full["common_medians"] = {n: medians[n] for n in common}
         bl_full["common_ratios"] = {
-            n: round(medians[n] / bl_med_src[n], 3)
-            for n in common if bl_med_src[n]
+            n: round(medians[n] / bl_med[n], 3)
+            for n in common if bl_med[n]
         }
         out_local["baseline"] = bl_full
     if probe and probe_dir is not None:

@@ -9,12 +9,12 @@ Here the same semantics are Structured Streaming:
       → demux(msg_type)                       [main.rs:75-167]
       → from_json + explode (BOOK)            [main.rs:77, 95-104]
       → projection: prefix strip, epoch-s→ts  [main.rs:62-64, §1.4 q1]
-      → daily-reset cumsum per symbol         [main.rs:109-130]
-      → dropDuplicatesWithinWatermark         [upsert key semantics]
-      → foreachBatch upsert sink              [main.rs:96-104, 155-165]
+      → foreachBatch: daily-reset cumsum      [main.rs:109-130]
+        (the batch window + a carry of earlier batches' totals)
+      → upsert sink, last write wins          [main.rs:96-104, 155-165]
 
 All transformations are pure DataFrame→DataFrame functions usable on
-batch OR streaming inputs — stream/batch parity is by construction,
-and the batch window form of the cumsum is the test oracle for the
-stateful streaming form.
+batch OR streaming inputs — stream/batch parity is by construction: the
+stream's running sums run the batch pipeline's window, which is also
+the test oracle for them.
 """

@@ -5,7 +5,8 @@ Rust binaries; here they are three configurations of one engine
 (SURVEY.md A13).  ``build_batch_pipeline`` runs the identical
 transformations on a bounded DataFrame (used by tests as the parity
 oracle); ``build_streaming_pipeline`` starts the Structured Streaming
-queries.
+queries.  Both run the same tick running-sum window (``state.py``); the
+stream runs it per micro-batch in the tick query's callback.
 
 Env-var config surface mirrors the reference's (README.md:8-16 /
 docker-compose.yaml:6-15) where it makes sense: APP_MODE, TOPIC,
@@ -37,7 +38,6 @@ class PipelineConfig:
     topic_filter: str | None = None    # TOPIC subscribe prefix (A1)
     out_path: str = "/tmp/l2c_sink"    # parquet sink root / keyspace name
     checkpoint: str = "/tmp/l2c_ckpt"
-    watermark: str = "1 hour"          # late-data bound (fixes §1.4 q2/3)
     kafka: dict[str, str] = field(default_factory=dict)
     cassandra: dict[str, str] = field(default_factory=dict)
     sink: str = "parquet"              # "parquet" (CI) | "cassandra" (prod)
@@ -143,7 +143,6 @@ class PipelineConfig:
             out_path=e.get("KEYSPACE")
             or e.get("CASSANDRA_KEYSPACE", "/tmp/l2c_sink"),
             checkpoint=e.get("CHECKPOINT_DIR", "/tmp/l2c_ckpt"),
-            watermark=e.get("WATERMARK", "1 hour"),
             kafka=kafka,
             cassandra=cassandra,
             sink="cassandra" if cassandra else "parquet",
@@ -183,20 +182,17 @@ def tick_rows_batch(envelope: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 
 def tick_rows_streaming(envelope: DataFrame, cfg: PipelineConfig,
-                        state_ttl_hours: int | None = 36) -> DataFrame:
-    """Streaming form: parse + stateful per-(symbol,day) cumsum.  The
-    watermark bounds late data BEFORE the stateful op (late ticks past
-    it are dropped rather than corrupting day state — the deterministic
-    replacement for the reference's order-dependent reset).
-    ``state_ttl_hours`` — see :func:`state.cumulative_streaming`."""
+                        state_ttl_hours: int | None = None) -> DataFrame:
+    """Streaming form: parsed ticks plus their UTC ``day``, no state.
+    The tick callback (:func:`state.foreach_batch_running_sums`) adds
+    the running sums and owns the idle-key TTL, so ``state_ttl_hours``
+    is unused (kept for existing callers).  No tick is dropped for
+    lateness: a late tick continues its (symbol, day) sums."""
     env = _apply_topic_filter(envelope, cfg)
     _, tick_raw, _ = ingest.demux(env)
     extra = ("seq",) if "seq" in envelope.columns else ()
     ticks = ingest.parse_tick(tick_raw, extra_cols=extra)
-    return state.cumulative_streaming(
-        ticks.withWatermark("time", cfg.watermark),
-        state_ttl_hours=state_ttl_hours,
-    )
+    return ticks.withColumn("day", F.to_date("time"))
 
 
 def build_batch_pipeline(envelope: DataFrame,
@@ -219,15 +215,15 @@ def build_streaming_pipeline(envelope: DataFrame, cfg: PipelineConfig,
     passes False for continuous micro-batching.  Each query checkpoints
     independently — at-least-once into an idempotent keyed sink.
 
-    State TTL follows the trigger: continuous runs arm the 36 h idle
-    (symbol, day) key expiry; an ``availableNow`` drain runs without
-    timeouts, because its state dies with the query and a pending
-    processing-time timeout would hold the drain open in empty
-    state-cleanup micro-batches until the timeout fired.
+    The tick callback keeps its running-sum carry under the tick
+    query's checkpoint (a local path), so a later drain or restart over
+    the same checkpoint resumes the sums.  Continuous runs drop
+    (symbol, day) keys idle for 36 h; an ``availableNow`` drain keeps
+    every key it saw.
     """
     queries = []
 
-    def _start(df: DataFrame, suffix: str):
+    def _start(df: DataFrame, suffix: str, step=None):
         if cfg.sink == "cassandra":
             from level2_to_cassandra_spark.streaming.sink import (
                 foreach_batch_cassandra,
@@ -237,6 +233,8 @@ def build_streaming_pipeline(envelope: DataFrame, cfg: PipelineConfig,
                                                cfg.cassandra)
         else:
             callback = foreach_batch_upsert(cfg.out_path, suffix)
+        if step is not None:
+            callback = step(callback)
         if cfg.metrics:
             from level2_to_cassandra_spark.streaming.monitor import (
                 foreach_batch_with_metrics,
@@ -261,12 +259,11 @@ def build_streaming_pipeline(envelope: DataFrame, cfg: PipelineConfig,
         queries.append(_start(book_rows(envelope, cfg), "book"))
     if cfg.mode in ("tick", "full"):
         ttl = None if trigger_available_now else 36
-        queries.append(
-            _start(
-                tick_rows_streaming(envelope, cfg, state_ttl_hours=ttl),
-                "tick",
-            )
-        )
+        queries.append(_start(
+            tick_rows_streaming(envelope, cfg), "tick",
+            lambda sink: state.foreach_batch_running_sums(
+                sink, f"{cfg.checkpoint}/tick/carry", ttl_hours=ttl),
+        ))
     if cfg.dlq:
         # dead-letter quarantine (APP_DLQ): the reference only logs
         # malformed payloads and moves on (main.rs:224-229); this lands

@@ -1,4 +1,4 @@
-"""The reference's one stateful computation, in batch and streaming form.
+"""The reference's one stateful computation: one window, batch and stream.
 
 Reference (main.rs:107-130 / tick.rs:66-89): per-symbol running
 ``(cumbuy, cumsell)`` volume totals updated on every tick —
@@ -8,152 +8,154 @@ Reference (main.rs:107-130 / tick.rs:66-89): per-symbol running
 (per-event running value, not a final aggregate).
 
 The reference's reset is arrival-order-dependent (one global last-date
-shared across symbols; SURVEY.md §1.4 quirk 2).  Both forms below
-implement the deterministic intent: state scoped per (symbol, UTC day).
+shared across symbols; SURVEY.md §1.4 quirk 2).  Both forms implement
+the deterministic intent with ONE window partitioned by (symbol, UTC
+day) and ordered by event time (:func:`_running_sums`):
 
-* :func:`cumulative_batch` — window frame partitioned by
-  (symbol, day): one shuffle, in-partition sort, codegen'd running sum.
-  This is also the ORACLE for the streaming form in tests.
-* :func:`cumulative_streaming` — ``applyInPandasWithState`` keyed by
-  (symbol, day): state is two floats per key; day-in-the-key makes the
-  reset implicit (a new day is a new key; a key idle past its TTL
-  timeout is removed).  Emits one output row per input row (update
-  mode), exactly like the reference's per-tick insert.
+* :func:`cumulative_batch` — the window over a bounded frame; the
+  ORACLE for the streaming form in tests.
+* :func:`foreach_batch_running_sums` — a foreachBatch step in front of
+  the sink: the window over each micro-batch, offset by a broadcast
+  **carry** of each key's totals from earlier batches.  No state
+  operator: the carry is a pyarrow file per batch id, and the new
+  totals come back from the sink write as observed metrics.  Batch
+  ``N`` reads the newest version ``< N`` and writes ``N``, so a replay
+  recomputes identical sums and a restart resumes them.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+import datetime
+import json
+import os
+import re
+import time
 
-import pandas as pd
-
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from level2_to_cassandra_spark.streaming.monitor import _observed
 
 #: B/S match arms of the reference (main.rs:124-128).
 BUY, SELL = "B", "S"
+#: One carry row per (symbol, day) key: its totals after the batch that
+#: last touched it, and that batch's wall-clock ms (the idle TTL's clock).
+CARRY_SCHEMA = pa.schema([
+    ("symbol", pa.string()), ("day", pa.date32()), ("cumbuy", pa.int64()),
+    ("cumsell", pa.int64()), ("seen_ms", pa.int64()),
+])
+_VERSION = re.compile(r"(\d+)\.parquet")
+_LAST = "__last"
 
 
-def _conditional_cols():
-    buy = F.when(F.col("trade_type") == BUY, F.col("volume")).otherwise(F.lit(0))
-    sell = F.when(F.col("trade_type") == SELL, F.col("volume")).otherwise(F.lit(0))
-    return buy, sell
+def _running_sums(ticks: DataFrame, order_cols, carry_buy=0,
+                  carry_sell=0) -> DataFrame:
+    """Running per-(symbol, day) long sums over ``ticks`` (which has a
+    ``day`` column), each offset by its key's carried totals, plus a
+    flag on each key's last row from the same window."""
+    buy = F.when(F.col("trade_type") == BUY, F.col("volume")).otherwise(0)
+    sell = F.when(F.col("trade_type") == SELL, F.col("volume")).otherwise(0)
+    w = Window.partitionBy("symbol", "day").orderBy(*order_cols)
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    # one select, so all three share one Window operator
+    return ticks.select(
+        "*",
+        (F.sum(buy).over(run) + carry_buy).alias("cumbuy"),
+        (F.sum(sell).over(run) + carry_sell).alias("cumsell"),
+        F.lead(F.lit(1)).over(w).isNull().alias(_LAST),
+    ).withColumn("cumdelta", F.col("cumbuy") - F.col("cumsell"))
 
 
 def cumulative_batch(ticks: DataFrame,
                      order_cols: tuple[str, ...] = ("time",)) -> DataFrame:
     """Batch/deterministic form: running per-(symbol, day) sums emitted
-    per row.  ``order_cols`` should end with a unique tiebreaker when
-    exact-duplicate timestamps are possible."""
-    buy, sell = _conditional_cols()
-    w = (
-        Window.partitionBy("symbol", F.to_date("time"))
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        ticks.withColumn("cumbuy", F.sum(buy).over(w).cast("int"))
-        .withColumn("cumsell", F.sum(sell).over(w).cast("int"))
-        .withColumn("cumdelta", (F.col("cumbuy") - F.col("cumsell")).cast("int"))
-    )
+    per row, as the reference's i32.  ``order_cols`` should end with a
+    unique tiebreaker when exact-duplicate timestamps are possible."""
+    out = _running_sums(ticks.withColumn("day", F.to_date("time")),
+                        order_cols)
+    return out.select(*ticks.columns, *(
+        F.col(c).cast("int").alias(c)
+        for c in ("cumbuy", "cumsell", "cumdelta")))
 
 
-#: Streaming state: the reference's HashMap value tuple (i32, i32)
-#: (main.rs:207).
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("cumbuy", T.LongType()),
-        T.StructField("cumsell", T.LongType()),
-    ]
-)
+def _versions(carry_dir: str) -> list[int]:
+    names = os.listdir(carry_dir) if os.path.isdir(carry_dir) else ()
+    return sorted(int(m[1]) for m in map(_VERSION.fullmatch, names) if m)
 
 
-def _with_day(ticks: DataFrame) -> DataFrame:
-    return ticks.withColumn("day", F.to_date("time"))
+def read_carry(carry_dir: str, batch_id: int) -> pa.Table:
+    """The newest carry version older than ``batch_id`` (empty if none)."""
+    older = [v for v in _versions(carry_dir) if v < batch_id]
+    if not older:
+        return CARRY_SCHEMA.empty_table()
+    return pq.read_table(f"{carry_dir}/{older[-1]}.parquet",
+                         schema=CARRY_SCHEMA)
 
 
-def _cum_update_factory(ttl_ms: int | None):
-    """Build the per-(symbol, day) state-update function: replay the
-    reference's per-tick fold (main.rs:122-130) over the key's rows of
-    the micro-batch, sorted by event time for in-batch determinism.
-    The rows arrive as one pandas frame per Arrow batch
-    (``spark.sql.execution.arrow.maxRecordsPerBatch``), so a hot key
-    spans several; they are concatenated and sorted once, or a later
-    chunk's earlier tick would be summed after a later one.
-
-    ``ttl_ms`` arms a processing-time timeout that expires idle day
-    keys (continuous deployments): a key that saw no tick for
-    ``ttl_ms`` is called once with no rows and ``hasTimedOut`` set,
-    and its state is removed with nothing emitted.  ``None`` leaves
-    timeouts unset (bounded drains)."""
-
-    def _cum_update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        sort_cols = [c for c in ("time", "seq") if c in pdf.columns]
-        pdf = pdf.sort_values(sort_cols, kind="mergesort", ignore_index=True)
-        cumbuy, cumsell = state.get if state.exists else (0, 0)
-        buys = (pdf["trade_type"] == BUY) * pdf["volume"]
-        sells = (pdf["trade_type"] == SELL) * pdf["volume"]
-        pdf["cumbuy"] = (buys.cumsum() + cumbuy).astype("int64")
-        pdf["cumsell"] = (sells.cumsum() + cumsell).astype("int64")
-        pdf["cumdelta"] = pdf["cumbuy"] - pdf["cumsell"]
-        state.update((int(pdf["cumbuy"].iloc[-1]),
-                      int(pdf["cumsell"].iloc[-1])))
-        if ttl_ms is not None:
-            # Key = (symbol, day): a new day is a fresh key ⇒ implicit
-            # daily reset; the old day's key times out after ttl_ms of
-            # no activity and is removed above.
-            state.setTimeoutDuration(ttl_ms)
-        yield pdf
-
-    return _cum_update
+def write_carry(carry_dir: str, batch_id: int, carry: pa.Table) -> None:
+    """Publish ``carry`` as version ``batch_id`` (tmp file, then rename),
+    keeping it and the newest older version only.  A version that
+    already exists is the same batch's, written by an attempt that
+    failed before its commit, and is left as it is."""
+    os.makedirs(carry_dir, exist_ok=True)
+    path = f"{carry_dir}/{batch_id}.parquet"
+    if not os.path.exists(path):
+        pq.write_table(carry, f"{carry_dir}/.{batch_id}.tmp")
+        os.replace(f"{carry_dir}/.{batch_id}.tmp", path)
+    versions = _versions(carry_dir)
+    keep = {batch_id, *[v for v in versions if v < batch_id][-1:]}
+    for v in set(versions) - keep:
+        os.remove(f"{carry_dir}/{v}.parquet")
 
 
-def cumulative_streaming(ticks: DataFrame,
-                         state_ttl_hours: int | None = 36) -> DataFrame:
-    """Streaming form over a stream of parsed ticks (schema of
-    ingest.parse_tick).  Emits one row per input row with
-    cumbuy/cumsell/cumdelta appended — update semantics, matching the
-    reference's insert-per-tick (main.rs:155-165).
+def foreach_batch_running_sums(inner, carry_dir: str,
+                               ttl_hours: float | None = None):
+    """Wrap the tick query's foreachBatch sink callback ``inner``: hand
+    it each micro-batch (parsed ticks with a ``day`` column) with the
+    running sums appended, then merge the batch's per-key totals into
+    the carry kept under ``carry_dir``.
 
-    ``state_ttl_hours`` arms a processing-time timeout that removes
-    (symbol, day) keys idle that long, emitting nothing for them —
-    REQUIRED for continuous deployments or state grows by one key per
-    symbol per day forever.  Pass ``None``
-    for bounded ``availableNow`` drains: their state dies with the
-    query, and pending processing-time timeouts would keep the drain
-    alive in no-data state-cleanup micro-batches until the timeout
-    fires (hours later) instead of terminating."""
-    from level2_to_cassandra_spark.session import ensure_package_on_workers
+    The batch is hash-partitioned once by ``symbol``; the broadcast
+    carry join and the (symbol, day) window keep that partitioning, so
+    the sink's own ``repartition("symbol")`` adds no exchange.  Ticks
+    are summed in (time, seq) order within a batch and in batch order
+    across batches, so a late tick still continues its day's sums.
+    ``ttl_hours`` drops keys idle that long (wall clock) before the
+    join: continuous runs need it, or the carry grows by one key per
+    symbol per day; ``None`` keeps every key (bounded drains)."""
 
-    ensure_package_on_workers(ticks.sparkSession)
-    with_day = _with_day(ticks)
-    out_schema = T.StructType(
-        with_day.schema.fields
-        + [
-            T.StructField("cumbuy", T.LongType()),
-            T.StructField("cumsell", T.LongType()),
-            T.StructField("cumdelta", T.LongType()),
-        ]
-    )
-    ttl_ms = None if state_ttl_hours is None else state_ttl_hours * 3600 * 1000
-    return with_day.groupBy("symbol", "day").applyInPandasWithState(
-        _cum_update_factory(ttl_ms),
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if ttl_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
-    )
+    def _step(batch_df: DataFrame, batch_id: int) -> None:
+        now_ms = time.time_ns() // 1_000_000
+        carry = read_carry(carry_dir, batch_id)
+        if ttl_hours is not None:
+            carry = carry.filter(pc.greater_equal(
+                carry["seen_ms"], now_ms - int(ttl_hours * 3_600_000)))
+        ticks, offsets = batch_df.repartition("symbol"), ()
+        if carry.num_rows:
+            prior = batch_df.sparkSession.createDataFrame(carry.select(
+                ["symbol", "day", "cumbuy", "cumsell"]).rename_columns(
+                ["symbol", "day", "__buy0", "__sell0"]))
+            ticks = ticks.join(F.broadcast(prior), ["symbol", "day"], "left")
+            offsets = (F.coalesce("__buy0", F.lit(0)),
+                       F.coalesce("__sell0", F.lit(0)))
+        order = [c for c in ("time", "seq") if c in batch_df.columns]
+        obs = Observation()
+        key_totals = F.struct("symbol", "day", "cumbuy", "cumsell")
+        inner(
+            _running_sums(ticks, order, *offsets)
+            .observe(obs, F.to_json(F.collect_list(
+                F.when(F.col(_LAST), key_totals))).alias("totals"))
+            .select(*batch_df.columns, "cumbuy", "cumsell", "cumdelta"),
+            batch_id,
+        )
+        keyed = {(r["symbol"], r["day"]): r for r in carry.to_pylist()}
+        for t in json.loads(_observed(obs).get("totals") or "[]"):
+            day = datetime.date.fromisoformat(t["day"])
+            keyed[t["symbol"], day] = {**t, "day": day, "seen_ms": now_ms}
+        write_carry(carry_dir, batch_id, pa.Table.from_pylist(
+            list(keyed.values()), schema=CARRY_SCHEMA))
+
+    return _step

@@ -1579,3 +1579,50 @@ def test_sink_write_single_shuffle(spark):
     plan = plan_of(upsert_layout(batch), "simple")
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "hashpartitioning(symbol#" in plan, plan
+
+
+def test_tick_batch_write_single_shuffle(spark, tmp_path):
+    """The tick query's write (running-sum step, then the sink) runs on
+    ONE ``Exchange hashpartitioning(symbol``: the broadcast carry join
+    and the (symbol, day) window keep the step's partitioning, so the
+    sink's ``repartition("symbol")`` is already satisfied.  The carry is
+    broadcast only when it holds keys, and no Python runs in the plan:
+    no state operator, no Arrow UDF, and no Python-RDD scan (an empty
+    pandas carry would be one, forking a second worker pool)."""
+    from pyspark.sql import functions as F
+
+    from level2_to_cassandra_spark.streaming.sink import (
+        BATCH_COL,
+        foreach_batch_upsert,
+        upsert_layout,
+    )
+    from level2_to_cassandra_spark.streaming.state import (
+        foreach_batch_running_sums,
+    )
+
+    batch = spark.range(100).selectExpr(
+        "IF(id % 2 = 0, 'btcusd', 'ethusd') AS topic", "id AS seq",
+        "CAST(id % 7 AS string) AS symbol", "1.0 AS bid",
+        "CAST(id % 3 AS double) AS price", "1.1 AS ask",
+        "timestamp_seconds(1704067200 + id * 3000) AS time",
+        "CAST(id AS int) AS volume", "IF(id % 3 = 0, 'S', 'B') AS trade_type",
+    ).withColumn("day", F.to_date("time"))
+    write = foreach_batch_upsert(str(tmp_path / "sink"), "tick")
+    plans = []
+
+    def inner(df, batch_id):
+        plans.append(plan_of(
+            upsert_layout(df.withColumn(BATCH_COL, F.lit(batch_id))),
+            "extended"))
+        write(df, batch_id)
+
+    step = foreach_batch_running_sums(inner, str(tmp_path / "carry"))
+    step(batch, 0)      # no carry yet
+    step(batch, 1)      # carries batch 0's totals
+    for plan, carried in zip(plans, (False, True)):
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert "Exchange hashpartitioning(symbol#" in plan, plan
+        assert ("BroadcastExchange" in plan) == carried, plan
+        for op in ("FlatMapGroupsInPandasWithState", "ArrowEvalPython",
+                   "MapInPandas", "ExistingRDD", "LogicalRDD"):
+            assert op not in plan, (op, plan)

@@ -188,10 +188,8 @@ def test_arrival_order_invariance(spark, fixture_dir, tmp_path):
 
 def test_available_now_drain_terminates(spark, fixture_dir, tmp_path):
     """A bounded availableNow drain must actually TERMINATE, not idle
-    in state-cleanup micro-batches: with a processing-time TTL armed,
-    the stateful tick query used to stay active waiting on timeouts
-    hours away (availableNow runs do not arm the TTL since their state
-    dies with the query)."""
+    in empty micro-batches (a stateful tick query with a processing-time
+    timeout armed would wait on timeouts hours away)."""
     import time
 
     cfg = PipelineConfig(mode="full", out_path=str(tmp_path / "sink"),
@@ -353,11 +351,16 @@ def test_observe_ingest_metrics_streaming(spark, fixture_dir, tmp_path):
 
 def test_hot_key_running_sums_span_arrow_batches(spark, tmp_path):
     """One (symbol, day) key with more rows in a trigger than
-    ``spark.sql.execution.arrow.maxRecordsPerBatch`` reaches the state
-    update as several pandas chunks; the running sums must still follow
-    event time across chunks.  Arrival order is the reverse of event
-    time, so summing chunk by chunk gives wrong values."""
+    ``spark.sql.execution.arrow.maxRecordsPerBatch``: the tick
+    callback's running sums must follow event time across the whole
+    trigger, however the batch is chunked.  Arrival order is the
+    reverse of event time, so summing chunk by chunk gives wrong
+    values."""
     import os
+
+    from level2_to_cassandra_spark.streaming.state import (
+        foreach_batch_running_sums,
+    )
 
     d = tmp_path / "hot"
     d.mkdir()
@@ -373,13 +376,14 @@ def test_hot_key_running_sums_span_arrow_batches(spark, tmp_path):
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     saved = spark.conf.get(key)
     spark.conf.set(key, "4")
+    rows = []
     try:
         q = (
             tick_rows_streaming(file_envelope_stream(spark, str(d)), cfg,
                                 state_ttl_hours=None)
-            .writeStream.format("memory")
-            .queryName("hot_key_sink")
-            .outputMode("update")
+            .writeStream.foreachBatch(foreach_batch_running_sums(
+                lambda df, _: rows.extend(df.collect()),
+                str(tmp_path / "hot_carry")))
             .option("checkpointLocation", str(tmp_path / "hot_ckpt"))
             .trigger(availableNow=True)
             .start()
@@ -389,7 +393,7 @@ def test_hot_key_running_sums_span_arrow_batches(spark, tmp_path):
         spark.conf.set(key, saved)
     got = {
         int(r["seq"]): (r.cumbuy, r.cumsell, r.cumdelta)
-        for r in spark.sql("SELECT * FROM hot_key_sink").collect()
+        for r in rows
     }
     want = {
         int(r["seq"]): (r.cumbuy, r.cumsell, r.cumdelta)
@@ -400,81 +404,253 @@ def test_hot_key_running_sums_span_arrow_batches(spark, tmp_path):
     assert got == want
 
 
-def _group_state(value, timed_out):
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+@pytest.mark.parametrize("ttl_hours", [None, 36])
+def test_late_tick_continues_day_sums(spark, tmp_path, ttl_hours):
+    """A tick 25 h behind the stream is neither dropped nor reset: it
+    continues its (symbol, day) running sums exactly as the batch
+    oracle computes them, whether or not the idle-key TTL is armed."""
+    import os
+    import time as _time
 
-    from level2_to_cassandra_spark.streaming.state import _STATE_SCHEMA
-
-    return GroupState(
-        optionalValue=value, batchProcessingTimeMs=1_000,
-        eventTimeWatermarkMs=-1,
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        hasTimedOut=timed_out, watermarkPresent=False,
-        defined=value is not None, updated=False, removed=False,
-        timeoutTimestamp=-1, keyAsUnsafe=b"", valueSchema=_STATE_SCHEMA,
+    from level2_to_cassandra_spark.streaming.sink import (
+        foreach_batch_upsert,
     )
-
-
-def test_cum_update_removes_timed_out_key():
-    """A (symbol, day) key idle past its TTL is called with no rows and
-    ``hasTimedOut`` set: its state is removed, nothing is emitted, and
-    no new timeout is armed (no Spark session needed)."""
     from level2_to_cassandra_spark.streaming.state import (
-        _cum_update_factory,
+        foreach_batch_running_sums,
     )
 
-    st = _group_state((5, 3), timed_out=True)
-    out = list(_cum_update_factory(3_600_000)(("AAA", None), iter([]), st))
-    assert out == []
-    js = json.loads(st.json())
-    assert js["removed"] and not js["updated"] and not st.exists
-    assert js["timeoutTimestamp"] == -1
+    d = tmp_path / "wire"
+    d.mkdir()
+    files = [
+        [_tick("AAA", DAY1, 10, "B"), _tick("AAA", DAY1 + 60, 4, "S")],
+        [_tick("AAA", DAY2 + 3600, 1, "B")],
+        [_tick("AAA", DAY1 + 120, 5, "B")],   # late by 25 h
+    ]
+    now, seq = _time.time(), 0
+    for i, ticks in enumerate(files):
+        lines = []
+        for payload in ticks:
+            lines.append(json.dumps({"topic": "btcusd", "msg_type": "TICK",
+                                     "payload": payload, "seq": seq}))
+            seq += 1
+        p = d / f"part-{i:03d}.jsonl"
+        p.write_text("\n".join(lines))
+        os.utime(p, (now + i * 10, now + i * 10))
+    out = str(tmp_path / "sink")
+    cfg = PipelineConfig(mode="tick", out_path=out, checkpoint="")
+    q = (
+        tick_rows_streaming(file_envelope_stream(
+            spark, str(d), max_files_per_trigger=1), cfg)
+        .writeStream.foreachBatch(foreach_batch_running_sums(
+            foreach_batch_upsert(out, "tick"), str(tmp_path / "carry"),
+            ttl_hours=ttl_hours))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120), "stream did not finish within 120s"
+    assert q.lastProgress["batchId"] == 2
+
+    def sums(df):
+        return {int(r["seq"]): (r.cumbuy, r.cumsell, r.cumdelta)
+                for r in df.collect()}
+
+    got = sums(read_sink_latest(spark, out, "tick"))
+    assert got == sums(tick_rows_batch(file_envelope_batch(spark, str(d)),
+                                       cfg))
+    assert got[3] == (15, 4, 11)
 
 
-def test_cum_update_sorts_across_chunks():
-    """The update function sorts a key's chunks as one frame: two
-    chunks whose event times interleave give the same running sums as
-    one sorted chunk, carried on from the stored state."""
+def _tick_batch(spark, rows):
+    """Parsed ticks as the tick callback receives them, from
+    (symbol, epoch s, volume, type, seq) rows."""
     import pandas as pd
 
+    pdf = pd.DataFrame(rows, columns=["symbol", "t", "volume",
+                                      "trade_type", "seq"])
+    return spark.createDataFrame(
+        pdf, "symbol string, t long, volume int, trade_type string, "
+        "seq long",
+    ).selectExpr(
+        "'btcusd' AS topic", "seq", "symbol", "1.0 AS bid",
+        "CAST(seq AS double) AS price", "1.1 AS ask",
+        "timestamp_seconds(t) AS time", "volume", "trade_type",
+        "to_date(timestamp_seconds(t)) AS day",
+    )
+
+
+def _carry_rows(carry_dir, batch_id):
+    from level2_to_cassandra_spark.streaming.state import read_carry
+
+    return sorted(
+        (r["symbol"], str(r["day"]), r["cumbuy"], r["cumsell"])
+        for r in read_carry(carry_dir, batch_id).to_pylist()
+    )
+
+
+def _write_carry_version(carry_dir, version, rows):
+    """Write carry version ``version`` from (symbol, day, buy, sell,
+    seen_ms) rows, bypassing the writer's pruning."""
+    import datetime
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from level2_to_cassandra_spark.streaming.state import CARRY_SCHEMA
+
+    os.makedirs(carry_dir, exist_ok=True)
+    pq.write_table(pa.Table.from_pylist([
+        {"symbol": s, "day": datetime.date.fromisoformat(d), "cumbuy": b,
+         "cumsell": c, "seen_ms": ms} for s, d, b, c, ms in rows
+    ], schema=CARRY_SCHEMA), f"{carry_dir}/{version}.parquet")
+
+
+def test_tick_callback_replay_is_idempotent(spark, tmp_path):
+    """A crash after the sink write and before the commit replays the
+    micro-batch under the same id: the replay hands the sink the same
+    rows (continuing the carry it read, not its own totals) and leaves
+    the same sink table and the same carry."""
+    from level2_to_cassandra_spark.streaming.sink import (
+        foreach_batch_upsert,
+    )
     from level2_to_cassandra_spark.streaming.state import (
-        _cum_update_factory,
+        foreach_batch_running_sums,
     )
 
-    def chunk(times, vols, types):
-        return pd.DataFrame({
-            "time": pd.to_datetime(times, unit="s"), "seq": times,
-            "volume": vols, "trade_type": types,
-        })
+    carry, out = str(tmp_path / "carry"), str(tmp_path / "sink")
+    _write_carry_version(carry, 4, [("AAA", "2024-01-01", 5, 3, 0)])
+    write = foreach_batch_upsert(out, "tick")
+    delivered = []
 
-    st = _group_state((5, 3), timed_out=False)
-    [out] = _cum_update_factory(3_600_000)(
-        ("AAA", None),
-        iter([chunk([30, 10], [3, 1], ["B", "S"]),
-              chunk([40, 20], [4, 2], ["S", "B"])]),
-        st,
+    def inner(df, batch_id):
+        delivered.append(sorted(map(tuple, df.drop("time").collect())))
+        write(df, batch_id)
+
+    step = foreach_batch_running_sums(inner, carry)
+    batch = _tick_batch(spark, [("AAA", DAY1 + 60, 2, "B", 0),
+                                ("AAA", DAY1, 1, "S", 1),
+                                ("BBB", DAY1, 7, "S", 2)])
+    after = []
+    for _ in range(2):
+        step(batch, 5)
+        after.append((
+            sorted(map(tuple, read_sink_latest(spark, out, "tick")
+                       .drop("time").collect())),
+            _carry_rows(carry, 6),
+        ))
+    assert delivered[0] == delivered[1]
+    assert after[0] == after[1]
+    assert after[0][1] == [("AAA", "2024-01-01", 7, 4),
+                           ("BBB", "2024-01-01", 0, 7)]
+    assert {(r[1], r[2], r[-3:]) for r in delivered[0]} == {
+        (0, "AAA", (7, 4, 3)), (1, "AAA", (5, 4, 1)),
+        (2, "BBB", (0, 7, -7)),
+    }
+
+
+def test_tick_callback_drops_idle_keys(spark, tmp_path):
+    """With the TTL armed, a (symbol, day) key idle past it leaves the
+    carry before the join: its next tick starts from zero, while a
+    recently seen key continues, and an idle key with no tick is not
+    written back."""
+    import time as _time
+
+    from level2_to_cassandra_spark.streaming.state import (
+        foreach_batch_running_sums,
     )
-    assert list(out["seq"]) == [10, 20, 30, 40]
-    assert list(out["cumbuy"]) == [5, 7, 10, 10]
-    assert list(out["cumsell"]) == [4, 4, 4, 8]
-    assert st.get == (10, 8)
-    assert json.loads(st.json())["timeoutTimestamp"] == 3_601_000
+
+    carry = str(tmp_path / "carry")
+    now_ms = _time.time_ns() // 1_000_000
+    hour = 3_600_000
+    _write_carry_version(carry, 0, [
+        ("AAA", "2024-01-01", 5, 3, now_ms - 37 * hour),
+        ("BBB", "2024-01-01", 2, 1, now_ms - hour),
+        ("CCC", "2024-01-01", 9, 9, now_ms - 37 * hour),
+    ])
+    rows = []
+    foreach_batch_running_sums(
+        lambda df, _: rows.extend(df.collect()), carry, ttl_hours=36,
+    )(_tick_batch(spark, [("AAA", DAY1, 2, "B", 0),
+                          ("BBB", DAY1, 1, "S", 1)]), 1)
+    assert {r.symbol: (r.cumbuy, r.cumsell) for r in rows} == {
+        "AAA": (2, 0), "BBB": (2, 2)}
+    assert _carry_rows(carry, 2) == [("AAA", "2024-01-01", 2, 0),
+                                     ("BBB", "2024-01-01", 2, 2)]
+
+
+def test_tick_callback_keeps_two_carry_versions(spark, tmp_path):
+    """Writing version N keeps N and N-1 only: older versions go, and
+    so does a stale version above N left by an earlier checkpoint."""
+    import os
+
+    from level2_to_cassandra_spark.streaming.state import (
+        foreach_batch_running_sums,
+    )
+
+    carry = str(tmp_path / "carry")
+    for v in (0, 1, 2, 3, 7):
+        _write_carry_version(carry, v, [("AAA", "2024-01-01", v, 0, 0)])
+    rows = []
+    foreach_batch_running_sums(lambda df, _: rows.extend(df.collect()),
+                               carry)(
+        _tick_batch(spark, [("AAA", DAY1, 2, "B", 0)]), 4)
+    assert [(r.cumbuy, r.cumsell) for r in rows] == [(5, 0)]
+    assert sorted(os.listdir(carry)) == ["3.parquet", "4.parquet"]
+
+
+def test_tick_callback_over_cassandra_sink_with_metrics(spark, monkeypatch,
+                                                        tmp_path):
+    """Under the APP_METRICS wrapper and the Cassandra sink (which
+    caches its batch and runs one action per topic), the sink still
+    receives the running sums, the audit row counts the batch and the
+    carry receives the batch's totals."""
+    from level2_to_cassandra_spark.streaming import sink as S
+    from level2_to_cassandra_spark.streaming.monitor import (
+        foreach_batch_with_metrics,
+        read_metrics,
+    )
+    from level2_to_cassandra_spark.streaming.state import (
+        foreach_batch_running_sums,
+    )
+
+    written = []
+    monkeypatch.setattr(
+        S, "write_upsert_cassandra",
+        lambda df, ks, topic, suffix, connector=None: written.extend(
+            df.select("seq", "cumbuy", "cumsell").collect()),
+    )
+    out, carry = str(tmp_path / "sink"), str(tmp_path / "carry")
+    _write_carry_version(carry, 2, [("AAA", "2024-01-01", 5, 3, 0)])
+    foreach_batch_with_metrics(
+        foreach_batch_running_sums(S.foreach_batch_cassandra("ks", "tick"),
+                                   carry),
+        out, "tick",
+    )(_tick_batch(spark, [("AAA", DAY1, 2, "B", 0),
+                          ("AAA", DAY1 + 60, 4, "S", 1)]), 3)
+    assert sorted(map(tuple, written)) == [(0, 7, 3), (1, 7, 7)]
+    [m] = read_metrics(spark, out, "tick").collect()
+    assert (m.batch_id, m.n_rows) == (3, 2)
+    assert _carry_rows(carry, 4) == [("AAA", "2024-01-01", 7, 7)]
 
 
 def test_rate_source_smoke(spark, tmp_path):
     """The rate envelope source emits valid TICK messages the full
     pipeline can parse — load-generation path stays wired."""
     from level2_to_cassandra_spark.sources import rate_envelope
-    from level2_to_cassandra_spark.streaming.state import cumulative_streaming
+    from level2_to_cassandra_spark.streaming.state import (
+        foreach_batch_running_sums,
+    )
 
     env = rate_envelope(spark, rows_per_second=50)
     _, tick_raw, _ = ingest.demux(env)
     ticks = ingest.parse_tick(tick_raw, extra_cols=("seq",))
-    out = cumulative_streaming(ticks)
+    out = ticks.withColumn("day", F.to_date("time"))
+    rows = []
     q = (
-        out.writeStream.format("memory")
-        .queryName("rate_sink")
-        .outputMode("update")
+        out.writeStream.foreachBatch(foreach_batch_running_sums(
+            lambda df, _: rows.extend(df.collect()),
+            str(tmp_path / "rate_carry"), ttl_hours=36))
         .option("checkpointLocation", str(tmp_path / "rate_ckpt"))
         .start()
     )
@@ -486,12 +662,12 @@ def test_rate_source_smoke(spark, tmp_path):
         deadline = _t.time() + 90
         n = 0
         while _t.time() < deadline:
-            n = spark.sql("SELECT count(*) AS n FROM rate_sink").first().n
+            n = len(rows)
             if n >= 20:
                 break
             _t.sleep(2)
         assert n >= 20
-        row = spark.sql("SELECT * FROM rate_sink").first()
+        row = rows[0]
         assert row.symbol.startswith("SYM")
         assert row.cumdelta == row.cumbuy - row.cumsell
     finally:
