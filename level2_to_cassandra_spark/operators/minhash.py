@@ -38,20 +38,8 @@ from level2_to_cassandra_spark.catalog import spread_scan
 #: re-sorts both branches.  The hint is applied ONLY on the staged
 #: path: an inline (unbucketed) build keeps the planner's choice.
 _CAND_SHUFFLE_HASH = True
+# The verify joins' SHUFFLE_HASH hint was rejected: see OPTIMIZATION_r17.md.
 
-#: Companion experiment flag for the VERIFY joins (measurement
-#: scripts only): hint the postings sides of the verification joins
-#: SHUFFLE_HASH so the doc-bucketed postings serve as per-task build
-#: sides (no broadcast, no per-task relation deserialization) and the
-#: candidate/expansion stream is exchanged to the bucket width.
-#: MEASURED AND REJECTED at fixture scale (r17, the 7th verify
-#: alternative): interleaved A/B read containment +37 %, fuzzy +31 %,
-#: minhash +40 %, sketch tie — shuffling the expansion rows costs
-#: more than the few-task broadcast probes while the postings still
-#: fit a broadcast.  Once they don't, the planner reaches the same
-#: co-partitioned shape off the bucketed layout WITHOUT the hint
-#: (plans/r17/*_at_scale_nobroadcast.txt), so the flag stays False.
-_VERIFY_SHUFFLE_HASH = False
 from level2_to_cassandra_spark.operators.text import (
     tokens,
     word_shingles_of,
@@ -265,8 +253,6 @@ def _verify_jaccard(postings: DataFrame, cand: DataFrame) -> DataFrame:
     from the join partitioning itself once the postings are too big
     to broadcast (the bucketed staging layout)."""
     pa, pb = postings.alias("pa"), postings.alias("pb")
-    if _VERIFY_SHUFFLE_HASH:  # measurement scripts only
-        pa, pb = pa.hint("shuffle_hash"), pb.hint("shuffle_hash")
     co = (
         pa
         .join(cand, F.col("pa.id") == F.col("id_a"))
@@ -834,8 +820,6 @@ def containment_pairs(docs: DataFrame, threshold: float,
         )
     )
     pa, pb = postings.alias("pa"), postings.alias("pb")
-    if _VERIFY_SHUFFLE_HASH:  # measurement scripts only
-        pa, pb = pa.hint("shuffle_hash"), pb.hint("shuffle_hash")
     co = (
         pa
         # NOT spread_keys-widened: each task of a broadcast-probe

@@ -4,8 +4,8 @@ signal is a per-message eprintln on failure, main.rs:224-229).
 
 A production ingest needs to answer, per micro-batch: how many rows
 landed, what event-time range they covered (watermark lag), and
-whether any carried a broken upsert key.  This module wraps any
-``foreachBatch`` sink callback to append one audit row per
+whether any carried a broken upsert key.  :func:`foreach_batch_with_metrics`
+wraps any ``foreachBatch`` sink callback to append one audit row per
 (batch, table) to a parquet metrics table beside the sink.
 
 Cost model: the four counters are observed metrics
@@ -19,12 +19,18 @@ batch is the one-row journal append, built from a pandas frame that
 crosses to the JVM through Arrow (a Python list would go through a
 pickled Python RDD, several times slower per append).
 
-Delivery semantics: the metrics append runs AFTER the wrapped sink
-write succeeds, inside the same at-least-once foreachBatch attempt —
-a replayed batch writes a second metrics row with the same batch_id
-(at-least-once telemetry over an idempotent data sink); readers
-aggregate with ``dropDuplicates(["batch_id"])`` as usual for audit
-logs.
+The data-quality gates and monitors below (drift, KS, embedding
+drift, covariance, outlier, vocabulary growth, shingle df, novelty,
+line dedup, quality, vote, mixture, classifier, URL dedup, grid
+rollup) are each one step function over :func:`_journaled`, which
+owns their delivery semantics; the metrics wrapper keeps the same
+contract — its append runs AFTER the wrapped sink write succeeds, and
+readers aggregate with ``dropDuplicates(["batch_id"])`` as usual for
+audit logs.  Every journal lives beside the sink under an
+underscore-prefixed directory (so directory-globbing readers of the
+data tables skip it), and every ``read_*`` reader returns an empty
+relation of the journal's pinned schema before the first delivered
+batch.
 """
 
 from __future__ import annotations
@@ -106,7 +112,90 @@ def _observed(obs: Observation) -> dict:
     return obs.get
 
 
-def _read_journal(spark, path: str, schema: str) -> DataFrame:
+#: Journal directories of the gates below, beside the sink.  Gates
+#: that score a named stream write one subdirectory per stream, so two
+#: streams sharing a base never interleave their batch_id sequences.
+_DRIFT = "_drift_metrics"
+_KS = "_ks_metrics"
+_EMBED_DRIFT = "_embed_drift_metrics"
+_COVARIANCE = "_covariance_state"
+_OUTLIERS = "_embed_outliers"
+_VOCAB = "_vocab_terms"
+_NOVELTY = "_novelty"
+_QUALITY = "_quality_gate"
+_VOTE = "_vote_gate"
+_MIXTURE = "_mixture"
+_CLASSIFIER = "_classifier_gate"
+_GRID = "_grid_rollup"
+
+#: replay key of the per-document journals
+_DOC_KEY = ("batch_id", "doc_id")
+
+
+def _journaled(
+    inner: Callable[[DataFrame, int], None],
+    step: Callable,
+) -> Callable[[DataFrame, int], None]:
+    """The at-least-once foreachBatch skeleton every gate shares.
+
+    Per batch: persist the batch, call ``step(batch, batch_id,
+    persist)`` for ``(admitted, appends)`` — the frame the sink
+    receives (the whole batch for a pure audit) and an ordered list of
+    journal appends (zero-argument callables) — run ``inner`` on
+    ``admitted``, then run the appends in order.  ``persist(df)``
+    caches a frame the step reads from more than one branch.  Every
+    frame persisted here is released in a ``finally``, whether the
+    write succeeds or raises.  The cache is trigger-bounded: the sink
+    write and the journal legs share one scan of the batch.
+
+    Delivery semantics (the foreachBatch contract of *Structured
+    Streaming*, SIGMOD 2018): the appends run only AFTER the wrapped
+    sink write succeeds, inside the same at-least-once attempt, so a
+    failed write journals nothing and the replayed batch re-runs the
+    whole step.  A step is a deterministic function of its batch and
+    of the journal rows of strictly earlier batches, so a replay
+    writes IDENTICAL rows under the same batch_id: readers collapse
+    them with ``dropDuplicates`` on the journal's replay key, and the
+    first-occurrence stores (:func:`_first_seen`) probe only rows of
+    earlier batches.  (The vocabulary store is the one journal read
+    without a batch filter; see :func:`foreach_batch_with_vocab_growth`.)
+    """
+
+    def _write(batch_df: DataFrame, batch_id: int) -> None:
+        cached = [batch_df.persist()]
+
+        def persist(df: DataFrame) -> DataFrame:
+            cached.append(df.persist())
+            return df
+
+        try:
+            admitted, appends = step(batch_df, int(batch_id), persist)
+            inner(admitted, batch_id)
+            for append in appends:
+                append()
+        finally:
+            for df in reversed(cached):
+                df.unpersist()
+
+    return _write
+
+
+def _append(df: DataFrame, path: str, one_file: bool = True):
+    """A journal append, deferred until the sink write succeeds.  An
+    audit journal gets one file per batch; a store or delta journal
+    keeps the frame's partitioning."""
+    if one_file:
+        df = df.coalesce(1)
+    return lambda: df.write.mode("append").parquet(path)
+
+
+def _bid(batch_id: int):
+    """The ``batch_id`` column every journal row carries."""
+    return F.lit(batch_id).cast("long").alias("batch_id")
+
+
+def _read_journal(spark, path: str, schema: str,
+                  keys: tuple[str, ...] | None = None) -> DataFrame:
     """Read a monitor journal/store directory with its pinned schema,
     or an EMPTY relation of that schema when no batch has been
     delivered yet — the SAME classifier the incremental-admit sinks
@@ -114,9 +203,9 @@ def _read_journal(spark, path: str, schema: str) -> DataFrame:
     the condition set cannot drift between the two reader families).
     Non-empty errors (permissions, transient FS, corrupt footer on a
     populated journal) re-raise — swallowing one would silently
-    report an empty monitor over a journal that exists (ADVICE r12:
-    the raw readers raised before the first delivered batch, unlike
-    the admit stores' graceful empty classification)."""
+    report an empty monitor over a journal that exists.  ``keys`` is
+    the journal's replay key: replayed batches' identical rows
+    collapse on it."""
     from pyspark.errors import AnalysisException
 
     from level2_to_cassandra_spark.operators.dedup import (
@@ -124,19 +213,99 @@ def _read_journal(spark, path: str, schema: str) -> DataFrame:
     )
 
     try:
-        return spark.read.schema(schema).parquet(path)
+        df = spark.read.schema(schema).parquet(path)
     except AnalysisException as e:
         if not is_empty_store_error(e):
             raise
-        return spark.createDataFrame([], schema)
+        df = spark.createDataFrame([], schema)
+    return df if keys is None else df.dropDuplicates(list(keys))
 
 
 def read_metrics(spark, base_path: str, table_suffix: str) -> DataFrame:
-    """Read the audit table for one sink table (empty before the
-    first delivered batch)."""
+    """Read the audit table for one sink table."""
     return _read_journal(
         spark, f"{metrics_path(base_path)}/{table_suffix}", METRICS_SCHEMA
     )
+
+
+def _split(scored: DataFrame, admit, reject, cols: list[str], bid: int,
+           metrics: tuple[str, ...], path: str):
+    """A stateless gate's two legs: rows matching ``admit`` go to the
+    sink with the batch's own ``cols``; rows matching ``reject`` are
+    journaled with their ``metrics``.  Both legs are map-side
+    expressions over the persisted batch — zero shuffles."""
+    rejects = scored.where(reject).select(
+        _bid(bid), F.col("doc_id").cast("long").alias("doc_id"), *metrics
+    )
+    return scored.where(admit).select(*cols), [_append(rejects, path)]
+
+
+def _first_seen(root: str, frame: DataFrame, key: str, rank, bid: int,
+                cache=None, store_key: str | None = None):
+    """First occurrences of ``key`` against the append-only seen store
+    ``{root}/seen`` — shared by the novelty, line-dedup and URL-dedup
+    gates.
+
+    Returns ``(leaders, seal)``.  ``leaders`` are the rows of ``frame``
+    whose key no STRICTLY EARLIER batch stored (``batch_id < bid``: a
+    crashed attempt's own rows are excluded, and later batches cannot
+    have run — foreachBatch replays only the last uncommitted batch)
+    and whose ``rank`` is the minimum among the batch's rows with that
+    key.  ``seal(stored)`` gives the journal appends that record
+    ``stored``'s keys: the Bloom partial first (bloom ⊇ store under
+    every crash point), then the store append, which the caller runs
+    LAST so a crash before it re-derives the replay identically.
+
+    With a ``cache`` (operators/bloom.py::BloomCache — design note
+    there) only maybe-seen keys pay the exact store anti-join: keys
+    whose probe misses are definitely fresh, so the join input is
+    ~|batch ∩ store| + ε·|batch| instead of |batch|; false positives
+    fall through to the exact join.  The filter folds once per stream
+    and lives in a geometry-versioned subdir, so a resized filter
+    rebuilds itself instead of mis-probing.  ``store_key`` names the
+    store column when it differs from ``key``."""
+    from level2_to_cassandra_spark.operators import bloom as bloom_ops
+
+    spark = frame.sparkSession
+    store_key = store_key or key
+    schema = f"{store_key} string, batch_id long"
+    as_key = key if store_key == key else F.col(store_key).alias(key)
+    seen = (
+        _read_journal(spark, f"{root}/seen", schema)
+        .where(F.col("batch_id") < bid)
+        .select(as_key)
+        .distinct()
+    )
+    if cache is None:
+        unseen = frame.join(seen, key, "left_anti")
+    else:
+        bloom_dir = f"{root}/bloom/{bloom_ops.journal_subdir()}"
+        cache.ensure(_read_journal(spark, bloom_dir, bloom_ops.BLOOM_SCHEMA))
+        unseen = bloom_ops.probe_unseen(cache, frame, key, seen)
+    leaders = (
+        unseen
+        .withColumn("__lead", F.min(rank).over(Window.partitionBy(key)))
+        .where(F.col("__lead") == rank)
+    )
+
+    def seal(stored: DataFrame) -> list:
+        as_store = key if store_key == key else F.col(key).alias(store_key)
+        appends = [] if cache is None else [
+            # plus the one-time whole-store migration backfill —
+            # operators/bloom.py::append_partial
+            lambda: bloom_ops.append_partial(
+                cache, bloom_dir, stored.select(key), key,
+                _read_journal(spark, f"{root}/seen", schema)
+                .select(store_key),
+                bid,
+            )
+        ]
+        return appends + [_append(
+            stored.select(as_store, _bid(bid)), f"{root}/seen",
+            one_file=False,
+        )]
+
+    return leaders, seal
 
 
 #: drift-audit schema (flat + scalar, same rationale as METRICS_SCHEMA;
@@ -147,15 +316,6 @@ DRIFT_SCHEMA = (
     "batch_id long, stream string, key string, n_ref long, "
     "n_batch long, psi double, drift_flag boolean"
 )
-
-
-def drift_path(base: str) -> str:
-    """The drift audit lives beside the sink tables, underscore-
-    prefixed like the ingest-metrics table; one subdirectory per
-    wrapped stream (the metrics-table discipline) so two streams
-    sharing a base never interleave their independent batch_id
-    sequences."""
-    return f"{base}/_drift_metrics"
 
 
 def foreach_batch_with_drift(
@@ -175,16 +335,12 @@ def foreach_batch_with_drift(
     production ingest runs continuously: the alarm fires while the
     drifted batches are landing, not at the next offline audit.
 
-    Cost: the batch is persisted once and shared by the sink write and
-    the scoring aggregate (trigger-bounded cache; the scoring is a
-    join, which observed metrics cannot carry).  Delivery semantics
-    are :func:`foreach_batch_with_metrics`'s: the audit append runs
-    after the wrapped write succeeds inside the same at-least-once
-    attempt, so replayed batches duplicate their audit rows and
-    readers dedup on ``(batch_id, key)``.  The reference relation is
-    #keys × ≤N_BINS rows and broadcast into the scoring join — per
-    batch the added work is one map-side binning pass + one
-    (key, bin) count aggregate.
+    Cost: the scoring is a join, which observed metrics cannot carry,
+    so the batch is read from the :func:`_journaled` cache.  The
+    reference relation is #keys × ≤N_BINS rows and broadcast into the
+    scoring join — per batch the added work is one map-side binning
+    pass + one (key, bin) count aggregate.  Readers dedup on
+    ``(batch_id, key)``.
 
     The reference relation is SNAPSHOTTED here (one bounded collect —
     it is #keys × ≤N_BINS rows by construction): the scoring join
@@ -200,32 +356,23 @@ def foreach_batch_with_drift(
         ref_cells.collect(), ref_cells.schema
     )
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            inner(batch_df, batch_id)
-            out = psi_against_reference(
-                batch_df, ref_snap, key_col=key_col, value_col=value_col
-            ).select(
-                F.lit(int(batch_id)).cast("long").alias("batch_id"),
-                F.lit(stream).alias("stream"),
-                F.col("key").cast("string").alias("key"),
-                "n_ref", "n_batch", "psi", "drift_flag",
-            )
-            out.coalesce(1).write.mode("append").parquet(
-                f"{drift_path(base_path)}/{stream}"
-            )
-        finally:
-            batch_df.unpersist()
+    def step(batch, bid, persist):
+        out = psi_against_reference(
+            batch, ref_snap, key_col=key_col, value_col=value_col
+        ).select(
+            _bid(bid), F.lit(stream).alias("stream"),
+            F.col("key").cast("string").alias("key"),
+            "n_ref", "n_batch", "psi", "drift_flag",
+        )
+        return batch, [_append(out, f"{base_path}/{_DRIFT}/{stream}")]
 
-    return _write
+    return _journaled(inner, step)
 
 
 def read_drift(spark, base_path: str, stream: str = "events") -> DataFrame:
-    """Read one stream's drift audit table (empty before the first
-    delivered batch)."""
+    """Read one stream's drift audit table."""
     return _read_journal(
-        spark, f"{drift_path(base_path)}/{stream}", DRIFT_SCHEMA
+        spark, f"{base_path}/{_DRIFT}/{stream}", DRIFT_SCHEMA
     )
 
 
@@ -236,12 +383,6 @@ KS_SCHEMA = (
     "batch_id long, stream string, key string, n_ref long, "
     "n_batch long, ks double, drift_flag boolean"
 )
-
-
-def ks_path(base: str) -> str:
-    """Beside the sink, underscore-prefixed, one subdirectory per
-    stream — the drift_path/metrics_path discipline."""
-    return f"{base}/_ks_metrics"
 
 
 def foreach_batch_with_ks(
@@ -262,21 +403,17 @@ def foreach_batch_with_ks(
     every micro-batch is scored with one (key, value) aggregate + one
     union-grid-sized window pass; one ``(batch_id, key, ks,
     drift_flag)`` audit row per scored key is appended beside the
-    sink.
+    sink.  Readers dedup on ``(batch_id, key)``.
 
-    Cost/delivery semantics are :func:`foreach_batch_with_drift`'s:
-    batch persisted once (sink + scoring share the read), audit append
-    after the wrapped write inside the same at-least-once attempt —
-    replayed batches duplicate audit rows, readers dedup on
-    ``(batch_id, key)``.  Unlike the PSI reference (#keys × ≤10 rows,
-    snapshotted with a bounded collect), the KS grid is
-    VALUE-CARDINALITY-bounded — potentially far too large to collect —
-    so it is PERSISTED for the stream's lifetime instead: the scoring
-    join reads it once per batch, and an unpersisted caller relation
-    would re-run the reference build every micro-batch.  At production
-    scale the grid is a parquet staging table and this persist is a
-    cache over its scan.  The persist outlives the STREAM, not just a
-    batch — call the returned callback's ``teardown()`` handle after
+    Unlike the PSI reference (#keys × ≤10 rows, snapshotted with a
+    bounded collect), the KS grid is VALUE-CARDINALITY-bounded —
+    potentially far too large to collect — so it is PERSISTED for the
+    stream's lifetime instead: the scoring join reads it once per
+    batch, and an unpersisted caller relation would re-run the
+    reference build every micro-batch.  At production scale the grid
+    is a parquet staging table and this persist is a cache over its
+    scan.  The persist outlives the STREAM, not just a batch — call
+    the returned callback's ``teardown()`` handle after
     ``query.awaitTermination()`` / ``stop()`` to release the executor
     storage (ADVICE r14: without it the cache pins memory for the
     process lifetime once the stream ends)."""
@@ -286,37 +423,27 @@ def foreach_batch_with_ks(
 
     ref_dist = ref_dist.persist()
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            inner(batch_df, batch_id)
-            out = ks_against_reference(
-                batch_df, ref_dist, key_col=key_col, value_col=value_col
-            ).select(
-                F.lit(int(batch_id)).cast("long").alias("batch_id"),
-                F.lit(stream).alias("stream"),
-                F.col("key").cast("string").alias("key"),
-                "n_ref", "n_batch", "ks", "drift_flag",
-            )
-            out.coalesce(1).write.mode("append").parquet(
-                f"{ks_path(base_path)}/{stream}"
-            )
-        finally:
-            batch_df.unpersist()
+    def step(batch, bid, persist):
+        out = ks_against_reference(
+            batch, ref_dist, key_col=key_col, value_col=value_col
+        ).select(
+            _bid(bid), F.lit(stream).alias("stream"),
+            F.col("key").cast("string").alias("key"),
+            "n_ref", "n_batch", "ks", "drift_flag",
+        )
+        return batch, [_append(out, f"{base_path}/{_KS}/{stream}")]
 
+    write = _journaled(inner, step)
     # teardown handle: unpersist the stream-lifetime reference cache
     # once the query terminates (idempotent — unpersist on an already
     # unpersisted relation is a no-op)
-    _write.teardown = lambda: ref_dist.unpersist()
-    return _write
+    write.teardown = lambda: ref_dist.unpersist()
+    return write
 
 
 def read_ks(spark, base_path: str, stream: str = "events") -> DataFrame:
-    """Read one stream's KS audit table (empty before the first
-    delivered batch)."""
-    return _read_journal(
-        spark, f"{ks_path(base_path)}/{stream}", KS_SCHEMA
-    )
+    """Read one stream's KS audit table."""
+    return _read_journal(spark, f"{base_path}/{_KS}/{stream}", KS_SCHEMA)
 
 
 #: embedding-drift audit schema — one row per (batch, occupied cell),
@@ -326,12 +453,6 @@ EMBED_DRIFT_SCHEMA = (
     "batch_id long, stream string, cluster_id long, c_ref long, "
     "c_cur long, psi_term double, psi double, drift_flag boolean"
 )
-
-
-def embed_drift_path(base: str) -> str:
-    """Beside the sink, underscore-prefixed, one subdirectory per
-    stream — the drift_path/metrics_path discipline."""
-    return f"{base}/_embed_drift_metrics"
 
 
 def foreach_batch_with_embedding_drift(
@@ -354,21 +475,17 @@ def foreach_batch_with_embedding_drift(
     occupancy (:func:`operators.drift.cluster_reference_cells` over
     the label table's reference cohort).  One audit row per occupied
     cell per batch, so the per-cell contributions land in the audit
-    table exactly as the batch query emits them.
+    table exactly as the batch query emits them; readers dedup on
+    ``(batch_id, cluster_id)``.
 
     ``n_cells`` is the quantizer's cell count (the Laplace
     denominator — queries/llm.py::_KMEANS_K for the session kmeans
     table), NOT the occupied-cell count.
 
-    Cost/delivery semantics follow :func:`foreach_batch_with_drift`:
-    the batch is persisted and shared by the sink write and the
-    scoring pass; both the codebook and the reference occupancy are
-    SNAPSHOTTED once (bounded collects — each is ≤n_cells rows by
-    construction) so no per-batch rebuild or union-branch recompute
-    of the caller's relations can occur; the audit append runs after
-    the wrapped write inside the same at-least-once attempt, so
-    replayed batches duplicate audit rows and readers dedup on
-    ``(batch_id, cluster_id)``.  Per batch the added work is one
+    Both the codebook and the reference occupancy are SNAPSHOTTED once
+    (bounded collects — each is ≤n_cells rows by construction) so no
+    per-batch rebuild or union-branch recompute of the caller's
+    relations can occur.  Per batch the added work is one
     Arrow-batched matmul assignment (map-side, zero shuffles —
     operators/similarity.py::ivf_assign_np) plus a ≤n_cells-row
     aggregate and fold."""
@@ -386,37 +503,27 @@ def foreach_batch_with_embedding_drift(
         ref_cells.collect(), ref_cells.schema
     )
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            inner(batch_df, batch_id)
-            labeled = ivf_assign_np(
-                batch_df, cent_snap, id_col=id_col, vec_col=vec_col,
-                round_assign=6,
-            )
-            out = psi_against_cluster_reference(
-                labeled, ref_snap, n_cells=n_cells
-            ).select(
-                F.lit(int(batch_id)).cast("long").alias("batch_id"),
-                F.lit(stream).alias("stream"),
-                "cluster_id", "c_ref", "c_cur", "psi_term", "psi",
-                "drift_flag",
-            )
-            out.coalesce(1).write.mode("append").parquet(
-                f"{embed_drift_path(base_path)}/{stream}"
-            )
-        finally:
-            batch_df.unpersist()
+    def step(batch, bid, persist):
+        labeled = ivf_assign_np(
+            batch, cent_snap, id_col=id_col, vec_col=vec_col,
+            round_assign=6,
+        )
+        out = psi_against_cluster_reference(
+            labeled, ref_snap, n_cells=n_cells
+        ).select(
+            _bid(bid), F.lit(stream).alias("stream"),
+            "cluster_id", "c_ref", "c_cur", "psi_term", "psi", "drift_flag",
+        )
+        return batch, [_append(out, f"{base_path}/{_EMBED_DRIFT}/{stream}")]
 
-    return _write
+    return _journaled(inner, step)
 
 
 def read_embed_drift(spark, base_path: str,
                      stream: str = "embeddings") -> DataFrame:
-    """Read one stream's embedding-drift audit table (empty before
-    the first delivered batch)."""
+    """Read one stream's embedding-drift audit table."""
     return _read_journal(
-        spark, f"{embed_drift_path(base_path)}/{stream}", EMBED_DRIFT_SCHEMA
+        spark, f"{base_path}/{_EMBED_DRIFT}/{stream}", EMBED_DRIFT_SCHEMA
     )
 
 
@@ -430,12 +537,6 @@ COVARIANCE_SCHEMA = (
     "batch_id long, i long, j long, sxy double, sxi double, "
     "syj double, cnt long"
 )
-
-
-def covariance_path(base: str) -> str:
-    """Beside the sink, underscore-prefixed, one subdirectory per
-    stream — the drift_path/metrics_path discipline."""
-    return f"{base}/_covariance_state"
 
 
 def foreach_batch_with_covariance(
@@ -458,61 +559,45 @@ def foreach_batch_with_covariance(
     (sxy/sxi/syj/cnt are plain sums), so the state is an append-only
     journal of per-batch partials — dim·(dim+1)/2 rows per batch —
     and :func:`read_covariance` reduces it to the query's output
-    shape on demand.  Per batch the added work is ONE Arrow-batched
-    numpy matrix product over the admitted rows (map-side, zero
-    shuffles — the same kernel the offline query runs) plus a
-    2080-row aggregate and a single-file append: O(dim²) cost
-    regardless of corpus size, which is what makes moment maintenance
-    viable at 100 TB where the offline re-scan is a full corpus read.
+    shape on demand; replay cannot double-count a batch into the
+    moments (no read-modify-write race by construction).  Per batch
+    the added work is ONE Arrow-batched numpy matrix product over the
+    admitted rows (map-side, zero shuffles — the same kernel the
+    offline query runs) plus a 2080-row aggregate and a single-file
+    append: O(dim²) cost regardless of corpus size, which is what
+    makes moment maintenance viable at 100 TB where the offline
+    re-scan is a full corpus read.
 
     Row admission mirrors q_embed_covariance exactly (non-NULL,
     correct length, no NULL elements; the kernel additionally masks
     non-finite content) so the maintained state and the offline query
     agree cell-for-cell — parity-pinned by
-    test_streaming_covariance_matches_batch_query.
-
-    Delivery semantics follow the module's audit-table discipline:
-    the journal append runs AFTER the wrapped sink write inside the
-    same at-least-once attempt; a replayed batch re-derives the SAME
-    deterministic partials under the same batch_id, and readers dedup
-    on (batch_id, i, j) — so replay cannot double-count a batch into
-    the moments (no read-modify-write race by construction)."""
+    test_streaming_covariance_matches_batch_query."""
     from level2_to_cassandra_spark.operators.similarity import (
         admit_predicate,
         gram_partials,
     )
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            inner(batch_df, batch_id)
-            # the SHARED admission predicate — an inline copy here
-            # would silently desynchronize the journal from
-            # q_embed_covariance the first time the predicate evolves
-            # (it did in r12: the finiteness leg)
-            admitted = batch_df.where(admit_predicate(dim, vec_col))
-            parts = (
-                gram_partials(admitted, dim=dim, id_col=id_col,
-                              vec_col=vec_col)
-                .groupBy("i", "j")
-                .agg(
-                    F.sum("sxy").alias("sxy"),
-                    F.sum("sxi").alias("sxi"),
-                    F.sum("syj").alias("syj"),
-                    F.sum("cnt").alias("cnt"),
-                )
-                .select(
-                    F.lit(int(batch_id)).cast("long").alias("batch_id"),
-                    "i", "j", "sxy", "sxi", "syj", "cnt",
-                )
+    def step(batch, bid, persist):
+        # the SHARED admission predicate — an inline copy here would
+        # silently desynchronize the journal from q_embed_covariance
+        # the first time the predicate evolves (it did in r12: the
+        # finiteness leg)
+        rows = batch.where(admit_predicate(dim, vec_col))
+        parts = (
+            gram_partials(rows, dim=dim, id_col=id_col, vec_col=vec_col)
+            .groupBy("i", "j")
+            .agg(
+                F.sum("sxy").alias("sxy"),
+                F.sum("sxi").alias("sxi"),
+                F.sum("syj").alias("syj"),
+                F.sum("cnt").alias("cnt"),
             )
-            parts.coalesce(1).write.mode("append").parquet(
-                f"{covariance_path(base_path)}/{stream}"
-            )
-        finally:
-            batch_df.unpersist()
+            .select(_bid(bid), "i", "j", "sxy", "sxi", "syj", "cnt")
+        )
+        return batch, [_append(parts, f"{base_path}/{_COVARIANCE}/{stream}")]
 
-    return _write
+    return _journaled(inner, step)
 
 
 def read_covariance(spark, base_path: str,
@@ -528,10 +613,9 @@ def read_covariance(spark, base_path: str,
 
     agg = (
         _read_journal(
-            spark, f"{covariance_path(base_path)}/{stream}",
-            COVARIANCE_SCHEMA,
+            spark, f"{base_path}/{_COVARIANCE}/{stream}",
+            COVARIANCE_SCHEMA, ("batch_id", "i", "j"),
         )
-        .dropDuplicates(["batch_id", "i", "j"])
         .groupBy("i", "j")
         .agg(
             F.sum("sxy").alias("sxy"),
@@ -555,12 +639,6 @@ def read_covariance(spark, base_path: str,
 OUTLIER_GATE_SCHEMA = (
     "batch_id long, vec_id long, cos_centroid double, reason string"
 )
-
-
-def outlier_path(base: str) -> str:
-    """Beside the sink, underscore-prefixed — the drift_path
-    discipline."""
-    return f"{base}/_embed_outliers"
 
 
 def foreach_batch_with_outlier_gate(
@@ -597,15 +675,9 @@ def foreach_batch_with_outlier_gate(
     test_streaming_outlier_gate_parity_with_registered_query).  The
     split predicates are null-safe by admit_predicate's construction,
     so the three legs PARTITION the batch: nothing is dropped, nothing
-    lands twice.
-
-    Cost: the batch is persisted and shared by the three legs; per
-    batch the added work is two map-side folds (cosine + norm) over
-    the batch — zero shuffles, zero Python, O(dim) frozen state.
-    Delivery follows the monitor discipline: the quarantine append
-    runs AFTER the wrapped write inside the same at-least-once
-    attempt, so replays duplicate quarantine rows and readers dedup
-    on (batch_id, vec_id)."""
+    lands twice.  Per batch the added work is two map-side folds
+    (cosine + norm) over the batch — zero shuffles, zero Python, O(dim)
+    frozen state.  Readers dedup on (batch_id, vec_id)."""
     from level2_to_cassandra_spark.operators.similarity import (
         admit_predicate,
         centroid_cosine,
@@ -617,50 +689,38 @@ def foreach_batch_with_outlier_gate(
     if cnorm <= 0:  # degenerate reference: nothing is scoreable
         scoreable = F.lit(False)
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            scored = batch_df.withColumn("__cos", cos_r)
-            inner(
-                batch_df.where(scoreable & (cos_r >= F.lit(tau))),
-                batch_id,
+    def step(batch, bid, persist):
+        vec_id = F.col(id_col).cast("long").alias("vec_id")
+        quarantined = batch.withColumn("__cos", cos_r).where(
+            scoreable & (F.col("__cos") < F.lit(tau))
+        ).select(
+            _bid(bid), vec_id, F.col("__cos").alias("cos_centroid"),
+            F.lit("outlier").alias("reason"),
+        ).unionByName(
+            batch.where(~scoreable).select(
+                _bid(bid), vec_id,
+                F.lit(None).cast("double").alias("cos_centroid"),
+                F.lit("malformed").alias("reason"),
             )
-            quarantined = scored.where(
-                scoreable & (F.col("__cos") < F.lit(tau))
-            ).select(
-                F.lit(int(batch_id)).cast("long").alias("batch_id"),
-                F.col(id_col).cast("long").alias("vec_id"),
-                F.col("__cos").alias("cos_centroid"),
-                F.lit("outlier").alias("reason"),
-            ).unionByName(
-                batch_df.where(~scoreable).select(
-                    F.lit(int(batch_id)).cast("long").alias("batch_id"),
-                    F.col(id_col).cast("long").alias("vec_id"),
-                    F.lit(None).cast("double").alias("cos_centroid"),
-                    F.lit("malformed").alias("reason"),
-                )
-            )
-            quarantined.coalesce(1).write.mode("append").parquet(
-                f"{outlier_path(base_path)}/{stream}"
-            )
-        finally:
-            batch_df.unpersist()
+        )
+        return batch.where(scoreable & (cos_r >= F.lit(tau))), [
+            _append(quarantined, f"{base_path}/{_OUTLIERS}/{stream}")
+        ]
 
-    return _write
+    return _journaled(inner, step)
 
 
 def read_outlier_quarantine(spark, base_path: str,
                             stream: str = "embeddings") -> DataFrame:
-    """Read one stream's outlier-gate quarantine table (empty before
-    the first delivered batch)."""
+    """Read one stream's outlier-gate quarantine table."""
     return _read_journal(
-        spark, f"{outlier_path(base_path)}/{stream}", OUTLIER_GATE_SCHEMA
+        spark, f"{base_path}/{_OUTLIERS}/{stream}", OUTLIER_GATE_SCHEMA
     )
 
 
-def vocab_store_path(base: str) -> str:
-    """The seen-term store — beside the sink, underscore-prefixed."""
-    return f"{base}/_vocab_terms"
+#: the seen-term store: one row per term, keyed by the batch that
+#: first contributed it
+_VOCAB_SCHEMA = "term string, batch_id long"
 
 
 def foreach_batch_with_vocab_growth(
@@ -682,49 +742,31 @@ def foreach_batch_with_vocab_growth(
     the first attempt, so its anti-join contributes nothing — the
     growth curve (:func:`read_vocab_growth`) is DERIVED from the
     store and is identical under at-least-once delivery; attribution
-    stays with the first-writing batch (the dedup.py write-order
-    discipline, with the store itself as the journal).
+    stays with the first-writing batch.
 
     Cost: one map-side tokenize+distinct over the batch and one term
     equi-(anti-)join against the store — batch-bounded × vocabulary,
     never corpus; the store is vocabulary-sized (Heaps-sublinear in
     the corpus), the same scale class as the tf postings staging
-    table.  The store append runs AFTER the wrapped write inside the
-    same attempt.  Appending to the store the anti-join reads is safe
-    because the parquet read's file index is SNAPSHOTTED when
-    :func:`_read_store_or_none` builds the relation — files the
-    append adds are not in that index, so the write cannot observe
-    its own output (no persist needed: unlike the dedup sinks, there
-    is only ONE action over the fresh relation)."""
+    table.  Appending to the store the anti-join reads is safe
+    because the parquet read's file index is SNAPSHOTTED when the
+    relation is built — files the append adds are not in that index,
+    so the write cannot observe its own output."""
     from level2_to_cassandra_spark.operators import text as text_ops
-    from level2_to_cassandra_spark.operators.dedup import (
-        _read_store_or_none,
-    )
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            inner(batch_df, batch_id)
-            terms = (
-                batch_df.select(
-                    F.explode(text_ops.tokens(text_col)).alias("term")
-                )
-                .distinct()
-            )
-            spark = batch_df.sparkSession
-            store = vocab_store_path(base_path)
-            seen = _read_store_or_none(spark, store)
-            if seen is not None:
-                terms = terms.join(
-                    seen.select("term"), "term", "left_anti"
-                )
-            terms.select(
-                "term", F.lit(int(batch_id)).cast("long").alias("batch_id")
-            ).write.mode("append").parquet(store)
-        finally:
-            batch_df.unpersist()
+    store = f"{base_path}/{_VOCAB}"
 
-    return _write
+    def step(batch, bid, persist):
+        seen = _read_journal(batch.sparkSession, store, _VOCAB_SCHEMA)
+        new = (
+            batch.select(F.explode(text_ops.tokens(text_col)).alias("term"))
+            .distinct()
+            .join(seen.select("term"), "term", "left_anti")
+            .select("term", _bid(bid))
+        )
+        return batch, [_append(new, store, one_file=False)]
+
+    return _journaled(inner, step)
 
 
 def read_vocab_growth(spark, base_path: str) -> DataFrame:
@@ -732,17 +774,12 @@ def read_vocab_growth(spark, base_path: str) -> DataFrame:
     contributing batch ``(batch_id, n_new, vocab_size)`` with
     vocab_size the running total — #batches rows, reduced from the
     vocabulary-sized store with one aggregate + one tiny window."""
-    from pyspark.sql import Window as W
-
     per = (
-        _read_journal(
-            spark, vocab_store_path(base_path),
-            "term string, batch_id long",
-        )
+        _read_journal(spark, f"{base_path}/{_VOCAB}", _VOCAB_SCHEMA)
         .groupBy("batch_id")
         .agg(F.count(F.lit(1)).alias("n_new"))
     )
-    w = W.orderBy("batch_id").rowsBetween(W.unboundedPreceding, 0)
+    w = Window.orderBy("batch_id").rowsBetween(Window.unboundedPreceding, 0)
     return per.select(
         "batch_id", "n_new", F.sum("n_new").over(w).alias("vocab_size")
     )
@@ -773,15 +810,10 @@ def foreach_batch_with_shingle_df(
     occurrence stream — what the batch query does corpus-wide, priced
     per-batch.
 
-    The journal is the covariance-journal pattern: per-batch rows are
-    DETERMINISTIC re-derivations, so a replayed batch re-appends
-    identical rows under the same batch_id and the reader's
-    dropDuplicates collapses them — at-least-once delivery cannot
-    double-count a batch into any df.  Each document must arrive in
-    exactly one batch (the incremental-admit sinks upstream are what
-    enforce that); a doc re-admitted under a different batch_id would
-    double its shingles' dfs, same as re-inserting it into the batch
-    corpus.
+    Each document must arrive in exactly one batch (the
+    incremental-admit sinks upstream are what enforce that); a doc
+    re-admitted under a different batch_id would double its shingles'
+    dfs, same as re-inserting it into the batch corpus.
 
     Cost per batch: one map-side shingle explode + one df aggregate
     over the BATCH (batch-bounded, never corpus) and two appends; the
@@ -789,31 +821,27 @@ def foreach_batch_with_shingle_df(
     vocabulary-sized, the tf-postings scale class."""
     from level2_to_cassandra_spark.operators import text as text_ops
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            inner(batch_df, batch_id)
-            bid = F.lit(int(batch_id)).cast("long").alias("batch_id")
-            occ = text_ops.shingle_occurrences(
-                batch_df, id_col=id_col, text_col=text_col
-            )
-            (
-                occ.distinct()
-                .groupBy("g3")
-                .agg(F.count(F.lit(1)).alias("df_delta"))
-                .select("g3", "df_delta", bid)
-                .write.mode("append")
-                .parquet(f"{shingle_df_path(base_path)}/dfs")
-            )
-            batch_df.select(F.count(F.lit(1)).alias("n_docs")).select(
-                "n_docs", bid
-            ).write.mode("append").parquet(
-                f"{shingle_df_path(base_path)}/docs"
-            )
-        finally:
-            batch_df.unpersist()
+    root = shingle_df_path(base_path)
 
-    return _write
+    def step(batch, bid, persist):
+        dfs = (
+            text_ops.shingle_occurrences(
+                batch, id_col=id_col, text_col=text_col
+            )
+            .distinct()
+            .groupBy("g3")
+            .agg(F.count(F.lit(1)).alias("df_delta"))
+            .select("g3", "df_delta", _bid(bid))
+        )
+        docs = batch.select(F.count(F.lit(1)).alias("n_docs")).select(
+            "n_docs", _bid(bid)
+        )
+        return batch, [
+            _append(dfs, f"{root}/dfs", one_file=False),
+            _append(docs, f"{root}/docs", one_file=False),
+        ]
+
+    return _journaled(inner, step)
 
 
 def _shingle_df_watermark(spark, base_path: str) -> int:
@@ -846,10 +874,11 @@ def _shingle_df_state(spark, base_path: str):
     compaction that crashed after writing its generation but before
     reclaiming the raw files leaves a journal that still reads exactly
     once."""
+    root = shingle_df_path(base_path)
     w = _shingle_df_watermark(spark, base_path)
     base = (
         _read_journal(
-            spark, f"{shingle_df_path(base_path)}/compact_dfs",
+            spark, f"{root}/compact_dfs",
             "g3 string, df long, through_batch long",
         )
         .where(F.col("through_batch") == w)
@@ -858,8 +887,7 @@ def _shingle_df_state(spark, base_path: str):
     )
     deltas = (
         _read_journal(
-            spark, f"{shingle_df_path(base_path)}/dfs",
-            "g3 string, df_delta long, batch_id long",
+            spark, f"{root}/dfs", "g3 string, df_delta long, batch_id long"
         )
         .where(F.col("batch_id") > w)
         .dropDuplicates(["batch_id", "g3"])
@@ -873,18 +901,14 @@ def _shingle_df_state(spark, base_path: str):
     )
     docs_base = (
         _read_journal(
-            spark, f"{shingle_df_path(base_path)}/compact_docs",
-            "n_docs long, through_batch long",
+            spark, f"{root}/compact_docs", "n_docs long, through_batch long"
         )
         .where(F.col("through_batch") == w)
         .dropDuplicates()
         .select("n_docs")
     )
     docs_delta = (
-        _read_journal(
-            spark, f"{shingle_df_path(base_path)}/docs",
-            "n_docs long, batch_id long",
-        )
+        _read_journal(spark, f"{root}/docs", "n_docs long, batch_id long")
         .where(F.col("batch_id") > w)
         .dropDuplicates(["batch_id"])
         .select("n_docs")
@@ -1128,13 +1152,6 @@ NOVELTY_SCHEMA = (
 )
 
 
-def novelty_path(base: str) -> str:
-    """Beside the sink, underscore-prefixed — the monitor-table
-    discipline.  ``/scores`` holds the per-doc audit rows, ``/seen``
-    the append-only first-occurrence shingle store."""
-    return f"{base}/_novelty"
-
-
 def foreach_batch_with_novelty(
     inner: Callable[[DataFrame, int], None],
     base_path: str,
@@ -1147,21 +1164,19 @@ def foreach_batch_with_novelty(
     3-gram shingles never seen in any earlier batch (crawl-value /
     marginal-new-content, priced per batch instead of per corpus
     rebuild).  One ``(batch_id, doc_id, n_shingles, n_novel,
-    novelty)`` audit row per shingled doc lands beside the sink.
+    novelty)`` audit row per shingled doc lands in ``_novelty/scores``
+    beside the sink; ``_novelty/seen`` is the first-occurrence
+    shingle store.
 
     REPLAY DETERMINISM is the design constraint the naive form fails:
     a replayed batch would find its own shingles already in the seen
-    store and re-score everything 0.  Both sides of the computation
-    are therefore keyed by batch_id — the score anti-joins the store
-    FILTERED TO STRICTLY EARLIER BATCHES (``batch_id < bid``: a
-    crashed attempt's own rows are excluded, and later batches cannot
-    have run — foreachBatch replays only the last uncommitted batch),
-    and within-batch first occurrence is credited to the minimum
-    doc_id, exactly the batch spec's rule.  The store append runs LAST
-    (the admit-sink discipline) and duplicates from replay collapse
-    under the reader's earliest-batch reduction.  When batches
-    partition the corpus in doc_id order, the audit rows equal
-    q_text_novelty's output row-for-row (parity-pinned).
+    store and re-score everything 0 — so the store probe sees only
+    strictly earlier batches (:func:`_first_seen`), and within-batch
+    first occurrence is credited to the minimum doc_id, exactly the
+    batch spec's rule.  Duplicates from replay collapse under the
+    reader's earliest-batch reduction.  When batches partition the
+    corpus in doc_id order, the audit rows equal q_text_novelty's
+    output row-for-row (parity-pinned).
 
     Cost per batch: one batch-bounded shingle explode + distinct, one
     anti-join against the seen store bucketed by shingle (probe ∝
@@ -1169,85 +1184,46 @@ def foreach_batch_with_novelty(
     never corpus²), two appends."""
     from level2_to_cassandra_spark.operators import text as text_ops
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        occ = None
-        try:
-            inner(batch_df, batch_id)
-            bid = int(batch_id)
-            # persisted: feeds three plan branches across two write
-            # actions (flagged, totals, seen append) — without it the
-            # shingle explode recomputes per branch (ADVICE r14)
-            occ = (
-                text_ops.shingle_occurrences(
-                    batch_df, id_col=id_col, text_col=text_col
-                )
-                .distinct()
-                .persist()
-            )
-            seen = (
-                _read_journal(
-                    spark := batch_df.sparkSession,
-                    f"{novelty_path(base_path)}/seen",
-                    "g3 string, batch_id long",
-                )
-                .where(F.col("batch_id") < bid)
-                .select("g3")
-                .distinct()
-            )
-            w_min = Window.partitionBy("g3")
-            flagged = (
-                occ.join(seen, "g3", "left_anti")
-                .withColumn("first_doc", F.min("doc_id").over(w_min))
-                .where(F.col("first_doc") == F.col("doc_id"))
-                .select("doc_id")
-                .groupBy("doc_id")
-                .agg(F.count(F.lit(1)).alias("n_novel"))
-            )
-            totals = occ.groupBy("doc_id").agg(
-                F.count(F.lit(1)).alias("n_shingles")
-            )
-            scores = (
-                totals.join(flagged, "doc_id", "left")
-                .select(
-                    F.lit(bid).cast("long").alias("batch_id"),
-                    F.col("doc_id").cast("long").alias("doc_id"),
-                    F.col("n_shingles").cast("long").alias("n_shingles"),
-                    F.coalesce(F.col("n_novel"), F.lit(0))
-                    .cast("long").alias("n_novel"),
-                    F.round(
-                        F.coalesce(F.col("n_novel"), F.lit(0))
-                        .cast("double") / F.col("n_shingles"),
-                        6,
-                    ).alias("novelty"),
-                )
-            )
-            scores.coalesce(1).write.mode("append").parquet(
-                f"{novelty_path(base_path)}/scores"
-            )
-            # store append LAST: a crash before this line re-scores the
-            # replay identically (its own rows are batch_id-filtered
-            # out of the probe either way)
-            occ.select(
-                "g3", F.lit(bid).cast("long").alias("batch_id")
-            ).write.mode("append").parquet(
-                f"{novelty_path(base_path)}/seen"
-            )
-        finally:
-            if occ is not None:
-                occ.unpersist()
-            batch_df.unpersist()
+    root = f"{base_path}/{_NOVELTY}"
 
-    return _write
+    def step(batch, bid, persist):
+        # persisted: feeds three plan branches across two write
+        # actions (flagged, totals, seen append) — without it the
+        # shingle explode recomputes per branch (ADVICE r14)
+        occ = persist(
+            text_ops.shingle_occurrences(
+                batch, id_col=id_col, text_col=text_col
+            ).distinct()
+        )
+        leaders, seal = _first_seen(root, occ, "g3", F.col("doc_id"), bid)
+        flagged = (
+            leaders.select("doc_id")
+            .groupBy("doc_id")
+            .agg(F.count(F.lit(1)).alias("n_novel"))
+        )
+        totals = occ.groupBy("doc_id").agg(
+            F.count(F.lit(1)).alias("n_shingles")
+        )
+        n_novel = F.coalesce(F.col("n_novel"), F.lit(0))
+        scores = totals.join(flagged, "doc_id", "left").select(
+            _bid(bid),
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("n_shingles").cast("long").alias("n_shingles"),
+            n_novel.cast("long").alias("n_novel"),
+            F.round(n_novel.cast("double") / F.col("n_shingles"), 6)
+            .alias("novelty"),
+        )
+        return batch, [_append(scores, f"{root}/scores"), *seal(occ)]
+
+    return _journaled(inner, step)
 
 
 def read_novelty(spark, base_path: str) -> DataFrame:
-    """Read the per-doc novelty audit table (empty before the first
-    delivered batch); replayed batches collapse on (batch_id, doc_id)
-    — the rows are deterministic re-derivations."""
+    """Read the per-doc novelty audit table; replayed batches collapse
+    on (batch_id, doc_id)."""
     return _read_journal(
-        spark, f"{novelty_path(base_path)}/scores", NOVELTY_SCHEMA
-    ).dropDuplicates(["batch_id", "doc_id"])
+        spark, f"{base_path}/{_NOVELTY}/scores", NOVELTY_SCHEMA, _DOC_KEY
+    )
 
 
 #: per-doc line-dedup audit schema — n_lines/n_kept plus the
@@ -1257,6 +1233,7 @@ LINE_DEDUP_SCHEMA = (
     "batch_id long, doc_id long, n_lines long, n_kept long, "
     "kept_text string"
 )
+
 
 def line_dedup_path(base: str) -> str:
     """Beside the sink, underscore-prefixed — the monitor-table
@@ -1282,30 +1259,20 @@ def foreach_batch_with_line_dedup(
     corpus rebuild: the kept_text column IS the line-deduped document
     a downstream curation sink would ingest.
 
-    REPLAY DETERMINISM follows foreach_batch_with_novelty exactly:
-    the probe anti-joins the seen store FILTERED TO STRICTLY EARLIER
-    BATCHES (``batch_id < bid`` — a crashed attempt's own rows are
-    excluded; later batches cannot have run), within-batch first
-    occurrence is the minimum packed (doc_id, line_no) key (the batch
-    query's rule), and the store append runs LAST so a replay
-    re-derives identical rows.  When batches partition the corpus in
+    First occurrence (:func:`_first_seen`) is the minimum packed
+    (doc_id, line_no) key among lines no earlier batch stored — the
+    batch query's rule — so when batches partition the corpus in
     doc_id order the audit rows equal q_dedup_lines' output
-    row-for-row (parity-pinned by test).
+    row-for-row (parity-pinned by test).  The store gains one row per
+    NEWLY-SEEN line only (review r15 — appending every batch's full
+    line set would grow the store with batch count even at zero new
+    lines, and recurring lines are exactly what a boilerplate-heavy
+    stream delivers).
 
     Cost per batch: one batch-bounded line explode (persisted across
     its three consumers), one BLOOM-BOUNDED anti-join against the seen
-    store keyed by line_text, one window over batch lines, three
-    appends.  The Bloom side-file (operators/bloom.py — design note
-    there) routes only maybe-seen lines into the exact anti-join:
-    lines whose probe misses are definitely fresh and skip it, so the
-    join input is ~|batch ∩ store| + ε·|batch| instead of |batch|;
-    false positives fall through to the exact join (correctness
-    unchanged), false negatives cannot occur because each batch's
-    Bloom partial is written BEFORE its store append (bloom ⊇ store
-    under every crash point).  The filter folds ONCE per stream into
-    an in-memory cache (operators/bloom.py::BloomCache) and lives in
-    a GEOMETRY-VERSIONED subdir, so a resized filter rebuilds itself
-    instead of silently mis-probing (review r16, 2nd pass).
+    store keyed by line_text, one window over batch lines, four
+    appends.
 
     OVER-SPAN DOCUMENTS (review r16, 2nd pass): a doc with
     >= LINE_KEY_SPAN lines cannot take a sound packed first-occurrence
@@ -1322,144 +1289,63 @@ def foreach_batch_with_line_dedup(
     from level2_to_cassandra_spark.operators import text as text_ops
 
     cache = bloom_ops.BloomCache()
+    root = line_dedup_path(base_path)
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        lines = fresh = None
-        try:
-            inner(batch_df, batch_id)
-            bid = int(batch_id)
-            # persisted: feeds the totals agg, the kept computation and
-            # the seen append (three branches, two write actions)
-            lines = text_ops.line_segments(
-                batch_df, id_col=id_col, text_col=text_col
-            ).persist()
-            seen = (
-                _read_journal(
-                    batch_df.sparkSession,
-                    f"{line_dedup_path(base_path)}/seen",
-                    "line_text string, batch_id long",
-                )
-                .where(F.col("batch_id") < bid)
-                .select("line_text")
-                .distinct()
-            )
-            # guarded shared expression (ADVICE r15): raises on
-            # line_no >= LINE_KEY_SPAN instead of mis-attributing
-            key = text_ops.packed_line_key()
-            # over-span docs (see docstring): journal + exclude their
-            # lines wholesale so the key guard cannot poison the
-            # stream; `over` is ~always empty and rides a broadcast
-            over = (
-                lines.where(
-                    F.col("line_no") >= text_ops.LINE_KEY_SPAN
-                )
-                .select("doc_id")
-                .distinct()
-            )
-            lines_ok = lines.join(F.broadcast(over), "doc_id", "left_anti")
-            over.select(
-                F.lit(bid).cast("long").alias("batch_id"),
-                F.col("doc_id").cast("long").alias("doc_id"),
-            ).coalesce(1).write.mode("append").parquet(
-                f"{line_dedup_path(base_path)}/overspan"
-            )
-            # Bloom pre-filter (r16): only maybe-seen lines pay the
-            # exact store anti-join; misses are definitely fresh.
-            # Empty filter (batch 0 / pre-side-file store / lost or
-            # resized journal) -> exact full-batch probe (operators/
-            # bloom.py::probe_unseen)
-            cache.ensure(_read_journal(
-                batch_df.sparkSession,
-                f"{line_dedup_path(base_path)}/bloom/"
-                f"{bloom_ops.journal_subdir()}",
-                bloom_ops.BLOOM_SCHEMA,
-            ))
-            unseen = bloom_ops.probe_unseen(
-                cache, lines_ok, "line_text", seen
-            )
-            # persisted: feeds the kept aggregation AND the seen-store
-            # append (review r15 — the store gains one row per
-            # NEWLY-SEEN line only; appending every batch's full line
-            # set would grow the store with batch count even at zero
-            # new lines, and recurring lines are exactly what a
-            # boilerplate-heavy stream delivers)
-            fresh = (
-                unseen
-                .withColumn(
-                    "first_key",
-                    F.min(key).over(Window.partitionBy("line_text")),
-                )
-                .where(F.col("first_key") == key)
-                .select("doc_id", "line_no", "line_text")
-                .persist()
-            )
-            kept_agg = fresh.groupBy("doc_id").agg(
-                F.count(F.lit(1)).cast("long").alias("n_kept"),
-                F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct("line_no", "line_text")
-                            )
-                        ),
-                        lambda s: s["line_text"],
+    def step(batch, bid, persist):
+        # persisted: feeds the totals agg, the kept computation and
+        # the seen append (three branches, two write actions)
+        lines = persist(text_ops.line_segments(
+            batch, id_col=id_col, text_col=text_col
+        ))
+        # guarded shared expression (ADVICE r15): raises on
+        # line_no >= LINE_KEY_SPAN instead of mis-attributing
+        key = text_ops.packed_line_key()
+        # over-span docs (see docstring): journal + exclude their
+        # lines wholesale so the key guard cannot poison the stream;
+        # `over` is ~always empty and rides a broadcast
+        over = (
+            lines.where(F.col("line_no") >= text_ops.LINE_KEY_SPAN)
+            .select("doc_id")
+            .distinct()
+        )
+        lines_ok = lines.join(F.broadcast(over), "doc_id", "left_anti")
+        leaders, seal = _first_seen(root, lines_ok, "line_text", key, bid,
+                                    cache)
+        # persisted: feeds the kept aggregation AND the seen-store
+        # append and its Bloom partial
+        fresh = persist(leaders.select("doc_id", "line_no", "line_text"))
+        kept_agg = fresh.groupBy("doc_id").agg(
+            F.count(F.lit(1)).cast("long").alias("n_kept"),
+            F.array_join(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(F.struct("line_no", "line_text"))
                     ),
-                    " ",
-                ).alias("kept_text"),
-            )
-            totals = lines_ok.groupBy("doc_id").agg(
-                F.count(F.lit(1)).cast("long").alias("n_lines")
-            )
-            audit = totals.join(kept_agg, "doc_id", "left").select(
-                F.lit(bid).cast("long").alias("batch_id"),
-                F.col("doc_id").cast("long").alias("doc_id"),
-                "n_lines",
-                F.coalesce(F.col("n_kept"), F.lit(0))
-                .cast("long").alias("n_kept"),
-                F.coalesce(F.col("kept_text"), F.lit(""))
-                .alias("kept_text"),
-            )
-            audit.coalesce(1).write.mode("append").parquet(
-                f"{line_dedup_path(base_path)}/docs"
-            )
-            # Bloom partial BEFORE the store append (bloom ⊇ store
-            # under every crash point) + the one-time whole-store
-            # migration backfill — operators/bloom.py::append_partial
-            bloom_ops.append_partial(
-                cache,
-                f"{line_dedup_path(base_path)}/bloom/"
-                f"{bloom_ops.journal_subdir()}",
-                fresh.select("line_text"),
-                "line_text",
-                _read_journal(
-                    batch_df.sparkSession,
-                    f"{line_dedup_path(base_path)}/seen",
-                    "line_text string, batch_id long",
-                ).select("line_text"),
-                bid,
-            )
-            # store append LAST: a crash before this line re-scores the
-            # replay identically (its own rows are batch_id-filtered
-            # out of the probe either way).  Only the FRESH lines are
-            # appended — the store's reader contract is the SET of
-            # lines ever seen, and every fresh line_text has exactly
-            # one surviving first-occurrence row, so fresh ∪ store
-            # equals the old full-batch append with one row per line
-            # instead of one per (line × batch-it-recurs-in)
-            fresh.select(
-                "line_text", F.lit(bid).cast("long").alias("batch_id")
-            ).write.mode("append").parquet(
-                f"{line_dedup_path(base_path)}/seen"
-            )
-        finally:
-            if fresh is not None:
-                fresh.unpersist()
-            if lines is not None:
-                lines.unpersist()
-            batch_df.unpersist()
+                    lambda s: s["line_text"],
+                ),
+                " ",
+            ).alias("kept_text"),
+        )
+        totals = lines_ok.groupBy("doc_id").agg(
+            F.count(F.lit(1)).cast("long").alias("n_lines")
+        )
+        audit = totals.join(kept_agg, "doc_id", "left").select(
+            _bid(bid),
+            F.col("doc_id").cast("long").alias("doc_id"),
+            "n_lines",
+            F.coalesce(F.col("n_kept"), F.lit(0)).cast("long").alias("n_kept"),
+            F.coalesce(F.col("kept_text"), F.lit("")).alias("kept_text"),
+        )
+        overspan = over.select(
+            _bid(bid), F.col("doc_id").cast("long").alias("doc_id")
+        )
+        return batch, [
+            _append(overspan, f"{root}/overspan"),
+            _append(audit, f"{root}/docs"),
+            *seal(fresh),
+        ]
 
-    return _write
+    return _journaled(inner, step)
 
 
 #: over-span reject journal: docs whose line count exceeds the packed
@@ -1473,17 +1359,17 @@ def read_line_overspan(spark, base_path: str) -> DataFrame:
     replayed batches collapse on (batch_id, doc_id)."""
     return _read_journal(
         spark, f"{line_dedup_path(base_path)}/overspan",
-        LINE_OVERSPAN_SCHEMA,
-    ).dropDuplicates(["batch_id", "doc_id"])
+        LINE_OVERSPAN_SCHEMA, _DOC_KEY,
+    )
 
 
 def read_line_dedup(spark, base_path: str) -> DataFrame:
-    """Read the per-doc line-dedup audit table (empty before the first
-    delivered batch); replayed batches collapse on (batch_id, doc_id)
-    — the rows are deterministic re-derivations."""
+    """Read the per-doc line-dedup audit table; replayed batches
+    collapse on (batch_id, doc_id)."""
     return _read_journal(
-        spark, f"{line_dedup_path(base_path)}/docs", LINE_DEDUP_SCHEMA
-    ).dropDuplicates(["batch_id", "doc_id"])
+        spark, f"{line_dedup_path(base_path)}/docs", LINE_DEDUP_SCHEMA,
+        _DOC_KEY,
+    )
 
 
 #: reject-journal schema: the q_quality_gopher metric columns plus the
@@ -1492,12 +1378,6 @@ QUALITY_GATE_SCHEMA = (
     "batch_id long, doc_id long, n_words long, mean_word_len double, "
     "alpha_frac double, symbol_ratio double"
 )
-
-
-def quality_gate_path(base: str) -> str:
-    """Beside the sink, underscore-prefixed — the monitor-table
-    discipline.  ``/rejects`` holds the per-doc reject audit rows."""
-    return f"{base}/_quality_gate"
 
 
 def foreach_batch_with_quality_gate(
@@ -1513,21 +1393,18 @@ def foreach_batch_with_quality_gate(
 
     * docs whose composite pass_gopher bit is 1 flow to the wrapped
       sink UNCHANGED (original columns);
-    * rejects are journaled with their raw metrics — auditable by
-      reason (which rule failed is re-derivable from the stored
-      metrics without re-reading the text), the q_curate_corpus
-      stance applied at ingest.
+    * rejects are journaled to ``_quality_gate/rejects`` with their raw
+      metrics — auditable by reason (which rule failed is re-derivable
+      from the stored metrics without re-reading the text), the
+      q_curate_corpus stance applied at ingest.
 
     A NULL-text doc scores NULL metrics and pass_gopher = 0
     (gopher_stats' contract), so the two legs PARTITION the batch:
-    nothing drops, nothing lands twice.
-
-    The gate is STATELESS (pure per-row expressions — no store, no
-    history), so replay determinism is free: a replayed batch
-    re-derives identical legs and readers dedup the reject journal on
-    (batch_id, doc_id).  Cost per batch: map-side expression work
-    fused into each leg's scan of the persisted batch — zero shuffles,
-    zero Python, zero state.
+    nothing drops, nothing lands twice.  The gate is STATELESS (pure
+    per-row expressions — no store, no history).  Cost per batch:
+    map-side expression work fused into each leg's scan of the
+    persisted batch — zero shuffles, zero Python, zero state
+    (plan-pinned in tests/test_plans.py).
 
     SCHEMA CONTRACT: batch columns other than doc_id pass through to
     the sink unchanged, so they may not collide with the computed
@@ -1538,40 +1415,28 @@ def foreach_batch_with_quality_gate(
     upstream."""
     from level2_to_cassandra_spark.queries.llm import gopher_stats
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            bid = int(batch_id)
-            cols = list(batch_df.columns)
-            stats = gopher_stats(
-                batch_df,
-                keep=tuple(c for c in cols if c != "doc_id"),
-            )
-            inner(stats.where(F.col("pass_gopher") == 1).select(*cols),
-                  batch_id)
-            rejects = stats.where(F.col("pass_gopher") == 0).select(
-                F.lit(bid).cast("long").alias("batch_id"),
-                F.col("doc_id").cast("long").alias("doc_id"),
-                "n_words", "mean_word_len", "alpha_frac", "symbol_ratio",
-            )
-            rejects.coalesce(1).write.mode("append").parquet(
-                f"{quality_gate_path(base_path)}/rejects"
-            )
-        finally:
-            batch_df.unpersist()
+    def step(batch, bid, persist):
+        cols = list(batch.columns)
+        stats = gopher_stats(
+            batch, keep=tuple(c for c in cols if c != "doc_id")
+        )
+        return _split(
+            stats, F.col("pass_gopher") == 1, F.col("pass_gopher") == 0,
+            cols, bid,
+            ("n_words", "mean_word_len", "alpha_frac", "symbol_ratio"),
+            f"{base_path}/{_QUALITY}/rejects",
+        )
 
-    return _write
+    return _journaled(inner, step)
 
 
 def read_quality_rejects(spark, base_path: str) -> DataFrame:
-    """Read the quality-gate reject audit table (empty before the
-    first delivered batch); replayed batches collapse on (batch_id,
-    doc_id) — the gate is stateless, so rows are deterministic
-    re-derivations."""
+    """Read the quality-gate reject audit table; replayed batches
+    collapse on (batch_id, doc_id)."""
     return _read_journal(
-        spark, f"{quality_gate_path(base_path)}/rejects",
-        QUALITY_GATE_SCHEMA,
-    ).dropDuplicates(["batch_id", "doc_id"])
+        spark, f"{base_path}/{_QUALITY}/rejects", QUALITY_GATE_SCHEMA,
+        _DOC_KEY,
+    )
 
 
 #: reject-journal schema: the three per-gate bits + the vote count
@@ -1581,12 +1446,6 @@ VOTE_GATE_SCHEMA = (
     "batch_id long, doc_id long, pass_gopher long, "
     "pass_classifier long, pass_repetition long, votes long"
 )
-
-
-def vote_gate_path(base: str) -> str:
-    """Beside the sink, underscore-prefixed — the monitor-table
-    discipline.  ``/rejects`` holds the per-doc reject audit rows."""
-    return f"{base}/_vote_gate"
 
 
 def foreach_batch_with_quality_vote(
@@ -1607,15 +1466,14 @@ def foreach_batch_with_quality_vote(
 
     * docs with votes ≥ min_votes flow to the wrapped sink UNCHANGED
       (original columns);
-    * rejects are journaled with their three per-gate bits and vote
-      count — WHICH gate(s) failed re-derives from the stored row,
-      and the journal re-thresholds at any min_votes without
-      re-scoring.
+    * rejects are journaled to ``_vote_gate/rejects`` with their three
+      per-gate bits and vote count — WHICH gate(s) failed re-derives
+      from the stored row, and the journal re-thresholds at any
+      min_votes without re-scoring.
 
     A NULL-text doc fails all three gates (votes 0 — the shared
     transform's contract), so the two legs PARTITION the batch.  The
-    gate is STATELESS — replay determinism is free, readers dedup on
-    (batch_id, doc_id).  Cost per batch: three chained map-side
+    gate is STATELESS.  Cost per batch: three chained map-side
     transforms fused into each leg's scan of the persisted batch —
     zero shuffles, zero Python, zero state (the q_quality_vote plan
     shape, priced per micro-batch).
@@ -1626,55 +1484,32 @@ def foreach_batch_with_quality_vote(
     raise named ValueErrors at build time (rename upstream)."""
     from level2_to_cassandra_spark.queries.traindata import quality_votes
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            bid = int(batch_id)
-            cols = list(batch_df.columns)
-            flags = quality_votes(
-                batch_df, keep=tuple(c for c in cols if c != "doc_id")
-            )
-            inner(
-                flags.where(F.col("votes") >= int(min_votes))
-                .select(*cols),
-                batch_id,
-            )
-            rejects = flags.where(
-                F.col("votes") < int(min_votes)
-            ).select(
-                F.lit(bid).cast("long").alias("batch_id"),
-                F.col("doc_id").cast("long").alias("doc_id"),
-                "pass_gopher", "pass_classifier", "pass_repetition",
-                "votes",
-            )
-            rejects.coalesce(1).write.mode("append").parquet(
-                f"{vote_gate_path(base_path)}/rejects"
-            )
-        finally:
-            batch_df.unpersist()
+    def step(batch, bid, persist):
+        cols = list(batch.columns)
+        flags = quality_votes(
+            batch, keep=tuple(c for c in cols if c != "doc_id")
+        )
+        return _split(
+            flags, F.col("votes") >= int(min_votes),
+            F.col("votes") < int(min_votes), cols, bid,
+            ("pass_gopher", "pass_classifier", "pass_repetition", "votes"),
+            f"{base_path}/{_VOTE}/rejects",
+        )
 
-    return _write
+    return _journaled(inner, step)
 
 
 def read_vote_rejects(spark, base_path: str) -> DataFrame:
-    """Read the vote-gate reject audit table (empty before the first
-    delivered batch); replayed batches collapse on (batch_id, doc_id)
-    — the gate is stateless, so rows are deterministic
-    re-derivations."""
+    """Read the vote-gate reject audit table; replayed batches
+    collapse on (batch_id, doc_id)."""
     return _read_journal(
-        spark, f"{vote_gate_path(base_path)}/rejects", VOTE_GATE_SCHEMA
-    ).dropDuplicates(["batch_id", "doc_id"])
+        spark, f"{base_path}/{_VOTE}/rejects", VOTE_GATE_SCHEMA, _DOC_KEY
+    )
 
 
 #: mixture-journal schema: one cell per (batch, source) — the
 #: batch_id keys replay dedup in the reader
 MIXTURE_SCHEMA = "batch_id long, source string, n_docs long"
-
-
-def mixture_path(base: str) -> str:
-    """Beside the sink, underscore-prefixed — the monitor-table
-    discipline."""
-    return f"{base}/_mixture"
 
 
 def foreach_batch_with_mixture(
@@ -1686,41 +1521,26 @@ def foreach_batch_with_mixture(
     (q_mixture_plan → q_mix_temperature → q_mix_interleave planned
     it; this watches whether the stream that actually lands FOLLOWS
     it): each micro-batch passes to the wrapped sink UNCHANGED, and
-    one (source → count) cell row per source is journaled keyed by
-    batch_id.  The journal is the whole state: read_mixture folds it
-    into cumulative per-source counts and serves both the realized
-    share and the √n-damped target recomputed through the SAME
-    shared transform the batch query serves from
-    (queries/traindata.py::mix_weights) — so a drifting source mix
-    (a crawler stalled, one feed flooding) is visible per batch
-    without ever rescanning the sink.
+    one (source → count) cell row per source is journaled to
+    ``_mixture/cells`` keyed by batch_id.  The journal is the whole
+    state: read_mixture folds it into cumulative per-source counts and
+    serves both the realized share and the √n-damped target
+    recomputed through the SAME shared transform the batch query
+    serves from (queries/traindata.py::mix_weights) — so a drifting
+    source mix (a crawler stalled, one feed flooding) is visible per
+    batch without ever rescanning the sink.
 
-    Replay determinism: the cell aggregate is a pure function of the
-    batch, rows are keyed by batch_id, and the reader dedups on
-    (batch_id, source) — the journal-keyed-by-batch_id pattern (the
-    covariance/shingle-df discipline).  Cost per batch: ONE
-    map-side-combined #sources-row aggregate of the already-persisted
-    batch; zero Python, zero state, zero extra scans of history."""
+    Cost per batch: ONE map-side-combined #sources-row aggregate of
+    the already-persisted batch; zero Python, zero state, zero extra
+    scans of history."""
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            bid = int(batch_id)
-            inner(batch_df, batch_id)
-            cells = batch_df.groupBy("source").agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs")
-            ).select(
-                F.lit(bid).cast("long").alias("batch_id"),
-                "source",
-                "n_docs",
-            )
-            cells.coalesce(1).write.mode("append").parquet(
-                f"{mixture_path(base_path)}/cells"
-            )
-        finally:
-            batch_df.unpersist()
+    def step(batch, bid, persist):
+        cells = batch.groupBy("source").agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs")
+        ).select(_bid(bid), "source", "n_docs")
+        return batch, [_append(cells, f"{base_path}/{_MIXTURE}/cells")]
 
-    return _write
+    return _journaled(inner, step)
 
 
 def read_mixture(spark, base_path: str) -> DataFrame:
@@ -1737,9 +1557,9 @@ def read_mixture(spark, base_path: str) -> DataFrame:
 
     counts = (
         _read_journal(
-            spark, f"{mixture_path(base_path)}/cells", MIXTURE_SCHEMA
+            spark, f"{base_path}/{_MIXTURE}/cells", MIXTURE_SCHEMA,
+            ("batch_id", "source"),
         )
-        .dropDuplicates(["batch_id", "source"])
         .groupBy("source")
         .agg(F.sum("n_docs").cast("long").alias("n_docs"))
     )
@@ -1765,12 +1585,6 @@ CLASSIFIER_GATE_SCHEMA = (
 )
 
 
-def classifier_gate_path(base: str) -> str:
-    """Beside the sink, underscore-prefixed — the monitor-table
-    discipline.  ``/rejects`` holds the per-doc reject audit rows."""
-    return f"{base}/_classifier_gate"
-
-
 def foreach_batch_with_classifier_gate(
     inner: Callable[[DataFrame, int], None],
     base_path: str,
@@ -1794,17 +1608,14 @@ def foreach_batch_with_classifier_gate(
       the default 5 is the score ≥ 0 ⇔ p ≥ 0.5 cut;
     * docs with bin ≥ threshold_bin flow to the wrapped sink UNCHANGED
       (original columns);
-    * rejects are journaled with their raw score, p and bin — the
-      decision inputs, auditable and re-sweepable without re-scoring.
+    * rejects are journaled to ``_classifier_gate/rejects`` with their
+      raw score, p and bin — the decision inputs, auditable and
+      re-sweepable without re-scoring.
 
     A NULL-text doc scores a NULL bin and the admit condition is NULL
     → ``otherwise(0)`` rejects it (journaled with NULL score), so the
     two legs PARTITION the batch: nothing drops, nothing lands twice.
-
-    The gate is STATELESS (pure per-row expressions — no store, no
-    history), so replay determinism is free: a replayed batch
-    re-derives identical legs and readers dedup the reject journal on
-    (batch_id, doc_id).  Cost per batch: map-side expression work
+    The gate is STATELESS.  Cost per batch: map-side expression work
     fused into each leg's scan of the persisted batch — zero shuffles,
     zero Python, zero state.  At 100 TB this is the ideal admit shape:
     the 64-weight model rides the plan as a literal (any broadcastable
@@ -1818,52 +1629,41 @@ def foreach_batch_with_classifier_gate(
     payload columns upstream."""
     from level2_to_cassandra_spark.queries.traindata import _calib_lab
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            bid = int(batch_id)
-            cols = list(batch_df.columns)
-            # the gate's own split column is reserved too (review r16,
-            # 2nd pass: _calib_lab's guard covers only ITS computed
-            # names — a payload '__admit' would be silently overwritten
-            # and delivered corrupted)
-            clash = {c for c in cols if c.lower() == "__admit"}
-            if clash:
-                raise ValueError(
-                    "classifier gate reserved column collides with "
-                    f"batch payload columns: {sorted(clash)} — rename "
-                    "them upstream"
-                )
-            scored = _calib_lab(batch_df, keep=tuple(cols))
-            admit = F.when(
-                F.col("bin") >= F.lit(int(threshold_bin)), 1
-            ).otherwise(0)
-            scored = scored.withColumn("__admit", admit)
-            inner(scored.where(F.col("__admit") == 1).select(*cols),
-                  batch_id)
-            rejects = scored.where(F.col("__admit") == 0).select(
-                F.lit(bid).cast("long").alias("batch_id"),
-                F.col("doc_id").cast("long").alias("doc_id"),
-                "bin", "score", "p",
+    def step(batch, bid, persist):
+        cols = list(batch.columns)
+        # the gate's own split column is reserved too (review r16, 2nd
+        # pass: _calib_lab's guard covers only ITS computed names — a
+        # payload '__admit' would be silently overwritten and delivered
+        # corrupted)
+        clash = {c for c in cols if c.lower() == "__admit"}
+        if clash:
+            raise ValueError(
+                "classifier gate reserved column collides with "
+                f"batch payload columns: {sorted(clash)} — rename "
+                "them upstream"
             )
-            rejects.coalesce(1).write.mode("append").parquet(
-                f"{classifier_gate_path(base_path)}/rejects"
-            )
-        finally:
-            batch_df.unpersist()
+        admit = F.when(
+            F.col("bin") >= F.lit(int(threshold_bin)), 1
+        ).otherwise(0)
+        scored = _calib_lab(batch, keep=tuple(cols)).withColumn(
+            "__admit", admit
+        )
+        return _split(
+            scored, F.col("__admit") == 1, F.col("__admit") == 0, cols,
+            bid, ("bin", "score", "p"),
+            f"{base_path}/{_CLASSIFIER}/rejects",
+        )
 
-    return _write
+    return _journaled(inner, step)
 
 
 def read_classifier_rejects(spark, base_path: str) -> DataFrame:
-    """Read the classifier-gate reject audit table (empty before the
-    first delivered batch); replayed batches collapse on (batch_id,
-    doc_id) — the gate is stateless, so rows are deterministic
-    re-derivations."""
+    """Read the classifier-gate reject audit table; replayed batches
+    collapse on (batch_id, doc_id)."""
     return _read_journal(
-        spark, f"{classifier_gate_path(base_path)}/rejects",
-        CLASSIFIER_GATE_SCHEMA,
-    ).dropDuplicates(["batch_id", "doc_id"])
+        spark, f"{base_path}/{_CLASSIFIER}/rejects",
+        CLASSIFIER_GATE_SCHEMA, _DOC_KEY,
+    )
 
 
 #: reject-journal schema: the duplicate doc, its canonical URL, and
@@ -1892,27 +1692,20 @@ def foreach_batch_with_url_dedup(
     occurrence per canonical flows to the wrapped sink (original
     columns), duplicates are journaled with their canonical for audit.
 
-    REPLAY DETERMINISM follows foreach_batch_with_line_dedup exactly:
-    the probe anti-joins the seen store FILTERED TO STRICTLY EARLIER
-    BATCHES (``batch_id < bid``), within-batch first occurrence is the
-    minimum doc_id (the batch query's rule), and the store append runs
-    LAST so a replay re-derives identical legs.  When batches
-    partition the corpus in doc_id order the admitted set equals
-    q_dedup_url's is_canonical=1 set exactly (parity-pinned by test).
+    First occurrence (:func:`_first_seen`) is the minimum doc_id among
+    docs whose canonical no earlier batch stored — the batch query's
+    rule — so when batches partition the corpus in doc_id order the
+    admitted set equals q_dedup_url's is_canonical=1 set exactly
+    (parity-pinned by test).
 
     Cost per batch: map-side canonicalization fused into the batch
     scan, one BLOOM-BOUNDED anti-join against the seen store keyed by
-    canonical URL (r16, operators/bloom.py design note: only
-    maybe-seen canonicals probe the exact store — the join input is
-    ~|batch ∩ store| + ε·|batch|; misses are definitely fresh; the
-    batch's Bloom partial writes BEFORE its store append so
-    bloom ⊇ store under every crash point), one window over batch
-    canonicals, three appends.  The store gains one row per
-    NEWLY-SEEN canonical only
-    (the admitted leaders' keys — review r15: appending every batch's
-    full canonical set would grow the store with batch count even at
-    zero new URLs, and recurring keys are the dominant case for a
-    crawl frontier); a NULL canonical (NULL payload fields propagate
+    canonical URL, one window over batch canonicals, three appends.
+    The store gains one row per NEWLY-SEEN canonical only (the
+    admitted leaders' keys — review r15: appending every batch's full
+    canonical set would grow the store with batch count even at zero
+    new URLs, and recurring keys are the dominant case for a crawl
+    frontier); a NULL canonical (NULL payload fields propagate
     through F.concat) joins and stores under an empty-string sentinel
     key, because a NULL anti-join key never matches and would be
     re-admitted every batch — the sentinel cannot collide with a real
@@ -1935,105 +1728,41 @@ def foreach_batch_with_url_dedup(
     from level2_to_cassandra_spark.queries.llm import canonical_urls
 
     cache = bloom_ops.BloomCache()
+    root = url_dedup_path(base_path)
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        canon = fresh = None
-        try:
-            bid = int(batch_id)
-            # persisted: feeds the probe/leader derivation and the
-            # reject anti-join (two derivations, three actions)
-            canon = canonical_urls(batch_df).select(
-                "doc_id", "canonical_url",
-                F.coalesce("canonical_url", F.lit("")).alias("__ck"),
-            ).persist()
-            seen = (
-                _read_journal(
-                    batch_df.sparkSession,
-                    f"{url_dedup_path(base_path)}/seen",
-                    "canonical_url string, batch_id long",
-                )
-                .where(F.col("batch_id") < bid)
-                .select(F.col("canonical_url").alias("__ck"))
-                .distinct()
-            )
-            # Bloom pre-filter (r16, operators/bloom.py design note):
-            # only maybe-seen canonicals pay the exact store anti-join;
-            # empty filter (batch 0 / pre-side-file store / lost or
-            # resized journal) -> exact full-batch probe.  Folds once
-            # per stream (BloomCache); geometry-versioned subdir.
-            cache.ensure(_read_journal(
-                batch_df.sparkSession,
-                f"{url_dedup_path(base_path)}/bloom/"
-                f"{bloom_ops.journal_subdir()}",
-                bloom_ops.BLOOM_SCHEMA,
-            ))
-            unseen = bloom_ops.probe_unseen(cache, canon, "__ck", seen)
-            # one row per NEWLY-SEEN canonical: its minimum-doc_id
-            # leader (the batch query's rule) — feeds the admit join,
-            # the reject anti-join and the store append
-            w = Window.partitionBy("__ck")
-            fresh = (
-                unseen
-                .withColumn("__lead", F.min("doc_id").over(w))
-                .where(F.col("__lead") == F.col("doc_id"))
-                .select("doc_id", "__ck")
-                .persist()
-            )
-            inner(batch_df.join(fresh.select("doc_id"), "doc_id"),
-                  batch_id)
-            rejects = canon.join(
-                fresh.select("doc_id"), "doc_id", "left_anti"
-            ).select(
-                F.lit(bid).cast("long").alias("batch_id"),
-                F.col("doc_id").cast("long").alias("doc_id"),
-                "canonical_url",
-            )
-            rejects.coalesce(1).write.mode("append").parquet(
-                f"{url_dedup_path(base_path)}/rejects"
-            )
-            # Bloom partial BEFORE the store append (bloom ⊇ store
-            # under every crash point) + the one-time whole-store
-            # migration backfill — operators/bloom.py::append_partial
-            bloom_ops.append_partial(
-                cache,
-                f"{url_dedup_path(base_path)}/bloom/"
-                f"{bloom_ops.journal_subdir()}",
-                fresh.select("__ck"),
-                "__ck",
-                _read_journal(
-                    batch_df.sparkSession,
-                    f"{url_dedup_path(base_path)}/seen",
-                    "canonical_url string, batch_id long",
-                ).select("canonical_url"),
-                bid,
-            )
-            # store append LAST: a crash before this line re-derives
-            # the replay identically (its own rows are batch_id-
-            # filtered out of the probe either way)
-            fresh.select(
-                F.col("__ck").alias("canonical_url"),
-                F.lit(bid).cast("long").alias("batch_id"),
-            ).write.mode("append").parquet(
-                f"{url_dedup_path(base_path)}/seen"
-            )
-        finally:
-            if fresh is not None:
-                fresh.unpersist()
-            if canon is not None:
-                canon.unpersist()
-            batch_df.unpersist()
+    def step(batch, bid, persist):
+        # persisted: feeds the probe/leader derivation and the reject
+        # anti-join (two derivations, three actions)
+        canon = persist(canonical_urls(batch).select(
+            "doc_id", "canonical_url",
+            F.coalesce("canonical_url", F.lit("")).alias("__ck"),
+        ))
+        leaders, seal = _first_seen(root, canon, "__ck", F.col("doc_id"),
+                                    bid, cache, store_key="canonical_url")
+        # one row per NEWLY-SEEN canonical: its minimum-doc_id leader —
+        # feeds the admit join, the reject anti-join and the store
+        # append
+        fresh = persist(leaders.select("doc_id", "__ck"))
+        rejects = canon.join(
+            fresh.select("doc_id"), "doc_id", "left_anti"
+        ).select(
+            _bid(bid), F.col("doc_id").cast("long").alias("doc_id"),
+            "canonical_url",
+        )
+        return batch.join(fresh.select("doc_id"), "doc_id"), [
+            _append(rejects, f"{root}/rejects"), *seal(fresh)
+        ]
 
-    return _write
+    return _journaled(inner, step)
 
 
 def read_url_rejects(spark, base_path: str) -> DataFrame:
-    """Read the URL-dedup duplicate audit table (empty before the
-    first delivered batch); replayed batches collapse on (batch_id,
-    doc_id) — the rows are deterministic re-derivations."""
+    """Read the URL-dedup duplicate audit table; replayed batches
+    collapse on (batch_id, doc_id)."""
     return _read_journal(
-        spark, f"{url_dedup_path(base_path)}/rejects", URL_DEDUP_SCHEMA
-    ).dropDuplicates(["batch_id", "doc_id"])
+        spark, f"{url_dedup_path(base_path)}/rejects", URL_DEDUP_SCHEMA,
+        _DOC_KEY,
+    )
 
 
 #: stored minutely grid-partial schema — operators/rollup.py's partial
@@ -2042,13 +1771,6 @@ GRID_PARTIALS_SCHEMA = (
     "minute timestamp, key string, bin long, pn long, "
     "vmin double, vmax double, batch_id long"
 )
-
-
-def grid_rollup_path(base: str) -> str:
-    """Beside the sink, underscore-prefixed — the monitor-table
-    discipline.  ``/partials`` holds the append-only minutely grid
-    partials journal."""
-    return f"{base}/_grid_rollup"
 
 
 def foreach_batch_with_grid_rollup(
@@ -2062,56 +1784,46 @@ def foreach_batch_with_grid_rollup(
     MAINTENANCE of the mergeable quantile layer — the streaming twin
     of q_rollup_quantile's stored level: every micro-batch appends its
     minutely fixed-grid histogram partials (operators/rollup.py — the
-    SAME grid the batch query stores) to a journal beside the sink,
-    and :func:`grid_rollup_bounds` serves hour/day/any-grain quantile
-    BOUNDS from the journal alone, never re-scanning raw rows.  This
-    is the TimescaleDB continuous-aggregate pattern priced per
-    micro-batch: at 100 TB/day the raw stream is written once and
-    every dashboard grain re-derives from the grid-sized partials.
+    SAME grid the batch query stores) to ``_grid_rollup/partials``
+    beside the sink, and :func:`grid_rollup_bounds` serves
+    hour/day/any-grain quantile BOUNDS from the journal alone, never
+    re-scanning raw rows.  This is the TimescaleDB
+    continuous-aggregate pattern priced per micro-batch: at 100 TB/day
+    the raw stream is written once and every dashboard grain
+    re-derives from the grid-sized partials.
 
     MERGEABILITY is what makes the journal correct under ANY batching:
     counts merge by sum and extremes by min/max, so partial rows from
     different batches covering the same (minute, key, bin) cell fold
     to exactly the one-shot batch aggregate — the parity test splits
     the fixture on a NON-time-aligned key and still matches
-    q_rollup_quantile's bounds bit-for-bit.  REPLAY: partial rows are
-    deterministic per batch and keyed by batch_id, so the reader's
-    dropDuplicates on the full (batch_id, minute, key, bin) key
-    collapses a replayed batch's second append (at-least-once journal
-    over idempotent rows — the covariance-journal discipline).
+    q_rollup_quantile's bounds bit-for-bit.  Replays collapse on the
+    full (batch_id, minute, key, bin) key.
 
     Cost per batch: ONE map-side-combined aggregate over the batch
     (the q_rollup_quantile level-1 exchange, batch-bounded) + one
     append."""
     from level2_to_cassandra_spark.operators import rollup as rollup_ops
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            inner(batch_df, batch_id)
-            parts = rollup_ops.minute_grid_partials(
-                batch_df, ts_col=ts_col, key_col=key_col,
-                value_col=value_col,
-            ).select(
-                "minute",
-                F.col("key").cast("string").alias("key"),
-                "bin",
-                "pn",
-                # cast to the pinned journal schema like the key above
-                # (self-review r15: an int/float/decimal value_col would
-                # otherwise write a journal the fixed double reader
-                # schema can never read back)
-                F.col("vmin").cast("double").alias("vmin"),
-                F.col("vmax").cast("double").alias("vmax"),
-                F.lit(int(batch_id)).cast("long").alias("batch_id"),
-            )
-            parts.coalesce(1).write.mode("append").parquet(
-                f"{grid_rollup_path(base_path)}/partials"
-            )
-        finally:
-            batch_df.unpersist()
+    def step(batch, bid, persist):
+        parts = rollup_ops.minute_grid_partials(
+            batch, ts_col=ts_col, key_col=key_col, value_col=value_col,
+        ).select(
+            "minute",
+            F.col("key").cast("string").alias("key"),
+            "bin",
+            "pn",
+            # cast to the pinned journal schema like the key above
+            # (self-review r15: an int/float/decimal value_col would
+            # otherwise write a journal the fixed double reader schema
+            # can never read back)
+            F.col("vmin").cast("double").alias("vmin"),
+            F.col("vmax").cast("double").alias("vmax"),
+            _bid(bid),
+        )
+        return batch, [_append(parts, f"{base_path}/{_GRID}/partials")]
 
-    return _write
+    return _journaled(inner, step)
 
 
 def read_grid_partials(spark, base_path: str) -> DataFrame:
@@ -2121,9 +1833,9 @@ def read_grid_partials(spark, base_path: str) -> DataFrame:
     from DIFFERENT batches covering the same cell merge by sum/min/max
     — the mergeability that makes the journal grain-serving."""
     raw = _read_journal(
-        spark, f"{grid_rollup_path(base_path)}/partials",
-        GRID_PARTIALS_SCHEMA,
-    ).dropDuplicates(["batch_id", "minute", "key", "bin"])
+        spark, f"{base_path}/{_GRID}/partials", GRID_PARTIALS_SCHEMA,
+        ("batch_id", "minute", "key", "bin"),
+    )
     return raw.groupBy("minute", "key", "bin").agg(
         F.sum("pn").alias("pn"),
         F.min("vmin").alias("vmin"),

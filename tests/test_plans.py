@@ -1626,3 +1626,42 @@ def test_tick_batch_write_single_shuffle(spark, tmp_path):
         for op in ("FlatMapGroupsInPandasWithState", "ArrowEvalPython",
                    "MapInPandas", "ExistingRDD", "LogicalRDD"):
             assert op not in plan, (op, plan)
+
+
+def test_quality_gate_legs_read_cached_batch_no_shuffle(
+    spark, tmp_path, monkeypatch
+):
+    """foreach_batch_with_quality_gate's "zero shuffles" claim: the
+    admitted leg handed to the sink and the reject-journal write both
+    scan the persisted batch (``InMemoryTableScan``) with map-side
+    expressions only — no ``Exchange`` and no Python — so the gate
+    persists before it splits and its journal append adds no
+    shuffle."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from level2_to_cassandra_spark.catalog import load_table
+    from level2_to_cassandra_spark.streaming.monitor import (
+        foreach_batch_with_quality_gate,
+    )
+
+    plans = {}
+    write_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        plans[path] = plan_of(self._df, "simple")
+        return write_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    docs = load_table(spark, SF, "documents")
+    cb = foreach_batch_with_quality_gate(
+        lambda df, bid: plans.setdefault("admitted", plan_of(df, "simple")),
+        str(tmp_path / "sink"),
+    )
+    cb(docs, 0)
+    assert set(plans) == {
+        "admitted", str(tmp_path / "sink" / "_quality_gate" / "rejects")
+    }
+    for leg, plan in plans.items():
+        assert "InMemoryTableScan" in plan, (leg, plan)
+        for op in ("Exchange", "ArrowEvalPython", "BatchEvalPython"):
+            assert op not in plan, (leg, op, plan)

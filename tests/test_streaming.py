@@ -2054,15 +2054,24 @@ def test_monitor_readers_empty_before_first_batch(spark, tmp_path):
     dashboards and reconcile jobs poll these tables on a schedule
     that does not know whether the stream has produced yet."""
     from level2_to_cassandra_spark.streaming.monitor import (
+        grid_rollup_bounds,
+        read_classifier_rejects,
         read_covariance,
         read_drift,
         read_embed_drift,
+        read_grid_partials,
         read_hot_shingles,
         read_ks,
+        read_line_dedup,
+        read_line_overspan,
         read_metrics,
+        read_mixture,
         read_novelty,
         read_outlier_quarantine,
+        read_quality_rejects,
+        read_url_rejects,
         read_vocab_growth,
+        read_vote_rejects,
     )
 
     base = str(tmp_path / "never_written")
@@ -2076,6 +2085,15 @@ def test_monitor_readers_empty_before_first_batch(spark, tmp_path):
         "outliers": lambda: read_outlier_quarantine(spark, base),
         "vocab": lambda: read_vocab_growth(spark, base),
         "hot_shingles": lambda: read_hot_shingles(spark, base),
+        "line_overspan": lambda: read_line_overspan(spark, base),
+        "line_dedup": lambda: read_line_dedup(spark, base),
+        "quality_rejects": lambda: read_quality_rejects(spark, base),
+        "vote_rejects": lambda: read_vote_rejects(spark, base),
+        "mixture": lambda: read_mixture(spark, base),
+        "classifier_rejects": lambda: read_classifier_rejects(spark, base),
+        "url_rejects": lambda: read_url_rejects(spark, base),
+        "grid_partials": lambda: read_grid_partials(spark, base),
+        "grid_bounds": lambda: grid_rollup_bounds(spark, base),
     }
     for name, fn in readers.items():
         df = fn()
@@ -2088,6 +2106,127 @@ def test_monitor_readers_empty_before_first_batch(spark, tmp_path):
     assert [f.name for f in readers["vocab"]().schema] == [
         "batch_id", "n_new", "vocab_size"
     ]
+
+
+def _journal_tree(spark, root):
+    """Every parquet directory under ``root`` → its sorted rows."""
+    import os
+
+    out = {}
+    for d, _, files in os.walk(root):
+        if any(f.endswith(".parquet") for f in files):
+            out[os.path.relpath(d, root)] = sorted(
+                spark.read.parquet(d).collect(), key=repr
+            )
+    return out
+
+
+def _journal_files(root):
+    import os
+
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, files in os.walk(root) for f in files
+    )
+
+
+@pytest.mark.parametrize("gate", ["mixture", "quality_gate", "url_dedup"])
+def test_gate_failed_write_journals_nothing_and_retry_matches(
+    spark, tmp_path, gate
+):
+    """The journaled-gate contract on a pure audit (mixture), a
+    stateless split (quality gate) and a store-plus-Bloom gate (URL
+    dedup): when the wrapped sink write raises, the gate writes no
+    journal, Bloom or seen-store file and releases every frame it
+    persisted; a retry of the same batch_id then admits and journals
+    exactly what a clean run does (row multisets, not just after the
+    readers' replay dedup)."""
+    from level2_to_cassandra_spark.catalog import load_table
+    from level2_to_cassandra_spark.streaming import monitor
+    from tests.conftest import SF_SMOKE as sf_smoke
+
+    wrap = {
+        "mixture": monitor.foreach_batch_with_mixture,
+        "quality_gate": monitor.foreach_batch_with_quality_gate,
+        "url_dedup": monitor.foreach_batch_with_url_dedup,
+    }[gate]
+    docs = load_table(spark, sf_smoke, "documents")
+    cut = docs.agg(
+        F.percentile_approx("doc_id", F.lit(0.5)).alias("m")
+    ).first()["m"]
+    batches = [
+        docs.where(F.col("doc_id") <= cut),
+        docs.where(F.col("doc_id") > cut),
+    ]
+    sc = spark.sparkContext
+
+    def run(base, fail_batch=None):
+        admitted: dict = {}
+        state = {"fail": False}
+
+        def inner(df, bid):
+            if state["fail"]:
+                df.count()                  # materialize the caches
+                state["cached"] = sc._jsc.getPersistentRDDs().size()
+                raise RuntimeError("sink down")
+            admitted[bid] = sorted(
+                r.doc_id for r in df.select("doc_id").collect()
+            )
+
+        cb = wrap(inner, base)
+        for i, b in enumerate(batches):
+            if i == fail_batch:
+                files = _journal_files(base)
+                n_rdds = sc._jsc.getPersistentRDDs().size()
+                state["fail"] = True
+                with pytest.raises(RuntimeError, match="sink down"):
+                    cb(b, i)
+                assert state["cached"] > n_rdds        # non-vacuous
+                assert sc._jsc.getPersistentRDDs().size() == n_rdds
+                assert _journal_files(base) == files
+                state["fail"] = False
+            cb(b, i)
+        return admitted, _journal_tree(spark, base)
+
+    clean = run(str(tmp_path / "clean"))
+    retried = run(str(tmp_path / "retried"), fail_batch=1)
+    assert retried == clean
+    admitted, journals = clean
+    assert admitted[0] and admitted[1] and journals  # non-vacuous
+    if gate == "url_dedup":
+        assert {"_url_dedup/seen", "_url_dedup/rejects"} <= set(journals)
+        assert any(k.startswith("_url_dedup/bloom/") for k in journals)
+
+
+def test_ks_gate_teardown_releases_reference_cache(spark, tmp_path):
+    """foreach_batch_with_ks persists its reference grid for the
+    stream's lifetime; the callback's ``teardown()`` handle releases
+    it (and is idempotent)."""
+    from pyspark import StorageLevel
+
+    from level2_to_cassandra_spark.operators.drift import (
+        ks_reference_dist,
+    )
+    from level2_to_cassandra_spark.streaming.monitor import (
+        foreach_batch_with_ks,
+    )
+
+    schema = "event_type string, value double"
+    ref = ks_reference_dist(spark.createDataFrame(
+        [("a", float(v % 100)) for v in range(200)], schema
+    ))
+    sc = spark.sparkContext
+    n_rdds = sc._jsc.getPersistentRDDs().size()
+    cb = foreach_batch_with_ks(
+        lambda df, bid: None, str(tmp_path / "sink"), ref
+    )
+    cb(spark.createDataFrame([("a", 3.0), ("a", 70.0)], schema), 0)
+    assert ref.storageLevel != StorageLevel.NONE
+    assert sc._jsc.getPersistentRDDs().size() == n_rdds + 1
+    cb.teardown()
+    assert ref.storageLevel == StorageLevel.NONE
+    assert sc._jsc.getPersistentRDDs().size() == n_rdds
+    cb.teardown()
 
 
 def test_ks_operator_parity_with_registered_query(spark):
