@@ -231,6 +231,16 @@ def _staging_builders():
                            "q_dedup_incremental_fuzzy",
                            "q_sketch_error",
                            "q_dedup_cross_source"}),
+        "shingle_sets": (llm._shingle_set_relation,
+                         {"q_llm_dedup_fuzzy", "q_llm_dedup_minhash",
+                          "q_text_containment",
+                          "q_dedup_incremental_fuzzy",
+                          "q_sketch_error",
+                          "q_dedup_cross_source"}),
+        "doc_count": (llm._doc_count,
+                      {"q_llm_dedup_fuzzy", "q_text_containment",
+                       "q_dedup_incremental_fuzzy",
+                       "q_dedup_cross_source"}),
         "minhash_signatures": (llm._sig_relation,        # r16
                                {"q_llm_dedup_minhash",
                                 "q_sketch_error"}),

@@ -203,7 +203,15 @@ def materialize_once_bucketed(cache: dict, spark, sf_dir: str,
 
     app = spark.sparkContext.applicationId
     for stale in [k for k in cache if k[0] != app]:
-        shutil.rmtree(cache.pop(stale)[0], ignore_errors=True)
+        # reclaim both halves of the evicted entry: the catalog entry
+        # (best effort — a dead application's table is usually absent
+        # from this session's catalog) and the data directory
+        path, name = cache.pop(stale)
+        try:
+            spark.sql(f"DROP TABLE IF EXISTS `{name}`")
+        except Exception:  # noqa: BLE001 — reclaim never fails a query
+            pass
+        shutil.rmtree(path, ignore_errors=True)
     ent = cache.get((app, sf_dir))
     if ent is None:
         n = staging_buckets(spark)

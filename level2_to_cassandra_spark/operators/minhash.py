@@ -3,7 +3,8 @@
 Two formulations with one contract (pairs above a Jaccard threshold):
 
 * :func:`exact_jaccard_pairs` — inverted shingle index: explode
-  distinct shingles, self-join on the shingle, count co-occurrences,
+  distinct shingles, self-join on the shingle for candidate pairs,
+  verify each candidate by intersecting the two docs' shingle SETS,
   Jaccard = |∩| / (|A|+|B|−|∩|).  EXACT, and the oracle for the
   approximate path.  Scales with shingle-postings sizes (fine while
   shingles are discriminative; hot shingles are the caveat and can be
@@ -24,22 +25,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from level2_to_cassandra_spark.catalog import spread_scan
-
-#: r17 A/B escape hatch for measurement scripts (tools/) — never set
-#: false in engine code.  When the pair operators are handed the
-#: PRE-BUILT ranked prefix index (a bucketed-on-shingle staging
-#: table, queries/llm.py::_shingle_index_relation), the candidate
-#: self-join is hinted SHUFFLE_HASH: both branches then read
-#: co-partitioned buckets — no exchange, no sort, per-task hash
-#: builds over one bucket — where the planner's size estimate would
-#: otherwise pick a broadcast whose hash relation every probe task
-#: pays a fixed CPU cost to deserialize (measured r17, see
-#: _verify_jaccard), or a sort-merge join that re-exchanges and
-#: re-sorts both branches.  The hint is applied ONLY on the staged
-#: path: an inline (unbucketed) build keeps the planner's choice.
-_CAND_SHUFFLE_HASH = True
-# The verify joins' SHUFFLE_HASH hint was rejected: see OPTIMIZATION_r17.md.
-
 from level2_to_cassandra_spark.operators.text import (
     tokens,
     word_shingles_of,
@@ -233,36 +218,88 @@ def _adopt_postings(postings: DataFrame) -> DataFrame:
     return postings
 
 
-def _verify_jaccard(postings: DataFrame, cand: DataFrame) -> DataFrame:
-    """Exact Jaccard for candidate (id_a, id_b, na, nb) pairs from full
-    postings: co-occurrence count join.  Set sizes arrive ON the
-    candidate rows (carried from the postings' ``n`` column through
-    candidate generation), so no sizes relation, no extra joins.
-    (A small-side expansion variant — join ``pa`` on whichever id has
-    the smaller ``n``, the containment_pairs r16 trick — was measured
-    ~10 % SLOWER here: the symmetric length filter already bounds
-    na/nb within a factor of the threshold, so the row gain is small
-    while the computed join key costs a projection on every row.)
+#: Column contract of a pre-built per-doc shingle-SET table: one row
+#: per doc, ``sh`` the doc's distinct shingles as an array.
+SET_COLUMNS = ("id", "sh")
 
-    The candidate relation is deliberately NOT spread to cluster
-    width here (catalog.spread_keys): the verify joins broadcast the
-    postings at fixture scale, and each probe task pays a fixed
-    ~0.5-1 s CPU deserializing the two broadcast hash relations —
-    measured r17: widening this chain 3 -> 32 tasks inflated stage CPU
-    3.5 s -> 33.6 s for identical row counts.  Parallelism here comes
-    from the join partitioning itself once the postings are too big
-    to broadcast (the bucketed staging layout)."""
-    pa, pb = postings.alias("pa"), postings.alias("pb")
-    co = (
-        pa
-        .join(cand, F.col("pa.id") == F.col("id_a"))
-        .join(
-            pb,
-            (F.col("pb.id") == F.col("id_b"))
-            & (F.col("pa.shingle") == F.col("pb.shingle")),
+
+def shingle_sets(postings: DataFrame) -> DataFrame:
+    """The per-doc shingle-set relation ``(id, sh)`` over a postings
+    relation: ``sh = collect_list(shingle)``.  Postings are distinct
+    per doc, so ``sh`` is a set and ``size(sh)`` is the doc's ``n``.
+    This is the compact per-object representation verification reads:
+    one row per doc, where the postings carry one row per shingle."""
+    return postings.groupBy("id").agg(F.collect_list("shingle").alias("sh"))
+
+
+def _adopt_sets(sets: DataFrame) -> DataFrame:
+    """Contract guard for a caller-supplied pre-built set table — the
+    :data:`SET_COLUMNS` shape, :func:`shingle_sets` semantics over the
+    SAME postings (the caller owns that consistency, as with
+    ``ranked``; tests/test_llm_ops.py::
+    test_staged_sets_consistent_with_staged_postings carries the
+    semantic check for the staged pair)."""
+    if sorted(sets.columns) != sorted(SET_COLUMNS):
+        raise ValueError(
+            f"pre-built shingle sets must have exactly {SET_COLUMNS} "
+            f"columns (shingle_sets semantics); got {sets.columns}"
         )
-        .groupBy("id_a", "id_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("inter"))
+    return sets
+
+
+def _pair_inputs(docs: DataFrame, id_col: str, text_col: str, k: int,
+                 postings: DataFrame | None,
+                 sets: DataFrame | None) -> tuple[DataFrame, DataFrame]:
+    """The (postings, sets) pair every pair operator reads: each the
+    caller's pre-built relation (shape-guarded) or built inline.  An
+    inline postings relation is persisted — it feeds the candidate
+    index and the inline set table, and the shingling would otherwise
+    run once per branch (≈3× on the fixture; at cluster scale the same
+    role is played by a staging table).  An inline set table is one
+    aggregate over the postings, read by both verify joins; the two
+    reads share its exchange."""
+    if postings is None:
+        postings = shingle_postings(docs, id_col, text_col, k).persist()
+    else:
+        postings = _adopt_postings(postings)
+    if sets is None:
+        sets = shingle_sets(postings)
+    else:
+        sets = _adopt_sets(sets)
+    return postings, sets
+
+
+def _intersection(a: str, b: str) -> F.Column:
+    """|A ∩ B| of two shingle-set array columns (each already a set)."""
+    return F.size(F.array_intersect(F.col(a), F.col(b)))
+
+
+def _verify_jaccard(sets: DataFrame, cand: DataFrame) -> DataFrame:
+    """Exact Jaccard for candidate (id_a, id_b, na, nb) pairs:
+    ``cand ⋈ sets on id_a ⋈ sets on id_b`` and
+    |∩| = size(array_intersect(sa, sb)) per pair.  Set sizes arrive ON
+    the candidate rows (carried from the index's ``n`` column through
+    candidate generation), so no sizes relation.  Each candidate reads
+    two rows of the one-row-per-doc set table — no per-shingle
+    expansion, no pair-keyed aggregate, and nothing keyed on
+    (id, shingle) strings.
+
+    At fixture scale the set table is small enough to broadcast; once
+    it is not, the bucketed-on-``id`` staging layout
+    (queries/llm.py::_shingle_set_relation) keeps both joins
+    co-partitioned with it — no exchange on the set side.  The
+    candidate relation is not spread to cluster width
+    (catalog.spread_keys): every task of a broadcast-probe stage
+    deserializes the broadcast relation, so width there costs CPU
+    rather than saving it (measured on the earlier postings-keyed
+    broadcast)."""
+    sa = sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sa"))
+    sb = sets.select(F.col("id").alias("id_b"), F.col("sh").alias("sb"))
+    co = (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .select("id_a", "id_b", "na", "nb",
+                _intersection("sa", "sb").alias("inter"))
     )
     return co.select(
         "id_a",
@@ -284,6 +321,7 @@ def exact_jaccard_pairs(docs: DataFrame, threshold: float,
                         postings: DataFrame | None = None,
                         ranked: DataFrame | None = None,
                         candidate_where: "F.Column | None" = None,
+                        sets: DataFrame | None = None,
                         ) -> DataFrame:
     """All pairs with shingle-set Jaccard ≥ threshold (exact).
     Output: (id_a, id_b, jaccard) with id_a < id_b.
@@ -293,7 +331,7 @@ def exact_jaccard_pairs(docs: DataFrame, threshold: float,
     relation BEFORE the distinct and before exact verification (r16).
     A caller that only consumes a subset of the pairs (e.g. the
     incremental dedup's cross-side pairs) would otherwise pay the
-    verification expansion join for every pair and then drop most of
+    verification joins for every pair and then drop most of
     the output; pushing the id-level predicate here cuts the distinct
     and the verify inputs instead.  Result-identical to filtering the
     output by construction: verification is exact per pair, so
@@ -305,9 +343,15 @@ def exact_jaccard_pairs(docs: DataFrame, threshold: float,
     materialize the shingling ONCE and serve every member of the
     lexical dedup family from it (the inverted-index staging table a
     retrieval stack maintains anyway; queries/llm.py::
-    _shingle_relation).  The relation is read by 3+ plan branches —
-    a parquet-backed staging table replays per branch for the cost of
-    the scan, which is why no persist is layered on top of it.
+    _shingle_relation).  A parquet-backed staging table replays per
+    plan branch for the cost of the scan, which is why no persist is
+    layered on top of it.
+
+    ``sets`` optionally supplies the pre-built per-doc shingle-set
+    table (:func:`shingle_sets` semantics over the SAME postings —
+    queries/llm.py::_shingle_set_relation) that exact verification
+    intersects; without it the set table is derived inline from the
+    postings, through the same verification code.
 
     ``ranked`` (threshold > 0 path only) additionally supplies the
     pre-built rarest-first RANKED index (:func:`ranked_postings`
@@ -332,8 +376,9 @@ def exact_jaccard_pairs(docs: DataFrame, threshold: float,
     (if A's prefix misses B entirely, the overlap is confined to A's
     suffix of ⌈t·n⌉−1 < t·n elements — contradiction).  The self-join
     therefore runs on ~(1−t) of the postings, and rarest-first ordering
-    keeps the per-shingle bucket sizes small; verification then uses
-    the full postings, so the result is EXACT, not approximate.
+    keeps the per-shingle bucket sizes small; verification then
+    intersects the full shingle sets, so the result is EXACT, not
+    approximate.
 
     Without a cap the result is FULLY EXACT.  Note the plain prefix
     filter already bounds hot-shingle join buckets: a shingle enters a
@@ -345,8 +390,8 @@ def exact_jaccard_pairs(docs: DataFrame, threshold: float,
     ``max_shingle_df`` (the stop-shingle cap) additionally removes
     shingles with df > cap from the candidate index (prefix positions
     are still assigned over the full rarest-first order; verification
-    still uses full postings, so every EMITTED pair carries its TRUE
-    Jaccard — precision stays exact).  RECALL IS NOT EXACT under a
+    still reads the full shingle sets, so every EMITTED pair carries
+    its TRUE Jaccard — precision stays exact).  RECALL IS NOT EXACT under a
     live cap: a qualifying pair is missed iff every shingle its two
     prefixes share is hotter than the cap, i.e. the pair's overlap is
     carried entirely by corpus boilerplate — for dedup that is usually
@@ -371,16 +416,8 @@ def exact_jaccard_pairs(docs: DataFrame, threshold: float,
     if max_shingle_frac is not None and threshold <= 0:
         raise ValueError("max_shingle_frac requires threshold > 0; "
                          "use max_shingle_df on the all-pairs path")
-    if postings is None:
-        # The postings relation feeds 3+ plan branches (prefix index,
-        # both verification sides); persisting it computes the
-        # shingling once instead of per branch (≈3× on the fixture).
-        # At cluster scale the same role is played by a checkpoint/
-        # staging table; memory-and-disk keeps local behavior safe
-        # under pressure.
-        postings = shingle_postings(docs, id_col, text_col, k).persist()
-    else:
-        postings = _adopt_postings(postings)
+    postings, sets = _pair_inputs(docs, id_col, text_col, k,
+                                  postings, sets)
     by_id = Window.partitionBy("id")
     if threshold <= 0:
         index = postings.withColumn("n", F.count(F.lit(1)).over(by_id))
@@ -475,9 +512,23 @@ def exact_jaccard_pairs(docs: DataFrame, threshold: float,
             * (F.col("a.n") + F.col("b.n"))
             - F.lit(1e-9)
         )
+        # Staged path: both branches read the shingle-bucketed index,
+        # so a SHUFFLE_HASH join needs no exchange and no sort and
+        # builds one hash relation per bucket — where the planner's
+        # size estimate would pick a broadcast whose relation every
+        # probe task pays to deserialize, or a sort-merge join that
+        # re-exchanges and re-sorts both branches.  An inline build
+        # keeps the planner's choice.  The per-shingle bound behind
+        # the hint at scale: the prefix filter admits a shingle only
+        # into a doc's ⌊(1−t)·n⌋+1 rarest positions, and a live cap
+        # drops every shingle with df > cap, so one shingle's build
+        # rows number at most ``cap``.  A bucket beyond that comes only
+        # from docs whose whole prefix is hot (min_df > cap, kept for
+        # recall) or from an uncapped call — the documented skew risk
+        # of a hinted hash join.
         b_side = index.alias("b")
-        if ranked is not None and _CAND_SHUFFLE_HASH:
-            b_side = b_side.hint("shuffle_hash")  # see flag docstring
+        if ranked is not None:
+            b_side = b_side.hint("shuffle_hash")
         cand = (
             index.alias("a")
             .join(b_side, "shingle")
@@ -506,7 +557,7 @@ def exact_jaccard_pairs(docs: DataFrame, threshold: float,
         cand = cand.distinct()
     if candidates_only:
         return cand
-    return _verify_jaccard(postings, cand).where(
+    return _verify_jaccard(sets, cand).where(
         F.col("jaccard") >= threshold
     )
 
@@ -517,14 +568,17 @@ def minhash_pairs(docs: DataFrame, threshold: float,
                   max_shingle_df: int | None = None,
                   candidates_only: bool = False,
                   postings: DataFrame | None = None,
-                  signatures: DataFrame | None = None) -> DataFrame:
+                  signatures: DataFrame | None = None,
+                  sets: DataFrame | None = None) -> DataFrame:
     """MinHash+LSH candidates verified with exact Jaccard ≥ threshold.
     Output: (id_a, id_b, jaccard) with id_a < id_b.
 
     ``postings`` optionally supplies the pre-built ``(id, shingle)``
     relation (the exact_jaccard_pairs contract) — signatures and
     verification both derive from it, so the lexical dedup family can
-    share one materialized shingling.
+    share one materialized shingling.  ``sets`` optionally supplies
+    the pre-built per-doc shingle-set table verification intersects
+    (the exact_jaccard_pairs contract; derived inline when absent).
 
     ``signatures`` optionally supplies the pre-built signature
     relation — ``(id, h0..h{n_hashes-1}, n)``,
@@ -548,7 +602,7 @@ def minhash_pairs(docs: DataFrame, threshold: float,
     rises, so at dedup-grade thresholds recall is effectively 1.
 
     ``max_shingle_df`` excludes stop-shingles from SIGNATURE
-    computation only (verification stays on full postings → exact
+    computation only (verification stays on full shingle sets → exact
     Jaccard, exact precision).  Stop-shingles shared across most of the
     corpus drag unrelated documents' minhashes toward the same values,
     inflating band buckets — the cap keeps bucket sizes driven by
@@ -562,11 +616,8 @@ def minhash_pairs(docs: DataFrame, threshold: float,
     if signatures is not None and max_shingle_df is not None:
         raise ValueError("signatures and max_shingle_df are mutually "
                          "exclusive — cap at signature-build time")
-    if postings is None:
-        # shared by signatures + verification — see exact_jaccard_pairs
-        postings = shingle_postings(docs, id_col, text_col, k).persist()
-    else:
-        postings = _adopt_postings(postings)
+    postings, sets = _pair_inputs(docs, id_col, text_col, k,
+                                  postings, sets)
     if signatures is not None:
         expect = sorted(["id", "n"] + [f"h{i}" for i in range(n_hashes)])
         if sorted(signatures.columns) != expect:
@@ -575,8 +626,7 @@ def minhash_pairs(docs: DataFrame, threshold: float,
                 f"h0..h{n_hashes - 1}, n) columns (portable_signatures "
                 f"semantics); got {signatures.columns}"
             )
-        with_sig = signatures
-        return _banded_pairs(with_sig, postings, threshold, n_hashes,
+        return _banded_pairs(signatures, sets, threshold, n_hashes,
                              bands, r, candidates_only)
     sig_postings = (
         postings if max_shingle_df is None
@@ -611,11 +661,11 @@ def minhash_pairs(docs: DataFrame, threshold: float,
             postings.groupBy("id").agg(F.count(F.lit(1)).alias("n")), "id"
         )
     with_sig = with_sig.persist()
-    return _banded_pairs(with_sig, postings, threshold, n_hashes,
+    return _banded_pairs(with_sig, sets, threshold, n_hashes,
                          bands, r, candidates_only)
 
 
-def _banded_pairs(with_sig: DataFrame, postings: DataFrame,
+def _banded_pairs(with_sig: DataFrame, sets: DataFrame,
                   threshold: float, n_hashes: int, bands: int, r: int,
                   candidates_only: bool) -> DataFrame:
     """Banded-LSH candidate join + exact verification over a
@@ -656,9 +706,11 @@ def _banded_pairs(with_sig: DataFrame, postings: DataFrame,
     )
     if candidates_only:
         return cand
-    # exact verification of candidates only
-    return _verify_jaccard(postings, cand).where(
-        F.col("jaccard") >= threshold
+    # exact verification of candidates only; a band-hash collision can
+    # pair docs that share no shingle, which no threshold makes a
+    # near-duplicate: jaccard 0 is dropped even at threshold 0
+    return _verify_jaccard(sets, cand).where(
+        (F.col("jaccard") >= threshold) & (F.col("jaccard") > 0)
     )
 
 
@@ -670,7 +722,8 @@ def containment_pairs(docs: DataFrame, threshold: float,
                       min_cap_df: int = 50,
                       candidates_only: bool = False,
                       postings: DataFrame | None = None,
-                      ranked: DataFrame | None = None) -> DataFrame:
+                      ranked: DataFrame | None = None,
+                      sets: DataFrame | None = None) -> DataFrame:
     """All DIRECTIONAL pairs with shingle-set containment
     |Sa ∩ Sb| / |Sa| ≥ threshold (exact).  Output:
     (inner_id, outer_id, containment) — ``inner`` is the contained
@@ -692,8 +745,8 @@ def containment_pairs(docs: DataFrame, threshold: float,
     (n_b ≥ ⌈t·n_a⌉ — overlap cannot exceed n_b) and the positional
     bound (for the pair's minimal common shingle every other common
     shingle ranks after it in BOTH docs, so overlap ≤
-    1 + min(n_a−p_a, n_b−p_b)).  Verification computes the true
-    intersection on FULL postings, so precision is exact.
+    1 + min(n_a−p_a, n_b−p_b)).  Verification intersects the two
+    docs' FULL shingle sets, so precision is exact.
 
     The stop-shingle cap (``max_shingle_df`` / corpus-relative
     ``max_shingle_frac`` with the ``min_cap_df`` inertness floor, both
@@ -706,14 +759,14 @@ def containment_pairs(docs: DataFrame, threshold: float,
     k, distinct per doc); ``ranked`` the pre-built rarest-first index
     (:func:`ranked_postings` over the same postings — the dominant
     candidate-generation cost, staged once per corpus by
-    queries/llm.py::_shingle_index_relation).  No persist is layered
-    on a caller-provided staging table."""
+    queries/llm.py::_shingle_index_relation); ``sets`` the pre-built
+    per-doc shingle-set table verification intersects (the
+    exact_jaccard_pairs contract; derived inline when absent).  No
+    persist is layered on a caller-provided staging table."""
     if threshold <= 0:
         raise ValueError("containment_pairs requires threshold > 0")
-    if postings is None:
-        postings = shingle_postings(docs, id_col, text_col, k).persist()
-    else:
-        postings = _adopt_postings(postings)
+    postings, sets = _pair_inputs(docs, id_col, text_col, k,
+                                  postings, sets)
     if ranked is not None:
         index = _adopt_ranked(ranked)
     else:
@@ -748,9 +801,10 @@ def containment_pairs(docs: DataFrame, threshold: float,
     # required overlap, from the INNER side's size only
     alpha = F.ceil(F.lit(threshold) * F.col("a.n") - F.lit(1e-9))
     a_side = prefix.alias("a")
-    if ranked is not None and _CAND_SHUFFLE_HASH:
-        # build side = the PREFIX (the smaller branch); see the flag
-        # docstring — both branches read co-partitioned buckets.
+    if ranked is not None:
+        # build side = the PREFIX (the smaller branch, bounded per
+        # shingle as in exact_jaccard_pairs); both branches read
+        # co-partitioned buckets — see the hint there.
         a_side = a_side.hint("shuffle_hash")
     raw = (
         a_side
@@ -778,62 +832,43 @@ def containment_pairs(docs: DataFrame, threshold: float,
         return raw.select("inner_id", "outer_id", "n_inner").distinct()
     # UNORDERED verification (r16): the intersection is symmetric, so a
     # pair that is a candidate in BOTH directions (~30 % of directed
-    # candidates at sf0.1) needs its co-count expansion computed ONCE,
-    # not once per direction — and the expansion side can always be the
-    # SMALLER document (Σ min(n_a, n_b) expansion rows instead of
-    # Σ n_inner over directed pairs).  The (lo, hi) groupBy replaces
-    # the directed distinct (same single exchange — the join-dup dedup
-    # and the direction fold are one aggregate); both sizes ride the
-    # candidate rows, so no sizes join.  A direction is emitted from
-    # the one exact inter count ONLY when that direction was itself a
-    # candidate (the d_lo/d_hi presence flags): under an inert cap the
-    # filters are lossless so this equals the threshold cut alone, but
-    # under a LIVE stop-shingle cap a direction can be absent from the
-    # candidates while its symmetric twin is present, and emitting it
-    # anyway would silently restore recall the cap's documented
-    # semantic trades away (tests/test_properties.py pins the capped
-    # behavior against a bit-faithful simulation).  Each emitted
-    # direction computes the identical inter/n_inner double, so the
-    # output rows are exactly the directed-verify rows under ANY cap.
+    # candidates at sf0.1) is verified ONCE, on its (lo, hi) row.  The
+    # (lo, hi) groupBy replaces the directed distinct (same single
+    # exchange — the join-dup dedup and the direction fold are one
+    # aggregate); both sizes ride the candidate rows, so no sizes
+    # join, and |∩| is one array_intersect of the two docs' shingle
+    # sets.  A direction is emitted from the one exact inter count
+    # ONLY when that direction was itself a candidate (the d_lo/d_hi
+    # presence flags): under an inert cap the filters are lossless so
+    # this equals the threshold cut alone, but under a LIVE
+    # stop-shingle cap a direction can be absent from the candidates
+    # while its symmetric twin is present, and emitting it anyway
+    # would silently restore recall the cap's documented semantic
+    # trades away (tests/test_properties.py pins the capped behavior
+    # against a bit-faithful simulation).  Each emitted direction
+    # computes the identical inter/n_inner double, so the output rows
+    # are exactly the directed-verify rows under ANY cap.
     ilo = F.col("inner_id") < F.col("outer_id")
-    und = (
-        raw.groupBy(
-            F.least("inner_id", "outer_id").alias("lo"),
-            F.greatest("inner_id", "outer_id").alias("hi"),
-        )
-        .agg(
-            F.max(
-                F.when(ilo, F.col("n_inner")).otherwise(F.col("n_outer"))
-            ).alias("n_lo"),
-            F.max(
-                F.when(ilo, F.col("n_outer")).otherwise(F.col("n_inner"))
-            ).alias("n_hi"),
-            F.max(F.when(ilo, 1).otherwise(0)).alias("d_lo"),
-            F.max(F.when(ilo, 0).otherwise(1)).alias("d_hi"),
-        )
-        .select(
-            "lo", "hi", "n_lo", "n_hi", "d_lo", "d_hi",
-            F.when(F.col("n_lo") <= F.col("n_hi"), F.col("lo"))
-            .otherwise(F.col("hi")).alias("__small"),
-            F.when(F.col("n_lo") <= F.col("n_hi"), F.col("hi"))
-            .otherwise(F.col("lo")).alias("__big"),
-        )
+    und = raw.groupBy(
+        F.least("inner_id", "outer_id").alias("lo"),
+        F.greatest("inner_id", "outer_id").alias("hi"),
+    ).agg(
+        F.max(
+            F.when(ilo, F.col("n_inner")).otherwise(F.col("n_outer"))
+        ).alias("n_lo"),
+        F.max(
+            F.when(ilo, F.col("n_outer")).otherwise(F.col("n_inner"))
+        ).alias("n_hi"),
+        F.max(F.when(ilo, 1).otherwise(0)).alias("d_lo"),
+        F.max(F.when(ilo, 0).otherwise(1)).alias("d_hi"),
     )
-    pa, pb = postings.alias("pa"), postings.alias("pb")
+    s_lo = sets.select(F.col("id").alias("lo"), F.col("sh").alias("s_lo"))
+    s_hi = sets.select(F.col("id").alias("hi"), F.col("sh").alias("s_hi"))
     co = (
-        pa
-        # NOT spread_keys-widened: each task of a broadcast-probe
-        # stage pays a fixed CPU cost deserializing the broadcast
-        # relations, so widening this chain was measured 10x MORE
-        # stage CPU (see _verify_jaccard's note, r17)
-        .join(und, F.col("pa.id") == F.col("__small"))
-        .join(
-            pb,
-            (F.col("pb.id") == F.col("__big"))
-            & (F.col("pa.shingle") == F.col("pb.shingle")),
-        )
-        .groupBy("lo", "hi", "n_lo", "n_hi", "d_lo", "d_hi")
-        .agg(F.count(F.lit(1)).alias("inter"))
+        und.join(s_lo, "lo")
+        .join(s_hi, "hi")
+        .select("lo", "hi", "n_lo", "n_hi", "d_lo", "d_hi",
+                _intersection("s_lo", "s_hi").alias("inter"))
     )
     it = F.col("inter").cast("double")
     both = co.select(

@@ -159,17 +159,21 @@ def q_dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     join); the cell aggregate is ≤ #sources² rows.  No row-scale
     shuffle outside the staged pair machinery itself."""
     from level2_to_cassandra_spark.queries.llm import (
+        _shingle_cap,
         _shingle_index_relation,
         _shingle_relation,
+        _shingle_set_relation,
     )
 
     docs = load_table(spark, sf_dir, "documents")
     j = F.round(F.col("jaccard"), 6)
     pj = (
         minhash.exact_jaccard_pairs(
-            docs, threshold=0.79, k=3, max_shingle_frac=0.01,
+            docs, threshold=0.79, k=3,
+            max_shingle_df=_shingle_cap(spark, sf_dir),
             postings=_shingle_relation(spark, sf_dir),
             ranked=_shingle_index_relation(spark, sf_dir),
+            sets=_shingle_set_relation(spark, sf_dir),
         )
         .where(j >= 0.8)
         .select(

@@ -221,3 +221,26 @@ def test_staging_buckets_honours_valid_override(spark, monkeypatch):
 
     monkeypatch.setenv("SPARK_GRAFT_STAGING_BUCKETS", "7")
     assert staging_buckets(spark) == 7
+
+
+def test_bucketed_staging_eviction_drops_table_and_dir(spark, tmp_path):
+    """materialize_once_bucketed evicts a memo entry of another
+    application: both its session-catalog table and its data directory
+    are reclaimed, not just the directory."""
+    from level2_to_cassandra_spark.catalog import materialize_once_bucketed
+
+    stale_path, stale_name = tmp_path / "stale", "l2c_test_evict_stale"
+    spark.range(4).write.option("path", str(stale_path)).saveAsTable(
+        stale_name)
+    assert spark.catalog.tableExists(stale_name)
+    cache = {("foreign-app", SF_SMOKE): (str(stale_path), stale_name)}
+    df = materialize_once_bucketed(
+        cache, spark, SF_SMOKE, "l2c_test_evict_", lambda: spark.range(3),
+        bucket_col="id", sort_cols=("id",))
+    try:
+        assert df.count() == 3
+        assert not spark.catalog.tableExists(stale_name)
+        assert not stale_path.exists()
+        assert list(cache) == [(spark.sparkContext.applicationId, SF_SMOKE)]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {next(iter(cache.values()))[1]}")

@@ -2063,3 +2063,28 @@ def test_staged_ranked_index_consistent_with_staged_postings(spark):
     for doc, rows in by_doc.items():
         assert all(r.n == true_n[doc] for r in rows)
         assert sorted(r.pos for r in rows) == list(range(1, true_n[doc] + 1))
+
+
+def test_staged_sets_consistent_with_staged_postings(spark):
+    """_adopt_sets' shape guard cannot detect a set table built from
+    DIFFERENT postings than the co-supplied postings relation, which
+    would silently corrupt every verified jaccard/containment value.
+    The staged set table must flatten to EXACTLY the staged postings'
+    (id, shingle) set, hold no repeated shingle, and its size(sh) must
+    equal each doc's posting count."""
+    from level2_to_cassandra_spark.queries.llm import (
+        _shingle_relation,
+        _shingle_set_relation,
+    )
+
+    posts = [(r.id, r.shingle)
+             for r in _shingle_relation(spark, SF).collect()]
+    sets = _shingle_set_relation(spark, SF).collect()
+    assert sorted(sets[0].__fields__) == ["id", "sh"]
+    assert len({r.id for r in sets}) == len(sets)  # one row per doc
+    flat = [(r.id, s) for r in sets for s in r.sh]
+    assert sorted(flat) == sorted(posts)  # multiset: no repeats either
+    true_n: dict[int, int] = {}
+    for i, _ in posts:
+        true_n[i] = true_n.get(i, 0) + 1
+    assert {r.id: len(r.sh) for r in sets} == true_n

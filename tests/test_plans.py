@@ -844,13 +844,13 @@ def test_fuzzy_family_serves_from_staged_ranked_index(spark):
     generation reads the materialized ranked prefix index — no df/pos/n
     window stack and no persist in the serve plans."""
     from level2_to_cassandra_spark.queries.llm import (
-        _SHINGLE_INDEX_TABLE_B,
+        _SHINGLE_INDEX_TABLE,
         _shingle_index_relation,
     )
 
     _shingle_index_relation(spark, SF)
     app = spark.sparkContext.applicationId
-    assert (app, SF) in _SHINGLE_INDEX_TABLE_B  # r17: bucketed memo
+    assert (app, SF) in _SHINGLE_INDEX_TABLE  # r17: bucketed memo
     for name in ("q_llm_dedup_fuzzy", "q_dedup_incremental_fuzzy"):
         plan = plan_of(all_queries()[name].fn(spark, SF), "simple")
         assert "Window" not in plan, name
@@ -1514,48 +1514,71 @@ def test_bucketed_staging_candidate_join_no_exchange(spark):
         "candidate join input carries a shingle exchange:\n" + plan)
 
 
-def test_bucketed_staging_verify_copartitioned_at_scale(spark):
-    """r17 (VERDICT r16 task 3 'done' criterion): once the corpus
-    outgrows the broadcast threshold, the verification joins must be
-    co-partitioned with the doc-bucketed postings — NO Exchange on
-    the postings side of either verify join (the candidate/expansion
-    side keeps its one required exchange).  Simulated by disabling
-    auto-broadcast for the plan build."""
-    from level2_to_cassandra_spark.queries.llm import _shingle_relation
+def test_bucketed_set_table_verify_copartitioned_at_scale(spark):
+    """Once the corpus outgrows the broadcast threshold, the verify
+    joins (cand ⋈ sets on id_a ⋈ sets on id_b) must be co-partitioned
+    with the doc-bucketed shingle-set table — NO Exchange on the set
+    side of either verify join (the candidate side keeps its one
+    required exchange).  Simulated by disabling auto-broadcast for the
+    plan build."""
+    from level2_to_cassandra_spark.queries.llm import _shingle_set_relation
 
-    _shingle_relation(spark, SF)
+    _shingle_set_relation(spark, SF)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan = plan_of(
-            all_queries()["q_text_containment"].fn(spark, SF))
+        plans = {
+            name: plan_of(all_queries()[name].fn(spark, SF))
+            for name in ("q_llm_dedup_fuzzy", "q_text_containment")
+        }
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    # walk the plan tree upward from every doc-bucketed postings scan
-    # to its nearest ancestor Join: no Exchange may sit between them
-    # (a local Sort is allowed — Spark only trusts written bucket
-    # sort order in narrow conditions; the shuffle is what co-
-    # partitioning removes)
-    tree = plan.split("== Physical Plan ==")[1].split("\n\n")[0]
-    lines = tree.splitlines()
-    found = 0
-    for i, line in enumerate(lines):
-        if "l2c_sh3b_" not in line:
-            continue
-        found += 1
-        depth = len(line) - len(line.lstrip(" :+-"))
-        for j in range(i - 1, -1, -1):
-            up = lines[j]
-            updepth = len(up) - len(up.lstrip(" :+-"))
-            if updepth >= depth:
+    for name, plan in plans.items():
+        # walk the plan tree upward from every doc-bucketed set-table
+        # scan to its nearest ancestor Join: no Exchange may sit between
+        # them (a local Sort is allowed — Spark only trusts written
+        # bucket sort order in narrow conditions; the shuffle is what
+        # co-partitioning removes)
+        tree = plan.split("== Physical Plan ==")[1].split("\n\n")[0]
+        lines = tree.splitlines()
+        found = 0
+        for i, line in enumerate(lines):
+            if "l2c_sh3s_" not in line:
                 continue
-            if "Join" in up:
-                break
-            assert "Exchange" not in up, (
-                "postings-side Exchange above the bucketed scan:\n"
-                + tree)
-            depth = updepth
-    assert found >= 2  # both verify joins read the bucketed postings
+            found += 1
+            depth = len(line) - len(line.lstrip(" :+-"))
+            for j in range(i - 1, -1, -1):
+                up = lines[j]
+                updepth = len(up) - len(up.lstrip(" :+-"))
+                if updepth >= depth:
+                    continue
+                if "Join" in up:
+                    break
+                assert "Exchange" not in up, (
+                    f"{name}: set-side Exchange above the bucketed "
+                    "scan:\n" + tree)
+                depth = updepth
+        assert found >= 2, name  # both verify joins read the set table
+
+
+def test_frac_cap_consumers_serve_without_doc_count(spark):
+    """The four stop-shingle-capped consumers take the cap as a literal
+    from the staged doc count: no count(distinct) and no broadcast
+    nested-loop attach of its one-row result in the serve plan.  And
+    verification reads the shingle-set table: no broadcast hash
+    relation keyed on (id bigint, shingle string) — the postings
+    expansion probe."""
+    import re
+
+    keyed_id_shingle = re.compile(
+        r"HashedRelationBroadcastMode\(List\(input\[\d+, bigint, \w+\], "
+        r"input\[\d+, string")
+    for name in ("q_llm_dedup_fuzzy", "q_dedup_incremental_fuzzy",
+                 "q_text_containment", "q_dedup_cross_source"):
+        plan = plan_of(all_queries()[name].fn(spark, SF))
+        assert "count(distinct" not in plan, name
+        assert "BroadcastNestedLoopJoin" not in plan, name
+        assert not keyed_id_shingle.search(plan), name
 
 
 def test_sink_write_single_shuffle(spark):
