@@ -179,81 +179,10 @@ HEADLINE = [
 
 def _staging_builders():
     """Label → (builder, consumer-query set) for every session staging
-    artifact — module-level so tools/time_queries.py prewarms the
-    identical set when timing a subset in isolation."""
-    from level2_to_cassandra_spark.queries import graph, llm, traindata
-    return {
-        "ivfpq_index": (llm._ivfpq_session_index,
-                        {"q_sim_ann_ivfpq"}),
-        "pq_index": (llm._pq_relation,                 # r16
-                     {"q_sim_ann_pq"}),
-        "ivf_index": (llm._ivf_relation,               # r16
-                      {"q_sim_ann_ivf", "q_semdedup",
-                       # the ANN eval queries replay the registered
-                       # ivf plan off the staged rankings, so they
-                       # reach the staged inverted file transitively
-                       "q_ann_recall", "q_ann_ndcg", "q_ann_mrr"}),
-        "lsh_buckets_6x8": (llm._lsh_embed_buckets,    # r16
-                            {"q_llm_dedup_embed",
-                             "q_dedup_multimodal",
-                             "q_dedup_incremental_multimodal"}),
-        "lsh_buckets_8x16": (llm._lsh_ann_buckets,     # r16
-                             {"q_sim_ann_lsh"}),
-        "graph_edges": (graph._sparsified_supplier_edges,
-                        {"q_graph_khop", "q_graph_triangles",
-                         "q_graph_components", "q_graph_lpa",
-                         "q_graph_modularity"}),
-        "graph_components": (graph._component_labels,
-                             {"q_graph_components"}),
-        "graph_lpa_labels": (graph._lpa_labels,          # r14
-                             {"q_graph_lpa", "q_graph_modularity"}),
-        "kmeans_assignment": (llm._kmeans_assignment,
-                              {"q_cluster_kmeans", "q_drift_embedding",
-                               "q_sample_cluster"}),
-        "tf_postings": (llm._tf_relation,
-                        {"q_text_tfidf", "q_text_zipf",
-                         "q_text_more_like_this", "q_rank_fusion",
-                         "q_vocab_coverage", "q_tokenize_ids",
-                         "q_cooccurrence_pmi", "q_bm25"}),  # r16
-        "bigram_lm": (traindata._bigram_lm_relation,     # r16
-                      {"q_text_bigram_lm", "q_quality_ppl_bucket"}),
-        "unigram_lm": (traindata._unigram_lm_relation,   # r16
-                       {"q_importance_resample"}),
-        "shingle_postings": (llm._shingle_relation,      # r13
-                             {"q_contamination", "q_llm_dedup_fuzzy",
-                              "q_llm_dedup_minhash", "q_text_boilerplate",
-                              "q_text_containment", "q_text_novelty",
-                              "q_dedup_incremental_fuzzy",
-                              "q_sketch_error",
-                              "q_dedup_cross_source"}),
-        "shingle_index": (llm._shingle_index_relation,   # r14
-                          {"q_llm_dedup_fuzzy", "q_text_containment",
-                           "q_dedup_incremental_fuzzy",
-                           "q_sketch_error",
-                           "q_dedup_cross_source"}),
-        "shingle_sets": (llm._shingle_set_relation,
-                         {"q_llm_dedup_fuzzy", "q_llm_dedup_minhash",
-                          "q_text_containment",
-                          "q_dedup_incremental_fuzzy",
-                          "q_sketch_error",
-                          "q_dedup_cross_source"}),
-        "doc_count": (llm._doc_count,
-                      {"q_llm_dedup_fuzzy", "q_text_containment",
-                       "q_dedup_incremental_fuzzy",
-                       "q_dedup_cross_source"}),
-        "minhash_signatures": (llm._sig_relation,        # r16
-                               {"q_llm_dedup_minhash",
-                                "q_sketch_error"}),
-        "simhash_fp": (llm._simhash_relation,            # r16
-                       {"q_llm_dedup_simhash"}),
-        "mlt_ranking": (llm._mlt_ranking,                # r14
-                        {"q_rank_fusion", "q_text_more_like_this"}),
-        "ann_eval_tables": (llm._ann_eval_tables,        # r13
-                            {"q_ann_recall", "q_ann_ndcg",
-                             "q_ann_mrr"}),
-        "multimodal_gate": (llm._multimodal_gate,
-                            {"q_dedup_multimodal"}),
-    }
+    artifact, derived from the queries' ``staging=`` declarations."""
+    from level2_to_cassandra_spark.registry import staging_consumers
+
+    return staging_consumers()
 
 
 def _parse_event_log(log_dir: str) -> dict[str, dict[str, float]]:
@@ -326,7 +255,10 @@ def main() -> None:
     sf = float(m.group(1)) if m else -1.0
 
     from level2_to_cassandra_spark.session import get_spark
-    from level2_to_cassandra_spark.registry import all_queries
+    from level2_to_cassandra_spark.registry import (
+        all_queries,
+        prewarm_staging,
+    )
 
     # Optional scaling probe (VERDICT r16 task #2): event-log the run
     # so per-query EXECUTOR TASK TIME is reportable next to wall time.
@@ -419,28 +351,13 @@ def main() -> None:
     # rep measures serve only.  Each build is timed INDIVIDUALLY and
     # emitted as its own stderr line item so staging cost is a visible
     # number, never a mystery charged to a consumer query.
-    # Each builder is paired with its CONSUMER query set and built
-    # only when a consumer is actually in the bench list (VERDICT r14
-    # task #7: ann_eval_tables at 18.6 s and multimodal_gate at 13.9 s
-    # dominated prewarm unconditionally).  The first-rep cost of a
-    # consumer that IS present still lands here, visibly, never smeared
-    # into a timed rep.
-    bench_set = set(names)
-    staging_sec: dict[str, float] = {}
-    for label, (builder, consumers) in _staging_builders().items():
-        if not (consumers & bench_set):
-            continue  # no consumer benched -> skip the build entirely
-        t0 = time.perf_counter()
-        try:
-            builder(spark, sf_dir)
-            staging_sec[label] = round(time.perf_counter() - t0, 3)
-        except Exception as e:  # noqa: BLE001 — warmup never kills the run
-            print(f"{label} prewarm failed: {e}", file=sys.stderr)
-        finally:
-            # clear even after a failed build: a builder that died
-            # mid-build leaves persisted intermediates that would smear
-            # the NEXT builder's timed line item (self-review r14)
-            spark.catalog.clearCache()
+    # An artifact is built only when a query that declares it is in
+    # the bench list (VERDICT r14 task #7: ann_eval_tables at 18.6 s
+    # and multimodal_gate at 13.9 s dominated prewarm
+    # unconditionally); one failing builder is reported and skipped.
+    staging_sec, staging_failed = prewarm_staging(spark, sf_dir, names)
+    for label, err in staging_failed.items():
+        print(f"{label} prewarm failed: {err}", file=sys.stderr)
     print(json.dumps({"staging_prewarm_sec": staging_sec}),
           file=sys.stderr)
 

@@ -7,11 +7,22 @@ supplier part orders lineitem`` plus ``events`` (stream surrogate),
 Reads are plain ``spark.read.parquet`` so Catalyst gets full predicate
 pushdown / column pruning; callers select/filter on the returned
 DataFrame and the scan narrows automatically.
+
+Session staging artifacts — relations derived from the fixtures once
+per session and read by several queries — are declared with
+:func:`staged`, the one memo they share.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
+import hashlib
 import os
+import shutil
+import tempfile
+from collections.abc import Callable
+from typing import NamedTuple
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -113,40 +124,131 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(table_path(sf_dir, name))
 
 
-def materialize_once(cache: dict, spark, sf_dir: str, prefix: str,
-                     build) -> "DataFrame":
-    """Build/serve split memo shared by the session-scoped staging
-    tables (graph edges, kmeans assignment, component labels): run
-    ``build(path)`` — which must write parquet to ``path`` and handle
-    its own unpersists — ONCE per (applicationId, sf_dir), record the
-    path in ``cache``, and serve ``spark.read.parquet(path)`` on every
-    access.  Holding PATHS (never DataFrames) means nothing pins
-    executor storage or references a stopped session; entries for
-    other applicationIds are evicted on access and their tempdirs are
-    reaped by the atexit hooks registered at build time.  Like every
-    memo in this family, it assumes the fixture dir is immutable for
-    the session (true of the driver's testdata; a mutated sf_dir needs
-    a new session or an eviction in ``cache``)."""
-    import atexit
-    import shutil
-    import tempfile
+class _Entry(NamedTuple):
+    path: str          # the build directory (always made)
+    table: str | None  # session-catalog table over ``path``, if bucketed
+    value: object      # what the builder returned
 
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in cache if k[0] != app]:
-        # eager reclaim (ADVICE r16): the evicted entry belongs to a
-        # dead applicationId, so nothing can still be scanning it —
-        # deleting now instead of at interpreter exit keeps a
-        # long-lived process that cycles SparkSessions from
-        # accumulating staging dirs (the atexit hook stays as the
-        # backstop and tolerates the missing dir).
-        shutil.rmtree(cache.pop(stale), ignore_errors=True)
-    path = cache.get((app, sf_dir))
-    if path is None:
-        path = tempfile.mkdtemp(prefix=prefix)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        build(path)
-        cache[(app, sf_dir)] = path
-    return spark.read.parquet(path)
+
+#: (label, applicationId, sf_dir) → entry: the one memo of every session
+#: staging artifact.  It holds paths, table names and driver-side
+#: values, never DataFrames, so nothing here pins executor storage or
+#: references a stopped session.
+_STAGED: dict[tuple[str, str, str], _Entry] = {}
+
+#: label → serving function of every artifact, in definition order —
+#: dependency order, since a builder only reads artifacts defined above
+#: it.
+_ARTIFACTS: dict[str, Callable] = {}
+
+
+def _reclaim(spark: SparkSession, ent: _Entry) -> None:
+    """Drop an entry's catalog table (best effort: a dead application's
+    table is usually absent from this session's catalog) and delete
+    its directory."""
+    if ent.table:
+        try:
+            spark.sql(f"DROP TABLE IF EXISTS `{ent.table}`")
+        except Exception:  # noqa: BLE001 — reclaim never fails a query
+            pass
+    shutil.rmtree(ent.path, ignore_errors=True)
+
+
+def staged(label: str, *, bucket: str | None = None,
+           sort: tuple[str, ...] = (), serve: Callable | None = None):
+    """Decorator: make ``build`` the session staging artifact ``label``,
+    built ONCE per (applicationId, sf_dir) and served on every call of
+    the returned ``fn(spark, sf_dir)`` — the build/serve split of every
+    materialized corpus-derived relation (postings, indexes, label
+    tables, trained models).  Each build gets a fresh
+    ``tempfile.mkdtemp`` directory, deleted at interpreter exit.  Any
+    access reclaims the entries of other applications (their table and
+    directory); a failed build reclaims its own.  The memo assumes the
+    fixture dir is immutable for the session (true of the fixture
+    testdata).
+
+    Three result kinds:
+
+    * a parquet dir (default): ``build(spark, sf_dir, path)`` writes
+      parquet to ``path`` and releases its own persisted
+      intermediates; each call serves a FRESH ``spark.read.parquet``,
+      since self-joins need distinct attribute ids.
+    * a bucketed, sorted table (``bucket`` given): ``build(spark,
+      sf_dir)`` returns the relation, written once as an external
+      table bucketed on ``bucket`` and sorted by ``sort``, and served
+      by ``spark.table`` — every join or aggregate on the bucket key
+      then reads a pre-partitioned, pre-sorted relation (no exchange,
+      no sort; scan parallelism = bucket count; tests/test_bucketing.py
+      proves the mechanism).  The writer repartitions by the bucket
+      column into exactly ``n`` partitions first: repartition and
+      bucketing share one murmur3-pmod assignment, so each bucket
+      lands in ONE file — the layout Spark requires before it trusts
+      the written sort order.
+    * a built value kept next to its dir: ``build(spark, sf_dir,
+      path)`` returns it, and each call serves ``serve(spark, path,
+      value)``, or the value itself when ``serve`` is not given.
+    """
+    if label in _ARTIFACTS:
+        raise ValueError(f"duplicate staging label {label!r}")
+
+    def deco(build: Callable) -> Callable:
+        @functools.wraps(build)
+        def get(spark: SparkSession, sf_dir: str):
+            app = spark.sparkContext.applicationId
+            for key in [k for k in _STAGED if k[1] != app]:
+                _reclaim(spark, _STAGED.pop(key))
+            ent = _STAGED.get((label, app, sf_dir))
+            if ent is None:
+                path = tempfile.mkdtemp(prefix=f"l2c_{label}_")
+                atexit.register(shutil.rmtree, path, ignore_errors=True)
+                table = value = None
+                try:
+                    if bucket is None:
+                        value = build(spark, sf_dir, path)
+                    else:
+                        table = f"l2c_{label}_" + hashlib.md5(
+                            f"{app}|{sf_dir}".encode()).hexdigest()[:12]
+                        n = staging_buckets(spark)
+                        (
+                            build(spark, sf_dir)
+                            .repartition(n, F.col(bucket))
+                            .write.mode("overwrite")
+                            .option("path", path)
+                            .bucketBy(n, bucket)
+                            .sortBy(*sort)
+                            .saveAsTable(table)
+                        )
+                except BaseException:
+                    _reclaim(spark, _Entry(path, table, None))
+                    raise
+                ent = _Entry(path, table, value)
+                _STAGED[(label, app, sf_dir)] = ent
+            if ent.table:
+                return spark.table(ent.table)
+            if serve is not None:
+                return serve(spark, ent.path, ent.value)
+            if ent.value is not None:
+                return ent.value
+            return spark.read.parquet(ent.path)
+
+        _ARTIFACTS[label] = get
+        return get
+
+    return deco
+
+
+def read_dirs(*names: str) -> Callable:
+    """``serve`` for an artifact built as several parquet dirs under its
+    path: a fresh read of each, in the order given."""
+    return lambda spark, path, _value: tuple(
+        spark.read.parquet(os.path.join(path, n)) for n in names)
+
+
+def staging_artifacts() -> dict[str, Callable]:
+    """Label → serving function of every defined staging artifact, in
+    definition order.  Import the query modules first (the registry's
+    ``all_queries`` does): they define the artifacts."""
+    return dict(_ARTIFACTS)
 
 
 def staging_buckets(spark: SparkSession) -> int:
@@ -175,65 +277,6 @@ def staging_buckets(spark: SparkSession) -> int:
     return int(spark.sparkContext.defaultParallelism)
 
 
-def materialize_once_bucketed(cache: dict, spark, sf_dir: str,
-                              prefix: str, build_df,
-                              bucket_col: str,
-                              sort_cols: tuple[str, ...]) -> "DataFrame":
-    """The :func:`materialize_once` discipline for a BUCKETED staging
-    table: ``build_df()`` returns the relation, which is written ONCE
-    per (applicationId, sf_dir) as a bucketed+sorted external table
-    (tempdir data, session-catalog metadata) and served via
-    ``spark.table`` so every downstream join/aggregate on the bucket
-    key reads a pre-partitioned, pre-sorted relation — no exchange,
-    no sort, and scan parallelism = bucket count instead of the 2-4
-    packed splits a small parquet dir coalesces to (guide §2.4
-    "bucketed tables persist a partitioning across jobs";
-    tests/test_bucketing.py proves the mechanism).
-
-    The writer repartitions by the bucket column into exactly
-    ``n_buckets`` partitions first: repartition and bucketing share
-    the same murmur3-pmod assignment, so each writer task holds
-    exactly one bucket and each bucket lands in ONE file — the
-    one-file-per-bucket layout Spark requires before it will trust
-    the written sort order."""
-    import atexit
-    import hashlib
-    import shutil
-    import tempfile
-
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in cache if k[0] != app]:
-        # reclaim both halves of the evicted entry: the catalog entry
-        # (best effort — a dead application's table is usually absent
-        # from this session's catalog) and the data directory
-        path, name = cache.pop(stale)
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-        except Exception:  # noqa: BLE001 — reclaim never fails a query
-            pass
-        shutil.rmtree(path, ignore_errors=True)
-    ent = cache.get((app, sf_dir))
-    if ent is None:
-        n = staging_buckets(spark)
-        path = tempfile.mkdtemp(prefix=prefix)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        name = prefix + hashlib.md5(
-            f"{app}|{sf_dir}".encode()
-        ).hexdigest()[:12]
-        (
-            build_df()
-            .repartition(n, F.col(bucket_col))
-            .write.mode("overwrite")
-            .option("path", path)
-            .bucketBy(n, bucket_col)
-            .sortBy(*sort_cols)
-            .saveAsTable(name)
-        )
-        ent = (path, name)
-        cache[(app, sf_dir)] = ent
-    return spark.table(ent[1])
-
-
 def staging_dir(prefix: str) -> str:
     """A fresh staging directory for a format-snapshot query
     (q_json_scan/q_csv_scan/q_orc_scan/q_xml_scan), reclaimed at
@@ -247,10 +290,6 @@ def staging_dir(prefix: str) -> str:
     without the atexit hook every bench rep / oracle check leaked a
     text copy of events to /tmp for the host to accumulate across
     rounds)."""
-    import atexit
-    import shutil
-    import tempfile
-
     path = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
@@ -312,11 +351,6 @@ def spread_scan(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     return df.repartition(target)
 
 
-#: Experiment escape hatch for same-session A/B measurement scripts
-#: (tools/): never set false in engine code.
-_SPREAD_KEYS_ENABLED = True
-
-
 def spread_keys(df: DataFrame, *keys: str) -> DataFrame:
     """Hash-repartition a small-bytes/large-work relation to cluster
     width ahead of an expansion join or a wide probe chain.
@@ -353,8 +387,6 @@ def spread_keys(df: DataFrame, *keys: str) -> DataFrame:
     partitioning that survives planning; it is a pure function of the
     keys, so retried tasks land rows identically (no round-robin
     nondeterminism, guide §2.5)."""
-    if not _SPREAD_KEYS_ENABLED:  # measurement scripts only
-        return df
     n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, F.xxhash64(*[F.col(k) for k in keys]))
 

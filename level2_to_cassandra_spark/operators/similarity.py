@@ -446,7 +446,7 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "vec_id",
     relation (:func:`lsh_buckets_np` semantics — same planes/tables/
     scheme) so callers sharing one corpus can materialize the LSH
     hash tables ONCE (a parquet staging table — queries/llm.py::
-    _lsh_relation; the _sig_relation / _ivf_relation discipline).
+    _lsh_embed_buckets / _lsh_ann_buckets, catalog.staged artifacts).
     With it supplied the Arrow bucketize pass and the per-call persist
     both disappear from the serve plan (each join branch replays a
     parquet scan instead)."""

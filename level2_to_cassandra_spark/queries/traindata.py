@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from level2_to_cassandra_spark.catalog import load_table, spread_scan
+from level2_to_cassandra_spark.catalog import load_table, spread_scan, staged
 from level2_to_cassandra_spark.functions import (
     round_half_up,
     round_signless,
@@ -130,6 +130,7 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS avg_jaccard
     FROM cells GROUP BY src_lo, src_hi
     """,
+    staging=("shingle_postings", "shingle_index", "shingle_sets", "doc_count"),
 )
 def q_dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CROSS-SOURCE DUPLICATION MATRIX — which sources duplicate
@@ -422,6 +423,7 @@ def q_pack_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(o.n_overlap::DOUBLE / s.n_shingles, 6) AS contam_frac
     FROM sizes s JOIN ov o USING (doc_id)
     """,
+    staging=("shingle_postings",),
 )
 def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/eval contamination: for every eval-split document (same
@@ -742,17 +744,9 @@ _DSIR_TARGET_SOURCE = "src1"
 _DSIR_TOPK = 50
 _DSIR_SALT = "dsir1:"
 
-#: (applicationId, sf_dir) → parquet path of the MATERIALIZED DSIR
-#: unigram models (t, __ca, __ct, __nt, __na, __v) — r16: both
-#: add-one-smoothed unigram LMs (target + general) are pure corpus
-#: functions q_importance_resample re-trained inline on every serve
-#: (a second corpus pass + persist + totals broadcast).  Staged once
-#: per (session, fixture) like the bigram LM; the totals ride
-#: denormalized on the Zipf-small model rows.
-_UNIGRAM_LM_TABLE: dict[tuple[str, str], str] = {}
 
-
-def _unigram_lm_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
+@staged("unigram_lm")
+def _unigram_lm_relation(spark: SparkSession, sf_dir: str, path: str):
     """The trained DSIR unigram-model staging table (t, __ca, __ct,
     __nt, __na, __v), built once per (session, sf_dir): per-token
     corpus count and target-source count plus the three totals
@@ -761,31 +755,25 @@ def _unigram_lm_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs, so scoring joins ONCE on the token key.  Counts are
     bit-identical to the previous inline train (same aggregates,
     same tokenizer)."""
-    from level2_to_cassandra_spark.catalog import materialize_once
-
-    def _build(path: str) -> None:
-        docs = load_table(spark, sf_dir, "documents")
-        toks = spread_scan(docs).select(
-            "source", F.explode(text.tokens("text")).alias("t")
-        )
-        is_tgt = F.col("source") == _DSIR_TARGET_SOURCE
-        model = toks.groupBy("t").agg(
-            F.count(F.lit(1)).alias("__ca"),
-            F.sum(F.when(is_tgt, 1).otherwise(0)).alias("__ct"),
-        )
-        tot = model.agg(
-            F.sum("__ct").alias("__nt"),
-            F.sum("__ca").alias("__na"),
-            F.count(F.lit(1)).alias("__v"),
-        )
-        (
-            model.crossJoin(F.broadcast(tot))
-            .select("t", "__ca", "__ct", "__nt", "__na", "__v")
-            .write.mode("overwrite").parquet(path)
-        )
-
-    return materialize_once(_UNIGRAM_LM_TABLE, spark, sf_dir,
-                            "l2c_uglm_", _build)
+    docs = load_table(spark, sf_dir, "documents")
+    toks = spread_scan(docs).select(
+        "source", F.explode(text.tokens("text")).alias("t")
+    )
+    is_tgt = F.col("source") == _DSIR_TARGET_SOURCE
+    model = toks.groupBy("t").agg(
+        F.count(F.lit(1)).alias("__ca"),
+        F.sum(F.when(is_tgt, 1).otherwise(0)).alias("__ct"),
+    )
+    tot = model.agg(
+        F.sum("__ct").alias("__nt"),
+        F.sum("__ca").alias("__na"),
+        F.count(F.lit(1)).alias("__v"),
+    )
+    (
+        model.crossJoin(F.broadcast(tot))
+        .select("t", "__ca", "__ct", "__nt", "__na", "__v")
+        .write.mode("overwrite").parquet(path)
+    )
 
 
 @register(
@@ -830,6 +818,7 @@ def _unigram_lm_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
               ORDER BY race_key DESC, doc_id ASC) AS rk FROM race)
     WHERE rk <= {_DSIR_TOPK}
     """,
+    staging=("unigram_lm",),
 )
 def q_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DATA SELECTION VIA IMPORTANCE RESAMPLING (the DSIR recipe, Xie
@@ -1133,57 +1122,37 @@ _BIGRAM_SCORED_CTES = """toks AS (SELECT doc_id, string_split(text, ' ') AS w
       CROSS JOIN vocab)"""
 
 
-#: (applicationId, sf_dir) → parquet path of the MATERIALIZED bigram
-#: LM model (ngram, __w1, __c, __cw, __v) — r16: the add-one-smoothed
-#: model is a pure corpus function that q_text_bigram_lm's own
-#: docstring already calls "the reusable staging table: train once,
-#: score every incoming shard", yet both it AND q_quality_ppl_bucket
-#: (which composes it) re-trained the model inline on every serve.
-#: Staged once per (session, fixture) like the postings/signature
-#: tables (llm.py::_SHINGLE_TABLE discipline), the serve plan is the
-#: scoring pass alone: one bigram explode over the corpus + one join
-#: against the Zipf-small model relation.  Context totals and V are
-#: DENORMALIZED onto the model rows (one long each) so scoring needs
-#: no second join and no 1-row broadcast.
-_BIGRAM_LM_TABLE: dict[tuple[str, str], str] = {}
-
-
-def _bigram_lm_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
+@staged("bigram_lm")
+def _bigram_lm_relation(spark: SparkSession, sf_dir: str, path: str):
     """The trained bigram-LM staging table (ngram, __w1, __c, __cw,
     __v), built once per (session, sf_dir): per-bigram count,
     per-context total and vocabulary size — every integer the smoothed
     probability ln((c+1)/(cw+V)) needs, so consumers join ONCE on the
     bigram key.  Counts are bit-identical to the previous inline
     train (same aggregates, same tokenizer)."""
-    from level2_to_cassandra_spark.catalog import materialize_once
-
-    def _build(path: str) -> None:
-        docs = load_table(spark, sf_dir, "documents")
-        bg = spread_scan(docs).select(
-            text.tokens("text").alias("__toks")
-        ).select(
-            F.explode(
-                text.word_shingles_of(F.col("__toks"), 2)
-            ).alias("ngram")
-        )
-        model = (
-            bg.groupBy("ngram")
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .withColumn("__w1", F.split("ngram", " ")[0])
-        )
-        ctx = model.groupBy("__w1").agg(F.sum("__c").alias("__cw"))
-        vocab = docs.select(
-            F.explode(text.tokens("text")).alias("__t")
-        ).agg(F.countDistinct("__t").alias("__v"))
-        (
-            model.join(ctx, "__w1")
-            .crossJoin(F.broadcast(vocab))
-            .select("ngram", "__w1", "__c", "__cw", "__v")
-            .write.mode("overwrite").parquet(path)
-        )
-
-    return materialize_once(_BIGRAM_LM_TABLE, spark, sf_dir,
-                            "l2c_bglm_", _build)
+    docs = load_table(spark, sf_dir, "documents")
+    bg = spread_scan(docs).select(
+        text.tokens("text").alias("__toks")
+    ).select(
+        F.explode(
+            text.word_shingles_of(F.col("__toks"), 2)
+        ).alias("ngram")
+    )
+    model = (
+        bg.groupBy("ngram")
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .withColumn("__w1", F.split("ngram", " ")[0])
+    )
+    ctx = model.groupBy("__w1").agg(F.sum("__c").alias("__cw"))
+    vocab = docs.select(
+        F.explode(text.tokens("text")).alias("__t")
+    ).agg(F.countDistinct("__t").alias("__v"))
+    (
+        model.join(ctx, "__w1")
+        .crossJoin(F.broadcast(vocab))
+        .select("ngram", "__w1", "__c", "__cw", "__v")
+        .write.mode("overwrite").parquet(path)
+    )
 
 
 @register(
@@ -1199,6 +1168,7 @@ def _bigram_lm_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(AVG(lnp), 6) AS avg_lnp
     FROM scored GROUP BY doc_id
     """,
+    staging=("bigram_lm",),
 )
 def q_text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-gram language-model quality scoring (the KenLM-style
@@ -1274,6 +1244,7 @@ def q_text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS bucket
     FROM ranked
     """,
+    staging=("bigram_lm",),
 )
 def q_quality_ppl_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language perplexity bucketing (the CCNet recipe, Wenzek et
@@ -1337,6 +1308,7 @@ _VOCAB_SIZE = 20
     FROM tok LEFT JOIN vocab v USING (t)
     GROUP BY doc_id
     """,
+    staging=("tf_postings",),
 )
 def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-vocabulary induction + coverage: take the top-20
@@ -1571,6 +1543,7 @@ def _ids_json(arr) -> object:
                AS ids_json
     FROM ids GROUP BY doc_id
     """,
+    staging=("tf_postings",),
 )
 def q_tokenize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenize-to-ids export — the LAST hop of the corpus pipeline,
@@ -2161,6 +2134,7 @@ def q_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     CROSS JOIN tot
     WHERE c_ab >= 5
     """,
+    staging=("tf_postings",),
 )
 def q_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pointwise mutual information over adjacent token pairs

@@ -19,7 +19,8 @@ comparison honest):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import time
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +34,9 @@ class Query:
     fn: QueryFn
     oracle: str | None  # ANSI SQL for DuckDB, or None → rows-only check
     doc: str = ""
+    #: labels of the session staging artifacts (catalog.staged) the
+    #: query reads, directly or through another artifact's build
+    staging: tuple[str, ...] = ()
 
 
 _REGISTRY: dict[str, Query] = {}
@@ -277,14 +281,17 @@ DRIVER_ORDER = (
 )
 
 
-def register(name: str, oracle: str | None = None, doc: str = ""):
-    """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` as a query."""
+def register(name: str, oracle: str | None = None, doc: str = "",
+             staging: tuple[str, ...] = ()):
+    """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` as a query
+    that reads the staging artifacts labelled ``staging``."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
         _REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle,
-                                doc=doc or (fn.__doc__ or ""))
+                                doc=doc or (fn.__doc__ or ""),
+                                staging=staging)
         return fn
 
     return deco
@@ -315,6 +322,45 @@ def oracle_sqls() -> dict[str, str]:
     return {n: q.oracle for n, q in all_queries().items() if q.oracle}
 
 
+def staging_consumers() -> dict[str, tuple[Callable, set[str]]]:
+    """Label → (builder, consumer query names) for every session staging
+    artifact, in definition order (dependency order), derived from the
+    queries' ``staging`` declarations."""
+    from level2_to_cassandra_spark.catalog import staging_artifacts
+
+    qs = all_queries()
+    return {
+        label: (build, {n for n, q in qs.items() if label in q.staging})
+        for label, build in staging_artifacts().items()
+    }
+
+
+def prewarm_staging(spark: SparkSession, sf_dir: str, names: Iterable[str]
+                    ) -> tuple[dict[str, float], dict[str, str]]:
+    """Build every staging artifact a query in ``names`` reads, once, in
+    dependency order, so no later run of those queries pays a build.
+    Returns (build seconds by label, error by label).  Each build is
+    timed on its own and followed by ``clearCache`` — also after a
+    failed build, whose persisted intermediates would otherwise smear
+    the next build's time; a failing builder is recorded and skipped,
+    never fatal."""
+    wanted = set(names)
+    seconds: dict[str, float] = {}
+    failed: dict[str, str] = {}
+    for label, (build, consumers) in staging_consumers().items():
+        if not consumers & wanted:
+            continue
+        t0 = time.perf_counter()
+        try:
+            build(spark, sf_dir)
+            seconds[label] = round(time.perf_counter() - t0, 3)
+        except Exception as e:  # noqa: BLE001 — never voids the rest
+            failed[label] = f"{type(e).__name__}: {e}"
+        finally:
+            spark.catalog.clearCache()
+    return seconds, failed
+
+
 _loaded = False
 
 
@@ -333,5 +379,12 @@ def _ensure_loaded() -> None:
         traindata,
         graph,
     )
+    from level2_to_cassandra_spark.catalog import staging_artifacts
 
+    known = staging_artifacts()
+    for q in _REGISTRY.values():
+        unknown = [label for label in q.staging if label not in known]
+        if unknown:
+            raise ValueError(
+                f"{q.name} declares unknown staging labels {unknown}")
     _loaded = True

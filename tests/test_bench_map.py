@@ -1,20 +1,23 @@
-"""The bench prewarm consumer map must stay a SUPERSET of reality.
+"""The queries' ``staging=`` declarations must match reality, both ways.
 
-bench.py builds a staging table only when one of its declared consumer
-queries is in the bench list; a consumer missing from the map makes the
-builder silently skip, landing the full staging build inside that
-query's first timed rep — the cost-attribution smear the gating exists
-to prevent (it happened once in r15: q_ann_mrr was missing from
-ann_eval_tables' set, caught only by self-review).  This test derives
-the true consumer sets from the query modules' CALL GRAPH (ast, with
-transitive closure through private helpers) and asserts every derived
-consumer is declared.
+Every prewarm set (bench.py, the tools, perfbench) is derived from the
+declarations (registry.staging_consumers).  A consumer missing from a
+declaration makes the prewarm skip the build, landing the full staging
+build inside that query's first timed rep — the cost-attribution smear
+the gating exists to prevent (it happened once in r15: q_ann_mrr was
+missing from ann_eval_tables' set).  A declared consumer that never
+reads the artifact builds it for nothing.  This test derives the true
+consumer sets from the query modules' CALL GRAPH (ast, with transitive
+closure through private helpers and through other artifacts' builds)
+and asserts they equal the declared ones.
 """
 
 from __future__ import annotations
 
 import ast
 from pathlib import Path
+
+from level2_to_cassandra_spark.registry import all_queries, staging_consumers
 
 REPO = Path(__file__).resolve().parent.parent
 QUERY_PKG = REPO / "level2_to_cassandra_spark" / "queries"
@@ -35,35 +38,7 @@ def _call_names(node: ast.AST) -> set[str]:
     return out
 
 
-def _declared_map() -> dict[str, set[str]]:
-    """builder function name -> declared consumer set, parsed from the
-    dict literal inside bench.py's _staging_builders (nested in main,
-    so it cannot be imported)."""
-    tree = ast.parse((REPO / "bench.py").read_text())
-    for node in ast.walk(tree):
-        if isinstance(node, ast.FunctionDef) and node.name == "_staging_builders":
-            ret = next(
-                n for n in ast.walk(node) if isinstance(n, ast.Return)
-            )
-            out: dict[str, set[str]] = {}
-            assert isinstance(ret.value, ast.Dict)
-            for v in ret.value.values:
-                assert isinstance(v, ast.Tuple) and len(v.elts) == 2
-                builder, consumers = v.elts
-                assert isinstance(builder, ast.Attribute)
-                assert isinstance(consumers, ast.Set)
-                out[builder.attr] = {
-                    c.value for c in consumers.elts
-                    if isinstance(c, ast.Constant)
-                }
-            return out
-    raise AssertionError("_staging_builders not found in bench.py")
-
-
-def test_bench_prewarm_consumers_cover_every_call_site():
-    declared = _declared_map()
-    builders = set(declared)
-
+def test_staging_declarations_match_call_graph():
     # caller -> callees over every top-level function in the package
     calls: dict[str, set[str]] = {}
     for mod in sorted(QUERY_PKG.glob("*.py")):
@@ -84,13 +59,14 @@ def test_bench_prewarm_consumers_cover_every_call_site():
             if h in calls and h != fn
         )
 
-    queries = [n for n in calls if n.startswith("q_")]
-    missing: list[tuple[str, str]] = []
-    for b in builders:
-        derived = {q for q in queries if reaches(q, b)}
-        for q in sorted(derived - declared[b]):
-            missing.append((b, q))
-    assert not missing, (
-        "bench.py _staging_builders consumer sets are missing real "
-        f"call-site consumers: {missing}"
-    )
+    fn_names = {name: q.fn.__name__ for name, q in all_queries().items()}
+    mismatched = {}
+    for label, (build, declared) in staging_consumers().items():
+        derived = {n for n, f in fn_names.items()
+                   if reaches(f, build.__name__)}
+        if derived != declared:
+            mismatched[label] = {"undeclared": sorted(derived - declared),
+                                 "never read": sorted(declared - derived)}
+    assert not mismatched, (
+        "staging= declarations disagree with the call graph: "
+        f"{mismatched}")

@@ -223,24 +223,74 @@ def test_staging_buckets_honours_valid_override(spark, monkeypatch):
     assert staging_buckets(spark) == 7
 
 
-def test_bucketed_staging_eviction_drops_table_and_dir(spark, tmp_path):
-    """materialize_once_bucketed evicts a memo entry of another
-    application: both its session-catalog table and its data directory
-    are reclaimed, not just the directory."""
-    from level2_to_cassandra_spark.catalog import materialize_once_bucketed
+@pytest.mark.parametrize("label,table,subdirs,value", [
+    ("simhash_fp", None, (), None),
+    ("shingle_postings", "l2c_test_evict_stale", (), None),
+    ("pq_index", None, ("enc", "extra"), {"codebook": 1}),
+], ids=["plain_dir", "bucketed_table", "dirs_with_value"])
+def test_staging_eviction_drops_table_and_dir(spark, tmp_path, label,
+                                              table, subdirs, value):
+    """Serving a staging artifact evicts the memo entries of another
+    application: its session-catalog table (if any) and its whole
+    directory are reclaimed, and its value is dropped."""
+    from level2_to_cassandra_spark import catalog
+    from level2_to_cassandra_spark.registry import staging_consumers
 
-    stale_path, stale_name = tmp_path / "stale", "l2c_test_evict_stale"
-    spark.range(4).write.option("path", str(stale_path)).saveAsTable(
-        stale_name)
-    assert spark.catalog.tableExists(stale_name)
-    cache = {("foreign-app", SF_SMOKE): (str(stale_path), stale_name)}
-    df = materialize_once_bucketed(
-        cache, spark, SF_SMOKE, "l2c_test_evict_", lambda: spark.range(3),
-        bucket_col="id", sort_cols=("id",))
-    try:
-        assert df.count() == 3
-        assert not spark.catalog.tableExists(stale_name)
-        assert not stale_path.exists()
-        assert list(cache) == [(spark.sparkContext.applicationId, SF_SMOKE)]
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {next(iter(cache.values()))[1]}")
+    stale = tmp_path / "stale"
+    if table:
+        spark.range(4).write.option("path", str(stale)).saveAsTable(table)
+        assert spark.catalog.tableExists(table)
+    for sub in subdirs:
+        (stale / sub).mkdir(parents=True)
+        (stale / sub / "part-0.parquet").write_bytes(b"x")
+    stale.mkdir(exist_ok=True)
+    catalog._STAGED[(label, "foreign-app", SF_SMOKE)] = catalog._Entry(
+        str(stale), table, value)
+    build, _consumers = staging_consumers()[label]
+    build(spark, SF_SMOKE)
+    assert not stale.exists()
+    if table:
+        assert not spark.catalog.tableExists(table)
+    app = spark.sparkContext.applicationId
+    assert (label, app, SF_SMOKE) in catalog._STAGED
+    assert all(k[1] == app for k in catalog._STAGED)
+
+
+def test_prewarm_survives_a_failing_builder(spark, monkeypatch):
+    """One failing builder is reported in ``failed`` and skipped: the
+    builders after it still run, and the cache it left is cleared
+    before the next build starts."""
+    from level2_to_cassandra_spark import catalog
+    from level2_to_cassandra_spark.registry import (
+        all_queries,
+        prewarm_staging,
+    )
+
+    all_queries()  # the query modules define the artifacts
+
+    def broken(spark, sf_dir):
+        cached = spark.range(5)
+        cached.createOrReplaceTempView("l2c_test_prewarm_leftover")
+        spark.catalog.cacheTable("l2c_test_prewarm_leftover")
+        cached.count()
+        raise RuntimeError("builder broke")
+
+    later = catalog._ARTIFACTS["tf_postings"]
+    seen = []
+
+    def watched(spark, sf_dir):
+        seen.append(spark.catalog.isCached("l2c_test_prewarm_leftover"))
+        return later(spark, sf_dir)
+
+    # simhash_fp is defined before tf_postings, so it is built first
+    labels = list(catalog._ARTIFACTS)
+    assert labels.index("simhash_fp") < labels.index("tf_postings")
+    monkeypatch.setitem(catalog._ARTIFACTS, "simhash_fp", broken)
+    monkeypatch.setitem(catalog._ARTIFACTS, "tf_postings", watched)
+    seconds, failed = prewarm_staging(
+        spark, SF_SMOKE, ["q_llm_dedup_simhash", "q_text_tfidf"])
+    assert list(failed) == ["simhash_fp"]
+    assert "builder broke" in failed["simhash_fp"]
+    assert list(seconds) == ["tf_postings"]
+    assert seen == [False]
+    spark.catalog.dropTempView("l2c_test_prewarm_leftover")

@@ -430,11 +430,12 @@ def test_more_like_this_serves_from_staged_ranking(spark):
     plan is a parquet scan + rank filter — no joins, no tf-idf build,
     no persist (the build itself keeps the broadcast-probe shape,
     covered by the oracle + q_rank_fusion's pin)."""
-    from level2_to_cassandra_spark.queries.llm import _MLT_TABLE, _mlt_ranking
+    from level2_to_cassandra_spark.catalog import _STAGED
+    from level2_to_cassandra_spark.queries.llm import _mlt_ranking
 
     _mlt_ranking(spark, SF)  # session build, outside the serve plan
     app = spark.sparkContext.applicationId
-    assert (app, SF) in _MLT_TABLE
+    assert ("mlt_ranking", app, SF) in _STAGED
     plan = plan_of(all_queries()["q_text_more_like_this"].fn(spark, SF),
                    "simple")
     assert "Join" not in plan
@@ -460,14 +461,14 @@ def test_graph_serves_from_persisted_edges(spark):
     edge table exists, the graph queries' plans read the materialized
     parquet relation — no trace of the co-occurrence build (the
     order-keyed collect_set aggregate) may appear in a serve plan."""
+    from level2_to_cassandra_spark.catalog import _STAGED
     from level2_to_cassandra_spark.queries.graph import (
-        _EDGE_TABLE,
         _sparsified_supplier_edges,
     )
 
     _sparsified_supplier_edges(spark, SF)
     app = spark.sparkContext.applicationId
-    assert (app, SF) in _EDGE_TABLE
+    assert ("graph_edges", app, SF) in _STAGED
     for q in ("q_graph_khop", "q_graph_triangles"):
         plan = plan_of(all_queries()[q].fn(spark, SF), "simple")
         assert "collect_set" not in plan, q
@@ -767,13 +768,12 @@ def test_cluster_queries_serve_from_assignment_table(spark):
     q_sample_cluster serve off the materialized parquet — no
     MapInPandas (the Lloyd Arrow kernel belongs to the build) and no
     embeddings-table rebuild in either serve plan."""
-    from level2_to_cassandra_spark.queries.llm import (
-        _KMEANS_TABLE,
-        _kmeans_assignment,
-    )
+    from level2_to_cassandra_spark.catalog import _STAGED
+    from level2_to_cassandra_spark.queries.llm import _kmeans_assignment
 
     _kmeans_assignment(spark, SF)
-    assert (spark.sparkContext.applicationId, SF) in _KMEANS_TABLE
+    app = spark.sparkContext.applicationId
+    assert ("kmeans_assignment", app, SF) in _STAGED
     for q in ("q_cluster_kmeans", "q_sample_cluster"):
         plan = plan_of(all_queries()[q].fn(spark, SF), "simple")
         assert "MapInPandas" not in plan, q
@@ -843,14 +843,12 @@ def test_fuzzy_family_serves_from_staged_ranked_index(spark):
     """q_llm_dedup_fuzzy / q_dedup_incremental_fuzzy (r14): candidate
     generation reads the materialized ranked prefix index — no df/pos/n
     window stack and no persist in the serve plans."""
-    from level2_to_cassandra_spark.queries.llm import (
-        _SHINGLE_INDEX_TABLE,
-        _shingle_index_relation,
-    )
+    from level2_to_cassandra_spark.catalog import _STAGED
+    from level2_to_cassandra_spark.queries.llm import _shingle_index_relation
 
     _shingle_index_relation(spark, SF)
     app = spark.sparkContext.applicationId
-    assert (app, SF) in _SHINGLE_INDEX_TABLE  # r17: bucketed memo
+    assert ("shingle_index", app, SF) in _STAGED  # r17: bucketed table
     for name in ("q_llm_dedup_fuzzy", "q_dedup_incremental_fuzzy"):
         plan = plan_of(all_queries()[name].fn(spark, SF), "simple")
         assert "Window" not in plan, name
@@ -1128,14 +1126,12 @@ def test_graph_modularity_serves_from_staged_labels(spark):
     LPA build: its per-node argmax windows must be absent), and the
     only non-equi join is the broadcast of the 1-row edge count.
     q_graph_lpa itself serves label-scan + ONE size window."""
-    from level2_to_cassandra_spark.queries.graph import (
-        _LPA_TABLE,
-        _lpa_labels,
-    )
+    from level2_to_cassandra_spark.catalog import _STAGED
+    from level2_to_cassandra_spark.queries.graph import _lpa_labels
 
     _lpa_labels(spark, SF)  # session build, outside the serve plans
     app = spark.sparkContext.applicationId
-    assert (app, SF) in _LPA_TABLE
+    assert ("graph_lpa_labels", app, SF) in _STAGED
     plan = plan_of(all_queries()["q_graph_modularity"].fn(spark, SF),
                    "simple")
     assert "CartesianProduct" not in plan
@@ -1506,7 +1502,7 @@ def test_bucketed_staging_candidate_join_no_exchange(spark):
     )
     plan = plan_of(cand)
     assert "ShuffledHashJoin" in plan
-    assert "l2c_sh3ib_" in plan  # reads the bucketed index table
+    assert "l2c_shingle_index_" in plan  # reads the bucketed index table
     # the only exchanges allowed anywhere in the candidate plan are
     # the corpus-cap n_docs count (SinglePartition + its partial) and
     # the final distinct — never a shingle-keyed join-input exchange
@@ -1543,7 +1539,7 @@ def test_bucketed_set_table_verify_copartitioned_at_scale(spark):
         lines = tree.splitlines()
         found = 0
         for i, line in enumerate(lines):
-            if "l2c_sh3s_" not in line:
+            if "l2c_shingle_sets_" not in line:
                 continue
             found += 1
             depth = len(line) - len(line.lstrip(" :+-"))

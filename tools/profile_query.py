@@ -14,76 +14,30 @@ reps for stability; divide by REPS mentally.
 from __future__ import annotations
 
 import json
-import os
 import sys
 import tempfile
 import time
 from pathlib import Path
 
-REPO = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(REPO))
+import _harness as h
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    reps = 3
-    if args and args[0] == "-r":
-        reps = int(args[1])
-        args = args[2:]
-    names = args
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    warm_dir = os.environ.get("SPARK_GRAFT_WARM_SF_DIR",
-                              "/root/testdata/sf0.001")
+    reps, names = h.parse_reps(sys.argv[1:], 3)
     log_dir = tempfile.mkdtemp(prefix="l2c_profile_")
-
-    from bench import _staging_builders
-    from level2_to_cassandra_spark.session import get_spark
-    from level2_to_cassandra_spark.registry import all_queries
-
-    spark = get_spark(
-        app_name="l2c-profile",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]",
-        shuffle_partitions=32,
-        extra_conf={"spark.ui.enabled": "false",
-                    "spark.ui.showConsoleProgress": "false",
-                    "spark.driver.memory": "16g",
-                    "spark.eventLog.enabled": "true",
-                    "spark.eventLog.compress": "false",
-                    "spark.eventLog.dir": f"file://{log_dir}"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = all_queries()
-
-    qs["q_sort_limit"].fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite").save()
-    spark.range(10_000, numPartitions=int(
-        spark.sparkContext.defaultParallelism)
-    ).mapInPandas(lambda it: it, schema="id long").write.format(
-        "noop").mode("overwrite").save()
-    for name in names:
-        if os.path.isdir(warm_dir):
-            try:
-                qs[name].fn(spark, warm_dir).write.format("noop").mode(
-                    "overwrite").save()
-            except Exception as e:  # noqa: BLE001
-                print(f"warmup {name} failed: {e}", file=sys.stderr)
-            spark.catalog.clearCache()
-    for label, (builder, consumers) in _staging_builders().items():
-        if not (consumers & set(names)):
-            continue
-        t0 = time.perf_counter()
-        builder(spark, sf_dir)
-        print(f"staging {label}: {time.perf_counter() - t0:.3f}s",
-              file=sys.stderr)
-        spark.catalog.clearCache()
+    spark = h.open_session("l2c-profile", {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.dir": f"file://{log_dir}"})
+    h.warm_plans(spark, names)
+    h.prewarm(spark, names)
 
     walls: dict[str, list[float]] = {n: [] for n in names}
     for _ in range(reps):
         for name in names:
             spark.sparkContext.setJobDescription(f"profile:{name}")
             t0 = time.perf_counter()
-            qs[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite").save()
+            h.run(spark, name, h.SF_DIR)
             walls[name].append(time.perf_counter() - t0)
             spark.sparkContext.setJobDescription(None)
             spark.catalog.clearCache()
