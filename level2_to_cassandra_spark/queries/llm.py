@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from level2_to_cassandra_spark.catalog import (
     load_table,
     read_dirs,
+    read_parquet,
     spread_scan,
     staged,
 )
@@ -1517,8 +1518,8 @@ def _ivf_relation(spark: SparkSession, sf_dir: str, path: str):
     cent.write.parquet(path + "/cent")
 
 
-@staged("pq_index",
-        serve=lambda spark, path, cb: (cb, spark.read.parquet(path + "/enc")))
+@staged("pq_index", serve=lambda spark, path, cb: (
+    cb, read_parquet(spark, path + "/enc")))
 def _pq_relation(spark: SparkSession, sf_dir: str, path: str):
     """(codebook, encoded) for the 8×16 product quantizer over the
     embeddings fixture — built ONCE per (session, fixture) and the
@@ -2220,9 +2221,11 @@ def q_sketch_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT spread_keys-widened (r17): every probe task of the signature
     # attach joins deserializes the broadcast 17-column sig relation,
     # so widening the tail multiplied that fixed CPU — measured a small
-    # net LOSS (interleaved A/B min 1.94 vs 1.89 s).  With verification
-    # on the set table the sig relation is this plan's largest
-    # broadcast left; packing its hash columns is the next cut.
+    # net LOSS (interleaved A/B min 1.94 vs 1.89 s).  Its broadcast is
+    # not this plan's largest: it and the two set-table broadcasts each
+    # report 1,052,576 B at 500 docs, the hashed relation's allocated
+    # capacity (a 1 MiB page plus a dense array over the ids), not the
+    # rows shipped — the staged sig table is 87 KB.
     pairs = cand.unionByName(samp_j)
     sa = sig.select(F.col("id").alias("id_a"),
                     *[F.col(f"h{i}").alias(f"__a{i}")

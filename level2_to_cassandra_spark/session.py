@@ -49,9 +49,9 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     sc.addPyFile(zip_path)
     _PACKAGE_SHIPPED.add(key)
 
-# Defaults chosen for the local test harness; on a real cluster the same
-# code runs with site-level overrides (spark-defaults.conf) taking
-# precedence because we only set them if unset.
+# Defaults chosen for the local test harness.  ``get_spark`` sets every
+# one through ``builder.config``, so each overrides the same key in a
+# site-level spark-defaults.conf; pass ``extra_conf`` to override one.
 _DEFAULTS: dict[str, str] = {
     # Adaptive execution: runtime coalescing of shuffle partitions,
     # broadcast conversion after runtime stats, skew-join splitting.
@@ -72,6 +72,17 @@ _DEFAULTS: dict[str, str] = {
     # (main.rs:109-120) is epoch//86400, i.e. UTC days; every date_trunc /
     # to_date in the engine must agree with the DuckDB oracle (UTC too).
     "spark.sql.session.timeZone": "UTC",
+    # No Python call-site capture.  PySpark's ``_with_origin`` wrapper
+    # (pyspark/errors/utils.py) adds four or more py4j round trips to
+    # every Column and DataFrame function call: an active-session
+    # lookup, a conf read, an origin set and an origin clear.  Lost:
+    # errors no longer carry the Python file and line in their
+    # DataFrame query context; the exception class and message stay
+    # the same.  PySpark reads this flag once per process, at the first
+    # wrapped call made while a session is active, so it must be set
+    # when the session is built; ``get_spark(extra_conf={KEY: "true"})``
+    # turns capture back on for debugging.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -9,6 +9,8 @@ seconds-vs-ms discipline, main.rs:109/163).
 
 from __future__ import annotations
 
+import os
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -17,6 +19,7 @@ from pyspark.sql import types as T
 from level2_to_cassandra_spark.catalog import (
     TABLES,
     load_table,
+    read_parquet,
     register_temp_views,
     table_path,
 )
@@ -294,3 +297,71 @@ def test_prewarm_survives_a_failing_builder(spark, monkeypatch):
     assert list(seconds) == ["tf_postings"]
     assert seen == [False]
     spark.catalog.dropTempView("l2c_test_prewarm_leftover")
+
+
+def _jobs_started(spark, fn):
+    """(fn's result, the Spark job ids it started)."""
+    sc = spark.sparkContext
+    group = f"l2c_test_jobs_{id(fn)}"
+    sc.setJobGroup(group, "jobs started by one call")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repeated_reads_start_no_job(spark):
+    """The second read of a fixture table or a staged parquet dir is
+    given the schema its first read inferred: it starts no
+    footer-reading Spark job, and its schema is the inferred one."""
+    from level2_to_cassandra_spark import catalog
+    from level2_to_cassandra_spark.queries.llm import _sig_relation
+
+    app = spark.sparkContext.applicationId
+    for read, path in [
+        (lambda: load_table(spark, SF_SMOKE, "documents"),
+         lambda: table_path(SF_SMOKE, "documents")),
+        (lambda: _sig_relation(spark, SF_SMOKE),
+         lambda: catalog._STAGED[
+             ("minhash_signatures", app, SF_SMOKE)].path),
+    ]:
+        read()
+        df, jobs = _jobs_started(spark, read)
+        assert jobs == []
+        assert df.schema == spark.read.parquet(path()).schema
+
+
+def test_rewritten_path_infers_its_new_schema(spark, tmp_path):
+    """A path rewritten inside the session (new mtime, one more column)
+    is inferred afresh, so the new column is visible."""
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert read_parquet(spark, path).columns == ["a"]
+    df, jobs = _jobs_started(spark, lambda: read_parquet(spark, path))
+    assert (df.columns, jobs) == (["a"], [])
+    before = os.stat(path).st_mtime_ns
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    later = before + 1_000_000_000
+    os.utime(path, ns=(later, later))
+    df = read_parquet(spark, path)
+    assert df.columns == ["a", "b"]
+    assert sorted(r["b"] for r in df.collect()) == ["x", "y"]
+
+
+def test_missing_path_raises_as_an_inferring_read(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read_parquet(spark, str(tmp_path / "absent.parquet"))
+
+
+def test_session_disables_call_site_capture(spark):
+    """get_spark turns PySpark's per-call DataFrame call-site capture
+    off, and PySpark has read the flag that way."""
+    from pyspark.errors import utils
+
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(key) == "false"
+    assert utils.is_debugging_enabled() is False

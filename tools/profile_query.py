@@ -4,6 +4,14 @@ loop without the (disabled) UI: run each named query with event
 logging on, then print per-stage executor run time, task count and the
 stage's callsite name, so the expensive operator is identifiable.
 
+Above each stage table, the median split of the query's wall time:
+plan construction (the query function's call, which builds the plan
+in Python on the driver), physical planning (forcing
+``queryExecution().executedPlan()``), execution (the ``noop`` write,
+which also plans its write command around the analyzed plan), and
+the Spark jobs and completed stages per call — a fixed per-query
+driver cost shows up in the first two, task time in the stage table.
+
 Usage: python tools/profile_query.py [-r REPS] query [query ...]
 
 Same session/staging discipline as tools/time_queries.py (bench.py's
@@ -14,6 +22,7 @@ reps for stability; divide by REPS mentally.
 from __future__ import annotations
 
 import json
+import statistics
 import sys
 import tempfile
 import time
@@ -32,18 +41,29 @@ def main() -> None:
     h.warm_plans(spark, names)
     h.prewarm(spark, names)
 
-    walls: dict[str, list[float]] = {n: [] for n in names}
+    from level2_to_cassandra_spark.registry import all_queries
+
+    qs = all_queries()
+    #: per query, per rep: (construct, plan, execute) seconds
+    splits: dict[str, list[tuple[float, float, float]]] = {
+        n: [] for n in names}
     for _ in range(reps):
         for name in names:
             spark.sparkContext.setJobDescription(f"profile:{name}")
             t0 = time.perf_counter()
-            h.run(spark, name, h.SF_DIR)
-            walls[name].append(time.perf_counter() - t0)
+            df = qs[name].fn(spark, h.SF_DIR)
+            t1 = time.perf_counter()
+            df._jdf.queryExecution().executedPlan()
+            t2 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            t3 = time.perf_counter()
+            splits[name].append((t1 - t0, t2 - t1, t3 - t2))
             spark.sparkContext.setJobDescription(None)
             spark.catalog.clearCache()
     spark.stop()
 
     # parse the event log: per-description, per-stage
+    jobs: dict[str, int] = {n: 0 for n in names}
     desc_of_stage: dict[int, str] = {}
     stages: dict[int, dict] = {}
     files = [p for p in Path(log_dir).rglob("events_*") if p.is_file()]
@@ -56,6 +76,7 @@ def main() -> None:
                         "spark.job.description", "")
                     if not desc.startswith("profile:"):
                         continue
+                    jobs[desc[8:]] += 1
                     for sid in ev.get("Stage IDs", []):
                         desc_of_stage.setdefault(sid, desc[8:])
     for entry in files:
@@ -103,10 +124,18 @@ def main() -> None:
                         stages[sid]["wall_ms"] = ct - st
 
     for name in names:
-        print(f"\n=== {name}: walls "
-              f"{[round(w, 3) for w in walls[name]]} "
-              f"(sum of stage numbers below covers all {reps} reps)")
+        walls = [sum(parts) for parts in splits[name]]
         rows = [s for s in stages.values() if s["q"] == name]
+        construct, plan, execute = (
+            statistics.median(col) * 1e3 for col in zip(*splits[name]))
+        print(f"\n=== {name}: walls "
+              f"{[round(w, 3) for w in walls]} "
+              f"(sum of stage numbers below covers all {reps} reps)")
+        print(f"  median split: construct={construct:.0f} ms "
+              f"plan={plan:.0f} ms execute={execute:.0f} ms of "
+              f"{statistics.median(walls) * 1e3:.0f} ms wall; "
+              f"{jobs[name] / reps:g} jobs, {len(rows) / reps:g} stages "
+              f"per call")
         rows.sort(key=lambda s: -s["run_ms"])
         tot = sum(s["run_ms"] for s in rows)
         print(f"  total executor run {tot} ms over {len(rows)} stages")
