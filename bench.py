@@ -25,6 +25,11 @@ Optional: SPARK_GRAFT_SCALING_PROBE=1 event-logs the run and appends a
 per-query executor-task-time map to the output — evidence of the
 parallelism actually applied at a core count even where AQE coalesces
 tiny-SF stages to a handful of tasks (VERDICT r16 task #2).
+
+The set-up steps (``open_session``, ``warm_session``, ``warm_plans``,
+``prewarm``) are module functions the measurement tools in ``tools/``
+share; importing this module starts no Spark work (perfbench imports
+it for ``_staging_builders`` and ``_parse_event_log``).
 """
 
 from __future__ import annotations
@@ -195,70 +200,154 @@ def _parse_event_log(log_dir: str) -> dict[str, dict[str, float]]:
     count.  Stage → query attribution rides the ``bench:<name>`` job
     description set on every timed rep; a stage is counted once (a
     re-used stage skipped by later jobs never re-completes)."""
-    # Spark 4 writes rolling v2 event logs: <dir>/eventlog_v2_<app>/
-    # events_<n>_<app>[.codec] — parse every events_* file, two passes
-    # (JobStart mappings first) so file order never matters.
-    files = [p for p in Path(log_dir).rglob("events_*") if p.is_file()]
-    desc_of_stage: dict[int, str] = {}
-    agg: dict[str, dict[str, float]] = {}
-    seen_stages: set[int] = set()
-    for entry in files:
-        with open(entry, errors="replace") as fh:
-            for line in fh:
-                if line.startswith('{"Event":"SparkListenerJobStart"'):
-                    ev = json.loads(line)
-                    desc = (ev.get("Properties") or {}).get(
-                        "spark.job.description", "")
-                    if not desc.startswith("bench:"):
-                        continue
-                    q = desc[len("bench:"):]
-                    for sid in ev.get("Stage IDs", []):
-                        desc_of_stage.setdefault(sid, q)
-    for entry in files:
-        with open(entry, errors="replace") as fh:
-            for line in fh:
-                if line.startswith(
-                        '{"Event":"SparkListenerStageCompleted"'):
-                    ev = json.loads(line)
-                    info = ev.get("Stage Info", {})
-                    sid = info.get("Stage ID")
-                    q = desc_of_stage.get(sid)
-                    if q is None or sid in seen_stages:
-                        continue
-                    seen_stages.add(sid)
-                    run_ms = cpu_ns = 0
-                    for acc in info.get("Accumulables", []):
-                        if acc.get("Name") == \
-                                "internal.metrics.executorRunTime":
-                            run_ms = acc.get("Value", 0)
-                        elif acc.get("Name") == \
-                                "internal.metrics.executorCpuTime":
-                            cpu_ns = acc.get("Value", 0)
-                    d = agg.setdefault(q, {"task_time_sec": 0.0,
-                                           "cpu_time_sec": 0.0,
-                                           "n_tasks": 0, "n_stages": 0})
-                    d["task_time_sec"] += run_ms / 1e3
-                    d["cpu_time_sec"] += cpu_ns / 1e9
-                    d["n_tasks"] += info.get("Number of Tasks", 0)
-                    d["n_stages"] += 1
-    return {
-        q: {k: (round(v, 3) if isinstance(v, float) else v)
-            for k, v in d.items()}
-        for q, d in agg.items()
-    }
+    from level2_to_cassandra_spark.plans.profile import read_event_log
+
+    out = {}
+    for q, rec in read_event_log(log_dir, "bench:").items():
+        stages = rec["stages"].values()
+        if stages:
+            out[q] = {
+                "task_time_sec": round(sum(s["run_ms"] / 1e3
+                                           for s in stages), 3),
+                "cpu_time_sec": round(sum(s["cpu_ns"] / 1e9
+                                          for s in stages), 3),
+                "n_tasks": sum(s["tasks"] for s in stages),
+                "n_stages": len(stages),
+            }
+    return out
+
+
+def parse_reps(text: str, source: str) -> int:
+    """``text`` as a rep count; exits naming ``source`` unless it is an
+    integer >= 1 (zero reps would time nothing yet read as a run)."""
+    try:
+        reps = int(text)
+    except ValueError:
+        reps = 0
+    if reps < 1:
+        sys.exit(f"{source} must be an integer >= 1, got {text!r}")
+    return reps
+
+
+def tool_args(args: list[str], default_reps: int) -> tuple[int, list[str]]:
+    """A measurement tool's ``[-r REPS] query ...`` → (reps, names)."""
+    if args[:1] == ["-r"]:
+        return parse_reps(args[1] if len(args) > 1 else "", "-r"), args[2:]
+    return default_reps, args
+
+
+def open_session(app_name: str, extra_conf: dict | None = None):
+    """The bench's session: local[$SPARK_GRAFT_CPUS], 32 shuffle
+    partitions, no UI, a 16g driver; ``extra_conf`` adds settings."""
+    from level2_to_cassandra_spark.session import get_spark
+
+    spark = get_spark(
+        app_name=app_name,
+        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]",
+        shuffle_partitions=32,
+        extra_conf={"spark.ui.enabled": "false",
+                    "spark.ui.showConsoleProgress": "false",
+                    "spark.driver.memory": "16g",
+                    **(extra_conf or {})},
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def noop(df) -> None:
+    """Execute ``df`` in full through the ``noop`` sink: the whole plan
+    runs distributed, nothing is collected to the driver."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def warm_session(spark, sf_dir: str) -> None:
+    """JVM and Python-worker warm-ups, so the first timed query is not
+    charged for session start-up."""
+    from level2_to_cassandra_spark.registry import all_queries
+
+    # JVM/codegen warmup on a tiny query so q1 isn't charged for startup.
+    try:
+        noop(all_queries()["q_sort_limit"].fn(spark, sf_dir))
+    except Exception as e:  # noqa: BLE001 — warmup must never kill the run
+        print(f"warmup failed: {e}", file=sys.stderr)
+    # Python-worker warmup: fork the Arrow worker pool on every core
+    # BEFORE pass 1 — otherwise the first mapInPandas query in the set
+    # pays the whole fan-out (measured 15-25 s first-pass spikes on the
+    # Arrow-path queries, which poisons their MEDIANS; worker startup
+    # is session overhead, not query cost).
+    try:
+        noop(spark.range(10_000, numPartitions=int(
+            spark.sparkContext.defaultParallelism)
+        ).mapInPandas(lambda it: it, schema="id long"))
+    except Exception as e:  # noqa: BLE001
+        print(f"python warmup failed: {e}", file=sys.stderr)
+
+
+def warm_plans(spark, names: list[str]) -> None:
+    """Plan/JIT warmup: one pass of every named query at the smallest
+    SF ($SPARK_GRAFT_WARM_SF_DIR, default sf0.001).
+
+    Whole-stage-codegen classes depend on the plan + schema, not the
+    data, so a tiny-SF run loads/compiles the SAME generated classes
+    the timed sf0.1 passes execute — paying classload + janino + C2
+    tiers outside the timed region.  Without it the JVM's JIT ramp
+    poisons 3-rep MEDIANS on the codegen-heaviest plans (VERDICT r05
+    #2: q_text_tfidf's driver median read 2.97 s while its steady
+    state is ~1.5 s; measured here, the tiny-SF pre-pass drops its
+    first timed rep from ~6 s to ~2.3 s).  JIT ramp is session
+    overhead, not query cost — the same rationale as the worker-pool
+    fork; generic synthetic warmups were tried and do NOT transfer (C2
+    compiles per generated class)."""
+    from level2_to_cassandra_spark.registry import all_queries
+
+    warm_dir = os.environ.get("SPARK_GRAFT_WARM_SF_DIR",
+                              "/root/testdata/sf0.001")
+    if not os.path.isdir(warm_dir):
+        return
+    qs = all_queries()
+    for name in names:
+        try:
+            noop(qs[name].fn(spark, warm_dir))
+        except Exception as e:  # noqa: BLE001 — warmup never kills
+            print(f"plan warmup {name} failed: {e}", file=sys.stderr)
+        spark.catalog.clearCache()
+
+
+def prewarm(spark, sf_dir: str, names: list[str]) -> dict[str, float]:
+    """Pre-build every staging artifact a named query reads, keyed to
+    the TIMED ``sf_dir``; returns build seconds by label, each build
+    timed on its own and reported on stderr with any failure.
+
+    The serve paths read per-(session, sf_dir) parquet staging tables,
+    and the tiny-SF plan warmup built only the warm_dir entries —
+    without this the FIRST timed rep of whichever consumer runs first
+    pays the full build, so 3-rep minima exclude it but anything
+    mid-run (cache pressure, interleaving) can smear it into medians
+    (ADVICE r06; VERDICT r13 #2 flagged exactly that attribution
+    ambiguity for the r13-added shingle table).  Build is session
+    overhead by design (the build/serve split); every timed rep
+    measures serve only.  An artifact is built only when a query that
+    declares it is named (VERDICT r14 task #7: ann_eval_tables at
+    18.6 s and multimodal_gate at 13.9 s dominated prewarm
+    unconditionally); one failing builder is reported and skipped."""
+    from level2_to_cassandra_spark.registry import prewarm_staging
+
+    staging_sec, staging_failed = prewarm_staging(spark, sf_dir, names)
+    for label, err in staging_failed.items():
+        print(f"{label} prewarm failed: {err}", file=sys.stderr)
+    print(json.dumps({"staging_prewarm_sec": staging_sec}),
+          file=sys.stderr)
+    return staging_sec
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    reps = parse_reps(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"),
+                      "SPARK_GRAFT_BENCH_REPS")
+    from level2_to_cassandra_spark.catalog import DEFAULT_SF_DIR as sf_dir
+    from level2_to_cassandra_spark.registry import all_queries
+
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
-
-    from level2_to_cassandra_spark.session import get_spark
-    from level2_to_cassandra_spark.registry import (
-        all_queries,
-        prewarm_staging,
-    )
 
     # Optional scaling probe (VERDICT r16 task #2): event-log the run
     # so per-query EXECUTOR TASK TIME is reportable next to wall time.
@@ -271,22 +360,13 @@ def main() -> None:
         import shutil
         import tempfile
 
+        from level2_to_cassandra_spark.plans.profile import event_log_conf
+
         probe_dir = tempfile.mkdtemp(prefix="l2c_eventlog_")
         atexit.register(shutil.rmtree, probe_dir, ignore_errors=True)
-        probe_conf = {"spark.eventLog.enabled": "true",
-                      "spark.eventLog.compress": "false",
-                      "spark.eventLog.dir": f"file://{probe_dir}"}
+        probe_conf = event_log_conf(probe_dir)
 
-    spark = get_spark(
-        app_name="l2c-spark-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=32,
-        extra_conf={"spark.ui.enabled": "false",
-                    "spark.ui.showConsoleProgress": "false",
-                    "spark.driver.memory": "16g",
-                    **probe_conf},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = open_session("l2c-spark-bench", probe_conf)
     # Scaling evidence (VERDICT r16 task #2): the emitted JSON carries
     # the master actually applied and the resulting parallelism, so a
     # flat c8/c32 wall ratio is attributable (AQE-coalesced tiny-SF
@@ -296,72 +376,10 @@ def main() -> None:
 
     qs = all_queries()
     names = [n for n in HEADLINE if n in qs]
+    warm_session(spark, sf_dir)
+    warm_plans(spark, names)
+    staging_sec = prewarm(spark, sf_dir, names)
 
-    # JVM/codegen warmup on a tiny query so q1 isn't charged for startup.
-    try:
-        qs["q_sort_limit"].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    except Exception as e:  # noqa: BLE001 — warmup must never kill the run
-        print(f"warmup failed: {e}", file=sys.stderr)
-    # Python-worker warmup: fork the Arrow worker pool on every core
-    # BEFORE pass 1 — otherwise the first mapInPandas query in the set
-    # pays the whole fan-out (measured 15-25 s first-pass spikes on the
-    # Arrow-path queries, which poisons their MEDIANS; worker startup
-    # is session overhead, not query cost).
-    try:
-        spark.range(10_000, numPartitions=int(
-            spark.sparkContext.defaultParallelism)
-        ).mapInPandas(lambda it: it, schema="id long").write.format(
-            "noop").mode("overwrite").save()
-    except Exception as e:  # noqa: BLE001
-        print(f"python warmup failed: {e}", file=sys.stderr)
-    # Plan/JIT warmup: one pass of every headline query at the smallest
-    # SF.  Whole-stage-codegen classes depend on the plan + schema, not
-    # the data, so a tiny-SF run loads/compiles the SAME generated
-    # classes the timed sf0.1 passes execute — paying classload +
-    # janino + C2 tiers outside the timed region.  Without it the JVM's
-    # JIT ramp poisons 3-rep MEDIANS on the codegen-heaviest plans
-    # (VERDICT r05 #2: q_text_tfidf's driver median read 2.97 s while
-    # its steady state is ~1.5 s; measured here, the tiny-SF pre-pass
-    # drops its first timed rep from ~6 s to ~2.3 s).  JIT ramp is
-    # session overhead, not query cost — the same rationale as the
-    # worker-pool fork above; generic synthetic warmups were tried and
-    # do NOT transfer (C2 compiles per generated class).
-    warm_dir = os.environ.get("SPARK_GRAFT_WARM_SF_DIR",
-                              "/root/testdata/sf0.001")
-    if os.path.isdir(warm_dir):
-        for name in names:
-            try:
-                qs[name].fn(spark, warm_dir).write.format("noop").mode(
-                    "overwrite").save()
-            except Exception as e:  # noqa: BLE001 — warmup never kills
-                print(f"plan warmup {name} failed: {e}", file=sys.stderr)
-            spark.catalog.clearCache()
-
-    # Pre-build EVERY session staging artifact keyed to the TIMED
-    # sf_dir: the serve paths read per-(session, sf_dir) parquet
-    # staging tables, and the tiny-SF plan warmup above built only the
-    # warm_dir entries — without this the FIRST timed rep of whichever
-    # consumer runs first pays the full build, so 3-rep minima exclude
-    # it but anything mid-run (cache pressure, interleaving) can smear
-    # it into medians (ADVICE r06; VERDICT r13 #2 flagged exactly that
-    # attribution ambiguity for the r13-added shingle table).  Build is
-    # session overhead by design (the build/serve split); every timed
-    # rep measures serve only.  Each build is timed INDIVIDUALLY and
-    # emitted as its own stderr line item so staging cost is a visible
-    # number, never a mystery charged to a consumer query.
-    # An artifact is built only when a query that declares it is in
-    # the bench list (VERDICT r14 task #7: ann_eval_tables at 18.6 s
-    # and multimodal_gate at 13.9 s dominated prewarm
-    # unconditionally); one failing builder is reported and skipped.
-    staging_sec, staging_failed = prewarm_staging(spark, sf_dir, names)
-    for label, err in staging_failed.items():
-        print(f"{label} prewarm failed: {err}", file=sys.stderr)
-    print(json.dumps({"staging_prewarm_sec": staging_sec}),
-          file=sys.stderr)
-
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     samples: dict[str, list[float]] = {n: [] for n in names}
     failed: dict[str, str] = {}
     for _ in range(reps):
@@ -513,6 +531,7 @@ def main() -> None:
     # capture always parses it (VERDICT r16 task #1).
     out_local = dict(out)
     out_local["queries_median"] = medians
+    out_local["staging_prewarm_sec"] = staging_sec
     if "baseline" in out and isinstance(out.get("baseline"), dict):
         # "baseline" is set only where the guarded block above parsed
         # the file into bl_med and built the numeric common set

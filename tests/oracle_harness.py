@@ -10,6 +10,9 @@ fail the driver's CORRECTNESS gate.
 from __future__ import annotations
 
 import math
+import os
+import tempfile
+import uuid
 
 import duckdb
 import pandas as pd
@@ -21,7 +24,18 @@ TABLES = (
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    """An in-memory DuckDB connection with a view per fixture table.
+
+    Its memory and spill are bounded, so a runaway oracle fails with a
+    DuckDB error instead of the OOM killer taking down pytest and its
+    JVM.  DuckDB creates the spill directory on first spill and removes
+    it when the connection closes."""
+    con = duckdb.connect(config={
+        "memory_limit": "4GB",
+        "temp_directory": os.path.join(
+            tempfile.gettempdir(), f"l2c_duckdb_{uuid.uuid4().hex}"),
+        "max_temp_directory_size": "8GB",
+    })
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"

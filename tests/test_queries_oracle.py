@@ -67,3 +67,16 @@ def test_contract_shape():
     qs, os_ = e.queries(), e.oracle_sql()
     assert set(os_) <= set(qs)
     assert callable(next(iter(qs.values())))
+
+
+def test_oracle_connection_is_bounded(duck):
+    # A runaway oracle must fail with a DuckDB error, not grow until the
+    # OOM killer takes down pytest and its JVM.
+    import tempfile
+
+    limit, spill, spill_dir = duck.sql(
+        "SELECT current_setting('memory_limit'), "
+        "current_setting('max_temp_directory_size'), "
+        "current_setting('temp_directory')").fetchone()
+    assert (limit, spill) == ("3.7 GiB", "7.4 GiB")
+    assert spill_dir.startswith(tempfile.gettempdir())

@@ -27,9 +27,12 @@ from __future__ import annotations
 import argparse
 import importlib
 import statistics
+import sys
 import time
+from pathlib import Path
 
-import _harness as h
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+import bench  # noqa: E402
 
 
 def parse_toggle(spec: str) -> tuple:
@@ -43,11 +46,16 @@ def parse_toggle(spec: str) -> tuple:
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--toggle", action="append", required=True)
-    ap.add_argument("-r", "--reps", type=int, default=5)
+    ap.add_argument("-r", "--reps", default="5")
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
+    reps = bench.parse_reps(args.reps, "-r")
     names = args.queries
-    spark = h.open_session("l2c-ab")
+    from level2_to_cassandra_spark.catalog import DEFAULT_SF_DIR as sf_dir
+    from level2_to_cassandra_spark.registry import all_queries
+
+    spark = bench.open_session("l2c-ab")
+    bench.warm_session(spark, sf_dir)
     toggles = [parse_toggle(t) for t in args.toggle]
 
     def variant(b: bool) -> None:
@@ -56,20 +64,18 @@ def main() -> None:
 
     for b in (False, True):
         variant(b)
-        h.warm_plans(spark, names)
+        bench.warm_plans(spark, names)
     variant(False)
-    h.prewarm(spark, names)
+    bench.prewarm(spark, sf_dir, names)
 
     # first rep, untimed: output parity (also the timed-SF JIT burn)
-    from level2_to_cassandra_spark.registry import all_queries
-
     qs = all_queries()
     differ = []
     for name in names:
         out = []
         for b in (False, True):
             variant(b)
-            out.append(qs[name].fn(spark, h.SF_DIR))
+            out.append(qs[name].fn(spark, sf_dir))
         if not (out[0].exceptAll(out[1]).isEmpty()
                 and out[1].exceptAll(out[0]).isEmpty()):
             differ.append(name)
@@ -79,12 +85,12 @@ def main() -> None:
         raise SystemExit(f"variant outputs differ: {differ}")
 
     samples: dict[tuple[str, bool], list[float]] = {}
-    for rep in range(args.reps):
+    for rep in range(reps):
         for b in ((False, True) if rep % 2 == 0 else (True, False)):
             variant(b)
             for name in names:
                 t0 = time.perf_counter()
-                h.run(spark, name, h.SF_DIR)
+                bench.noop(qs[name].fn(spark, sf_dir))
                 samples.setdefault((name, b), []).append(
                     time.perf_counter() - t0)
                 spark.catalog.clearCache()

@@ -1,13 +1,31 @@
-"""Simulate the grading driver: vanilla SparkSession + DuckDB oracle
-comparison of every __spark_entry__ query at sf0.01."""
-import os, sys, time, traceback
+#!/usr/bin/env python
+"""Check the ``__spark_entry__`` contract as its external caller does:
+vanilla SparkSession, non-UTC host TZ, DuckDB oracle comparison.
+
+Usage: python tools/drive_contract.py [--sf DIR] [query ...]
+
+With no names: the re-entrant ``entry()`` check, then every query
+(rows-only where a query has no oracle).  With names: only those
+queries — the inner correctness loop for optimization work.  DIR
+defaults to the sf0.01 fixture the correctness gate runs at.
+"""
+import os
+import sys
+import time
+import traceback
+from pathlib import Path
 
 os.environ["TZ"] = "America/New_York"
 time.tzset()
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from pyspark.sql import SparkSession
+from pyspark.sql import SparkSession  # noqa: E402
+from tests.conftest import SF_CORRECT as SF  # noqa: E402
+
+args = sys.argv[1:]
+if args[:1] == ["--sf"]:
+    SF, args = args[1], args[2:]
 
 spark = (
     SparkSession.builder.master("local[4]")
@@ -16,47 +34,35 @@ spark = (
 )
 spark.sparkContext.setLogLevel("ERROR")
 
-import __spark_entry__ as entrymod
-from tests.oracle_harness import compare  # noqa: E402
+import __spark_entry__ as entrymod  # noqa: E402
+from tests.oracle_harness import compare, duck_connection  # noqa: E402
 
-import duckdb
+if not args:
+    # entry() twice (re-entrancy), rows >= 0
+    n = entrymod.entry(spark).count()
+    assert n >= 0, n
+    assert entrymod.entry(spark).count() == n
+    print(f"entry(): {n} rows OK")
 
-SF = "/root/testdata/sf0.01"
-
-# 1. entry() twice (re-entrancy), rows >= 0
-df = entrymod.entry(spark)
-n = df.count()
-assert n >= 0, n
-df2 = entrymod.entry(spark)
-assert df2.count() == n
-print(f"entry(): {n} rows OK")
-
-con = duckdb.connect()
-for t in ("region nation customer supplier part orders lineitem "
-          "events documents embeddings").split():
-    con.sql(
-        f"CREATE VIEW {t} AS SELECT * FROM "
-        f"read_parquet('{SF}/{t}.parquet')"
-    )
-
+con = duck_connection(SF)
 qs = entrymod.queries()
 oracles = entrymod.oracle_sql()
+names = args or list(qs)
 fails = []
 t0 = time.time()
-for name, fn in qs.items():
+for name in names:
     try:
-        sdf = fn(spark, SF)
+        sdf = qs[name](spark, SF)
         sql = oracles.get(name)
         if sql is None:
-            cnt = sdf.count()
-            print(f"{name:30s} rows-only: {cnt} rows")
+            print(f"{name:30s} rows-only: {sdf.count()} rows")
             continue
         compare(sdf, con, sql)
         print(f"{name:30s} OK")
-    except Exception as e:
+    except Exception as e:  # noqa: BLE001 — one failure never stops the run
         fails.append(name)
         print(f"{name:30s} FAIL: {e}")
         traceback.print_exc(limit=3)
-print(f"--- {len(qs)} queries, {len(fails)} failures "
-      f"({time.time()-t0:.0f}s): {fails}")
+print(f"--- {len(names)} queries, {len(fails)} failures "
+      f"({time.time() - t0:.0f}s): {fails}")
 sys.exit(1 if fails else 0)

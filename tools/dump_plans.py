@@ -4,43 +4,33 @@
 Usage: python tools/dump_plans.py <tag> <suffix> [query ...]
 
 With no query names, dumps every bench.py HEADLINE query.  Each file is
-plans/<tag>/<query>_<suffix>.txt (suffix: before|after).  Uses the same
-session shape as bench.py so the captured plans match what the bench
+plans/<tag>/<query>_<suffix>.txt (suffix: before|after).  Uses
+bench.py's session so the captured plans match what the bench
 executes.
 """
 from __future__ import annotations
 
-import os
 import sys
 from pathlib import Path
 
-REPO = Path(__file__).resolve().parent.parent
+REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
+import bench  # noqa: E402
 
 
 def main() -> None:
     tag = sys.argv[1]
     suffix = sys.argv[2]
     names = sys.argv[3:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from bench import HEADLINE
-    from level2_to_cassandra_spark.session import get_spark
+    from level2_to_cassandra_spark.catalog import DEFAULT_SF_DIR as sf_dir
     from level2_to_cassandra_spark.registry import all_queries
     from level2_to_cassandra_spark.plans.inspect import plan_of
 
-    spark = get_spark(
-        app_name="l2c-plan-dump",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]",
-        shuffle_partitions=32,
-        extra_conf={"spark.ui.enabled": "false",
-                    "spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
+    spark = bench.open_session("l2c-plan-dump")
     qs = all_queries()
     if not names:
-        names = [n for n in HEADLINE if n in qs]
+        names = [n for n in bench.HEADLINE if n in qs]
     out_dir = REPO / "plans" / tag
     out_dir.mkdir(parents=True, exist_ok=True)
     for name in names:

@@ -11,37 +11,49 @@ in Python on the driver), physical planning (forcing
 which also plans its write command around the analyzed plan), and
 the Spark jobs and completed stages per call — a fixed per-query
 driver cost shows up in the first two, task time in the stage table.
+Below it, the task count of every stage and the size of every
+BroadcastExchange, per call.
 
 Usage: python tools/profile_query.py [-r REPS] query [query ...]
 
-Same session/staging discipline as tools/time_queries.py (bench.py's
-inner loop): tiny-SF plan warmup, staging prewarm for the named
-queries, per-rep clearCache.  Reported stage times are summed across
-reps for stability; divide by REPS mentally.
+bench.py's session set-up (warm-ups, tiny-SF plan warmup, staging
+prewarm for the named queries), per-rep clearCache.  Reported stage
+times are summed across reps for stability; divide by REPS mentally.
 """
 from __future__ import annotations
 
-import json
+import shutil
 import statistics
 import sys
 import tempfile
 import time
 from pathlib import Path
 
-import _harness as h
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+import bench  # noqa: E402
+
+
+def per_call(label: str, values: list, reps: int) -> None:
+    """Print one call's ``values`` when every call repeated them."""
+    one = values[:len(values) // reps]
+    print(f"  {label} per call: {one}" if one * reps == values
+          else f"  {label}, all {reps} calls: {values}")
 
 
 def main() -> None:
-    reps, names = h.parse_reps(sys.argv[1:], 3)
-    log_dir = tempfile.mkdtemp(prefix="l2c_profile_")
-    spark = h.open_session("l2c-profile", {
-        "spark.eventLog.enabled": "true",
-        "spark.eventLog.compress": "false",
-        "spark.eventLog.dir": f"file://{log_dir}"})
-    h.warm_plans(spark, names)
-    h.prewarm(spark, names)
-
+    reps, names = bench.tool_args(sys.argv[1:], 3)
+    from level2_to_cassandra_spark.catalog import DEFAULT_SF_DIR as sf_dir
+    from level2_to_cassandra_spark.plans.profile import (
+        event_log_conf,
+        read_event_log,
+    )
     from level2_to_cassandra_spark.registry import all_queries
+
+    log_dir = tempfile.mkdtemp(prefix="l2c_profile_")
+    spark = bench.open_session("l2c-profile", event_log_conf(log_dir))
+    bench.warm_session(spark, sf_dir)
+    bench.warm_plans(spark, names)
+    bench.prewarm(spark, sf_dir, names)
 
     qs = all_queries()
     #: per query, per rep: (construct, plan, execute) seconds
@@ -51,81 +63,24 @@ def main() -> None:
         for name in names:
             spark.sparkContext.setJobDescription(f"profile:{name}")
             t0 = time.perf_counter()
-            df = qs[name].fn(spark, h.SF_DIR)
+            df = qs[name].fn(spark, sf_dir)
             t1 = time.perf_counter()
             df._jdf.queryExecution().executedPlan()
             t2 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
+            bench.noop(df)
             t3 = time.perf_counter()
             splits[name].append((t1 - t0, t2 - t1, t3 - t2))
             spark.sparkContext.setJobDescription(None)
             spark.catalog.clearCache()
-    spark.stop()
-
-    # parse the event log: per-description, per-stage
-    jobs: dict[str, int] = {n: 0 for n in names}
-    desc_of_stage: dict[int, str] = {}
-    stages: dict[int, dict] = {}
-    files = [p for p in Path(log_dir).rglob("events_*") if p.is_file()]
-    for entry in files:
-        with open(entry, errors="replace") as fh:
-            for line in fh:
-                if line.startswith('{"Event":"SparkListenerJobStart"'):
-                    ev = json.loads(line)
-                    desc = (ev.get("Properties") or {}).get(
-                        "spark.job.description", "")
-                    if not desc.startswith("profile:"):
-                        continue
-                    jobs[desc[8:]] += 1
-                    for sid in ev.get("Stage IDs", []):
-                        desc_of_stage.setdefault(sid, desc[8:])
-    for entry in files:
-        with open(entry, errors="replace") as fh:
-            for line in fh:
-                if line.startswith(
-                        '{"Event":"SparkListenerStageCompleted"'):
-                    ev = json.loads(line)
-                    info = ev.get("Stage Info", {})
-                    sid = info.get("Stage ID")
-                    if sid not in desc_of_stage or sid in stages:
-                        continue
-                    run = cpu = srt = srb = swb = rows_in = 0
-                    for acc in info.get("Accumulables", []):
-                        nm = acc.get("Name")
-                        if nm == "internal.metrics.executorRunTime":
-                            run = acc.get("Value", 0)
-                        elif nm == "internal.metrics.executorCpuTime":
-                            cpu = acc.get("Value", 0) // 1_000_000
-                        elif nm == ("internal.metrics.shuffle.read"
-                                    ".fetchWaitTime"):
-                            srt = acc.get("Value", 0)
-                        elif nm == ("internal.metrics.shuffle.read"
-                                    ".totalBytesRead"):
-                            srb = acc.get("Value", 0)
-                        elif nm == ("internal.metrics.shuffle.write"
-                                    ".bytesWritten"):
-                            swb = acc.get("Value", 0)
-                        elif nm == "internal.metrics.input.recordsRead":
-                            rows_in = acc.get("Value", 0)
-                    stages[sid] = {
-                        "q": desc_of_stage[sid],
-                        "run_ms": run, "cpu_ms": cpu,
-                        "fetchwait_ms": srt,
-                        "sh_read_mb": round(srb / 1e6, 1),
-                        "sh_write_mb": round(swb / 1e6, 1),
-                        "rows_in": rows_in,
-                        "tasks": info.get("Number of Tasks", 0),
-                        "name": info.get("Stage Name", "")[:90],
-                        "wall_ms": None,
-                    }
-                    st = info.get("Submission Time")
-                    ct = info.get("Completion Time")
-                    if st and ct:
-                        stages[sid]["wall_ms"] = ct - st
+    spark.stop()  # flushes the event log
+    profile = read_event_log(log_dir, "profile:")
+    shutil.rmtree(log_dir, ignore_errors=True)
 
     for name in names:
+        rec = profile.get(name, {"jobs": 0, "stages": {},
+                                 "broadcast_bytes": []})
+        stages = rec["stages"]
         walls = [sum(parts) for parts in splits[name]]
-        rows = [s for s in stages.values() if s["q"] == name]
         construct, plan, execute = (
             statistics.median(col) * 1e3 for col in zip(*splits[name]))
         print(f"\n=== {name}: walls "
@@ -134,16 +89,22 @@ def main() -> None:
         print(f"  median split: construct={construct:.0f} ms "
               f"plan={plan:.0f} ms execute={execute:.0f} ms of "
               f"{statistics.median(walls) * 1e3:.0f} ms wall; "
-              f"{jobs[name] / reps:g} jobs, {len(rows) / reps:g} stages "
-              f"per call")
-        rows.sort(key=lambda s: -s["run_ms"])
+              f"{rec['jobs'] / reps:g} jobs, {len(stages) / reps:g} "
+              f"stages per call")
+        rows = sorted(stages.values(), key=lambda s: -s["run_ms"])
         tot = sum(s["run_ms"] for s in rows)
         print(f"  total executor run {tot} ms over {len(rows)} stages")
         for s in rows[:14]:
-            print(f"  run={s['run_ms']:>6} cpu={s['cpu_ms']:>6} "
-                  f"wall={s['wall_ms']} fw={s['fetchwait_ms']:>4} "
-                  f"shR={s['sh_read_mb']:>6} shW={s['sh_write_mb']:>6} "
-                  f"t={s['tasks']:>3} in={s['rows_in']:>9} {s['name']}")
+            print(f"  run={s['run_ms']:>6} "
+                  f"cpu={s['cpu_ns'] // 1_000_000:>6} "
+                  f"wall={s['wall_ms']} fw={s['fetch_wait_ms']:>4} "
+                  f"shR={s['shuffle_read_bytes'] / 1e6:>6.1f} "
+                  f"shW={s['shuffle_write_bytes'] / 1e6:>6.1f} "
+                  f"t={s['tasks']:>3} in={s['records_in']:>9} "
+                  f"{s['name'][:90]}")
+        per_call("tasks per stage",
+                 [s["tasks"] for _, s in sorted(stages.items())], reps)
+        per_call("broadcast bytes", rec["broadcast_bytes"], reps)
 
 
 if __name__ == "__main__":

@@ -3,9 +3,9 @@
 
 Usage: python tools/time_queries.py [-r REPS] query [query ...]
 
-Same session/staging discipline as bench.py (tiny-SF plan warmup,
-staging prewarm for the named queries, per-rep clearCache), but only
-for the named queries — the fast inner loop for optimization work.
+bench.py's session set-up (warm-ups, tiny-SF plan warmup, staging
+prewarm for the named queries) and per-rep clearCache, but only for
+the named queries — the fast inner loop for optimization work.
 Prints per-rep seconds, min and median per query.
 """
 from __future__ import annotations
@@ -13,22 +13,29 @@ from __future__ import annotations
 import statistics
 import sys
 import time
+from pathlib import Path
 
-import _harness as h
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+import bench  # noqa: E402
 
 
 def main() -> None:
-    reps, names = h.parse_reps(sys.argv[1:], 3)
-    spark = h.open_session("l2c-time-queries")
-    h.warm_plans(spark, names)
-    h.prewarm(spark, names)
+    reps, names = bench.tool_args(sys.argv[1:], 3)
+    from level2_to_cassandra_spark.catalog import DEFAULT_SF_DIR as sf_dir
+    from level2_to_cassandra_spark.registry import all_queries
 
+    spark = bench.open_session("l2c-time-queries")
+    bench.warm_session(spark, sf_dir)
+    bench.warm_plans(spark, names)
+    bench.prewarm(spark, sf_dir, names)
+
+    qs = all_queries()
     samples: dict[str, list[float]] = {n: [] for n in names}
     for _ in range(reps):
         for name in names:
             spark.sparkContext.setJobDescription(name)
             t0 = time.perf_counter()
-            h.run(spark, name, h.SF_DIR)
+            bench.noop(qs[name].fn(spark, sf_dir))
             samples[name].append(time.perf_counter() - t0)
             spark.catalog.clearCache()
     for name, ts in samples.items():
