@@ -15,7 +15,6 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -135,21 +134,23 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     return labels
 
 
-def foreach_batch_incremental_dedup(admitted_path: str, store_path: str,
-                                    text_col: str = "text",
-                                    id_col: str = "doc_id"):
-    """``foreachBatch`` sink factory: STREAMING incremental corpus
-    dedup — the micro-batch twin of q_dedup_incremental (queries/
-    llm.py), which verifies the same admit rule against DuckDB in
-    batch form.  Per micro-batch: keep the first-of-content row
-    (lowest ``id_col`` per sha2(text)), LEFT ANTI join against the
-    hash staging table at ``store_path``, append the admitted rows to
-    ``admitted_path`` and ONLY THEN their hashes to the store — so a
-    replayed batch (foreachBatch is at-least-once) re-admits rather
-    than silently dropping rows whose hashes landed before a crash;
-    duplicate admitted rows are reconciled by the same content-hash
-    dedup downstream, duplicate store hashes are harmless (the anti
-    join is set-semantics).
+def incremental_dedup_step(store_path: str, text_col: str = "text",
+                           id_col: str = "doc_id"):
+    """Gate-chain step (streaming/monitor.py::gate_chain) for STREAMING
+    incremental corpus dedup — the micro-batch twin of
+    q_dedup_incremental (queries/llm.py), which verifies the same admit
+    rule against DuckDB in batch form.  Per micro-batch: keep the
+    first-of-content row (lowest ``id_col`` per sha2(text)) and LEFT
+    ANTI join it against the hash staging table at ``store_path``; the
+    survivors are admitted, and ONLY AFTER the sink write their hashes
+    are appended to the store — so a replayed batch (foreachBatch is
+    at-least-once) re-admits rather than silently dropping rows whose
+    hashes landed before a crash; duplicate admitted rows are
+    reconciled by the same content-hash dedup downstream, duplicate
+    store hashes are harmless (the anti join is set-semantics).  The
+    store carries no batch_id, so a replay after the hash append
+    admits nothing: put this step LAST in a chain, so every other
+    step's appends land before the hashes that gate the replay.
 
     Admit rule across the stream: a document is admitted iff its
     content has never been seen in any earlier micro-batch, and it has
@@ -163,71 +164,41 @@ def foreach_batch_incremental_dedup(admitted_path: str, store_path: str,
     re-shuffles; the store grows by admitted hashes only.  NULL-text
     rows are dropped (same reasoning as the batch twin: sha2(NULL) is
     NULL and can never anti-match)."""
+    from level2_to_cassandra_spark.streaming.monitor import (
+        _append,
+        _read_journal,
+    )
 
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = (
-            batch_df.where(F.col(text_col).isNotNull())
-            .withColumn("__h", content_hash(text_col))
+    def step(batch, bid, persist):
+        first = latest_by_key(
+            batch.where(F.col(text_col).isNotNull())
+            .withColumn("__h", content_hash(text_col)),
+            ["__h"], [F.asc(id_col)],
         )
-        first = latest_by_key(batch, ["__h"], [F.asc(id_col)])
         # no .distinct(): LEFT ANTI is set-semantics on the build side
         # already, and a distinct would shuffle the whole ever-growing
-        # store every micro-batch.  Empty-store classification lives in
-        # _read_store_or_none (shared with the multimodal admit sink).
-        seen = _read_store_or_none(spark, store_path)
-        admitted = (
-            first.join(seen.select("__h"), "__h", "left_anti")
-            if seen is not None else first
-        )
-        # rows BEFORE hashes — replay-safe ordering (see docstring)
-        admitted.persist()
-        try:
-            admitted.drop("__h").write.mode("append").parquet(admitted_path)
-            admitted.select("__h").write.mode("append").parquet(store_path)
-        finally:
-            admitted.unpersist()
+        # store every micro-batch
+        seen = _read_journal(batch.sparkSession, store_path,
+                             first.select("__h").schema)
+        admitted = first.join(seen, "__h", "left_anti").drop("__h")
+        hashes = admitted.select(content_hash(text_col).alias("__h"))
+        return admitted, [_append(hashes, store_path, one_file=False)]
 
-    return fn
+    return step
 
 
-def is_empty_store_error(e: "AnalysisException") -> bool:
-    """True iff an AnalysisException means "this store holds nothing
-    yet" — THE shared classifier for every store/journal reader (the
-    admit sinks here, the monitor journal readers in
-    streaming/monitor.py), so the condition set cannot drift between
-    copies (self-review r13).
+def foreach_batch_incremental_dedup(admitted_path: str, store_path: str,
+                                    text_col: str = "text",
+                                    id_col: str = "doc_id"):
+    """``foreachBatch`` sink factory: append the rows
+    :func:`incremental_dedup_step` admits to ``admitted_path``, then
+    their hashes to the store at ``store_path``."""
+    from level2_to_cassandra_spark.streaming.monitor import gate_chain
 
-    Classify by the STRUCTURED error condition (a message substring
-    match could be spoofed by a path that happens to contain the error
-    name).  Empty-store conditions mean "nothing seen yet":
-    PATH_NOT_FOUND is the true first batch; UNABLE_TO_INFER_SCHEMA is
-    the directory a crash left with no readable footer (e.g. died
-    between the rows write and the store write) — retrying the read
-    can never succeed there.  Everything else (permissions, transient
-    FS, corrupt footer on a populated store) is NOT empty and must
-    propagate — swallowing it would silently misreport real state."""
-    try:
-        cond = e.getCondition() or ""
-    except Exception:  # noqa: BLE001 — legacy error without condition
-        cond = ""
-    return cond in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-
-
-def _read_store_or_none(spark, path: str):
-    """Read a staging-store parquet dir, or None if it does not hold
-    data yet — shared by both incremental-admit sinks.  Empty-store
-    classification via :func:`is_empty_store_error`; on the
-    crash-torn-directory condition, re-admitting is exactly the
-    documented at-least-once replay behavior.  Everything else
-    re-raises to fail the batch for retry — swallowing it would
-    silently re-admit already-seen content."""
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if not is_empty_store_error(e):
-            raise
-        return None
+    return gate_chain(
+        lambda df, bid: df.write.mode("append").parquet(admitted_path),
+        incremental_dedup_step(store_path, text_col, id_col),
+    )
 
 
 def seed_multimodal_store(assets: DataFrame, store_path: str,
@@ -264,18 +235,16 @@ def seed_multimodal_store(assets: DataFrame, store_path: str,
     ).write.mode("overwrite").parquet(f"{store_path}/vecs")
 
 
-def foreach_batch_multimodal_admit(admitted_path: str, store_path: str,
-                                   text_col: str = "text",
-                                   id_col: str = "doc_id",
-                                   vec_col: str = "embedding",
-                                   n_planes: int = 6, n_tables: int = 8,
-                                   dim: int = 64,
-                                   threshold: float = 0.35):
-    """``foreachBatch`` sink factory: STREAMING cross-modal incremental
-    admit — the micro-batch twin of q_dedup_incremental_multimodal
-    (queries/llm.py), which hash-verifies the same admit rule against
-    DuckDB in batch form.  Per micro-batch of (id, text, vector)
-    assets:
+def multimodal_admit_step(store_path: str, text_col: str = "text",
+                          id_col: str = "doc_id",
+                          vec_col: str = "embedding",
+                          n_planes: int = 6, n_tables: int = 8,
+                          dim: int = 64, threshold: float = 0.35):
+    """Gate-chain step (streaming/monitor.py::gate_chain) for STREAMING
+    cross-modal incremental admit — the micro-batch twin of
+    q_dedup_incremental_multimodal (queries/llm.py), which
+    hash-verifies the same admit rule against DuckDB in batch form.
+    Per micro-batch of (id, text, vector) assets:
 
     * EXACT leg — keep the first-of-content row (lowest id per
       sha2(text)), LEFT ANTI against ``{store}/hashes``;
@@ -285,17 +254,18 @@ def foreach_batch_multimodal_admit(admitted_path: str, store_path: str,
       (table, bucket), re-rank candidates with the exact rounded
       cosine against ``{store}/vecs``, and reject survivors with any
       seen neighbor at cos ≥ ``threshold``;
-    * append admitted rows, THEN bucket and vector rows, THEN hashes —
-      the hash store must land LAST: it is what gates re-admission on
-      replay (foreachBatch is at-least-once), so every store entry a
-      replay will NOT rebuild has to be durable before the batch can
+    * after the sink write, append bucket and vector rows, THEN hashes
+      — the hash store must land LAST: it is what gates re-admission
+      on replay (foreachBatch is at-least-once), so every store entry
+      a replay will NOT rebuild has to be durable before the batch can
       be classified as seen.  A crash anywhere earlier re-admits the
       batch and rewrites everything (duplicate admitted rows are
       reconciled by content-hash downstream; duplicate bucket/vector
       rows are harmless — the candidate probe and the reject list are
       set-semantics).  Hashes-before-buckets would instead leave a
       PERMANENT near-dup blind spot: the replay would anti-join the
-      batch away while its vectors never reach the store.
+      batch away while its vectors never reach the store.  For the
+      same reason this step goes LAST in a chain.
 
     Admitted batches GROW the store, so a later micro-batch's
     near-dup of an earlier admitted doc is rejected — first-arrival
@@ -307,97 +277,107 @@ def foreach_batch_multimodal_admit(admitted_path: str, store_path: str,
     and a candidate join bounded by batch × bucket occupancy — the
     batch never joins the corpus, only its bucket collisions."""
     from level2_to_cassandra_spark.operators import similarity
+    from level2_to_cassandra_spark.streaming.monitor import (
+        _append,
+        _read_journal,
+    )
 
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = (
-            batch_df.where(F.col(text_col).isNotNull())
-            .withColumn("__h", content_hash(text_col))
+    def vecs(df):
+        return df.select(F.col(id_col).alias("__sid"),
+                         F.col(vec_col).alias("__sv"))
+
+    def step(batch, bid, persist):
+        spark = batch.sparkSession
+        first = latest_by_key(
+            batch.where(F.col(text_col).isNotNull())
+            .withColumn("__h", content_hash(text_col)),
+            ["__h"], [F.asc(id_col)],
         )
-        first = latest_by_key(batch, ["__h"], [F.asc(id_col)])
-        seen_h = _read_store_or_none(spark, f"{store_path}/hashes")
-        if seen_h is not None:
-            first = first.join(seen_h.select("__h"), "__h", "left_anti")
+        seen_h = _read_journal(spark, f"{store_path}/hashes",
+                               first.select("__h").schema)
         # the survivors feed the bucketize pass, the candidate probe
-        # AND the three writes — one cache, trigger-bounded.  The
-        # bucket rows are ALSO persisted: the store-append write reuses
-        # them (semi-joined down to the admitted ids) instead of paying
-        # the Arrow matmul kernel a second time per micro-batch.
-        first.persist()
-        bkts = similarity.lsh_buckets_np(
+        # AND the admitted frame — one cache, trigger-bounded.  The
+        # bucket rows are ALSO persisted: the store append reuses them
+        # (semi-joined down to the admitted ids) instead of paying the
+        # Arrow matmul kernel a second time per micro-batch.
+        first = persist(first.join(seen_h, "__h", "left_anti").drop("__h"))
+        bkts = persist(similarity.lsh_buckets_np(
             first, id_col, vec_col, n_planes, n_tables, dim=dim,
             scheme="rademacher",
-        ).select("table", "bucket", F.col(id_col).alias("__nid")).persist()
-        try:
-            seen_b = _read_store_or_none(spark, f"{store_path}/buckets")
-            seen_v = _read_store_or_none(spark, f"{store_path}/vecs")
-            admitted = first
-            if seen_b is not None and seen_v is not None:
-                # __nid != __sid: a crash-replay AFTER the bucket/vector
-                # writes re-presents this batch's own rows as "seen";
-                # without the guard every replayed doc self-rejects at
-                # cos 1.0 and — since rejection skips the hashes append
-                # — the batch would classify as seen on the NEXT replay
-                # too, silently losing it from the admitted output (and
-                # its hash from the exact gate) forever.
-                cand = (
-                    bkts.join(seen_b, ["table", "bucket"])
-                    .where(F.col("__nid") != F.col("__sid"))
-                    .select("__nid", "__sid")
-                    .distinct()
-                )
-                nv = similarity.as_double(F.col(vec_col))
-                sv = similarity.as_double(F.col("__sv"))
-                pairs = (
-                    cand.join(
-                        first.select(
-                            F.col(id_col).alias("__nid"), F.col(vec_col)
-                        ),
-                        "__nid",
-                    )
-                    .join(seen_v, "__sid")
-                    .select(
-                        "__nid",
-                        (
-                            similarity.dot(nv, sv)
-                            / (similarity.l2_norm(nv)
-                               * similarity.l2_norm(sv))
-                        ).alias("__cos"),
-                    )
-                )
-                rejected = (
-                    pairs.where(F.round(F.col("__cos"), 4) >= threshold)
-                    .select(F.col("__nid").alias(id_col))
-                    .distinct()
-                )
-                admitted = first.join(rejected, id_col, "left_anti")
-            admitted.persist()
-            try:
-                admitted.drop("__h").write.mode("append").parquet(
-                    admitted_path
-                )
-                # the probe pass's bucket rows, cut to the admitted ids
-                # — identical rows to re-bucketizing `admitted`, for
-                # zero extra kernel passes
-                bkts.join(
-                    admitted.select(F.col(id_col).alias("__nid")),
-                    "__nid",
-                    "left_semi",
-                ).select(
-                    "table", "bucket", F.col("__nid").alias("__sid")
-                ).write.mode("append").parquet(f"{store_path}/buckets")
-                admitted.select(
-                    F.col(id_col).alias("__sid"),
-                    F.col(vec_col).alias("__sv"),
-                ).write.mode("append").parquet(f"{store_path}/vecs")
-                # hashes LAST — see the ordering note in the docstring
-                admitted.select("__h").write.mode("append").parquet(
-                    f"{store_path}/hashes"
-                )
-            finally:
-                admitted.unpersist()
-        finally:
-            first.unpersist()
-            bkts.unpersist()
+        ).select("table", "bucket", F.col(id_col).alias("__nid")))
+        seen_b = _read_journal(
+            spark, f"{store_path}/buckets",
+            bkts.withColumnRenamed("__nid", "__sid").schema,
+        )
+        seen_v = _read_journal(spark, f"{store_path}/vecs",
+                               vecs(first).schema)
+        # __nid != __sid: a crash-replay AFTER the bucket/vector writes
+        # re-presents this batch's own rows as "seen"; without the
+        # guard every replayed doc self-rejects at cos 1.0 and — since
+        # rejection skips the hashes append — the batch would classify
+        # as seen on the NEXT replay too, silently losing it from the
+        # admitted output (and its hash from the exact gate) forever.
+        cand = (
+            bkts.join(seen_b, ["table", "bucket"])
+            .where(F.col("__nid") != F.col("__sid"))
+            .select("__nid", "__sid")
+            .distinct()
+        )
+        nv = similarity.as_double(F.col(vec_col))
+        sv = similarity.as_double(F.col("__sv"))
+        pairs = (
+            cand.join(
+                first.select(F.col(id_col).alias("__nid"), F.col(vec_col)),
+                "__nid",
+            )
+            .join(seen_v, "__sid")
+            .select(
+                "__nid",
+                (
+                    similarity.dot(nv, sv)
+                    / (similarity.l2_norm(nv) * similarity.l2_norm(sv))
+                ).alias("__cos"),
+            )
+        )
+        rejected = (
+            pairs.where(F.round(F.col("__cos"), 4) >= threshold)
+            .select(F.col("__nid").alias(id_col))
+            .distinct()
+        )
+        admitted = first.join(rejected, id_col, "left_anti")
+        # the probe pass's bucket rows, cut to the admitted ids —
+        # identical rows to re-bucketizing `admitted`, for zero extra
+        # kernel passes
+        new_bkts = bkts.join(
+            admitted.select(F.col(id_col).alias("__nid")), "__nid",
+            "left_semi",
+        ).select("table", "bucket", F.col("__nid").alias("__sid"))
+        return admitted, [
+            _append(new_bkts, f"{store_path}/buckets", one_file=False),
+            _append(vecs(admitted), f"{store_path}/vecs", one_file=False),
+            # hashes LAST — see the ordering note in the docstring
+            _append(admitted.select(content_hash(text_col).alias("__h")),
+                    f"{store_path}/hashes", one_file=False),
+        ]
 
-    return fn
+    return step
+
+
+def foreach_batch_multimodal_admit(admitted_path: str, store_path: str,
+                                   text_col: str = "text",
+                                   id_col: str = "doc_id",
+                                   vec_col: str = "embedding",
+                                   n_planes: int = 6, n_tables: int = 8,
+                                   dim: int = 64,
+                                   threshold: float = 0.35):
+    """``foreachBatch`` sink factory: append the assets
+    :func:`multimodal_admit_step` admits to ``admitted_path``, then
+    their bucket, vector and hash rows to the stores under
+    ``store_path``."""
+    from level2_to_cassandra_spark.streaming.monitor import gate_chain
+
+    return gate_chain(
+        lambda df, bid: df.write.mode("append").parquet(admitted_path),
+        multimodal_admit_step(store_path, text_col, id_col, vec_col,
+                              n_planes, n_tables, dim, threshold),
+    )

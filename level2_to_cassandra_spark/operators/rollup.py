@@ -3,8 +3,8 @@ quantile layer of the rollup cascade — SURVEY.md §2 B4/B9).
 
 ONE implementation of the grid shared by the batch query
 (queries/timeseries.py::q_rollup_quantile) and the streaming
-continuous-aggregate maintenance wrapper
-(streaming/monitor.py::foreach_batch_with_grid_rollup), so the stored
+continuous-aggregate maintenance step
+(streaming/monitor.py::grid_rollup_step), so the stored
 partial format and the bound derivation cannot drift between the two
 paths.  The partial state per (minute, key, bin) is (count, min, max):
 counts merge by SUM, extremes by MIN/MAX — exactly mergeable under ANY

@@ -2044,7 +2044,7 @@ def centroid_stats(em: DataFrame, dim: int = 64,
     scan collapsing map-side to ``dim`` mean cells; the collect is
     the bounded kmeans-centroid pattern.  Shared by q_embed_outlier
     (queries/llm.py) and the streaming outlier gate
-    (streaming/monitor.py::foreach_batch_with_outlier_gate) so batch
+    (streaming/monitor.py::outlier_gate_step) so batch
     and stream score against the SAME arithmetic by construction."""
     import math
 

@@ -381,7 +381,7 @@ def line_segments(docs, id_col: str = "doc_id", text_col: str = "text"):
     sub-document dedup, 0-based line_no in document order.  ONE shared
     implementation for the batch query (queries/llm.py::q_dedup_lines)
     and the streaming admit monitor
-    (streaming/monitor.py::foreach_batch_with_line_dedup) so the
+    (streaming/monitor.py::line_dedup_step) so the
     segmentation cannot drift between them.  Pure JVM: sequence +
     posexplode + slice, no shuffle."""
     # Materialize the TOKEN ARRAY in its OWN select BELOW the explode

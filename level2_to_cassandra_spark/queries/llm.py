@@ -159,7 +159,7 @@ def canonical_urls(docs: DataFrame) -> DataFrame:
     """The synthetic-URL construction + canonicalization behind
     q_dedup_url, as a pure (doc_id, url, canonical_url) transform —
     shared VERBATIM by the batch query and the streaming URL-frontier
-    admit wrapper (streaming/monitor.py::foreach_batch_with_url_dedup)
+    admit step (streaming/monitor.py::url_dedup_step)
     so the two can never drift.  Map-side only: no window, no join."""
     d = F.col("doc_id")
     url = F.concat(
@@ -4184,8 +4184,8 @@ def q_dedup_incremental_multimodal(spark: SparkSession,
 
     This is q_dedup_multimodal's decision applied at the ingest
     boundary, where re-clustering the corpus per batch is impossible;
-    the streaming twin (operators/dedup.py::
-    foreach_batch_multimodal_admit) runs the same rule per micro-batch
+    the streaming twin (operators/dedup.py::multimodal_admit_step,
+    behind foreach_batch_multimodal_admit) runs the same rule per micro-batch
     against persisted hash/bucket/vector staging stores and is
     parity-pinned to this hash-verified query.
 
@@ -4516,7 +4516,7 @@ def q_embed_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     The centroid/cosine arithmetic lives in
     operators/similarity.py::centroid_stats / centroid_cosine, SHARED
     with the streaming gate
-    (streaming/monitor.py::foreach_batch_with_outlier_gate) so batch
+    (streaming/monitor.py::outlier_gate_step) so batch
     and stream score identically by construction."""
     em = load_table(spark, sf_dir, "embeddings")
     cv, cnorm = similarity.centroid_stats(em, dim=64)

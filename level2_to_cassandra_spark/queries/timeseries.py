@@ -1371,7 +1371,7 @@ from level2_to_cassandra_spark.operators import rollup as _rollup  # noqa: E402
 
 #: single grid definition beside the partial format it shapes
 #: (operators/rollup.py — shared verbatim with the streaming
-#: continuous-aggregate wrapper, foreach_batch_with_grid_rollup)
+#: continuous-aggregate step, streaming/monitor.py::grid_rollup_step)
 _QGRID_BINS = _rollup.GRID_BINS
 _QGRID_W = _rollup.GRID_W
 

@@ -22,9 +22,13 @@ pickled Python RDD, several times slower per append).
 The data-quality gates and monitors below (drift, KS, embedding
 drift, covariance, outlier, vocabulary growth, shingle df, novelty,
 line dedup, quality, vote, mixture, classifier, URL dedup, grid
-rollup) are each one step function over :func:`_journaled`, which
-owns their delivery semantics; the metrics wrapper keeps the same
-contract — its append runs AFTER the wrapped sink write succeeds, and
+rollup) are step factories: ``<gate>_step(...)`` returns one step,
+and :func:`gate_chain` runs any number of steps in front of one sink
+callback, as in ``gate_chain(sink, drift_step(...),
+url_dedup_step(...))``.  The chain owns the delivery semantics: it
+persists the batch once per trigger, feeds each step the previous
+step's admitted rows, and runs every journal append AFTER the sink
+write succeeds.  The metrics wrapper keeps the same contract, and
 readers aggregate with ``dropDuplicates(["batch_id"])`` as usual for
 audit logs.  Every journal lives beside the sink under an
 underscore-prefixed directory (so directory-globbing readers of the
@@ -132,33 +136,39 @@ _GRID = "_grid_rollup"
 _DOC_KEY = ("batch_id", "doc_id")
 
 
-def _journaled(
+def gate_chain(
     inner: Callable[[DataFrame, int], None],
-    step: Callable,
+    *steps: Callable,
 ) -> Callable[[DataFrame, int], None]:
-    """The at-least-once foreachBatch skeleton every gate shares.
+    """The at-least-once foreachBatch skeleton every gate shares: run
+    ``steps`` in chain order in front of the sink callback ``inner``.
 
-    Per batch: persist the batch, call ``step(batch, batch_id,
-    persist)`` for ``(admitted, appends)`` — the frame the sink
-    receives (the whole batch for a pure audit) and an ordered list of
-    journal appends (zero-argument callables) — run ``inner`` on
-    ``admitted``, then run the appends in order.  ``persist(df)``
-    caches a frame the step reads from more than one branch.  Every
-    frame persisted here is released in a ``finally``, whether the
-    write succeeds or raises.  The cache is trigger-bounded: the sink
-    write and the journal legs share one scan of the batch.
+    A step is ``step(batch, batch_id, persist) -> (admitted, appends)``:
+    the frame it passes on (the whole batch for a pure audit) and an
+    ordered list of journal appends (zero-argument callables).  Per
+    trigger: persist the batch once, call each step on the previous
+    step's admitted frame (a NEW admitted frame is persisted too — the
+    next step, the sink and the appends all read it), run ``inner`` on
+    the last admitted frame, then run every step's appends in chain
+    order.  ``persist(df)`` caches a frame a step reads from more than
+    one branch.  Every frame persisted here is released in one
+    ``finally``, whether the write succeeds or raises.  The caches are
+    trigger-bounded: the sink write and the journal legs share one
+    scan of the batch.
 
     Delivery semantics (the foreachBatch contract of *Structured
-    Streaming*, SIGMOD 2018): the appends run only AFTER the wrapped
-    sink write succeeds, inside the same at-least-once attempt, so a
-    failed write journals nothing and the replayed batch re-runs the
-    whole step.  A step is a deterministic function of its batch and
-    of the journal rows of strictly earlier batches, so a replay
+    Streaming*, SIGMOD 2018): the appends run only AFTER the sink
+    write succeeds, inside the same at-least-once attempt, so a failed
+    write journals nothing for any step and the replayed batch re-runs
+    the whole chain.  A step is a deterministic function of its input
+    and of the journal rows of strictly earlier batches, so a replay
     writes IDENTICAL rows under the same batch_id: readers collapse
     them with ``dropDuplicates`` on the journal's replay key, and the
     first-occurrence stores (:func:`_first_seen`) probe only rows of
     earlier batches.  (The vocabulary store is the one journal read
-    without a batch filter; see :func:`foreach_batch_with_vocab_growth`.)
+    without a batch filter; see :func:`vocab_growth_step`.  The admit
+    steps of operators/dedup.py gate replay on a store without a
+    batch_id, so they go last in a chain.)
     """
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
@@ -169,7 +179,11 @@ def _journaled(
             return df
 
         try:
-            admitted, appends = step(batch_df, int(batch_id), persist)
+            admitted, appends = batch_df, []
+            for step in steps:
+                out, more = step(admitted, int(batch_id), persist)
+                admitted = admitted if out is admitted else persist(out)
+                appends += more
             inner(admitted, batch_id)
             for append in appends:
                 append()
@@ -194,23 +208,40 @@ def _bid(batch_id: int):
     return F.lit(batch_id).cast("long").alias("batch_id")
 
 
-def _read_journal(spark, path: str, schema: str,
+def is_empty_store_error(e) -> bool:
+    """True iff an AnalysisException means "this journal or store holds
+    nothing yet".
+
+    Classify by the STRUCTURED error condition (a message substring
+    match could be spoofed by a path that happens to contain the error
+    name).  Empty-store conditions mean "nothing seen yet":
+    PATH_NOT_FOUND is the true first batch; UNABLE_TO_INFER_SCHEMA is
+    the directory a crash left with no readable footer (e.g. died
+    between the rows write and the store write) — retrying the read
+    can never succeed there.  Everything else (permissions, transient
+    FS, corrupt footer on a populated store) is NOT empty and must
+    propagate — swallowing it would silently misreport real state."""
+    try:
+        cond = e.getCondition() or ""
+    except Exception:  # noqa: BLE001 — legacy error without condition
+        cond = ""
+    return cond in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
+def _read_journal(spark, path: str, schema,
                   keys: tuple[str, ...] | None = None) -> DataFrame:
-    """Read a monitor journal/store directory with its pinned schema,
-    or an EMPTY relation of that schema when no batch has been
-    delivered yet — the SAME classifier the incremental-admit sinks
-    use (operators/dedup.py::is_empty_store_error, one definition so
-    the condition set cannot drift between the two reader families).
-    Non-empty errors (permissions, transient FS, corrupt footer on a
-    populated journal) re-raise — swallowing one would silently
-    report an empty monitor over a journal that exists.  ``keys`` is
-    the journal's replay key: replayed batches' identical rows
+    """Read a journal or store directory with its pinned ``schema`` (a
+    DDL string, or a frame's ``StructType``), or an EMPTY relation of
+    that schema when no batch has been delivered yet
+    (:func:`is_empty_store_error` — the one reader for the gates'
+    journals and the admit steps' stores, so the condition set cannot
+    drift between reader families).  Non-empty errors (permissions,
+    transient FS, corrupt footer on a populated journal) re-raise —
+    swallowing one would silently report an empty monitor over a
+    journal that exists, or re-admit already-seen content.  ``keys``
+    is the journal's replay key: replayed batches' identical rows
     collapse on it."""
     from pyspark.errors import AnalysisException
-
-    from level2_to_cassandra_spark.operators.dedup import (
-        is_empty_store_error,
-    )
 
     try:
         df = spark.read.schema(schema).parquet(path)
@@ -309,7 +340,7 @@ def _first_seen(root: str, frame: DataFrame, key: str, rank, bid: int,
 
 
 #: drift-audit schema (flat + scalar, same rationale as METRICS_SCHEMA;
-#: ``key`` is always written as STRING — the wrapper casts arbitrary
+#: ``key`` is always written as STRING — the step casts arbitrary
 #: key columns so the fixed read schema can never type-mismatch the
 #: written parquet)
 DRIFT_SCHEMA = (
@@ -318,17 +349,16 @@ DRIFT_SCHEMA = (
 )
 
 
-def foreach_batch_with_drift(
-    inner: Callable[[DataFrame, int], None],
+def drift_step(
     base_path: str,
     ref_cells: DataFrame,
     stream: str = "events",
     key_col: str = "event_type",
     value_col: str = "value",
-) -> Callable[[DataFrame, int], None]:
-    """Wrap a foreachBatch sink callback with per-batch DISTRIBUTION
-    DRIFT scoring — the streaming twin of q_drift_psi: every
-    micro-batch is compared against a FROZEN reference histogram
+) -> Callable:
+    """Gate-chain step for per-batch DISTRIBUTION DRIFT scoring — the
+    streaming twin of q_drift_psi: every micro-batch is compared
+    against a FROZEN reference histogram
     (:func:`operators.drift.reference_cells`, built once offline) and
     one ``(batch_id, key, psi, drift_flag)`` audit row per reference
     key is appended beside the sink.  This is the data-quality gate a
@@ -336,7 +366,7 @@ def foreach_batch_with_drift(
     drifted batches are landing, not at the next offline audit.
 
     Cost: the scoring is a join, which observed metrics cannot carry,
-    so the batch is read from the :func:`_journaled` cache.  The
+    so the batch is read from the :func:`gate_chain` cache.  The
     reference relation is #keys × ≤N_BINS rows and broadcast into the
     scoring join — per batch the added work is one map-side binning
     pass + one (key, bin) count aggregate.  Readers dedup on
@@ -366,7 +396,7 @@ def foreach_batch_with_drift(
         )
         return batch, [_append(out, f"{base_path}/{_DRIFT}/{stream}")]
 
-    return _journaled(inner, step)
+    return step
 
 
 def read_drift(spark, base_path: str, stream: str = "events") -> DataFrame:
@@ -377,7 +407,7 @@ def read_drift(spark, base_path: str, stream: str = "events") -> DataFrame:
 
 
 #: KS-audit schema — the DRIFT_SCHEMA shape with the exact statistic
-#: in place of the binned one (``key`` cast to STRING by the wrapper,
+#: in place of the binned one (``key`` cast to STRING by the step,
 #: same rationale).
 KS_SCHEMA = (
     "batch_id long, stream string, key string, n_ref long, "
@@ -385,20 +415,18 @@ KS_SCHEMA = (
 )
 
 
-def foreach_batch_with_ks(
-    inner: Callable[[DataFrame, int], None],
+def ks_step(
     base_path: str,
     ref_dist: DataFrame,
     stream: str = "events",
     key_col: str = "event_type",
     value_col: str = "value",
-) -> Callable[[DataFrame, int], None]:
-    """Wrap a foreachBatch sink callback with per-batch EXACT
-    KOLMOGOROV-SMIRNOV drift scoring — the streaming twin of
-    q_drift_ks (VERDICT r13 #4), completing the drift family's
-    build/score splits (PSI: foreach_batch_with_drift; embedding:
-    foreach_batch_with_embedding_drift; nonparametric sup-distance:
-    THIS).  The reference CDF grid is frozen ONCE
+) -> Callable:
+    """Gate-chain step for per-batch EXACT KOLMOGOROV-SMIRNOV drift
+    scoring — the streaming twin of q_drift_ks (VERDICT r13 #4),
+    completing the drift family's build/score splits (PSI:
+    drift_step; embedding: embedding_drift_step; nonparametric
+    sup-distance: THIS).  The reference CDF grid is frozen ONCE
     (:func:`operators.drift.ks_reference_dist`, built offline) and
     every micro-batch is scored with one (key, value) aggregate + one
     union-grid-sized window pass; one ``(batch_id, key, ks,
@@ -413,7 +441,7 @@ def foreach_batch_with_ks(
     reference build every micro-batch.  At production scale the grid
     is a parquet staging table and this persist is a cache over its
     scan.  The persist outlives the STREAM, not just a batch — call
-    the returned callback's ``teardown()`` handle after
+    the returned step's ``teardown()`` handle after
     ``query.awaitTermination()`` / ``stop()`` to release the executor
     storage (ADVICE r14: without it the cache pins memory for the
     process lifetime once the stream ends)."""
@@ -433,12 +461,11 @@ def foreach_batch_with_ks(
         )
         return batch, [_append(out, f"{base_path}/{_KS}/{stream}")]
 
-    write = _journaled(inner, step)
     # teardown handle: unpersist the stream-lifetime reference cache
     # once the query terminates (idempotent — unpersist on an already
     # unpersisted relation is a no-op)
-    write.teardown = lambda: ref_dist.unpersist()
-    return write
+    step.teardown = lambda: ref_dist.unpersist()
+    return step
 
 
 def read_ks(spark, base_path: str, stream: str = "events") -> DataFrame:
@@ -455,8 +482,7 @@ EMBED_DRIFT_SCHEMA = (
 )
 
 
-def foreach_batch_with_embedding_drift(
-    inner: Callable[[DataFrame, int], None],
+def embedding_drift_step(
     base_path: str,
     centroids: DataFrame,
     ref_cells: DataFrame,
@@ -464,11 +490,10 @@ def foreach_batch_with_embedding_drift(
     stream: str = "embeddings",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> Callable[[DataFrame, int], None]:
-    """Wrap a foreachBatch sink callback with per-batch EMBEDDING-SPACE
-    drift scoring — the streaming twin of q_drift_embedding
-    (VERDICT r10 task #6): each embedding micro-batch is quantized
-    against a FROZEN codebook (``centroids`` — the centroid relation
+) -> Callable:
+    """Gate-chain step for per-batch EMBEDDING-SPACE drift scoring —
+    the streaming twin of q_drift_embedding (VERDICT r10 task #6):
+    each embedding micro-batch is quantized against a FROZEN codebook (``centroids`` — the centroid relation
     the offline label table was assigned against, e.g.
     ``similarity.ivf_index(em, lloyd_iters=_KMEANS_ITERS-1)[0]``) and
     its cluster occupancy is PSI-compared against the frozen reference
@@ -516,7 +541,7 @@ def foreach_batch_with_embedding_drift(
         )
         return batch, [_append(out, f"{base_path}/{_EMBED_DRIFT}/{stream}")]
 
-    return _journaled(inner, step)
+    return step
 
 
 def read_embed_drift(spark, base_path: str,
@@ -539,16 +564,15 @@ COVARIANCE_SCHEMA = (
 )
 
 
-def foreach_batch_with_covariance(
-    inner: Callable[[DataFrame, int], None],
+def covariance_step(
     base_path: str,
     dim: int = 64,
     stream: str = "embeddings",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> Callable[[DataFrame, int], None]:
-    """Wrap a foreachBatch sink callback with INCREMENTAL COVARIANCE
-    maintenance — the streaming twin of q_embed_covariance: each
+) -> Callable:
+    """Gate-chain step for INCREMENTAL COVARIANCE maintenance — the
+    streaming twin of q_embed_covariance: each
     embedding micro-batch folds into the running second-moment state,
     so the corpus covariance (the moment matrix behind PCA/whitening
     and eigen-spectrum drift diagnostics) is ALWAYS CURRENT at the
@@ -597,7 +621,7 @@ def foreach_batch_with_covariance(
         )
         return batch, [_append(parts, f"{base_path}/{_COVARIANCE}/{stream}")]
 
-    return _journaled(inner, step)
+    return step
 
 
 def read_covariance(spark, base_path: str,
@@ -641,8 +665,7 @@ OUTLIER_GATE_SCHEMA = (
 )
 
 
-def foreach_batch_with_outlier_gate(
-    inner: Callable[[DataFrame, int], None],
+def outlier_gate_step(
     base_path: str,
     centroid: list[float],
     cnorm: float,
@@ -651,9 +674,9 @@ def foreach_batch_with_outlier_gate(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-) -> Callable[[DataFrame, int], None]:
-    """Wrap a foreachBatch sink callback with the CENTROID-COSINE
-    OUTLIER GATE — the streaming twin of q_embed_outlier
+) -> Callable:
+    """Gate-chain step for the CENTROID-COSINE OUTLIER GATE — the
+    streaming twin of q_embed_outlier
     (queries/llm.py): each micro-batch is scored against a FROZEN
     centroid (``centroid``/``cnorm`` from
     operators/similarity.py::centroid_stats over the reference
@@ -661,7 +684,7 @@ def foreach_batch_with_outlier_gate(
     monitors) and split three ways:
 
     * rows the admission filter accepts whose rounded cosine clears
-      ``tau`` flow to the wrapped sink UNCHANGED (original columns);
+      ``tau`` are admitted UNCHANGED (original columns);
     * admitted rows scoring BELOW ``tau`` are quarantined with their
       cosine (``reason='outlier'``);
     * rows the filter refuses (NULL / wrong-length / element-NULL /
@@ -707,7 +730,7 @@ def foreach_batch_with_outlier_gate(
             _append(quarantined, f"{base_path}/{_OUTLIERS}/{stream}")
         ]
 
-    return _journaled(inner, step)
+    return step
 
 
 def read_outlier_quarantine(spark, base_path: str,
@@ -723,18 +746,17 @@ def read_outlier_quarantine(spark, base_path: str,
 _VOCAB_SCHEMA = "term string, batch_id long"
 
 
-def foreach_batch_with_vocab_growth(
-    inner: Callable[[DataFrame, int], None],
+def vocab_growth_step(
     base_path: str,
     text_col: str = "text",
-) -> Callable[[DataFrame, int], None]:
-    """Wrap a foreachBatch sink callback with a VOCABULARY-GROWTH
-    monitor — Heaps' law at the ingest boundary: per micro-batch, the
-    batch's distinct terms are anti-joined against the seen-term
-    store and only the UNSEEN ones are appended, keyed by the batch
-    that first contributed them.  A flattening new-term curve is the
-    signal that more of this source adds no lexical diversity — the
-    streaming complement of q_text_zipf's spectrum check.
+) -> Callable:
+    """Gate-chain step for a VOCABULARY-GROWTH monitor — Heaps' law at
+    the ingest boundary: per micro-batch, the batch's distinct terms are
+    anti-joined against the seen-term store and only the UNSEEN ones are
+    appended, keyed by the batch that first contributed them.  A
+    flattening new-term curve is the signal that more of this source
+    adds no lexical diversity — the streaming complement of
+    q_text_zipf's spectrum check.
 
     REPLAY SEMANTICS BY CONSTRUCTION (no separate audit table to
     de-duplicate): the store row ``(term, batch_id)`` is the only
@@ -766,7 +788,7 @@ def foreach_batch_with_vocab_growth(
         )
         return batch, [_append(new, store, one_file=False)]
 
-    return _journaled(inner, step)
+    return step
 
 
 def read_vocab_growth(spark, base_path: str) -> DataFrame:
@@ -792,18 +814,17 @@ def shingle_df_path(base: str) -> str:
     return f"{base}/_shingle_df"
 
 
-def foreach_batch_with_shingle_df(
-    inner: Callable[[DataFrame, int], None],
+def shingle_df_step(
     base_path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-) -> Callable[[DataFrame, int], None]:
-    """Wrap a foreachBatch sink callback with SHINGLE-DF JOURNAL
-    maintenance — the streaming twin of q_text_boilerplate's
-    expensive global state (the 3-gram document-frequency relation):
-    each micro-batch appends its per-shingle df DELTA and its doc
-    count, and :func:`read_hot_shingles` reduces the journal to the
-    CURRENT corpus-hot set under the exact batch cut
+) -> Callable:
+    """Gate-chain step for SHINGLE-DF JOURNAL maintenance — the
+    streaming twin of q_text_boilerplate's expensive global state (the
+    3-gram document-frequency relation): each micro-batch appends its
+    per-shingle df DELTA and its doc count, and
+    :func:`read_hot_shingles` reduces the journal to the CURRENT
+    corpus-hot set under the exact batch cut
     (operators/text.py::hot_shingles — one shared implementation, so
     batch and stream agree on hotness by construction).  Scoring any
     batch is then one broadcast join of that bounded set onto its
@@ -841,7 +862,7 @@ def foreach_batch_with_shingle_df(
             _append(docs, f"{root}/docs", one_file=False),
         ]
 
-    return _journaled(inner, step)
+    return step
 
 
 def _shingle_df_watermark(spark, base_path: str) -> int:
@@ -989,7 +1010,8 @@ def compact_shingle_df(spark, base_path: str) -> int | None:
     the current one (no-op — which STILL prunes/reclaims leftovers of
     a fold that crashed after its commit; also the degenerate
     never-any-shingles journal, where there is no vocabulary growth to
-    bound)."""
+    bound).  A sink with no journal directory returns None before
+    taking the lock, so it is left untouched."""
     import os
     import shutil
     import tempfile
@@ -999,7 +1021,8 @@ def compact_shingle_df(spark, base_path: str) -> int | None:
     )
 
     root = shingle_df_path(base_path)
-    os.makedirs(root, exist_ok=True)
+    if not os.path.isdir(root):
+        return None  # no journal: nothing to fold, and no lock to leave
     lock_fd = _acquire_compact_lock(f"{root}/_compact.lock")
     try:
         _migrate_flat_segments(spark, base_path)
@@ -1152,21 +1175,19 @@ NOVELTY_SCHEMA = (
 )
 
 
-def foreach_batch_with_novelty(
-    inner: Callable[[DataFrame, int], None],
+def novelty_step(
     base_path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-) -> Callable[[DataFrame, int], None]:
-    """Wrap a foreachBatch sink callback with FIRST-OCCURRENCE N-GRAM
-    NOVELTY scoring — the streaming twin of q_text_novelty: every
-    document is scored AT INGEST for the fraction of its distinct
-    3-gram shingles never seen in any earlier batch (crawl-value /
-    marginal-new-content, priced per batch instead of per corpus
-    rebuild).  One ``(batch_id, doc_id, n_shingles, n_novel,
-    novelty)`` audit row per shingled doc lands in ``_novelty/scores``
-    beside the sink; ``_novelty/seen`` is the first-occurrence
-    shingle store.
+) -> Callable:
+    """Gate-chain step for FIRST-OCCURRENCE N-GRAM NOVELTY scoring — the
+    streaming twin of q_text_novelty: every document is scored AT INGEST
+    for the fraction of its distinct 3-gram shingles never seen in any
+    earlier batch (crawl-value / marginal-new-content, priced per batch
+    instead of per corpus rebuild).  One ``(batch_id, doc_id,
+    n_shingles, n_novel, novelty)`` audit row per shingled doc lands in
+    ``_novelty/scores`` beside the sink; ``_novelty/seen`` is the
+    first-occurrence shingle store.
 
     REPLAY DETERMINISM is the design constraint the naive form fails:
     a replayed batch would find its own shingles already in the seen
@@ -1215,7 +1236,7 @@ def foreach_batch_with_novelty(
         )
         return batch, [_append(scores, f"{root}/scores"), *seal(occ)]
 
-    return _journaled(inner, step)
+    return step
 
 
 def read_novelty(spark, base_path: str) -> DataFrame:
@@ -1244,20 +1265,19 @@ def line_dedup_path(base: str) -> str:
     return f"{base}/_line_dedup"
 
 
-def foreach_batch_with_line_dedup(
-    inner: Callable[[DataFrame, int], None],
+def line_dedup_step(
     base_path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-) -> Callable[[DataFrame, int], None]:
-    """Wrap a foreachBatch sink callback with LINE-LEVEL DEDUP at
-    ingest — the streaming twin of q_dedup_lines: every document is
-    line-deduped AT ADMIT against all lines seen in earlier batches
-    (and earlier docs of its own batch), emitting one ``(batch_id,
-    doc_id, n_lines, n_kept, kept_text)`` audit row per doc.  This is
-    the C4 line-dedup step priced per micro-batch instead of per
-    corpus rebuild: the kept_text column IS the line-deduped document
-    a downstream curation sink would ingest.
+) -> Callable:
+    """Gate-chain step for LINE-LEVEL DEDUP at ingest — the streaming
+    twin of q_dedup_lines: every document is line-deduped AT ADMIT
+    against all lines seen in earlier batches (and earlier docs of its
+    own batch), emitting one ``(batch_id, doc_id, n_lines, n_kept,
+    kept_text)`` audit row per doc.  This is the C4 line-dedup step
+    priced per micro-batch instead of per corpus rebuild: the kept_text
+    column IS the line-deduped document a downstream curation sink would
+    ingest.
 
     First occurrence (:func:`_first_seen`) is the minimum packed
     (doc_id, line_no) key among lines no earlier batch stored — the
@@ -1281,8 +1301,8 @@ def foreach_batch_with_line_dedup(
     permanent replay of the same poison batch.  The gate instead
     REJECTS such docs wholesale at admit: their lines never enter the
     dedup (no audit row, no store rows) and the doc_id is journaled to
-    ``/overspan`` for requeue/inspection; the wrapped sink still
-    receives the full batch (this wrapper is an audit monitor, not a
+    ``/overspan`` for requeue/inspection; the step still admits the
+    full batch (it is an audit monitor, not a
     filter).  The guarded key expression stays in the plan as defense
     in depth — it cannot fire on the filtered lines."""
     from level2_to_cassandra_spark.operators import bloom as bloom_ops
@@ -1345,7 +1365,7 @@ def foreach_batch_with_line_dedup(
             *seal(fresh),
         ]
 
-    return _journaled(inner, step)
+    return step
 
 
 #: over-span reject journal: docs whose line count exceeds the packed
@@ -1380,19 +1400,16 @@ QUALITY_GATE_SCHEMA = (
 )
 
 
-def foreach_batch_with_quality_gate(
-    inner: Callable[[DataFrame, int], None],
-    base_path: str,
-) -> Callable[[DataFrame, int], None]:
-    """Wrap a foreachBatch sink callback with the GOPHER QUALITY GATE
-    — the streaming twin of q_quality_gopher: each micro-batch of
-    documents is scored with the SAME shared transform the batch query
-    serves from (queries/llm.py::gopher_stats — rule set and rounding
-    shared verbatim, so gate and query agree bit-for-bit by
-    construction and by parity test), then split two ways:
+def quality_gate_step(base_path: str) -> Callable:
+    """Gate-chain step for the GOPHER QUALITY GATE — the streaming twin
+    of q_quality_gopher: each micro-batch of documents is scored with
+    the SAME shared transform the batch query serves from
+    (queries/llm.py::gopher_stats — rule set and rounding shared
+    verbatim, so gate and query agree bit-for-bit by construction and by
+    parity test), then split two ways:
 
-    * docs whose composite pass_gopher bit is 1 flow to the wrapped
-      sink UNCHANGED (original columns);
+    * docs whose composite pass_gopher bit is 1 are admitted
+      UNCHANGED (original columns);
     * rejects are journaled to ``_quality_gate/rejects`` with their raw
       metrics — auditable by reason (which rule failed is re-derivable
       from the stored metrics without re-reading the text), the
@@ -1427,7 +1444,7 @@ def foreach_batch_with_quality_gate(
             f"{base_path}/{_QUALITY}/rejects",
         )
 
-    return _journaled(inner, step)
+    return step
 
 
 def read_quality_rejects(spark, base_path: str) -> DataFrame:
@@ -1448,23 +1465,21 @@ VOTE_GATE_SCHEMA = (
 )
 
 
-def foreach_batch_with_quality_vote(
-    inner: Callable[[DataFrame, int], None],
+def quality_vote_step(
     base_path: str,
     min_votes: int = 2,
-) -> Callable[[DataFrame, int], None]:
-    """Wrap a foreachBatch sink callback with the QUALITY-VOTE
-    ENSEMBLE GATE — the streaming twin of q_quality_vote and the
-    robust form of the single-signal gates: each micro-batch of
-    documents is scored by all THREE quality families via the SAME
-    shared chained transform the batch query serves from
-    (queries/traindata.py::quality_votes — gopher rules, classifier
-    raw-score sign, duplicated-trigram fraction, chained
-    scan→project), then split at ``min_votes`` (default 2 of 3 — the
-    batch query's majority rule, so gate and query agree bit-for-bit
-    by construction and by parity test):
+) -> Callable:
+    """Gate-chain step for the QUALITY-VOTE ENSEMBLE GATE — the
+    streaming twin of q_quality_vote and the robust form of the
+    single-signal gates: each micro-batch of documents is scored by all
+    THREE quality families via the SAME shared chained transform the
+    batch query serves from (queries/traindata.py::quality_votes —
+    gopher rules, classifier raw-score sign, duplicated-trigram
+    fraction, chained scan→project), then split at ``min_votes``
+    (default 2 of 3 — the batch query's majority rule, so gate and query
+    agree bit-for-bit by construction and by parity test):
 
-    * docs with votes ≥ min_votes flow to the wrapped sink UNCHANGED
+    * docs with votes ≥ min_votes are admitted UNCHANGED
       (original columns);
     * rejects are journaled to ``_vote_gate/rejects`` with their three
       per-gate bits and vote count — WHICH gate(s) failed re-derives
@@ -1496,7 +1511,7 @@ def foreach_batch_with_quality_vote(
             f"{base_path}/{_VOTE}/rejects",
         )
 
-    return _journaled(inner, step)
+    return step
 
 
 def read_vote_rejects(spark, base_path: str) -> DataFrame:
@@ -1512,23 +1527,19 @@ def read_vote_rejects(spark, base_path: str) -> DataFrame:
 MIXTURE_SCHEMA = "batch_id long, source string, n_docs long"
 
 
-def foreach_batch_with_mixture(
-    inner: Callable[[DataFrame, int], None],
-    base_path: str,
-) -> Callable[[DataFrame, int], None]:
-    """Wrap a foreachBatch sink callback with the REALIZED-MIXTURE
-    monitor — the observability end of the mixture-planning chain
-    (q_mixture_plan → q_mix_temperature → q_mix_interleave planned
-    it; this watches whether the stream that actually lands FOLLOWS
-    it): each micro-batch passes to the wrapped sink UNCHANGED, and
-    one (source → count) cell row per source is journaled to
-    ``_mixture/cells`` keyed by batch_id.  The journal is the whole
-    state: read_mixture folds it into cumulative per-source counts and
-    serves both the realized share and the √n-damped target
-    recomputed through the SAME shared transform the batch query
-    serves from (queries/traindata.py::mix_weights) — so a drifting
-    source mix (a crawler stalled, one feed flooding) is visible per
-    batch without ever rescanning the sink.
+def mixture_step(base_path: str) -> Callable:
+    """Gate-chain step for the REALIZED-MIXTURE monitor — the
+    observability end of the mixture-planning chain (q_mixture_plan →
+    q_mix_temperature → q_mix_interleave planned it; this watches
+    whether the stream that actually lands FOLLOWS it): each micro-batch
+    is admitted UNCHANGED, and one (source → count) cell row per source
+    is journaled to ``_mixture/cells`` keyed by batch_id.  The journal
+    is the whole state: read_mixture folds it into cumulative per-source
+    counts and serves both the realized share and the √n-damped target
+    recomputed through the SAME shared transform the batch query serves
+    from (queries/traindata.py::mix_weights) — so a drifting source mix
+    (a crawler stalled, one feed flooding) is visible per batch without
+    ever rescanning the sink.
 
     Cost per batch: ONE map-side-combined #sources-row aggregate of
     the already-persisted batch; zero Python, zero state, zero extra
@@ -1540,7 +1551,7 @@ def foreach_batch_with_mixture(
         ).select(_bid(bid), "source", "n_docs")
         return batch, [_append(cells, f"{base_path}/{_MIXTURE}/cells")]
 
-    return _journaled(inner, step)
+    return step
 
 
 def read_mixture(spark, base_path: str) -> DataFrame:
@@ -1585,28 +1596,26 @@ CLASSIFIER_GATE_SCHEMA = (
 )
 
 
-def foreach_batch_with_classifier_gate(
-    inner: Callable[[DataFrame, int], None],
+def classifier_gate_step(
     base_path: str,
     threshold_bin: int = 5,
-) -> Callable[[DataFrame, int], None]:
-    """Wrap a foreachBatch sink callback with the CLASSIFIER-SCORE
-    ADMIT GATE — the missing member of the calibrate → threshold →
-    gate chain (VERDICT r15 gap #4) and the model-based filter every
-    production curation stack runs at ingest: each micro-batch of
-    documents is scored with the SAME shared scoring/binning transform
-    the batch calibration/threshold queries serve from
-    (queries/traindata.py::_calib_lab — weights, token hashing, raw
-    unrounded score and bin cut shared verbatim, so gate and sweep
-    agree bit-for-bit by construction and by parity test), then split
-    at a SWEPT threshold:
+) -> Callable:
+    """Gate-chain step for the CLASSIFIER-SCORE ADMIT GATE — the missing
+    member of the calibrate → threshold → gate chain (VERDICT r15 gap
+    #4) and the model-based filter every production curation stack runs
+    at ingest: each micro-batch of documents is scored with the SAME
+    shared scoring/binning transform the batch calibration/threshold
+    queries serve from (queries/traindata.py::_calib_lab — weights,
+    token hashing, raw unrounded score and bin cut shared verbatim, so
+    gate and sweep agree bit-for-bit by construction and by parity
+    test), then split at a SWEPT threshold:
 
     * ``threshold_bin`` is a score-bin index on q_classifier_threshold's
       sweep spine (predict positive at t ⇔ bin ≥ t — the exact rule the
       sweep prices, so the operator reads the sweep's P/R/F1 row for t
       and deploys that t here, knowing the gate reproduces the row);
       the default 5 is the score ≥ 0 ⇔ p ≥ 0.5 cut;
-    * docs with bin ≥ threshold_bin flow to the wrapped sink UNCHANGED
+    * docs with bin ≥ threshold_bin are admitted UNCHANGED
       (original columns);
     * rejects are journaled to ``_classifier_gate/rejects`` with their
       raw score, p and bin — the decision inputs, auditable and
@@ -1654,7 +1663,7 @@ def foreach_batch_with_classifier_gate(
             f"{base_path}/{_CLASSIFIER}/rejects",
         )
 
-    return _journaled(inner, step)
+    return step
 
 
 def read_classifier_rejects(spark, base_path: str) -> DataFrame:
@@ -1679,18 +1688,15 @@ def url_dedup_path(base: str) -> str:
     return f"{base}/_url_dedup"
 
 
-def foreach_batch_with_url_dedup(
-    inner: Callable[[DataFrame, int], None],
-    base_path: str,
-) -> Callable[[DataFrame, int], None]:
-    """Wrap a foreachBatch sink callback with URL-FRONTIER DEDUP at
-    admit — the streaming twin of q_dedup_url and the shape of a crawl
-    frontier: every document's canonical URL (queries/llm.py::
-    canonical_urls — construction and normalizer shared VERBATIM with
-    the batch query) is checked against all canonicals seen in earlier
-    batches and earlier docs of its own batch; only the first
-    occurrence per canonical flows to the wrapped sink (original
-    columns), duplicates are journaled with their canonical for audit.
+def url_dedup_step(base_path: str) -> Callable:
+    """Gate-chain step for URL-FRONTIER DEDUP at admit — the streaming
+    twin of q_dedup_url and the shape of a crawl frontier: every
+    document's canonical URL (queries/llm.py::canonical_urls —
+    construction and normalizer shared VERBATIM with the batch query) is
+    checked against all canonicals seen in earlier batches and earlier
+    docs of its own batch; only the first occurrence per canonical is
+    admitted (original columns), duplicates are journaled with their
+    canonical for audit.
 
     First occurrence (:func:`_first_seen`) is the minimum doc_id among
     docs whose canonical no earlier batch stored — the batch query's
@@ -1753,7 +1759,7 @@ def foreach_batch_with_url_dedup(
             _append(rejects, f"{root}/rejects"), *seal(fresh)
         ]
 
-    return _journaled(inner, step)
+    return step
 
 
 def read_url_rejects(spark, base_path: str) -> DataFrame:
@@ -1773,23 +1779,21 @@ GRID_PARTIALS_SCHEMA = (
 )
 
 
-def foreach_batch_with_grid_rollup(
-    inner: Callable[[DataFrame, int], None],
+def grid_rollup_step(
     base_path: str,
     ts_col: str = "ts",
     key_col: str = "event_type",
     value_col: str = "value",
-) -> Callable[[DataFrame, int], None]:
-    """Wrap a foreachBatch sink callback with CONTINUOUS-AGGREGATE
-    MAINTENANCE of the mergeable quantile layer — the streaming twin
-    of q_rollup_quantile's stored level: every micro-batch appends its
-    minutely fixed-grid histogram partials (operators/rollup.py — the
-    SAME grid the batch query stores) to ``_grid_rollup/partials``
-    beside the sink, and :func:`grid_rollup_bounds` serves
-    hour/day/any-grain quantile BOUNDS from the journal alone, never
-    re-scanning raw rows.  This is the TimescaleDB
-    continuous-aggregate pattern priced per micro-batch: at 100 TB/day
-    the raw stream is written once and every dashboard grain
+) -> Callable:
+    """Gate-chain step for CONTINUOUS-AGGREGATE MAINTENANCE of the
+    mergeable quantile layer — the streaming twin of q_rollup_quantile's
+    stored level: every micro-batch appends its minutely fixed-grid
+    histogram partials (operators/rollup.py — the SAME grid the batch
+    query stores) to ``_grid_rollup/partials`` beside the sink, and
+    :func:`grid_rollup_bounds` serves hour/day/any-grain quantile BOUNDS
+    from the journal alone, never re-scanning raw rows.  This is the
+    TimescaleDB continuous-aggregate pattern priced per micro-batch: at
+    100 TB/day the raw stream is written once and every dashboard grain
     re-derives from the grid-sized partials.
 
     MERGEABILITY is what makes the journal correct under ANY batching:
@@ -1823,7 +1827,7 @@ def foreach_batch_with_grid_rollup(
         )
         return batch, [_append(parts, f"{base_path}/{_GRID}/partials")]
 
-    return _journaled(inner, step)
+    return step
 
 
 def read_grid_partials(spark, base_path: str) -> DataFrame:

@@ -90,8 +90,9 @@ def test_pre_bloom_store_migration_no_readmission(spark, tmp_path):
     BACKFILL the whole store's keys into the Bloom, so batch N+1's
     non-empty-journal probe still flags the old keys maybe-seen."""
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_url_dedup,
+        gate_chain,
         url_dedup_path,
+        url_dedup_step,
     )
 
     base = str(tmp_path / "sink")
@@ -101,11 +102,11 @@ def test_pre_bloom_store_migration_no_readmission(spark, tmp_path):
     ).write.mode("append").parquet(f"{url_dedup_path(base)}/seen")
 
     admitted: list = []
-    cb = foreach_batch_with_url_dedup(
+    cb = gate_chain(
         lambda df, bid: admitted.extend(
             r.doc_id for r in df.select("doc_id").collect()
         ),
-        base,
+        url_dedup_step(base),
     )
     # doc_id 46 canonicalizes to src.example.com/doc/6 (46 % 40 == 6,
     # 46 % 4 == 2 → no query string at all) — a stored dup
@@ -140,8 +141,9 @@ def test_bloom_geometry_resize_no_readmission(spark, tmp_path,
     exact-probes and re-backfills under the new geometry — a stored
     dup stays rejected across the resize."""
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_url_dedup,
+        gate_chain,
         url_dedup_path,
+        url_dedup_step,
     )
 
     base = str(tmp_path / "sink")
@@ -156,11 +158,11 @@ def test_bloom_geometry_resize_no_readmission(spark, tmp_path,
         "n_chars long",
     )
     # stream 1, default geometry: doc 6 admitted and stored
-    foreach_batch_with_url_dedup(sink, base)(doc(6), 0)
+    gate_chain(sink, url_dedup_step(base))(doc(6), 0)
     assert admitted == [6]
     # operator resizes the filter; stream 2 = new wrapper instance
     monkeypatch.setattr(bloom, "N_BITS", 1 << 17)
-    cb2 = foreach_batch_with_url_dedup(sink, base)
+    cb2 = gate_chain(sink, url_dedup_step(base))
     cb2(doc(46), 1)                 # same canonical as doc 6
     assert admitted == [6]          # dup rejected across the resize
     cb2(doc(86), 2)                 # and after the re-backfill too
@@ -176,14 +178,15 @@ def test_line_dedup_overspan_doc_journaled_not_poisonous(
     and the rest of the batch dedups normally."""
     from level2_to_cassandra_spark.operators import text as text_ops
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_line_dedup,
+        gate_chain,
+        line_dedup_step,
         read_line_dedup,
         read_line_overspan,
     )
 
     monkeypatch.setattr(text_ops, "LINE_KEY_SPAN", 2)
     base = str(tmp_path / "sink")
-    cb = foreach_batch_with_line_dedup(lambda df, bid: None, base)
+    cb = gate_chain(lambda df, bid: None, line_dedup_step(base))
     la = "a b c d e f g h"
     lb = "i j k l m n o p"
     lc = "q r s t u v w x"
@@ -208,11 +211,12 @@ def test_classifier_gate_rejects_admit_payload_column(spark, tmp_path):
     import pytest
 
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_classifier_gate,
+        classifier_gate_step,
+        gate_chain,
     )
 
-    cb = foreach_batch_with_classifier_gate(
-        lambda df, bid: None, str(tmp_path / "sink")
+    cb = gate_chain(
+        lambda df, bid: None, classifier_gate_step(str(tmp_path / "sink"))
     )
     batch = spark.createDataFrame(
         [(1, "alpha beta", 1)], ["doc_id", "text", "__Admit"]

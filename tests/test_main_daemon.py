@@ -123,6 +123,8 @@ def test_daemon_compact_mode(spark, tmp_path, monkeypatch):
     assert got == want
     assert len(glob.glob(f"{out}/tick/**/*.parquet",
                          recursive=True)) < n_files
+    # no shingle-df journal: the fold leaves the sink untouched
+    assert not (out / "_shingle_df").exists()
 
 
 def test_daemon_reconcile_clean_and_tampered(
@@ -404,8 +406,9 @@ def test_daemon_compact_folds_shingle_df_journal(
     from pyspark.sql import functions as F
 
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_shingle_df,
+        gate_chain,
         read_hot_shingles,
+        shingle_df_step,
     )
     from level2_to_cassandra_spark.streaming.sink import (
         write_upsert_parquet,
@@ -422,7 +425,7 @@ def test_daemon_compact_folds_shingle_df_journal(
     ).withColumn("time", F.to_timestamp("time"))
     write_upsert_parquet(df, str(out), "tick", batch_id=0)
     # a shingle-df journal beside it, two delivered batches
-    cb = foreach_batch_with_shingle_df(lambda d, b: None, str(out))
+    cb = gate_chain(lambda d, b: None, shingle_df_step(str(out)))
     docs = spark.createDataFrame(
         [(i, "alpha beta gamma delta") for i in range(6)],
         "doc_id long, text string",

@@ -1650,7 +1650,7 @@ def test_tick_batch_write_single_shuffle(spark, tmp_path):
 def test_quality_gate_legs_read_cached_batch_no_shuffle(
     spark, tmp_path, monkeypatch
 ):
-    """foreach_batch_with_quality_gate's "zero shuffles" claim: the
+    """quality_gate_step's "zero shuffles" claim: the
     admitted leg handed to the sink and the reject-journal write both
     scan the persisted batch (``InMemoryTableScan``) with map-side
     expressions only — no ``Exchange`` and no Python — so the gate
@@ -1660,7 +1660,8 @@ def test_quality_gate_legs_read_cached_batch_no_shuffle(
 
     from level2_to_cassandra_spark.catalog import load_table
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_quality_gate,
+        gate_chain,
+        quality_gate_step,
     )
 
     plans = {}
@@ -1672,9 +1673,9 @@ def test_quality_gate_legs_read_cached_batch_no_shuffle(
 
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
     docs = load_table(spark, SF, "documents")
-    cb = foreach_batch_with_quality_gate(
+    cb = gate_chain(
         lambda df, bid: plans.setdefault("admitted", plan_of(df, "simple")),
-        str(tmp_path / "sink"),
+        quality_gate_step(str(tmp_path / "sink")),
     )
     cb(docs, 0)
     assert set(plans) == {

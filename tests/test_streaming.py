@@ -1478,14 +1478,15 @@ def test_drift_operator_parity_with_null_keys(spark, tmp_path):
 
 
 def test_streaming_drift_audit_flags_shifted_batch(spark, tmp_path):
-    """foreach_batch_with_drift: each micro-batch appends one audit row
+    """drift_step: each micro-batch appends one audit row
     per reference key; an in-distribution batch passes while a batch
     whose values escape the reference range (clipping into the edge
     bin) raises the drift flag — the alarm fires WHILE the drifted
     data lands, not at the next offline audit."""
     from level2_to_cassandra_spark.operators.drift import reference_cells
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_drift,
+        drift_step,
+        gate_chain,
         read_drift,
     )
 
@@ -1506,8 +1507,8 @@ def test_streaming_drift_audit_flags_shifted_batch(spark, tmp_path):
     ).coalesce(1).write.mode("append").parquet(src)
 
     base = str(tmp_path / "sink")
-    cb = foreach_batch_with_drift(
-        lambda df, bid: None, base, ref
+    cb = gate_chain(
+        lambda df, bid: None, drift_step(base, ref)
     )
     q = (
         spark.readStream.schema("event_type string, value double")
@@ -1532,7 +1533,7 @@ def test_streaming_drift_audit_flags_shifted_batch(spark, tmp_path):
 
 def test_streaming_embedding_drift_parity_with_registered_query(
         spark, tmp_path):
-    """foreach_batch_with_embedding_drift must reproduce
+    """embedding_drift_step must reproduce
     q_drift_embedding exactly when fed the query's own cohort split:
     reference occupancy = the even-vec_id half of the session's
     materialized kmeans label table, and the odd half streamed as ONE
@@ -1554,7 +1555,8 @@ def test_streaming_embedding_drift_parity_with_registered_query(
     )
     from level2_to_cassandra_spark.registry import all_queries
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_embedding_drift,
+        embedding_drift_step,
+        gate_chain,
         read_embed_drift,
     )
     from tests.conftest import SF_SMOKE as sf_smoke
@@ -1570,8 +1572,9 @@ def test_streaming_embedding_drift_parity_with_registered_query(
     src = str(tmp_path / "src")
     em.where(F.col("vec_id") % 2 != 0).coalesce(1).write.parquet(src)
     base = str(tmp_path / "sink")
-    cb = foreach_batch_with_embedding_drift(
-        lambda df, bid: None, base, cent1, ref, n_cells=_KMEANS_K
+    cb = gate_chain(
+        lambda df, bid: None,
+        embedding_drift_step(base, cent1, ref, n_cells=_KMEANS_K),
     )
     q = (
         spark.readStream.schema(em.schema)
@@ -1650,7 +1653,7 @@ def test_streaming_multimodal_admit_parity_with_registered_query(
 
 
 def test_streaming_covariance_matches_batch_query(spark, tmp_path):
-    """foreach_batch_with_covariance must reproduce q_embed_covariance
+    """covariance_step must reproduce q_embed_covariance
     exactly when the fixture corpus arrives as MULTIPLE micro-batches:
     the Gram sums are additive over row-disjoint batches, so the
     journal reduction (read_covariance) and the offline one-pass query
@@ -1663,7 +1666,8 @@ def test_streaming_covariance_matches_batch_query(spark, tmp_path):
     from level2_to_cassandra_spark.catalog import load_table
     from level2_to_cassandra_spark.registry import all_queries
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_covariance,
+        covariance_step,
+        gate_chain,
         read_covariance,
     )
     from tests.conftest import SF_SMOKE as sf_smoke
@@ -1672,7 +1676,7 @@ def test_streaming_covariance_matches_batch_query(spark, tmp_path):
     src = str(tmp_path / "src")
     em.repartition(3).write.parquet(src)
     base = str(tmp_path / "sink")
-    cb = foreach_batch_with_covariance(lambda df, bid: None, base)
+    cb = gate_chain(lambda df, bid: None, covariance_step(base))
     q = (
         spark.readStream.schema(em.schema)
         .option("maxFilesPerTrigger", 1)
@@ -1835,7 +1839,7 @@ def test_streaming_multimodal_admit_null_text_seed_still_rejects(
 
 def test_streaming_outlier_gate_parity_with_registered_query(
         spark, tmp_path):
-    """foreach_batch_with_outlier_gate must reproduce q_embed_outlier
+    """outlier_gate_step must reproduce q_embed_outlier
     exactly when the centroid is frozen from the corpus the stream
     replays: clean-leg ids = the query's non-flagged rows, quarantine
     'outlier' rows = the flagged rows WITH the same rounded cosines —
@@ -1848,7 +1852,8 @@ def test_streaming_outlier_gate_parity_with_registered_query(
     )
     from level2_to_cassandra_spark.registry import all_queries
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_outlier_gate,
+        gate_chain,
+        outlier_gate_step,
         read_outlier_quarantine,
     )
     from tests.conftest import SF_SMOKE as sf_smoke
@@ -1860,9 +1865,9 @@ def test_streaming_outlier_gate_parity_with_registered_query(
     em.coalesce(1).write.parquet(src)
     base = str(tmp_path / "sink")
     clean_path = str(tmp_path / "clean")
-    cb = foreach_batch_with_outlier_gate(
+    cb = gate_chain(
         lambda df, bid: df.write.mode("append").parquet(clean_path),
-        base, cv, cnorm,
+        outlier_gate_step(base, cv, cnorm),
     )
     q = (
         spark.readStream.schema(em.schema)
@@ -1900,7 +1905,8 @@ def test_streaming_outlier_gate_routes_malformed(spark, tmp_path):
     quarantine unscored as 'malformed' — the exact rows the batch
     query silently excludes become auditable at the ingest boundary."""
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_outlier_gate,
+        gate_chain,
+        outlier_gate_step,
         read_outlier_quarantine,
     )
 
@@ -1921,9 +1927,9 @@ def test_streaming_outlier_gate_routes_malformed(spark, tmp_path):
     cv, cnorm = centroid_stats(df, dim=64)
     base = str(tmp_path / "sink")
     clean_path = str(tmp_path / "clean")
-    cb = foreach_batch_with_outlier_gate(
+    cb = gate_chain(
         lambda d, bid: d.write.mode("append").parquet(clean_path),
-        base, cv, cnorm,
+        outlier_gate_step(base, cv, cnorm),
     )
     q = (
         spark.readStream.schema(df.schema)
@@ -1948,7 +1954,7 @@ def test_streaming_outlier_gate_routes_malformed(spark, tmp_path):
 
 
 def test_streaming_vocab_growth_parity_and_replay(spark, tmp_path):
-    """foreach_batch_with_vocab_growth: (a) the vocabulary after
+    """vocab_growth_step: (a) the vocabulary after
     streaming equals the batch engine's distinct-term count over the
     same tokenizer; (b) a later batch contributes only UNSEEN terms,
     attributed to the first-writing batch; (c) replaying a batch
@@ -1958,8 +1964,9 @@ def test_streaming_vocab_growth_parity_and_replay(spark, tmp_path):
     covered by a handful of docs), so growth needs controlled text."""
     from level2_to_cassandra_spark.operators import text as text_ops
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_vocab_growth,
+        gate_chain,
         read_vocab_growth,
+        vocab_growth_step,
     )
 
     schema = "doc_id long, text string"
@@ -1972,7 +1979,7 @@ def test_streaming_vocab_growth_parity_and_replay(spark, tmp_path):
     )
 
     base = str(tmp_path / "sink")
-    cb = foreach_batch_with_vocab_growth(lambda df, bid: None, base)
+    cb = gate_chain(lambda df, bid: None, vocab_growth_step(base))
     cb(first, 0)
     cb(second, 1)
 
@@ -1996,7 +2003,7 @@ def test_streaming_vocab_growth_parity_and_replay(spark, tmp_path):
 
 
 def test_streaming_shingle_df_journal_parity_and_replay(spark, tmp_path):
-    """foreach_batch_with_shingle_df: the journal reduced by
+    """shingle_df_step: the journal reduced by
     read_hot_shingles must equal an INDEPENDENT DuckDB computation of
     q_text_boilerplate's hot set over the union of the delivered
     batches (not just the shared Spark helper — independent
@@ -2006,8 +2013,9 @@ def test_streaming_shingle_df_journal_parity_and_replay(spark, tmp_path):
 
     from level2_to_cassandra_spark.catalog import load_table
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_shingle_df,
+        gate_chain,
         read_hot_shingles,
+        shingle_df_step,
     )
     from tests.conftest import SF_SMOKE as sf_smoke
 
@@ -2016,7 +2024,7 @@ def test_streaming_shingle_df_journal_parity_and_replay(spark, tmp_path):
     second = docs.where(F.col("doc_id") % 2 != 0)
 
     base = str(tmp_path / "sink")
-    cb = foreach_batch_with_shingle_df(lambda df, bid: None, base)
+    cb = gate_chain(lambda df, bid: None, shingle_df_step(base))
     cb(first, 0)
     cb(second, 1)
 
@@ -2050,7 +2058,7 @@ def test_monitor_readers_empty_before_first_batch(spark, tmp_path):
     """Every monitor reader must return an EMPTY relation of its
     pinned schema when called before any batch has been delivered
     (ADVICE r12: the raw readers raised PATH_NOT_FOUND, unlike the
-    admit stores' graceful _read_store_or_none classification) —
+    admit stores' graceful empty-store classification) —
     dashboards and reconcile jobs poll these tables on a schedule
     that does not know whether the stream has produced yet."""
     from level2_to_cassandra_spark.streaming.monitor import (
@@ -2130,34 +2138,48 @@ def _journal_files(root):
     )
 
 
-@pytest.mark.parametrize("gate", ["mixture", "quality_gate", "url_dedup"])
-def test_gate_failed_write_journals_nothing_and_retry_matches(
-    spark, tmp_path, gate
-):
-    """The journaled-gate contract on a pure audit (mixture), a
-    stateless split (quality gate) and a store-plus-Bloom gate (URL
-    dedup): when the wrapped sink write raises, the gate writes no
-    journal, Bloom or seen-store file and releases every frame it
-    persisted; a retry of the same batch_id then admits and journals
-    exactly what a clean run does (row multisets, not just after the
-    readers' replay dedup)."""
+def _gate_docs(spark):
+    """The smoke documents split at the median doc_id: two batches."""
     from level2_to_cassandra_spark.catalog import load_table
-    from level2_to_cassandra_spark.streaming import monitor
     from tests.conftest import SF_SMOKE as sf_smoke
 
-    wrap = {
-        "mixture": monitor.foreach_batch_with_mixture,
-        "quality_gate": monitor.foreach_batch_with_quality_gate,
-        "url_dedup": monitor.foreach_batch_with_url_dedup,
-    }[gate]
     docs = load_table(spark, sf_smoke, "documents")
     cut = docs.agg(
         F.percentile_approx("doc_id", F.lit(0.5)).alias("m")
     ).first()["m"]
-    batches = [
-        docs.where(F.col("doc_id") <= cut),
-        docs.where(F.col("doc_id") > cut),
-    ]
+    return [docs.where(F.col("doc_id") <= cut),
+            docs.where(F.col("doc_id") > cut)]
+
+
+@pytest.mark.parametrize("gate", [
+    "mixture", "quality_gate", "url_dedup", "chain", "incremental_dedup",
+])
+def test_gate_failed_write_journals_nothing_and_retry_matches(
+    spark, tmp_path, gate
+):
+    """The gate-chain contract on a pure audit (mixture), a stateless
+    split (quality gate), a store-plus-Bloom gate (URL dedup), the
+    three chained, and the incremental-dedup admit step: when the sink
+    write raises, no step writes a journal, Bloom or store file and
+    every frame the chain persisted is released; a retry of the same
+    batch_id then admits and journals exactly what a clean run does
+    (row multisets, not just after the readers' replay dedup)."""
+    from level2_to_cassandra_spark.operators import dedup
+    from level2_to_cassandra_spark.streaming import monitor
+
+    steps = {
+        "mixture": lambda base: [monitor.mixture_step(base)],
+        "quality_gate": lambda base: [monitor.quality_gate_step(base)],
+        "url_dedup": lambda base: [monitor.url_dedup_step(base)],
+        "chain": lambda base: [
+            monitor.mixture_step(base), monitor.quality_gate_step(base),
+            monitor.url_dedup_step(base),
+        ],
+        "incremental_dedup": lambda base: [
+            dedup.incremental_dedup_step(f"{base}/_hashes")
+        ],
+    }[gate]
+    batches = _gate_docs(spark)
     sc = spark.sparkContext
 
     def run(base, fail_batch=None):
@@ -2173,7 +2195,7 @@ def test_gate_failed_write_journals_nothing_and_retry_matches(
                 r.doc_id for r in df.select("doc_id").collect()
             )
 
-        cb = wrap(inner, base)
+        cb = monitor.gate_chain(inner, *steps(base))
         for i, b in enumerate(batches):
             if i == fail_batch:
                 files = _journal_files(base)
@@ -2193,14 +2215,100 @@ def test_gate_failed_write_journals_nothing_and_retry_matches(
     assert retried == clean
     admitted, journals = clean
     assert admitted[0] and admitted[1] and journals  # non-vacuous
-    if gate == "url_dedup":
+    if gate in ("url_dedup", "chain"):
         assert {"_url_dedup/seen", "_url_dedup/rejects"} <= set(journals)
         assert any(k.startswith("_url_dedup/bloom/") for k in journals)
+    if gate == "chain":
+        assert {"_mixture/cells", "_quality_gate/rejects"} <= set(journals)
+    if gate == "incremental_dedup":
+        assert "_hashes" in journals
+
+
+def test_gate_chain_equals_one_step_chains_in_sequence(spark, tmp_path):
+    """A three-step chain (quality gate → mixture → URL dedup) gives the
+    same sink rows and the same journal rows as the three steps run
+    one after another, each in its own one-step chain fed by the
+    previous chain's admitted output: every step sees the rows the
+    step before it admitted, and the mixture cells count only the
+    docs the quality gate passed."""
+    from level2_to_cassandra_spark.streaming import monitor
+
+    def steps(base):
+        return [monitor.quality_gate_step(base), monitor.mixture_step(base),
+                monitor.url_dedup_step(base)]
+
+    def sink_rows(df):
+        return sorted(df.collect(), key=repr)
+
+    batches = _gate_docs(spark)
+    chained: dict = {}
+    cb = monitor.gate_chain(
+        lambda df, bid: chained.setdefault(bid, sink_rows(df)),
+        *steps(str(tmp_path / "chained")),
+    )
+    for i, b in enumerate(batches):
+        cb(b, i)
+
+    stage = str(tmp_path / "stage")
+    one_step = [
+        monitor.gate_chain(
+            lambda df, bid, k=k: df.write.parquet(f"{stage}/{k}/{bid}"),
+            step,
+        )
+        for k, step in enumerate(steps(str(tmp_path / "sequential")))
+    ]
+    sequential = {}
+    for i, b in enumerate(batches):
+        for k, chain in enumerate(one_step):
+            chain(b, i)
+            b = spark.read.parquet(f"{stage}/{k}/{i}")
+        sequential[i] = sink_rows(b)
+
+    assert chained == sequential
+    assert chained[0] and chained[1]                 # non-vacuous
+    journals = _journal_tree(spark, str(tmp_path / "chained"))
+    assert journals == _journal_tree(spark, str(tmp_path / "sequential"))
+    assert {"_quality_gate/rejects", "_mixture/cells",
+            "_url_dedup/rejects", "_url_dedup/seen"} <= set(journals)
+    n_passed = sum(r.n_docs for r in journals["_mixture/cells"])
+    assert n_passed < sum(b.count() for b in batches)
+
+
+def test_gate_chain_persists_batch_once_per_trigger(
+    spark, tmp_path, monkeypatch
+):
+    """A chain of three pure audits persists the raw batch exactly once
+    per trigger (nesting three one-gate callbacks would persist it
+    three times) and releases it after the appends."""
+    from pyspark import StorageLevel
+
+    from level2_to_cassandra_spark.streaming import monitor
+
+    batches = _gate_docs(spark)
+    frame_cls = type(batches[0])
+    persisted = []
+    real_persist = frame_cls.persist
+
+    def spy(self, *args, **kwargs):
+        persisted.append(self)
+        return real_persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "persist", spy)
+    base = str(tmp_path / "sink")
+    cb = monitor.gate_chain(
+        lambda df, bid: df.count(), monitor.mixture_step(base),
+        monitor.vocab_growth_step(base), monitor.shingle_df_step(base),
+    )
+    for i, b in enumerate(batches):
+        persisted.clear()
+        cb(b, i)
+        assert sum(df is b for df in persisted) == 1
+        assert b.storageLevel == StorageLevel.NONE
 
 
 def test_ks_gate_teardown_releases_reference_cache(spark, tmp_path):
-    """foreach_batch_with_ks persists its reference grid for the
-    stream's lifetime; the callback's ``teardown()`` handle releases
+    """ks_step persists its reference grid for the
+    stream's lifetime; the step's ``teardown()`` handle releases
     it (and is idempotent)."""
     from pyspark import StorageLevel
 
@@ -2208,7 +2316,8 @@ def test_ks_gate_teardown_releases_reference_cache(spark, tmp_path):
         ks_reference_dist,
     )
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_ks,
+        gate_chain,
+        ks_step,
     )
 
     schema = "event_type string, value double"
@@ -2217,16 +2326,15 @@ def test_ks_gate_teardown_releases_reference_cache(spark, tmp_path):
     ))
     sc = spark.sparkContext
     n_rdds = sc._jsc.getPersistentRDDs().size()
-    cb = foreach_batch_with_ks(
-        lambda df, bid: None, str(tmp_path / "sink"), ref
-    )
+    step = ks_step(str(tmp_path / "sink"), ref)
+    cb = gate_chain(lambda df, bid: None, step)
     cb(spark.createDataFrame([("a", 3.0), ("a", 70.0)], schema), 0)
     assert ref.storageLevel != StorageLevel.NONE
     assert sc._jsc.getPersistentRDDs().size() == n_rdds + 1
-    cb.teardown()
+    step.teardown()
     assert ref.storageLevel == StorageLevel.NONE
     assert sc._jsc.getPersistentRDDs().size() == n_rdds
-    cb.teardown()
+    step.teardown()
 
 
 def test_ks_operator_parity_with_registered_query(spark):
@@ -2261,7 +2369,7 @@ def test_ks_operator_parity_with_registered_query(spark):
 
 
 def test_streaming_ks_audit_flags_shifted_batch(spark, tmp_path):
-    """foreach_batch_with_ks: one audit row per scored key per batch;
+    """ks_step: one audit row per scored key per batch;
     a same-distribution batch passes while a location-shifted batch
     (which PSI's 10 coarse bins could partially smear) raises the KS
     flag; replayed batches duplicate audit rows that readers dedup on
@@ -2270,7 +2378,8 @@ def test_streaming_ks_audit_flags_shifted_batch(spark, tmp_path):
         ks_reference_dist,
     )
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_ks,
+        gate_chain,
+        ks_step,
         read_ks,
     )
 
@@ -2290,7 +2399,7 @@ def test_streaming_ks_audit_flags_shifted_batch(spark, tmp_path):
     ).coalesce(1).write.mode("append").parquet(src)
 
     base = str(tmp_path / "sink")
-    cb = foreach_batch_with_ks(lambda df, bid: None, base, ref)
+    cb = gate_chain(lambda df, bid: None, ks_step(base, ref))
     q = (
         spark.readStream.schema("event_type string, value double")
         .option("maxFilesPerTrigger", "1")
@@ -2336,9 +2445,10 @@ def test_shingle_df_compaction_reader_equivalence_and_replay(
     from level2_to_cassandra_spark.streaming.monitor import (
         _shingle_df_state,
         compact_shingle_df,
-        foreach_batch_with_shingle_df,
+        gate_chain,
         read_hot_shingles,
         shingle_df_path,
+        shingle_df_step,
     )
     from tests.conftest import SF_SMOKE as sf_smoke
 
@@ -2348,7 +2458,7 @@ def test_shingle_df_compaction_reader_equivalence_and_replay(
     b2 = docs.where(F.col("doc_id") % 3 == 2)
 
     base = str(tmp_path / "sink")
-    cb = foreach_batch_with_shingle_df(lambda df, bid: None, base)
+    cb = gate_chain(lambda df, bid: None, shingle_df_step(base))
     cb(b0, 0)
     cb(b1, 1)
 
@@ -2379,7 +2489,7 @@ def test_shingle_df_compaction_reader_equivalence_and_replay(
     # combined state equals the never-compacted journal over all three
     cb(b2, 2)
     base_ref = str(tmp_path / "sink_ref")
-    cb_ref = foreach_batch_with_shingle_df(lambda df, bid: None, base_ref)
+    cb_ref = gate_chain(lambda df, bid: None, shingle_df_step(base_ref))
     cb_ref(b0, 0)
     cb_ref(b1, 1)
     cb_ref(b2, 2)
@@ -2413,11 +2523,12 @@ def test_shingle_df_compaction_docs_only_trailing_batch(spark, tmp_path):
     from level2_to_cassandra_spark.streaming.monitor import (
         _shingle_df_state,
         compact_shingle_df,
-        foreach_batch_with_shingle_df,
+        gate_chain,
+        shingle_df_step,
     )
 
     base = str(tmp_path / "sink")
-    cb = foreach_batch_with_shingle_df(lambda df, bid: None, base)
+    cb = gate_chain(lambda df, bid: None, shingle_df_step(base))
     shingled = spark.createDataFrame(
         [(1, "alpha beta gamma delta"), (2, "alpha beta gamma zeta")],
         "doc_id long, text string",
@@ -2459,11 +2570,12 @@ def test_shingle_df_compaction_noop_without_any_shingles(spark, tmp_path):
     from level2_to_cassandra_spark.streaming.monitor import (
         _shingle_df_state,
         compact_shingle_df,
-        foreach_batch_with_shingle_df,
+        gate_chain,
+        shingle_df_step,
     )
 
     base = str(tmp_path / "sink")
-    cb = foreach_batch_with_shingle_df(lambda df, bid: None, base)
+    cb = gate_chain(lambda df, bid: None, shingle_df_step(base))
     cb(spark.createDataFrame([(1, "too small")],
                              "doc_id long, text string"), 0)
     assert compact_shingle_df(spark, base) is None
@@ -2540,13 +2652,14 @@ def test_shingle_df_compaction_lock_and_leftover_reclaim(
     from level2_to_cassandra_spark.streaming.monitor import (
         _shingle_df_state,
         compact_shingle_df,
-        foreach_batch_with_shingle_df,
+        gate_chain,
         shingle_df_path,
+        shingle_df_step,
     )
     from level2_to_cassandra_spark.streaming.sink import CompactionLockHeld
 
     base = str(tmp_path / "sink")
-    cb = foreach_batch_with_shingle_df(lambda df, bid: None, base)
+    cb = gate_chain(lambda df, bid: None, shingle_df_step(base))
     docs = spark.createDataFrame(
         [(i, "alpha beta gamma delta") for i in range(4)],
         "doc_id long, text string",
@@ -2591,13 +2704,14 @@ def test_shingle_df_flat_segment_layout_migrates(spark, tmp_path):
     from level2_to_cassandra_spark.streaming.monitor import (
         _shingle_df_state,
         compact_shingle_df,
-        foreach_batch_with_shingle_df,
+        gate_chain,
         read_hot_shingles,
         shingle_df_path,
+        shingle_df_step,
     )
 
     base = str(tmp_path / "sink")
-    cb = foreach_batch_with_shingle_df(lambda df, bid: None, base)
+    cb = gate_chain(lambda df, bid: None, shingle_df_step(base))
     docs = spark.createDataFrame(
         [(i, "alpha beta gamma delta") for i in range(6)],
         "doc_id long, text string",
@@ -2630,7 +2744,7 @@ def test_shingle_df_flat_segment_layout_migrates(spark, tmp_path):
 
 
 def test_streaming_novelty_parity_and_replay(spark, tmp_path):
-    """foreach_batch_with_novelty must reproduce q_text_novelty
+    """novelty_step must reproduce q_text_novelty
     row-for-row when batches partition the fixture in doc_id order
     (first-occurrence credit is global min doc_id — the batch spec's
     rule), and a replayed batch must re-derive IDENTICAL rows (its
@@ -2638,7 +2752,8 @@ def test_streaming_novelty_parity_and_replay(spark, tmp_path):
     from level2_to_cassandra_spark.catalog import load_table
     from level2_to_cassandra_spark.registry import all_queries
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_novelty,
+        gate_chain,
+        novelty_step,
         read_novelty,
     )
     from tests.conftest import SF_SMOKE as sf_smoke
@@ -2651,7 +2766,7 @@ def test_streaming_novelty_parity_and_replay(spark, tmp_path):
     b1 = docs.where(F.col("doc_id") > cut)
 
     base = str(tmp_path / "sink")
-    cb = foreach_batch_with_novelty(lambda df, bid: None, base)
+    cb = gate_chain(lambda df, bid: None, novelty_step(base))
     cb(b0, 0)
     cb(b1, 1)
 
@@ -2678,7 +2793,7 @@ def test_streaming_novelty_parity_and_replay(spark, tmp_path):
 
 
 def test_streaming_line_dedup_parity_and_replay(spark, tmp_path):
-    """foreach_batch_with_line_dedup must reproduce q_dedup_lines
+    """line_dedup_step must reproduce q_dedup_lines
     row-for-row (n_lines, n_kept AND the reassembled kept_text) when
     batches partition the fixture in doc_id order — first-occurrence
     credit is the global min packed (doc_id, line_no) key, the batch
@@ -2688,7 +2803,8 @@ def test_streaming_line_dedup_parity_and_replay(spark, tmp_path):
     from level2_to_cassandra_spark.catalog import load_table
     from level2_to_cassandra_spark.registry import all_queries
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_line_dedup,
+        gate_chain,
+        line_dedup_step,
         read_line_dedup,
     )
     from tests.conftest import SF_SMOKE as sf_smoke
@@ -2701,7 +2817,7 @@ def test_streaming_line_dedup_parity_and_replay(spark, tmp_path):
     b1 = docs.where(F.col("doc_id") > cut)
 
     base = str(tmp_path / "sink")
-    cb = foreach_batch_with_line_dedup(lambda df, bid: None, base)
+    cb = gate_chain(lambda df, bid: None, line_dedup_step(base))
     cb(b0, 0)
     cb(b1, 1)
 
@@ -2728,7 +2844,7 @@ def test_streaming_line_dedup_parity_and_replay(spark, tmp_path):
 
 
 def test_streaming_grid_rollup_parity_and_replay(spark, tmp_path):
-    """foreach_batch_with_grid_rollup's journal, folded and walked by
+    """grid_rollup_step's journal, folded and walked by
     grid_rollup_bounds, must reproduce q_rollup_quantile's partial-
     derived bound columns EXACTLY even when the batches split the
     fixture on a NON-time-aligned key (event_id % 3) — the
@@ -2739,14 +2855,15 @@ def test_streaming_grid_rollup_parity_and_replay(spark, tmp_path):
     from level2_to_cassandra_spark.catalog import load_table
     from level2_to_cassandra_spark.registry import all_queries
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_grid_rollup,
+        gate_chain,
         grid_rollup_bounds,
+        grid_rollup_step,
     )
     from tests.conftest import SF_SMOKE as sf_smoke
 
     ev = load_table(spark, sf_smoke, "events")
     base = str(tmp_path / "sink")
-    cb = foreach_batch_with_grid_rollup(lambda df, bid: None, base)
+    cb = gate_chain(lambda df, bid: None, grid_rollup_step(base))
     for i in range(3):
         cb(ev.where(F.col("event_id") % 3 == i), i)
 
@@ -2791,7 +2908,7 @@ def test_streaming_grid_rollup_parity_and_replay(spark, tmp_path):
 
 
 def test_streaming_quality_gate_parity_and_replay(spark, tmp_path):
-    """foreach_batch_with_quality_gate: admitted ∪ rejects must
+    """quality_gate_step: admitted ∪ rejects must
     PARTITION every batch (nothing dropped, nothing doubled), the
     reject journal's metric columns must equal q_quality_gopher's
     pass_gopher=0 rows bit-for-bit (shared gopher_stats transform),
@@ -2801,7 +2918,8 @@ def test_streaming_quality_gate_parity_and_replay(spark, tmp_path):
     from level2_to_cassandra_spark.catalog import load_table
     from level2_to_cassandra_spark.registry import all_queries
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_quality_gate,
+        gate_chain,
+        quality_gate_step,
         read_quality_rejects,
     )
     from tests.conftest import SF_SMOKE as sf_smoke
@@ -2817,11 +2935,11 @@ def test_streaming_quality_gate_parity_and_replay(spark, tmp_path):
 
     base = str(tmp_path / "sink")
     admitted: list = []
-    cb = foreach_batch_with_quality_gate(
+    cb = gate_chain(
         lambda df, bid: admitted.extend(
             (bid, r.doc_id) for r in df.select("doc_id").collect()
         ),
-        base,
+        quality_gate_step(base),
     )
     for i, b in enumerate(batches):
         cb(b, i)
@@ -2863,7 +2981,7 @@ def test_streaming_quality_gate_parity_and_replay(spark, tmp_path):
 
 
 def test_streaming_classifier_gate_parity_and_replay(spark, tmp_path):
-    """foreach_batch_with_classifier_gate: admitted ∪ rejects must
+    """classifier_gate_step: admitted ∪ rejects must
     PARTITION every batch, the admitted doc_ids must equal the batch
     _calib_lab bin ≥ t split (the exact rule q_classifier_threshold's
     sweep prices — shared transform, bit-for-bit), the reject
@@ -2875,7 +2993,8 @@ def test_streaming_classifier_gate_parity_and_replay(spark, tmp_path):
     from level2_to_cassandra_spark.queries.traindata import _calib_lab
     from level2_to_cassandra_spark.registry import all_queries
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_classifier_gate,
+        classifier_gate_step,
+        gate_chain,
         read_classifier_rejects,
     )
     from tests.conftest import SF_SMOKE as sf_smoke
@@ -2892,12 +3011,12 @@ def test_streaming_classifier_gate_parity_and_replay(spark, tmp_path):
 
     base = str(tmp_path / "sink")
     admitted: list = []
-    cb = foreach_batch_with_classifier_gate(
+    cb = gate_chain(
         lambda df, bid: admitted.extend(
             (bid, r.doc_id) for r in df.select("doc_id").collect()
         ),
-        base,
-        threshold_bin=t_bin,
+        classifier_gate_step(base,
+        threshold_bin=t_bin),
     )
     for i, b in enumerate(batches):
         cb(b, i)
@@ -2934,7 +3053,7 @@ def test_streaming_classifier_gate_parity_and_replay(spark, tmp_path):
 
 
 def test_streaming_vote_gate_parity_and_replay(spark, tmp_path):
-    """foreach_batch_with_quality_vote: admitted ∪ rejects must
+    """quality_vote_step: admitted ∪ rejects must
     PARTITION every batch, admitted doc_ids must equal q_quality_vote's
     admit=1 set (shared quality_votes transform, bit-for-bit), the
     reject journal's gate bits must equal the batch query's reject
@@ -2942,7 +3061,8 @@ def test_streaming_vote_gate_parity_and_replay(spark, tmp_path):
     from level2_to_cassandra_spark.catalog import load_table
     from level2_to_cassandra_spark.registry import all_queries
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_quality_vote,
+        gate_chain,
+        quality_vote_step,
         read_vote_rejects,
     )
     from tests.conftest import SF_SMOKE as sf_smoke
@@ -2958,11 +3078,11 @@ def test_streaming_vote_gate_parity_and_replay(spark, tmp_path):
 
     base = str(tmp_path / "sink")
     admitted: list = []
-    cb = foreach_batch_with_quality_vote(
+    cb = gate_chain(
         lambda df, bid: admitted.extend(
             (bid, r.doc_id) for r in df.select("doc_id").collect()
         ),
-        base,
+        quality_vote_step(base),
     )
     for i, b in enumerate(batches):
         cb(b, i)
@@ -3000,7 +3120,7 @@ def test_streaming_vote_gate_parity_and_replay(spark, tmp_path):
 
 
 def test_streaming_mixture_monitor_parity_and_replay(spark, tmp_path):
-    """foreach_batch_with_mixture: the wrapped sink must receive every
+    """mixture_step: the wrapped sink must receive every
     batch UNCHANGED, and once the journal covers the corpus,
     read_mixture's (source, n_docs, weight, epoch_docs) must equal
     q_mix_temperature's rows bit-for-bit (shared mix_weights
@@ -3011,7 +3131,8 @@ def test_streaming_mixture_monitor_parity_and_replay(spark, tmp_path):
     from level2_to_cassandra_spark.catalog import load_table
     from level2_to_cassandra_spark.registry import all_queries
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_mixture,
+        gate_chain,
+        mixture_step,
         read_mixture,
     )
     from tests.conftest import SF_SMOKE as sf_smoke
@@ -3027,8 +3148,8 @@ def test_streaming_mixture_monitor_parity_and_replay(spark, tmp_path):
 
     base = str(tmp_path / "sink")
     seen: list = []
-    cb = foreach_batch_with_mixture(
-        lambda df, bid: seen.append((bid, df.count())), base
+    cb = gate_chain(
+        lambda df, bid: seen.append((bid, df.count())), mixture_step(base)
     )
     for i, b in enumerate(batches):
         cb(b, i)
@@ -3071,11 +3192,12 @@ def test_streaming_vote_gate_rejects_colliding_payload(
     import pytest
 
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_quality_vote,
+        gate_chain,
+        quality_vote_step,
     )
 
-    cb = foreach_batch_with_quality_vote(
-        lambda df, bid: None, str(tmp_path / "sink")
+    cb = gate_chain(
+        lambda df, bid: None, quality_vote_step(str(tmp_path / "sink"))
     )
     for col in ("votes", "Admit", "pass_gopher", "score", "n_words"):
         batch = spark.createDataFrame(
@@ -3094,11 +3216,12 @@ def test_streaming_classifier_gate_rejects_colliding_payload(
     import pytest
 
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_classifier_gate,
+        classifier_gate_step,
+        gate_chain,
     )
 
-    cb = foreach_batch_with_classifier_gate(
-        lambda df, bid: None, str(tmp_path / "sink")
+    cb = gate_chain(
+        lambda df, bid: None, classifier_gate_step(str(tmp_path / "sink"))
     )
     for col in ("score", "Bin", "P", "label"):
         batch = spark.createDataFrame(
@@ -3119,11 +3242,12 @@ def test_streaming_quality_gate_rejects_colliding_payload_schema(
     import pytest
 
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_quality_gate,
+        gate_chain,
+        quality_gate_step,
     )
 
-    cb = foreach_batch_with_quality_gate(
-        lambda df, bid: None, str(tmp_path / "sink")
+    cb = gate_chain(
+        lambda df, bid: None, quality_gate_step(str(tmp_path / "sink"))
     )
     for col in ("n_words", "N_Words"):
         batch = spark.createDataFrame(
@@ -3135,7 +3259,7 @@ def test_streaming_quality_gate_rejects_colliding_payload_schema(
 
 
 def test_streaming_url_dedup_parity_and_replay(spark, tmp_path):
-    """foreach_batch_with_url_dedup: when batches partition the
+    """url_dedup_step: when batches partition the
     fixture in doc_id order, the admitted set must equal q_dedup_url's
     is_canonical=1 set exactly and the reject journal its
     is_canonical=0 set (with matching canonicals); admitted ∪ rejects
@@ -3145,8 +3269,9 @@ def test_streaming_url_dedup_parity_and_replay(spark, tmp_path):
     from level2_to_cassandra_spark.catalog import load_table
     from level2_to_cassandra_spark.registry import all_queries
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_url_dedup,
+        gate_chain,
         read_url_rejects,
+        url_dedup_step,
     )
     from tests.conftest import SF_SMOKE as sf_smoke
 
@@ -3161,11 +3286,11 @@ def test_streaming_url_dedup_parity_and_replay(spark, tmp_path):
 
     base = str(tmp_path / "sink")
     admitted: list = []
-    cb = foreach_batch_with_url_dedup(
+    cb = gate_chain(
         lambda df, bid: admitted.extend(
             r.doc_id for r in df.select("doc_id").collect()
         ),
-        base,
+        url_dedup_step(base),
     )
     for i, b in enumerate(batches):
         cb(b, i)
@@ -3203,9 +3328,10 @@ def test_streaming_url_dedup_null_canonical_and_store_growth(
     gains one row per NEWLY-SEEN canonical only, so an all-recurring
     batch appends nothing."""
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_url_dedup,
+        gate_chain,
         read_url_rejects,
         url_dedup_path,
+        url_dedup_step,
     )
 
     schema = ("doc_id long, text string, lang string, source string, "
@@ -3221,11 +3347,11 @@ def test_streaming_url_dedup_null_canonical_and_store_growth(
     )
     base = str(tmp_path / "sink")
     admitted: list = []
-    cb = foreach_batch_with_url_dedup(
+    cb = gate_chain(
         lambda df, bid: admitted.extend(
             r.doc_id for r in df.select("doc_id").collect()
         ),
-        base,
+        url_dedup_step(base),
     )
     cb(b0, 0)
     cb(b1, 1)
@@ -3246,14 +3372,15 @@ def test_streaming_line_dedup_store_gains_only_fresh_lines(
     appends zero store rows."""
     from level2_to_cassandra_spark.catalog import load_table
     from level2_to_cassandra_spark.streaming.monitor import (
-        foreach_batch_with_line_dedup,
+        gate_chain,
         line_dedup_path,
+        line_dedup_step,
     )
     from tests.conftest import SF_SMOKE as sf_smoke
 
     docs = load_table(spark, sf_smoke, "documents")
     base = str(tmp_path / "sink")
-    cb = foreach_batch_with_line_dedup(lambda df, bid: None, base)
+    cb = gate_chain(lambda df, bid: None, line_dedup_step(base))
     cb(docs, 0)
     store = f"{line_dedup_path(base)}/seen"
     n0 = spark.read.parquet(store).count()
