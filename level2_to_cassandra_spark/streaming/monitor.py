@@ -14,10 +14,13 @@ computed inside the sink write's own job — no cache, no second job
 over the batch.  Spark delivers an ``Observation``'s result once the
 first action over the observed frame finishes, and does so inside
 ``foreachBatch`` too: each callback gets a fresh ``Observation`` and
-reads it after the wrapped write returns.  The only other job per
-batch is the one-row journal append, built from a pandas frame that
-crosses to the JVM through Arrow (a Python list would go through a
-pickled Python RDD, several times slower per append).
+reads it after the wrapped write returns.  The journal row adds no
+job: the driver builds it as a one-row Arrow table from the
+``Observation`` and publishes it as one new parquet file with
+:func:`publish_parquet` (tmp name, then rename), so a live trigger
+runs exactly one Spark job chain, the sink write (a Spark append of
+the row would add a job and a file-commit protocol, about 150-250 ms
+per trigger on 4 cores).
 
 The data-quality gates and monitors below (drift, KS, embedding
 drift, covariance, outlier, vocabulary growth, shingle df, novelty,
@@ -39,9 +42,14 @@ batch.
 
 from __future__ import annotations
 
+import os
+import tempfile
+import uuid
 from collections.abc import Callable
+from urllib.parse import urlparse
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
@@ -50,6 +58,13 @@ METRICS_SCHEMA = (
     "batch_id long, table_suffix string, n_rows long, "
     "n_null_key long, min_event_ts timestamp, max_event_ts timestamp"
 )
+#: the same columns as Arrow types, for the driver-side append
+_METRICS_ARROW = pa.schema([
+    ("batch_id", pa.int64()), ("table_suffix", pa.string()),
+    ("n_rows", pa.int64()), ("n_null_key", pa.int64()),
+    ("min_event_ts", pa.timestamp("us", tz="UTC")),
+    ("max_event_ts", pa.timestamp("us", tz="UTC")),
+])
 
 
 def metrics_path(base: str) -> str:
@@ -70,8 +85,17 @@ def foreach_batch_with_metrics(
     ``inner`` receives the batch with the counters attached as observed
     metrics (see module docstring), so it must run at least one action
     over it, as every sink does; the counts cover the batch as
-    delivered, before the sink's upsert dedup.
+    delivered, before the sink's upsert dedup.  After ``inner`` returns,
+    the row is published as a new uniquely named file under
+    ``{base_path}/_ingest_metrics/{table_suffix}`` (a local path or a
+    ``file://`` URI, :func:`publish_parquet`): nothing is overwritten,
+    so a replayed batch id journals a second identical row, which
+    readers collapse with ``dropDuplicates(["batch_id"])``.  A failed
+    append raises out of the callback, so the batch is retried.  A
+    ``base_path`` of any other scheme raises ``ValueError`` when the
+    wrapper is built.
     """
+    journal = local_path(f"{metrics_path(base_path)}/{table_suffix}")
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         obs = Observation()
@@ -87,23 +111,46 @@ def foreach_batch_with_metrics(
             batch_id,
         )
         m = _observed(obs)
-        row = pd.DataFrame({
-            "batch_id": [int(batch_id)],
-            "table_suffix": [table_suffix],
-            "n_rows": [m.get("n_rows", 0)],
-            "n_null_key": [m.get("n_null_key", 0)],
-            "min_event_ts": pd.to_datetime([m.get("min_us")], unit="us",
-                                           utc=True),
-            "max_event_ts": pd.to_datetime([m.get("max_us")], unit="us",
-                                           utc=True),
-        })
-        batch_df.sparkSession.createDataFrame(
-            row, METRICS_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(
-            f"{metrics_path(base_path)}/{table_suffix}"
+        publish_parquet(
+            pa.Table.from_pylist([{
+                "batch_id": int(batch_id), "table_suffix": table_suffix,
+                "n_rows": m.get("n_rows", 0),
+                "n_null_key": m.get("n_null_key", 0),
+                "min_event_ts": m.get("min_us"),
+                "max_event_ts": m.get("max_us"),
+            }], schema=_METRICS_ARROW),
+            journal,
+            f"batch-{batch_id}-{uuid.uuid4().hex}.parquet",
         )
 
     return _write
+
+
+def local_path(path: str) -> str:
+    """``path`` as a local filesystem path: a plain path as it is, the
+    path of a ``file://`` URI (the forms a sink root or checkpoint
+    takes on a local filesystem); any other scheme raises
+    ``ValueError`` rather than name a local directory after it."""
+    parsed = urlparse(path)
+    if parsed.scheme not in ("", "file"):
+        raise ValueError(f"not a local path: {path!r}")
+    return parsed.path if parsed.scheme else path
+
+
+def publish_parquet(table: pa.Table, directory: str, name: str) -> None:
+    """Publish ``table`` as the parquet file ``directory/name`` in one
+    step: write it under a dot-prefixed tmp name, which Spark's parquet
+    reader and :func:`state.read_carry` skip, then ``os.replace`` it
+    into place, so a reader sees the whole file or none of it.
+    ``directory`` (made if absent) goes through :func:`local_path`.
+    This assumes a local filesystem, as the tick carry and the sink
+    compaction's manifest flip do: the rename is atomic there, and on
+    an object store it would be a copy."""
+    directory = local_path(directory)
+    os.makedirs(directory, exist_ok=True)
+    tmp = f"{directory}/.{name}.tmp"
+    pq.write_table(table, tmp)
+    os.replace(tmp, f"{directory}/{name}")
 
 
 def _observed(obs: Observation) -> dict:
@@ -807,6 +854,14 @@ def read_vocab_growth(spark, base_path: str) -> DataFrame:
     )
 
 
+#: the shingle-df journal's raw deltas and doc counts, and their
+#: compacted generations (partitioned by ``through_batch``)
+_DFS_SCHEMA = "g3 string, df_delta long, batch_id long"
+_DOCS_SCHEMA = "n_docs long, batch_id long"
+_COMPACT_DFS_SCHEMA = "g3 string, df long, through_batch long"
+_COMPACT_DOCS_SCHEMA = "n_docs long, through_batch long"
+
+
 def shingle_df_path(base: str) -> str:
     """The shingle document-frequency journal — beside the sink,
     underscore-prefixed; ``dfs/`` holds per-batch df deltas, ``docs/``
@@ -873,10 +928,8 @@ def _shingle_df_watermark(spark, base_path: str) -> int:
     docs) is deliberately the single source of truth: it is written
     LAST in :func:`compact_shingle_df`, so the watermark advances only
     once a generation is complete."""
-    seg = _read_journal(
-        spark, f"{shingle_df_path(base_path)}/compact_dfs",
-        "g3 string, df long, through_batch long",
-    )
+    seg = _read_journal(spark, f"{shingle_df_path(base_path)}/compact_dfs",
+                        _COMPACT_DFS_SCHEMA)
     row = seg.agg(F.max("through_batch").alias("w")).first()
     return int(row["w"]) if row["w"] is not None else -1
 
@@ -898,18 +951,13 @@ def _shingle_df_state(spark, base_path: str):
     root = shingle_df_path(base_path)
     w = _shingle_df_watermark(spark, base_path)
     base = (
-        _read_journal(
-            spark, f"{root}/compact_dfs",
-            "g3 string, df long, through_batch long",
-        )
+        _read_journal(spark, f"{root}/compact_dfs", _COMPACT_DFS_SCHEMA)
         .where(F.col("through_batch") == w)
         .dropDuplicates(["g3"])
         .select("g3", "df")
     )
     deltas = (
-        _read_journal(
-            spark, f"{root}/dfs", "g3 string, df_delta long, batch_id long"
-        )
+        _read_journal(spark, f"{root}/dfs", _DFS_SCHEMA)
         .where(F.col("batch_id") > w)
         .dropDuplicates(["batch_id", "g3"])
         .groupBy("g3")
@@ -921,15 +969,13 @@ def _shingle_df_state(spark, base_path: str):
         .agg(F.sum("df").alias("df"))
     )
     docs_base = (
-        _read_journal(
-            spark, f"{root}/compact_docs", "n_docs long, through_batch long"
-        )
+        _read_journal(spark, f"{root}/compact_docs", _COMPACT_DOCS_SCHEMA)
         .where(F.col("through_batch") == w)
         .dropDuplicates()
         .select("n_docs")
     )
     docs_delta = (
-        _read_journal(spark, f"{root}/docs", "n_docs long, batch_id long")
+        _read_journal(spark, f"{root}/docs", _DOCS_SCHEMA)
         .where(F.col("batch_id") > w)
         .dropDuplicates(["batch_id"])
         .select("n_docs")
@@ -1012,9 +1058,7 @@ def compact_shingle_df(spark, base_path: str) -> int | None:
     never-any-shingles journal, where there is no vocabulary growth to
     bound).  A sink with no journal directory returns None before
     taking the lock, so it is left untouched."""
-    import os
     import shutil
-    import tempfile
 
     from level2_to_cassandra_spark.streaming.sink import (
         _acquire_compact_lock,
@@ -1052,10 +1096,7 @@ def compact_shingle_df(spark, base_path: str) -> int | None:
             # quiescence remains the documented VACUUM contract; this
             # narrows the window from the whole fold to one probe.)
             live = -1
-            for sub, schema in (
-                ("dfs", "g3 string, df_delta long, batch_id long"),
-                ("docs", "n_docs long, batch_id long"),
-            ):
+            for sub, schema in (("dfs", _DFS_SCHEMA), ("docs", _DOCS_SCHEMA)):
                 b = _read_journal(spark, f"{root}/{sub}", schema).agg(
                     F.max("batch_id").alias("b")
                 ).first()["b"]
@@ -1073,14 +1114,10 @@ def compact_shingle_df(spark, base_path: str) -> int | None:
                                   ignore_errors=True)
 
         w_old = _shingle_df_watermark(spark, base_path)
-        raw_dfs = _read_journal(
-            spark, f"{root}/dfs",
-            "g3 string, df_delta long, batch_id long",
-        ).where(F.col("batch_id") > w_old)
-        raw_docs = _read_journal(
-            spark, f"{root}/docs",
-            "n_docs long, batch_id long",
-        ).where(F.col("batch_id") > w_old)
+        raw_dfs = _read_journal(spark, f"{root}/dfs", _DFS_SCHEMA).where(
+            F.col("batch_id") > w_old)
+        raw_docs = _read_journal(spark, f"{root}/docs", _DOCS_SCHEMA).where(
+            F.col("batch_id") > w_old)
         b_dfs = raw_dfs.agg(F.max("batch_id").alias("b")).first()["b"]
         b_docs = raw_docs.agg(F.max("batch_id").alias("b")).first()["b"]
         candidates = [b for b in (b_dfs, b_docs) if b is not None]
@@ -1102,28 +1139,33 @@ def compact_shingle_df(spark, base_path: str) -> int | None:
             # derivable without re-executing the whole reduction.)
             return None
         dfreq, n_docs = _shingle_df_state(spark, base_path)
-
-        def _commit_generation(df, sub: str) -> None:
-            # 2: stage + one atomic rename; the partition value is the
-            # DIRECTORY NAME, so the staged files stay narrow and a
-            # half-written stage can never be taken for a generation
-            target = f"{root}/{sub}/through_batch={through}"
-            if os.path.isdir(target):
-                return  # a crashed retry already committed it (3)
-            os.makedirs(f"{root}/{sub}", exist_ok=True)
-            stage = tempfile.mkdtemp(dir=root, prefix=f"_stage_{sub}_")
-            df.write.mode("overwrite").parquet(stage)
-            os.rename(stage, target)
-
-        _commit_generation(
-            n_docs.where(F.col("n_docs").isNotNull()).select("n_docs"),
-            "compact_docs",
-        )
-        _commit_generation(dfreq.select("g3", "df"), "compact_dfs")
+        # 2: stage + one atomic rename; the partition value is the
+        # DIRECTORY NAME, so the staged files stay narrow and a
+        # half-written stage can never be taken for a generation
+        for df, sub in (
+            (n_docs.where(F.col("n_docs").isNotNull()).select("n_docs"),
+             "compact_docs"),
+            (dfreq.select("g3", "df"), "compact_dfs"),
+        ):
+            _commit_dir(df, root, f"{root}/{sub}/through_batch={through}",
+                        f"_stage_{sub}_")
         _prune_and_reclaim(through)
         return through
     finally:
         os.close(lock_fd)
+
+
+def _commit_dir(df: DataFrame, root: str, target: str, prefix: str) -> None:
+    """Write ``df`` into a temp directory under ``root`` named with
+    ``prefix``, then rename it to ``target`` in one step.  A ``target``
+    that already exists was committed by a crashed attempt of the same
+    deterministic fold and is kept as it is."""
+    if os.path.isdir(target):
+        return
+    os.makedirs(os.path.dirname(target), exist_ok=True)
+    stage = tempfile.mkdtemp(dir=root, prefix=prefix)
+    df.write.mode("overwrite").parquet(stage)
+    os.rename(stage, target)
 
 
 def _migrate_flat_segments(spark, base_path: str) -> None:
@@ -1135,9 +1177,6 @@ def _migrate_flat_segments(spark, base_path: str) -> None:
     and removed — runs under the compaction lock, before anything
     reads the segment dirs."""
     import glob as globmod
-    import os
-    import shutil
-    import tempfile
 
     root = shingle_df_path(base_path)
     for sub, cols in (("compact_dfs", ("g3", "df")),
@@ -1150,14 +1189,9 @@ def _migrate_flat_segments(spark, base_path: str) -> None:
         gens = [int(r.through_batch) for r in
                 rows.select("through_batch").distinct().collect()]
         for gen in gens:
-            target = f"{seg_root}/through_batch={gen}"
-            if os.path.isdir(target):
-                continue
-            stage = tempfile.mkdtemp(dir=root, prefix=f"_mig_{sub}_")
-            rows.where(F.col("through_batch") == gen).select(
-                *cols
-            ).write.mode("overwrite").parquet(stage)
-            os.rename(stage, target)
+            _commit_dir(rows.where(F.col("through_batch") == gen)
+                        .select(*cols), root,
+                        f"{seg_root}/through_batch={gen}", f"_mig_{sub}_")
         for f in flat:
             os.remove(f)
         for extra in globmod.glob(f"{seg_root}/_SUCCESS*") + globmod.glob(

@@ -241,8 +241,8 @@ def build_streaming_pipeline(envelope: DataFrame, cfg: PipelineConfig,
             )
 
             # the audit counters ride the sink write's own job as
-            # observed metrics; the only added job per micro-batch is
-            # the one-row journal append (monitor.py)
+            # observed metrics, and the driver writes the audit row
+            # itself: the audit adds no job (monitor.py)
             callback = foreach_batch_with_metrics(
                 callback, cfg.out_path, suffix
             )

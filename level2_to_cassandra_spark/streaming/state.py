@@ -37,7 +37,11 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from level2_to_cassandra_spark.streaming.monitor import _observed
+from level2_to_cassandra_spark.streaming.monitor import (
+    _observed,
+    local_path,
+    publish_parquet,
+)
 
 #: B/S match arms of the reference (main.rs:124-128).
 BUY, SELL = "B", "S"
@@ -96,15 +100,12 @@ def read_carry(carry_dir: str, batch_id: int) -> pa.Table:
 
 
 def write_carry(carry_dir: str, batch_id: int, carry: pa.Table) -> None:
-    """Publish ``carry`` as version ``batch_id`` (tmp file, then rename),
+    """Publish ``carry`` as version ``batch_id`` (:func:`publish_parquet`),
     keeping it and the newest older version only.  A version that
     already exists is the same batch's, written by an attempt that
     failed before its commit, and is left as it is."""
-    os.makedirs(carry_dir, exist_ok=True)
-    path = f"{carry_dir}/{batch_id}.parquet"
-    if not os.path.exists(path):
-        pq.write_table(carry, f"{carry_dir}/.{batch_id}.tmp")
-        os.replace(f"{carry_dir}/.{batch_id}.tmp", path)
+    if not os.path.exists(f"{carry_dir}/{batch_id}.parquet"):
+        publish_parquet(carry, carry_dir, f"{batch_id}.parquet")
     versions = _versions(carry_dir)
     keep = {batch_id, *[v for v in versions if v < batch_id][-1:]}
     for v in set(versions) - keep:
@@ -125,7 +126,9 @@ def foreach_batch_running_sums(inner, carry_dir: str,
     across batches, so a late tick still continues its day's sums.
     ``ttl_hours`` drops keys idle that long (wall clock) before the
     join: continuous runs need it, or the carry grows by one key per
-    symbol per day; ``None`` keeps every key (bounded drains)."""
+    symbol per day; ``None`` keeps every key (bounded drains).
+    ``carry_dir`` is a local path or ``file://`` URI (:func:`local_path`)."""
+    carry_dir = local_path(carry_dir)
 
     def _step(batch_df: DataFrame, batch_id: int) -> None:
         now_ms = time.time_ns() // 1_000_000

@@ -1223,6 +1223,178 @@ def test_metrics_wrapper_empty_batch(spark, tmp_path):
     assert m.min_event_ts is None and m.max_event_ts is None
 
 
+def _spark_metrics_append(spark, path, rows):
+    """Append audit rows the way the journal was written before the
+    driver-side writer: a one-file Spark parquet append (part file and
+    ``_SUCCESS`` marker)."""
+    from level2_to_cassandra_spark.streaming.monitor import METRICS_SCHEMA
+
+    spark.createDataFrame(rows, METRICS_SCHEMA).coalesce(1).write.mode(
+        "append").parquet(path)
+
+
+def test_metrics_journal_round_trip(spark, tmp_path):
+    """The driver-written journal file reads back through read_metrics
+    with METRICS_SCHEMA's types and the values a Spark append of the
+    same row reads back with: counts, UTC event-time bounds, and zeros
+    with null bounds for an empty batch.  Every append is a new file
+    (no tmp file stays visible), so a replayed batch id leaves two
+    files whose rows collapse on batch_id; a directory mixing a legacy
+    Spark-written part file with driver-written files reads as one
+    table."""
+    import datetime
+    import os
+
+    from level2_to_cassandra_spark.streaming.monitor import (
+        METRICS_SCHEMA,
+        _read_journal,
+        foreach_batch_with_metrics,
+        metrics_path,
+        read_metrics,
+    )
+    from level2_to_cassandra_spark.streaming.sink import (
+        foreach_batch_upsert,
+    )
+
+    out = str(tmp_path / "sink")
+    journal = f"{metrics_path(out)}/tick"
+    callback = foreach_batch_with_metrics(
+        foreach_batch_upsert(out, "tick"), out, "tick")
+    callback(_static_batch(spark, [
+        ("btcusd", "AAA", DAY1, 1.0, 5, 0),
+        ("btcusd", None, DAY2 + 61, 2.0, 7, 1),
+    ]), 3)
+    callback(_static_batch(spark, []), 4)
+    got = read_metrics(spark, out, "tick")
+    assert got.schema == spark.createDataFrame([], METRICS_SCHEMA).schema
+
+    utc = datetime.timezone.utc
+
+    def ts(epoch_s):
+        # a naive UTC wall time, as the UTC-pinned session collects it
+        return datetime.datetime.fromtimestamp(epoch_s, utc).replace(
+            tzinfo=None)
+
+    want = [(3, "tick", 2, 1, ts(DAY1), ts(DAY2 + 61)),
+            (4, "tick", 0, 0, None, None)]
+    legacy = str(tmp_path / "legacy")
+    _spark_metrics_append(spark, legacy, want)
+    spark_rows = _read_journal(spark, legacy, METRICS_SCHEMA).collect()
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, spark_rows)) == want
+
+    # a replay of batch 4 appends a second file; nothing is overwritten
+    callback(_static_batch(spark, []), 4)
+    names = sorted(os.listdir(journal))
+    assert len(names) == 3
+    assert all(n.startswith("batch-") and n.endswith(".parquet")
+               for n in names)
+    replayed = read_metrics(spark, out, "tick")
+    assert replayed.count() == 3
+    assert replayed.dropDuplicates(["batch_id"]).count() == 2
+
+    # a legacy Spark append into the same directory reads as one table
+    _spark_metrics_append(spark, journal,
+                          [(5, "tick", 9, 0, ts(DAY2), ts(DAY2 + 1))])
+    assert "_SUCCESS" in os.listdir(journal)
+    mixed = read_metrics(spark, out, "tick").dropDuplicates(["batch_id"])
+    assert sorted((r.batch_id, r.n_rows) for r in mixed.collect()) == [
+        (3, 2), (4, 0), (5, 9)]
+
+
+def test_publish_parquet_local_paths_only(spark, tmp_path):
+    """The driver-side writer takes a plain path or a file:// URI, makes
+    the directory, leaves no tmp file behind, and refuses any other
+    scheme rather than write a local directory named after it (the
+    metrics wrapper refuses one when the query is built).  The
+    tick carry resolves a file:// carry directory the same way for its
+    reads and its writes, so the sums continue across batches and the
+    versions land inside that directory."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from level2_to_cassandra_spark.streaming.monitor import (
+        foreach_batch_with_metrics,
+        publish_parquet,
+    )
+    from level2_to_cassandra_spark.streaming.state import (
+        foreach_batch_running_sums,
+    )
+
+    t = pa.table({"x": [1, 2]})
+    publish_parquet(t, str(tmp_path / "a" / "b"), "one.parquet")
+    publish_parquet(t, f"file://{tmp_path}/c", "two.parquet")
+    assert os.listdir(tmp_path / "a" / "b") == ["one.parquet"]
+    assert pq.read_table(tmp_path / "c" / "two.parquet").equals(t)
+    with pytest.raises(ValueError, match="not a local path"):
+        publish_parquet(t, "hdfs://nn/x", "three.parquet")
+    with pytest.raises(ValueError, match="not a local path"):
+        foreach_batch_with_metrics(lambda df, bid: None, "hdfs://nn/x",
+                                   "tick")
+
+    rows = []
+    step = foreach_batch_running_sums(
+        lambda df, _: rows.extend(df.collect()), f"file://{tmp_path}/carry")
+    for bid, volume in ((0, 2), (1, 3)):
+        step(_tick_batch(spark, [("AAA", DAY1 + bid, volume, "B", bid)]),
+             bid)
+    assert [r.cumbuy for r in rows] == [2, 5]
+    assert sorted(os.listdir(tmp_path / "carry")) == [
+        "0.parquet", "1.parquet"]
+
+
+def _capture(tmp_path, n_files):
+    """A wire capture of ``n_files`` files, one tick and one one-level
+    book per file, on successive minutes of DAY1, with distinct mtimes
+    so file i arrives strictly before file i+1."""
+    import os
+    import time as _time
+
+    d = tmp_path / "capture"
+    d.mkdir()
+    now = _time.time()
+    for i in range(n_files):
+        t = DAY1 + 60 * i
+        msgs = [("btcusd", "TICK", _tick("AAA", t, i + 1, "B")),
+                ("btcusd", "BOOK", _book([("AAA", 100.0 + i, t, 2, "BID")]))]
+        p = d / f"part-{i:03d}.jsonl"
+        p.write_text("\n".join(
+            json.dumps({"topic": tp, "msg_type": mt, "payload": pl,
+                        "seq": 2 * i + j})
+            for j, (tp, mt, pl) in enumerate(msgs)))
+        os.utime(p, (now + i * 10, now + i * 10))
+    return str(d)
+
+
+def test_metrics_journal_adds_no_job(spark, tmp_path):
+    """APP_METRICS adds no Spark job: an availableNow full-mode drain of
+    a 4-file capture runs the same number of jobs per query with the
+    audit on as with it off (the counters ride the sink write, and the
+    journal row is written by the driver)."""
+    from level2_to_cassandra_spark.streaming.monitor import read_metrics
+
+    src = _capture(tmp_path, 4)
+    tracker = spark.sparkContext.statusTracker()
+    jobs = {}
+    for metrics in (False, True):
+        out = str(tmp_path / f"sink_{metrics}")
+        cfg = PipelineConfig(mode="full", out_path=out, metrics=metrics,
+                             checkpoint=str(tmp_path / f"ckpt_{metrics}"))
+        qs = build_streaming_pipeline(
+            file_envelope_stream(spark, src, max_files_per_trigger=1), cfg)
+        for q in qs:
+            assert q.awaitTermination(120), "stream did not finish"
+        jobs[metrics] = [len(tracker.getJobIdsForGroup(str(q.runId)))
+                         for q in qs]
+        if metrics:
+            for suffix in ("book", "tick"):
+                assert read_metrics(spark, out, suffix).count() == 4
+    assert all(jobs[False]), jobs
+    assert jobs[True] == jobs[False]
+
+
 def test_metrics_config_from_env():
     """APP_METRICS joins the reference env surface (A12)."""
     assert PipelineConfig.from_env({"APP_METRICS": "1"}).metrics
