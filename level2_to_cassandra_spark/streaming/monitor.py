@@ -319,7 +319,7 @@ def _split(scored: DataFrame, admit, reject, cols: list[str], bid: int,
 
 
 def _first_seen(root: str, frame: DataFrame, key: str, rank, bid: int,
-                cache=None, store_key: str | None = None):
+                store_key: str | None = None):
     """First occurrences of ``key`` against the append-only seen store
     ``{root}/seen`` — shared by the novelty, line-dedup and URL-dedup
     gates.
@@ -329,59 +329,31 @@ def _first_seen(root: str, frame: DataFrame, key: str, rank, bid: int,
     crashed attempt's own rows are excluded, and later batches cannot
     have run — foreachBatch replays only the last uncommitted batch)
     and whose ``rank`` is the minimum among the batch's rows with that
-    key.  ``seal(stored)`` gives the journal appends that record
-    ``stored``'s keys: the Bloom partial first (bloom ⊇ store under
-    every crash point), then the store append, which the caller runs
-    LAST so a crash before it re-derives the replay identically.
-
-    With a ``cache`` (operators/bloom.py::BloomCache — design note
-    there) only maybe-seen keys pay the exact store anti-join: keys
-    whose probe misses are definitely fresh, so the join input is
-    ~|batch ∩ store| + ε·|batch| instead of |batch|; false positives
-    fall through to the exact join.  The filter folds once per stream
-    and lives in a geometry-versioned subdir, so a resized filter
-    rebuilds itself instead of mis-probing.  ``store_key`` names the
-    store column when it differs from ``key``."""
-    from level2_to_cassandra_spark.operators import bloom as bloom_ops
-
-    spark = frame.sparkSession
+    key.  The probe is one exact left-anti join of ``frame`` against
+    the filtered store; no ``.distinct()`` on the store side, since a
+    left-anti join is already set-semantics on its build side.
+    ``seal(stored)`` gives the store append recording ``stored``'s
+    keys, which the caller runs LAST so a crash before it re-derives
+    the replay identically.  ``store_key`` names the store column when
+    it differs from ``key``."""
     store_key = store_key or key
-    schema = f"{store_key} string, batch_id long"
     as_key = key if store_key == key else F.col(store_key).alias(key)
     seen = (
-        _read_journal(spark, f"{root}/seen", schema)
+        _read_journal(frame.sparkSession, f"{root}/seen",
+                      f"{store_key} string, batch_id long")
         .where(F.col("batch_id") < bid)
         .select(as_key)
-        .distinct()
     )
-    if cache is None:
-        unseen = frame.join(seen, key, "left_anti")
-    else:
-        bloom_dir = f"{root}/bloom/{bloom_ops.journal_subdir()}"
-        cache.ensure(_read_journal(spark, bloom_dir, bloom_ops.BLOOM_SCHEMA))
-        unseen = bloom_ops.probe_unseen(cache, frame, key, seen)
     leaders = (
-        unseen
+        frame.join(seen, key, "left_anti")
         .withColumn("__lead", F.min(rank).over(Window.partitionBy(key)))
         .where(F.col("__lead") == rank)
     )
 
-    def seal(stored: DataFrame) -> list:
+    def seal(stored: DataFrame):
         as_store = key if store_key == key else F.col(key).alias(store_key)
-        appends = [] if cache is None else [
-            # plus the one-time whole-store migration backfill —
-            # operators/bloom.py::append_partial
-            lambda: bloom_ops.append_partial(
-                cache, bloom_dir, stored.select(key), key,
-                _read_journal(spark, f"{root}/seen", schema)
-                .select(store_key),
-                bid,
-            )
-        ]
-        return appends + [_append(
-            stored.select(as_store, _bid(bid)), f"{root}/seen",
-            one_file=False,
-        )]
+        return _append(stored.select(as_store, _bid(bid)), f"{root}/seen",
+                       one_file=False)
 
     return leaders, seal
 
@@ -1069,8 +1041,6 @@ def compact_shingle_df(spark, base_path: str) -> int | None:
         return None  # no journal: nothing to fold, and no lock to leave
     lock_fd = _acquire_compact_lock(f"{root}/_compact.lock")
     try:
-        _migrate_flat_segments(spark, base_path)
-
         def _prune_and_reclaim(keep: int) -> None:
             # 4 + 5: superseded generations, then the raw journals —
             # everything at or below the committed watermark is
@@ -1109,7 +1079,7 @@ def compact_shingle_df(spark, base_path: str) -> int | None:
             # read — generations are only the renamed targets) but
             # worth sweeping while we hold the lock
             for entry in os.listdir(root):
-                if entry.startswith(("_stage_", "_mig_")):
+                if entry.startswith("_stage_"):
                     shutil.rmtree(os.path.join(root, entry),
                                   ignore_errors=True)
 
@@ -1166,39 +1136,6 @@ def _commit_dir(df: DataFrame, root: str, target: str, prefix: str) -> None:
     stage = tempfile.mkdtemp(dir=root, prefix=prefix)
     df.write.mode("overwrite").parquet(stage)
     os.rename(stage, target)
-
-
-def _migrate_flat_segments(spark, base_path: str) -> None:
-    """One-shot layout migration: the first (intra-r14) compaction
-    format wrote segments as FLAT parquet files with through_batch as
-    a data column; the generation-directory layout would sit beside
-    them and make partition discovery refuse the mixed directory.  Any
-    flat files found are rewritten into their generation directories
-    and removed — runs under the compaction lock, before anything
-    reads the segment dirs."""
-    import glob as globmod
-
-    root = shingle_df_path(base_path)
-    for sub, cols in (("compact_dfs", ("g3", "df")),
-                      ("compact_docs", ("n_docs",))):
-        seg_root = f"{root}/{sub}"
-        flat = sorted(globmod.glob(f"{seg_root}/*.parquet"))
-        if not flat:
-            continue
-        rows = spark.read.parquet(*flat)
-        gens = [int(r.through_batch) for r in
-                rows.select("through_batch").distinct().collect()]
-        for gen in gens:
-            _commit_dir(rows.where(F.col("through_batch") == gen)
-                        .select(*cols), root,
-                        f"{seg_root}/through_batch={gen}", f"_mig_{sub}_")
-        for f in flat:
-            os.remove(f)
-        for extra in globmod.glob(f"{seg_root}/_SUCCESS*") + globmod.glob(
-            f"{seg_root}/.*.crc"
-        ):
-            if os.path.isfile(extra):
-                os.remove(extra)
 
 
 #: per-doc novelty audit schema (flat + scalar; the novelty double is
@@ -1268,7 +1205,7 @@ def novelty_step(
             F.round(n_novel.cast("double") / F.col("n_shingles"), 6)
             .alias("novelty"),
         )
-        return batch, [_append(scores, f"{root}/scores"), *seal(occ)]
+        return batch, [_append(scores, f"{root}/scores"), seal(occ)]
 
     return step
 
@@ -1293,9 +1230,8 @@ LINE_DEDUP_SCHEMA = (
 def line_dedup_path(base: str) -> str:
     """Beside the sink, underscore-prefixed — the monitor-table
     discipline.  ``/docs`` holds the per-doc audit rows, ``/seen``
-    the append-only first-occurrence line store, ``/bloom`` the
-    store's Bloom side-file OR-partials (geometry-versioned subdirs,
-    r16), ``/overspan`` the over-span doc rejects (r16)."""
+    the append-only first-occurrence line store, ``/overspan`` the
+    over-span doc rejects (r16)."""
     return f"{base}/_line_dedup"
 
 
@@ -1324,9 +1260,8 @@ def line_dedup_step(
     stream delivers).
 
     Cost per batch: one batch-bounded line explode (persisted across
-    its three consumers), one BLOOM-BOUNDED anti-join against the seen
-    store keyed by line_text, one window over batch lines, four
-    appends.
+    its three consumers), one exact anti-join against the seen store
+    keyed by line_text, one window over batch lines, three appends.
 
     OVER-SPAN DOCUMENTS (review r16, 2nd pass): a doc with
     >= LINE_KEY_SPAN lines cannot take a sound packed first-occurrence
@@ -1339,10 +1274,8 @@ def line_dedup_step(
     full batch (it is an audit monitor, not a
     filter).  The guarded key expression stays in the plan as defense
     in depth — it cannot fire on the filtered lines."""
-    from level2_to_cassandra_spark.operators import bloom as bloom_ops
     from level2_to_cassandra_spark.operators import text as text_ops
 
-    cache = bloom_ops.BloomCache()
     root = line_dedup_path(base_path)
 
     def step(batch, bid, persist):
@@ -1363,10 +1296,9 @@ def line_dedup_step(
             .distinct()
         )
         lines_ok = lines.join(F.broadcast(over), "doc_id", "left_anti")
-        leaders, seal = _first_seen(root, lines_ok, "line_text", key, bid,
-                                    cache)
+        leaders, seal = _first_seen(root, lines_ok, "line_text", key, bid)
         # persisted: feeds the kept aggregation AND the seen-store
-        # append and its Bloom partial
+        # append
         fresh = persist(leaders.select("doc_id", "line_no", "line_text"))
         kept_agg = fresh.groupBy("doc_id").agg(
             F.count(F.lit(1)).cast("long").alias("n_kept"),
@@ -1396,7 +1328,7 @@ def line_dedup_step(
         return batch, [
             _append(overspan, f"{root}/overspan"),
             _append(audit, f"{root}/docs"),
-            *seal(fresh),
+            seal(fresh),
         ]
 
     return step
@@ -1717,8 +1649,8 @@ URL_DEDUP_SCHEMA = "batch_id long, doc_id long, canonical_url string"
 def url_dedup_path(base: str) -> str:
     """Beside the sink, underscore-prefixed — the monitor-table
     discipline.  ``/rejects`` holds the per-doc duplicate audit rows,
-    ``/seen`` the append-only first-occurrence canonical-URL store,
-    ``/bloom`` the store's Bloom side-file OR-partials (r16)."""
+    and ``/seen`` the append-only first-occurrence canonical-URL
+    store."""
     return f"{base}/_url_dedup"
 
 
@@ -1739,8 +1671,8 @@ def url_dedup_step(base_path: str) -> Callable:
     (parity-pinned by test).
 
     Cost per batch: map-side canonicalization fused into the batch
-    scan, one BLOOM-BOUNDED anti-join against the seen store keyed by
-    canonical URL, one window over batch canonicals, three appends.
+    scan, one exact anti-join against the seen store keyed by
+    canonical URL, one window over batch canonicals, two appends.
     The store gains one row per NEWLY-SEEN canonical only (the
     admitted leaders' keys — review r15: appending every batch's full
     canonical set would grow the store with batch count even at zero
@@ -1764,10 +1696,8 @@ def url_dedup_step(base_path: str) -> Callable:
     NULL, still collision-free with real canonicals); that variant
     intentionally diverges from the batch query and is not what this
     parity-pinned twin implements."""
-    from level2_to_cassandra_spark.operators import bloom as bloom_ops
     from level2_to_cassandra_spark.queries.llm import canonical_urls
 
-    cache = bloom_ops.BloomCache()
     root = url_dedup_path(base_path)
 
     def step(batch, bid, persist):
@@ -1778,7 +1708,7 @@ def url_dedup_step(base_path: str) -> Callable:
             F.coalesce("canonical_url", F.lit("")).alias("__ck"),
         ))
         leaders, seal = _first_seen(root, canon, "__ck", F.col("doc_id"),
-                                    bid, cache, store_key="canonical_url")
+                                    bid, store_key="canonical_url")
         # one row per NEWLY-SEEN canonical: its minimum-doc_id leader —
         # feeds the admit join, the reject anti-join and the store
         # append
@@ -1790,7 +1720,7 @@ def url_dedup_step(base_path: str) -> Callable:
             "canonical_url",
         )
         return batch.join(fresh.select("doc_id"), "doc_id"), [
-            _append(rejects, f"{root}/rejects"), *seal(fresh)
+            _append(rejects, f"{root}/rejects"), seal(fresh)
         ]
 
     return step

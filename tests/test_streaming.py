@@ -2330,9 +2330,9 @@ def test_gate_failed_write_journals_nothing_and_retry_matches(
     spark, tmp_path, gate
 ):
     """The gate-chain contract on a pure audit (mixture), a stateless
-    split (quality gate), a store-plus-Bloom gate (URL dedup), the
-    three chained, and the incremental-dedup admit step: when the sink
-    write raises, no step writes a journal, Bloom or store file and
+    split (quality gate), a seen-store gate (URL dedup), the three
+    chained, and the incremental-dedup admit step: when the sink
+    write raises, no step writes a journal or store file and
     every frame the chain persisted is released; a retry of the same
     batch_id then admits and journals exactly what a clean run does
     (row multisets, not just after the readers' replay dedup)."""
@@ -2389,7 +2389,8 @@ def test_gate_failed_write_journals_nothing_and_retry_matches(
     assert admitted[0] and admitted[1] and journals  # non-vacuous
     if gate in ("url_dedup", "chain"):
         assert {"_url_dedup/seen", "_url_dedup/rejects"} <= set(journals)
-        assert any(k.startswith("_url_dedup/bloom/") for k in journals)
+        assert {k for k in journals if k.startswith("_url_dedup/")} == {
+            "_url_dedup/seen", "_url_dedup/rejects"}  # no side journal
     if gate == "chain":
         assert {"_mixture/cells", "_quality_gate/rejects"} <= set(journals)
     if gate == "incremental_dedup":
@@ -2865,54 +2866,6 @@ def test_shingle_df_compaction_lock_and_leftover_reclaim(
     dfreq_after, nd_after = _shingle_df_state(spark, base)
     assert {(r.g3, r.df) for r in dfreq_after.collect()} == want
     assert nd_after.first()["n_docs"] == want_nd
-
-
-def test_shingle_df_flat_segment_layout_migrates(spark, tmp_path):
-    """A journal compacted by the transient intra-r14 FLAT segment
-    layout (through_batch as a data column in root-level files) must
-    migrate to generation directories on the next fold — mixed
-    flat/partitioned directories would otherwise fail partition
-    discovery permanently."""
-    from level2_to_cassandra_spark.streaming.monitor import (
-        _shingle_df_state,
-        compact_shingle_df,
-        gate_chain,
-        read_hot_shingles,
-        shingle_df_path,
-        shingle_df_step,
-    )
-
-    base = str(tmp_path / "sink")
-    cb = gate_chain(lambda df, bid: None, shingle_df_step(base))
-    docs = spark.createDataFrame(
-        [(i, "alpha beta gamma delta") for i in range(6)],
-        "doc_id long, text string",
-    )
-    cb(docs.where(F.col("doc_id") < 3), 0)
-
-    # hand-write an OLD-LAYOUT segment covering batch 0 (exactly what
-    # the first r14 code produced), leaving the raw rows in place as a
-    # crashed-before-reclamation fold would
-    root = shingle_df_path(base)
-    spark.createDataFrame(
-        [("alpha beta gamma", 3, 0), ("beta gamma delta", 3, 0)],
-        "g3 string, df long, through_batch long",
-    ).coalesce(1).write.mode("append").parquet(f"{root}/compact_dfs")
-    spark.createDataFrame(
-        [(3, 0)], "n_docs long, through_batch long"
-    ).coalesce(1).write.mode("append").parquet(f"{root}/compact_docs")
-
-    cb(docs.where(F.col("doc_id") >= 3), 1)
-    assert compact_shingle_df(spark, base) == 1
-
-    dfreq, nd = _shingle_df_state(spark, base)
-    assert {(r.g3, r.df) for r in dfreq.collect()} == {
-        ("alpha beta gamma", 6), ("beta gamma delta", 6),
-    }
-    assert nd.first()["n_docs"] == 6
-    assert {r.g3 for r in read_hot_shingles(spark, base).collect()} == {
-        "alpha beta gamma", "beta gamma delta",
-    }
 
 
 def test_streaming_novelty_parity_and_replay(spark, tmp_path):
@@ -3560,3 +3513,143 @@ def test_streaming_line_dedup_store_gains_only_fresh_lines(
         .select("line_text").distinct().count()
     cb(docs, 1)                       # every line already seen
     assert spark.read.parquet(store).count() == n0
+
+
+def test_line_dedup_overspan_doc_journaled_not_poisonous(
+    spark, tmp_path, monkeypatch
+):
+    """Review r16, 2nd pass: a doc with >= LINE_KEY_SPAN lines must
+    NOT wedge the stream on packed_line_key's raise — it is rejected
+    wholesale (no audit row, no store rows), journaled to /overspan,
+    and the rest of the batch dedups normally."""
+    from level2_to_cassandra_spark.operators import text as text_ops
+    from level2_to_cassandra_spark.streaming.monitor import (
+        gate_chain,
+        line_dedup_step,
+        read_line_dedup,
+        read_line_overspan,
+    )
+
+    monkeypatch.setattr(text_ops, "LINE_KEY_SPAN", 2)
+    base = str(tmp_path / "sink")
+    cb = gate_chain(lambda df, bid: None, line_dedup_step(base))
+    la = "a b c d e f g h"
+    lb = "i j k l m n o p"
+    lc = "q r s t u v w x"
+    batch = spark.createDataFrame(
+        [(1, f"{la} {lb} {lc}", "en", "s", 1),   # 3 lines >= span 2
+         (2, la, "en", "s", 1)],                 # 1 line — fine
+        "doc_id long, text string, lang string, source string, "
+        "n_chars long",
+    )
+    cb(batch, 0)                                 # must not raise
+    over = read_line_overspan(spark, base).collect()
+    assert [(r.batch_id, r.doc_id) for r in over] == [(0, 1)]
+    audit = {r.doc_id: r for r in read_line_dedup(spark, base).collect()}
+    assert set(audit) == {2}                     # no audit row for doc 1
+    assert audit[2].n_kept == 1 and audit[2].kept_text == la
+
+
+def test_classifier_gate_rejects_admit_payload_column(spark, tmp_path):
+    """Review r16, 2nd pass: a payload column named __admit (any case)
+    would be silently overwritten by the gate's split column —
+    must raise the named ValueError instead."""
+    import pytest
+
+    from level2_to_cassandra_spark.streaming.monitor import (
+        classifier_gate_step,
+        gate_chain,
+    )
+
+    cb = gate_chain(
+        lambda df, bid: None, classifier_gate_step(str(tmp_path / "sink"))
+    )
+    batch = spark.createDataFrame(
+        [(1, "alpha beta", 1)], ["doc_id", "text", "__Admit"]
+    )
+    with pytest.raises(ValueError, match="collide"):
+        cb(batch, 0)
+
+
+def test_first_seen_fresh_step_over_existing_store_no_readmission(
+    spark, tmp_path
+):
+    """A new line-dedup step instance over a seen store written by an
+    earlier instance (a restarted stream) rejects the stored lines on
+    its first trigger AND its second: the probe reads the store
+    itself, so no per-instance state has to be rebuilt first.  The
+    URL-dedup gate's counterpart is in tests/test_bloom.py."""
+    from level2_to_cassandra_spark.streaming.monitor import (
+        gate_chain,
+        line_dedup_step,
+        read_line_dedup,
+    )
+
+    schema = ("doc_id long, text string, lang string, source string, "
+              "n_chars long")
+
+    def doc(i, text):
+        return spark.createDataFrame([(i, text, "en", "src", 6)], schema)
+
+    base = str(tmp_path / "line")
+    line = "a b c d e f g h"
+    gate_chain(lambda df, bid: None, line_dedup_step(base))(doc(1, line), 0)
+    cb = gate_chain(lambda df, bid: None, line_dedup_step(base))
+    cb(doc(2, line), 1)
+    cb(doc(3, line), 2)
+    kept = {r.doc_id: r.n_kept for r in read_line_dedup(spark, base).collect()}
+    assert kept == {1: 1, 2: 0, 3: 0}
+
+
+def test_first_seen_gates_run_same_jobs_every_trigger(spark, tmp_path):
+    """The first-occurrence gates do the same Spark work on every
+    trigger: one-step URL-dedup and line-dedup chains over four
+    doc_id-ordered batches run one fixed number of jobs (counted per
+    job group) on each trigger that stores new keys, the first
+    included, whatever the store already holds.  Per-stream side
+    state that is built on a stream's first trigger, or extra state
+    collected and written per trigger, shows up as a count that
+    varies.  A trigger that stores nothing is left out: its fresh
+    frame is empty, and adaptive execution drops the stages over it."""
+    from level2_to_cassandra_spark.catalog import load_table
+    from level2_to_cassandra_spark.streaming.monitor import (
+        gate_chain,
+        line_dedup_path,
+        line_dedup_step,
+        url_dedup_path,
+        url_dedup_step,
+    )
+    from tests.conftest import SF_SMOKE as sf_smoke
+
+    docs = load_table(spark, sf_smoke, "documents")
+    cuts = docs.agg(F.percentile_approx(
+        "doc_id", F.array(*[F.lit(q) for q in (0.25, 0.5, 0.75)])
+    ).alias("q")).first()["q"]
+    bounds = [float("-inf"), *cuts, float("inf")]
+    batches = [
+        docs.where((F.col("doc_id") > lo) & (F.col("doc_id") <= hi))
+        for lo, hi in zip(bounds, bounds[1:])
+    ]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs = {}
+    for name, step, path in (("url", url_dedup_step, url_dedup_path),
+                             ("line", line_dedup_step, line_dedup_path)):
+        base = str(tmp_path / name)
+        cb = gate_chain(lambda df, bid: df.count(), step(base))
+        counts = []
+        for i, b in enumerate(batches):
+            group = f"first-seen-{name}-{i}"
+            sc.setJobGroup(group, group)
+            try:
+                cb(b, i)
+            finally:
+                for prop in ("spark.jobGroup.id", "spark.job.description"):
+                    sc.setLocalProperty(prop, None)
+            counts.append(len(tracker.getJobIdsForGroup(group)))
+        seen = spark.read.parquet(f"{path(base)}/seen")
+        storing = {r.batch_id
+                   for r in seen.select("batch_id").distinct().collect()}
+        jobs[name] = [c for i, c in enumerate(counts) if i in storing]
+    assert all(len(c) >= 3 for c in jobs.values()), jobs   # non-vacuous
+    assert all(len(set(c)) == 1 for c in jobs.values()), jobs
