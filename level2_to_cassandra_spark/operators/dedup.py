@@ -134,6 +134,27 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     return labels
 
 
+def _first_content(batch: DataFrame, store_path: str, text_col: str,
+                   id_col: str, bid: int):
+    """The exact leg of both admit steps: the first-of-content rows of
+    ``batch`` (lowest ``id_col`` per sha2(text)) whose hash no strictly
+    earlier batch stored at ``store_path`` (monitor.py::_first_seen).
+    Returns ``(first, seal)``; ``seal(admitted)`` is the store append
+    of the admitted rows' hashes.  NULL-text rows are dropped: sha2(NULL)
+    is NULL and can never anti-match."""
+    from level2_to_cassandra_spark.streaming.monitor import _first_seen
+
+    leaders, seal = _first_seen(
+        store_path,
+        batch.where(F.col(text_col).isNotNull())
+        .withColumn("__h", content_hash(text_col)),
+        "__h", F.col(id_col), bid,
+    )
+    return leaders.drop("__lead", "__h"), lambda admitted: seal(
+        admitted.withColumn("__h", content_hash(text_col))
+    )
+
+
 def incremental_dedup_step(store_path: str, text_col: str = "text",
                            id_col: str = "doc_id"):
     """Gate-chain step (streaming/monitor.py::gate_chain) for STREAMING
@@ -141,16 +162,14 @@ def incremental_dedup_step(store_path: str, text_col: str = "text",
     q_dedup_incremental (queries/llm.py), which verifies the same admit
     rule against DuckDB in batch form.  Per micro-batch: keep the
     first-of-content row (lowest ``id_col`` per sha2(text)) and LEFT
-    ANTI join it against the hash staging table at ``store_path``; the
-    survivors are admitted, and ONLY AFTER the sink write their hashes
-    are appended to the store — so a replayed batch (foreachBatch is
-    at-least-once) re-admits rather than silently dropping rows whose
-    hashes landed before a crash; duplicate admitted rows are
-    reconciled by the same content-hash dedup downstream, duplicate
-    store hashes are harmless (the anti join is set-semantics).  The
-    store carries no batch_id, so a replay after the hash append
-    admits nothing: put this step LAST in a chain, so every other
-    step's appends land before the hashes that gate the replay.
+    ANTI join it against the hash store at ``store_path``; the
+    survivors are admitted, and after the sink write their hashes are
+    appended to the store under the batch_id.  The probe reads only
+    the hashes of strictly earlier batches, so a replayed batch
+    (foreachBatch is at-least-once) re-derives the same admission
+    wherever the crash fell, and the step may sit anywhere in a chain;
+    duplicate admitted rows are reconciled by the same content-hash
+    dedup downstream.
 
     Admit rule across the stream: a document is admitted iff its
     content has never been seen in any earlier micro-batch, and it has
@@ -162,43 +181,14 @@ def incremental_dedup_step(store_path: str, text_col: str = "text",
     (fixed-width key) + an anti join against the store, which in
     production is bucketed by hash so the corpus side never
     re-shuffles; the store grows by admitted hashes only.  NULL-text
-    rows are dropped (same reasoning as the batch twin: sha2(NULL) is
-    NULL and can never anti-match)."""
-    from level2_to_cassandra_spark.streaming.monitor import (
-        _append,
-        _read_journal,
-    )
+    rows are dropped (same reasoning as the batch twin)."""
 
     def step(batch, bid, persist):
-        first = latest_by_key(
-            batch.where(F.col(text_col).isNotNull())
-            .withColumn("__h", content_hash(text_col)),
-            ["__h"], [F.asc(id_col)],
-        )
-        # no .distinct(): LEFT ANTI is set-semantics on the build side
-        # already, and a distinct would shuffle the whole ever-growing
-        # store every micro-batch
-        seen = _read_journal(batch.sparkSession, store_path,
-                             first.select("__h").schema)
-        admitted = first.join(seen, "__h", "left_anti").drop("__h")
-        hashes = admitted.select(content_hash(text_col).alias("__h"))
-        return admitted, [_append(hashes, store_path, one_file=False)]
+        admitted, seal = _first_content(batch, store_path, text_col,
+                                        id_col, bid)
+        return admitted, [seal(admitted)]
 
     return step
-
-
-def foreach_batch_incremental_dedup(admitted_path: str, store_path: str,
-                                    text_col: str = "text",
-                                    id_col: str = "doc_id"):
-    """``foreachBatch`` sink factory: append the rows
-    :func:`incremental_dedup_step` admits to ``admitted_path``, then
-    their hashes to the store at ``store_path``."""
-    from level2_to_cassandra_spark.streaming.monitor import gate_chain
-
-    return gate_chain(
-        lambda df, bid: df.write.mode("append").parquet(admitted_path),
-        incremental_dedup_step(store_path, text_col, id_col),
-    )
 
 
 def seed_multimodal_store(assets: DataFrame, store_path: str,
@@ -216,9 +206,10 @@ def seed_multimodal_store(assets: DataFrame, store_path: str,
     the UNFILTERED embeddings table, so a NULL-text asset's vector
     must still reject near-dups (only the HASH leg drops NULL text:
     sha2(NULL) can never anti-match, mirroring the batch spec's
-    ``d.text IS NOT NULL`` on the documents side alone).  At
-    production scale each of these is a bucketed staging table; here
-    they are the parquet twins."""
+    ``d.text IS NOT NULL`` on the documents side alone).  Seeded rows
+    carry no batch_id, so every batch's probe sees them
+    (monitor.py::_earlier).  At production scale each of these is a
+    bucketed staging table; here they are the parquet twins."""
     from level2_to_cassandra_spark.operators import similarity
 
     assets.where(F.col(text_col).isNotNull()).select(
@@ -254,18 +245,13 @@ def multimodal_admit_step(store_path: str, text_col: str = "text",
       (table, bucket), re-rank candidates with the exact rounded
       cosine against ``{store}/vecs``, and reject survivors with any
       seen neighbor at cos ≥ ``threshold``;
-    * after the sink write, append bucket and vector rows, THEN hashes
-      — the hash store must land LAST: it is what gates re-admission
-      on replay (foreachBatch is at-least-once), so every store entry
-      a replay will NOT rebuild has to be durable before the batch can
-      be classified as seen.  A crash anywhere earlier re-admits the
-      batch and rewrites everything (duplicate admitted rows are
-      reconciled by content-hash downstream; duplicate bucket/vector
-      rows are harmless — the candidate probe and the reject list are
-      set-semantics).  Hashes-before-buckets would instead leave a
-      PERMANENT near-dup blind spot: the replay would anti-join the
-      batch away while its vectors never reach the store.  For the
-      same reason this step goes LAST in a chain.
+    * after the sink write, append the admitted assets' bucket, vector
+      and hash rows under the batch_id.  Every store probe reads only
+      rows of strictly earlier batches (monitor.py::_earlier), so a
+      replay after a crash anywhere among the appends re-derives the
+      same admission and rewrites the same rows (duplicate admitted
+      rows are reconciled by content-hash downstream; duplicate store
+      rows are harmless — the probes are set-semantics).
 
     Admitted batches GROW the store, so a later micro-batch's
     near-dup of an earlier admitted doc is rejected — first-arrival
@@ -279,47 +265,37 @@ def multimodal_admit_step(store_path: str, text_col: str = "text",
     from level2_to_cassandra_spark.operators import similarity
     from level2_to_cassandra_spark.streaming.monitor import (
         _append,
-        _read_journal,
+        _bid,
+        _earlier,
     )
-
-    def vecs(df):
-        return df.select(F.col(id_col).alias("__sid"),
-                         F.col(vec_col).alias("__sv"))
 
     def step(batch, bid, persist):
         spark = batch.sparkSession
-        first = latest_by_key(
-            batch.where(F.col(text_col).isNotNull())
-            .withColumn("__h", content_hash(text_col)),
-            ["__h"], [F.asc(id_col)],
-        )
-        seen_h = _read_journal(spark, f"{store_path}/hashes",
-                               first.select("__h").schema)
+
+        def vecs(df):
+            return df.select(F.col(id_col).alias("__sid"),
+                             F.col(vec_col).alias("__sv"), _bid(bid))
+
+        def earlier(rows, name):
+            return _earlier(spark, f"{store_path}/{name}", rows.schema,
+                            bid).drop("batch_id")
+
+        first, seal = _first_content(batch, f"{store_path}/hashes",
+                                     text_col, id_col, bid)
         # the survivors feed the bucketize pass, the candidate probe
         # AND the admitted frame — one cache, trigger-bounded.  The
         # bucket rows are ALSO persisted: the store append reuses them
         # (semi-joined down to the admitted ids) instead of paying the
         # Arrow matmul kernel a second time per micro-batch.
-        first = persist(first.join(seen_h, "__h", "left_anti").drop("__h"))
+        first = persist(first)
         bkts = persist(similarity.lsh_buckets_np(
             first, id_col, vec_col, n_planes, n_tables, dim=dim,
             scheme="rademacher",
-        ).select("table", "bucket", F.col(id_col).alias("__nid")))
-        seen_b = _read_journal(
-            spark, f"{store_path}/buckets",
-            bkts.withColumnRenamed("__nid", "__sid").schema,
-        )
-        seen_v = _read_journal(spark, f"{store_path}/vecs",
-                               vecs(first).schema)
-        # __nid != __sid: a crash-replay AFTER the bucket/vector writes
-        # re-presents this batch's own rows as "seen"; without the
-        # guard every replayed doc self-rejects at cos 1.0 and — since
-        # rejection skips the hashes append — the batch would classify
-        # as seen on the NEXT replay too, silently losing it from the
-        # admitted output (and its hash from the exact gate) forever.
+        ).select("table", "bucket", F.col(id_col).alias("__sid"),
+                 _bid(bid)))
         cand = (
-            bkts.join(seen_b, ["table", "bucket"])
-            .where(F.col("__nid") != F.col("__sid"))
+            bkts.select("table", "bucket", F.col("__sid").alias("__nid"))
+            .join(earlier(bkts, "buckets"), ["table", "bucket"])
             .select("__nid", "__sid")
             .distinct()
         )
@@ -330,7 +306,7 @@ def multimodal_admit_step(store_path: str, text_col: str = "text",
                 first.select(F.col(id_col).alias("__nid"), F.col(vec_col)),
                 "__nid",
             )
-            .join(seen_v, "__sid")
+            .join(earlier(vecs(first), "vecs"), "__sid")
             .select(
                 "__nid",
                 (
@@ -349,35 +325,13 @@ def multimodal_admit_step(store_path: str, text_col: str = "text",
         # identical rows to re-bucketizing `admitted`, for zero extra
         # kernel passes
         new_bkts = bkts.join(
-            admitted.select(F.col(id_col).alias("__nid")), "__nid",
+            admitted.select(F.col(id_col).alias("__sid")), "__sid",
             "left_semi",
-        ).select("table", "bucket", F.col("__nid").alias("__sid"))
+        ).select("table", "bucket", "__sid", "batch_id")
         return admitted, [
             _append(new_bkts, f"{store_path}/buckets", one_file=False),
             _append(vecs(admitted), f"{store_path}/vecs", one_file=False),
-            # hashes LAST — see the ordering note in the docstring
-            _append(admitted.select(content_hash(text_col).alias("__h")),
-                    f"{store_path}/hashes", one_file=False),
+            seal(admitted),
         ]
 
     return step
-
-
-def foreach_batch_multimodal_admit(admitted_path: str, store_path: str,
-                                   text_col: str = "text",
-                                   id_col: str = "doc_id",
-                                   vec_col: str = "embedding",
-                                   n_planes: int = 6, n_tables: int = 8,
-                                   dim: int = 64,
-                                   threshold: float = 0.35):
-    """``foreachBatch`` sink factory: append the assets
-    :func:`multimodal_admit_step` admits to ``admitted_path``, then
-    their bucket, vector and hash rows to the stores under
-    ``store_path``."""
-    from level2_to_cassandra_spark.streaming.monitor import gate_chain
-
-    return gate_chain(
-        lambda df, bid: df.write.mode("append").parquet(admitted_path),
-        multimodal_admit_step(store_path, text_col, id_col, vec_col,
-                              n_planes, n_tables, dim, threshold),
-    )

@@ -4184,8 +4184,8 @@ def q_dedup_incremental_multimodal(spark: SparkSession,
 
     This is q_dedup_multimodal's decision applied at the ingest
     boundary, where re-clustering the corpus per batch is impossible;
-    the streaming twin (operators/dedup.py::multimodal_admit_step,
-    behind foreach_batch_multimodal_admit) runs the same rule per micro-batch
+    the streaming twin (operators/dedup.py::multimodal_admit_step, a
+    monitor.gate_chain step) runs the same rule per micro-batch
     against persisted hash/bucket/vector staging stores and is
     parity-pinned to this hash-verified query.
 

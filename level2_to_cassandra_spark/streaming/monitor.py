@@ -211,11 +211,9 @@ def gate_chain(
     and of the journal rows of strictly earlier batches, so a replay
     writes IDENTICAL rows under the same batch_id: readers collapse
     them with ``dropDuplicates`` on the journal's replay key, and the
-    first-occurrence stores (:func:`_first_seen`) probe only rows of
-    earlier batches.  (The vocabulary store is the one journal read
-    without a batch filter; see :func:`vocab_growth_step`.  The admit
-    steps of operators/dedup.py gate replay on a store without a
-    batch_id, so they go last in a chain.)
+    seen stores (:func:`_earlier`) probe only rows of earlier batches.
+    (The vocabulary store is the one journal read without a batch
+    filter; see :func:`vocab_growth_step`.)
     """
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
@@ -318,32 +316,40 @@ def _split(scored: DataFrame, admit, reject, cols: list[str], bid: int,
     return scored.where(admit).select(*cols), [_append(rejects, path)]
 
 
-def _first_seen(root: str, frame: DataFrame, key: str, rank, bid: int,
+def _earlier(spark, path: str, schema, bid: int) -> DataFrame:
+    """The rows of the seen store at ``path`` that STRICTLY EARLIER
+    batches wrote (``batch_id < bid``): a crashed attempt's own rows are
+    excluded, and later batches cannot have run (foreachBatch replays
+    only the last uncommitted batch), so a replay re-derives the same
+    admission wherever the crash fell.  A row without a ``batch_id``
+    (a seeded store, or one written before stores carried it) counts
+    as earlier than every batch."""
+    return _read_journal(spark, path, schema).where(
+        F.coalesce(F.col("batch_id"), F.lit(-1)) < bid
+    )
+
+
+def _first_seen(store: str, frame: DataFrame, key: str, rank, bid: int,
                 store_key: str | None = None):
     """First occurrences of ``key`` against the append-only seen store
-    ``{root}/seen`` — shared by the novelty, line-dedup and URL-dedup
-    gates.
+    directory ``store`` — shared by the novelty, line-dedup and
+    URL-dedup gates and the admit steps of operators/dedup.py.
 
     Returns ``(leaders, seal)``.  ``leaders`` are the rows of ``frame``
-    whose key no STRICTLY EARLIER batch stored (``batch_id < bid``: a
-    crashed attempt's own rows are excluded, and later batches cannot
-    have run — foreachBatch replays only the last uncommitted batch)
-    and whose ``rank`` is the minimum among the batch's rows with that
+    whose key no strictly earlier batch stored (:func:`_earlier`) and
+    whose ``rank`` is the minimum among the batch's rows with that
     key.  The probe is one exact left-anti join of ``frame`` against
     the filtered store; no ``.distinct()`` on the store side, since a
     left-anti join is already set-semantics on its build side.
     ``seal(stored)`` gives the store append recording ``stored``'s
-    keys, which the caller runs LAST so a crash before it re-derives
-    the replay identically.  ``store_key`` names the store column when
-    it differs from ``key``."""
+    keys under ``bid``, one file per trigger: every frame a caller
+    seals is persisted in its trigger, so the coalesce re-runs no
+    window.  ``store_key`` names the store column when it differs from
+    ``key``."""
     store_key = store_key or key
     as_key = key if store_key == key else F.col(store_key).alias(key)
-    seen = (
-        _read_journal(frame.sparkSession, f"{root}/seen",
-                      f"{store_key} string, batch_id long")
-        .where(F.col("batch_id") < bid)
-        .select(as_key)
-    )
+    seen = _earlier(frame.sparkSession, store,
+                    f"{store_key} string, batch_id long", bid).select(as_key)
     leaders = (
         frame.join(seen, key, "left_anti")
         .withColumn("__lead", F.min(rank).over(Window.partitionBy(key)))
@@ -352,8 +358,7 @@ def _first_seen(root: str, frame: DataFrame, key: str, rank, bid: int,
 
     def seal(stored: DataFrame):
         as_store = key if store_key == key else F.col(key).alias(store_key)
-        return _append(stored.select(as_store, _bid(bid)), f"{root}/seen",
-                       one_file=False)
+        return _append(stored.select(as_store, _bid(bid)), store)
 
     return leaders, seal
 
@@ -1187,7 +1192,8 @@ def novelty_step(
                 batch, id_col=id_col, text_col=text_col
             ).distinct()
         )
-        leaders, seal = _first_seen(root, occ, "g3", F.col("doc_id"), bid)
+        leaders, seal = _first_seen(f"{root}/seen", occ, "g3",
+                                    F.col("doc_id"), bid)
         flagged = (
             leaders.select("doc_id")
             .groupBy("doc_id")
@@ -1296,7 +1302,8 @@ def line_dedup_step(
             .distinct()
         )
         lines_ok = lines.join(F.broadcast(over), "doc_id", "left_anti")
-        leaders, seal = _first_seen(root, lines_ok, "line_text", key, bid)
+        leaders, seal = _first_seen(f"{root}/seen", lines_ok, "line_text",
+                                    key, bid)
         # persisted: feeds the kept aggregation AND the seen-store
         # append
         fresh = persist(leaders.select("doc_id", "line_no", "line_text"))
@@ -1707,8 +1714,9 @@ def url_dedup_step(base_path: str) -> Callable:
             "doc_id", "canonical_url",
             F.coalesce("canonical_url", F.lit("")).alias("__ck"),
         ))
-        leaders, seal = _first_seen(root, canon, "__ck", F.col("doc_id"),
-                                    bid, store_key="canonical_url")
+        leaders, seal = _first_seen(f"{root}/seen", canon, "__ck",
+                                    F.col("doc_id"), bid,
+                                    store_key="canonical_url")
         # one row per NEWLY-SEEN canonical: its minimum-doc_id leader —
         # feeds the admit join, the reject anti-join and the store
         # append

@@ -760,8 +760,9 @@ def test_streaming_incremental_dedup_parity(spark, tmp_path):
     import time as _time
 
     from level2_to_cassandra_spark.operators.dedup import (
-        foreach_batch_incremental_dedup,
+        incremental_dedup_step,
     )
+    from level2_to_cassandra_spark.streaming.monitor import gate_chain
 
     batches = [
         # (doc_id, text)
@@ -787,7 +788,11 @@ def test_streaming_incremental_dedup_parity(spark, tmp_path):
     )
     q = (
         stream.writeStream.foreachBatch(
-            foreach_batch_incremental_dedup(admitted_path, store_path)
+            gate_chain(
+                lambda df, bid: df.write.mode("append").parquet(
+                    admitted_path),
+                incremental_dedup_step(store_path),
+            )
         )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
@@ -1778,7 +1783,7 @@ def test_streaming_embedding_drift_parity_with_registered_query(
 
 def test_streaming_multimodal_admit_parity_with_registered_query(
         spark, tmp_path):
-    """foreach_batch_multimodal_admit must reproduce
+    """A one-step multimodal_admit_step chain must reproduce
     q_dedup_incremental_multimodal when fed the query's own split:
     store seeded from the seen side (doc_id % 10 != 0), the new side
     streamed as ONE micro-batch of (text, embedding) assets — same
@@ -1786,10 +1791,11 @@ def test_streaming_multimodal_admit_parity_with_registered_query(
     the streaming admit to the hash-verified batch spec."""
     from level2_to_cassandra_spark.catalog import load_table
     from level2_to_cassandra_spark.operators.dedup import (
-        foreach_batch_multimodal_admit,
+        multimodal_admit_step,
         seed_multimodal_store,
     )
     from level2_to_cassandra_spark.registry import all_queries
+    from level2_to_cassandra_spark.streaming.monitor import gate_chain
     from tests.conftest import SF_SMOKE as sf_smoke
 
     docs = load_table(spark, sf_smoke, "documents")
@@ -1805,7 +1811,10 @@ def test_streaming_multimodal_admit_parity_with_registered_query(
     src = str(tmp_path / "src")
     assets.where(F.col("doc_id") % 10 == 0).coalesce(1).write.parquet(src)
     admitted_path = str(tmp_path / "admitted")
-    cb = foreach_batch_multimodal_admit(admitted_path, store)
+    cb = gate_chain(
+        lambda df, bid: df.write.mode("append").parquet(admitted_path),
+        multimodal_admit_step(store),
+    )
     q = (
         spark.readStream.schema(assets.schema)
         .parquet(src)
@@ -1899,8 +1908,9 @@ def test_streaming_multimodal_admit_store_grows_across_batches(
     orthogonal newcomer is admitted; an exact text copy of a batch-1
     doc is rejected by the hash leg."""
     from level2_to_cassandra_spark.operators.dedup import (
-        foreach_batch_multimodal_admit,
+        multimodal_admit_step,
     )
+    from level2_to_cassandra_spark.streaming.monitor import gate_chain
 
     def one_hot(d):
         return [1.0 if i == d else 0.0 for i in range(64)]
@@ -1920,8 +1930,9 @@ def test_streaming_multimodal_admit_store_grows_across_batches(
         "append").parquet(src)
 
     admitted_path = str(tmp_path / "admitted")
-    cb = foreach_batch_multimodal_admit(
-        admitted_path, str(tmp_path / "store")
+    cb = gate_chain(
+        lambda df, bid: df.write.mode("append").parquet(admitted_path),
+        multimodal_admit_step(str(tmp_path / "store")),
     )
     q = (
         spark.readStream.schema(schema)
@@ -1940,14 +1951,15 @@ def test_streaming_multimodal_admit_store_grows_across_batches(
 def test_streaming_multimodal_admit_replay_after_partial_store_write(
         spark, tmp_path):
     """Crash-replay safety: if a batch's bucket/vector rows landed but
-    the crash hit BEFORE the hashes append (the one window the
-    hashes-last ordering leaves open), the replayed batch must
-    RE-ADMIT — its own store rows must not self-reject it (the __nid
-    != __sid guard), and the replay must complete the store so the
-    exact gate works afterwards."""
+    the crash hit before its hashes append, the replayed batch must
+    RE-ADMIT — the store probes read only rows of strictly earlier
+    batches, so its own bucket/vector rows cannot self-reject it —
+    and the replay must complete the store so the exact gate works
+    afterwards."""
     from level2_to_cassandra_spark.operators.dedup import (
-        foreach_batch_multimodal_admit,
+        multimodal_admit_step,
     )
+    from level2_to_cassandra_spark.streaming.monitor import gate_chain
 
     schema = ("doc_id long, text string, lang string, source string, "
               "embedding array<float>")
@@ -1957,7 +1969,10 @@ def test_streaming_multimodal_admit_replay_after_partial_store_write(
     )
     store = str(tmp_path / "store")
     admitted_path = str(tmp_path / "admitted")
-    cb = foreach_batch_multimodal_admit(admitted_path, store)
+    cb = gate_chain(
+        lambda df, bid: df.write.mode("append").parquet(admitted_path),
+        multimodal_admit_step(store),
+    )
 
     cb(batch, 0)
     # simulate the crash window: the attempt's rows/buckets/vecs are
@@ -1987,9 +2002,10 @@ def test_streaming_multimodal_admit_null_text_seed_still_rejects(
     NULL text.  Regression for the seed filter that silently excluded
     NULL-text assets from the bucket/vector stores."""
     from level2_to_cassandra_spark.operators.dedup import (
-        foreach_batch_multimodal_admit,
+        multimodal_admit_step,
         seed_multimodal_store,
     )
+    from level2_to_cassandra_spark.streaming.monitor import gate_chain
 
     schema = ("doc_id long, text string, lang string, source string, "
               "embedding array<float>")
@@ -2004,7 +2020,10 @@ def test_streaming_multimodal_admit_null_text_seed_still_rejects(
           [1.0 if i == 40 else 0.0 for i in range(64)])], schema
     )
     admitted_path = str(tmp_path / "admitted")
-    foreach_batch_multimodal_admit(admitted_path, store)(batch, 0)
+    gate_chain(
+        lambda df, bid: df.write.mode("append").parquet(admitted_path),
+        multimodal_admit_step(store),
+    )(batch, 0)
     got = {r.doc_id for r in spark.read.parquet(admitted_path).collect()}
     assert got == {11}
 
@@ -2288,15 +2307,17 @@ def test_monitor_readers_empty_before_first_batch(spark, tmp_path):
     ]
 
 
-def _journal_tree(spark, root):
-    """Every parquet directory under ``root`` → its sorted rows."""
+def _journal_tree(spark, root, distinct=False):
+    """Every parquet directory under ``root`` → its sorted rows
+    (without duplicates when ``distinct``)."""
     import os
 
     out = {}
     for d, _, files in os.walk(root):
         if any(f.endswith(".parquet") for f in files):
+            df = spark.read.parquet(d)
             out[os.path.relpath(d, root)] = sorted(
-                spark.read.parquet(d).collect(), key=repr
+                (df.dropDuplicates() if distinct else df).collect(), key=repr
             )
     return out
 
@@ -3603,15 +3624,22 @@ def test_first_seen_fresh_step_over_existing_store_no_readmission(
 
 def test_first_seen_gates_run_same_jobs_every_trigger(spark, tmp_path):
     """The first-occurrence gates do the same Spark work on every
-    trigger: one-step URL-dedup and line-dedup chains over four
-    doc_id-ordered batches run one fixed number of jobs (counted per
-    job group) on each trigger that stores new keys, the first
-    included, whatever the store already holds.  Per-stream side
-    state that is built on a stream's first trigger, or extra state
-    collected and written per trigger, shows up as a count that
-    varies.  A trigger that stores nothing is left out: its fresh
-    frame is empty, and adaptive execution drops the stages over it."""
+    trigger: one-step URL-dedup, line-dedup and incremental-dedup
+    chains over four doc_id-ordered batches run one fixed number of
+    jobs (counted per job group) on each trigger that stores new keys,
+    the first included, whatever the store already holds.  Per-stream
+    side state that is built on a stream's first trigger, or extra
+    state collected, written or persisted per trigger, shows up as a
+    count that varies.  A trigger that stores nothing is left out: its
+    fresh frame is empty, and adaptive execution drops the stages over
+    it.  Each store grows by at most one parquet file per trigger,
+    whatever the shuffle partition count."""
+    import glob
+
     from level2_to_cassandra_spark.catalog import load_table
+    from level2_to_cassandra_spark.operators.dedup import (
+        incremental_dedup_step,
+    )
     from level2_to_cassandra_spark.streaming.monitor import (
         gate_chain,
         line_dedup_path,
@@ -3633,10 +3661,15 @@ def test_first_seen_gates_run_same_jobs_every_trigger(spark, tmp_path):
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     jobs = {}
-    for name, step, path in (("url", url_dedup_step, url_dedup_path),
-                             ("line", line_dedup_step, line_dedup_path)):
-        base = str(tmp_path / name)
-        cb = gate_chain(lambda df, bid: df.count(), step(base))
+    for name, gate in (
+        ("url", lambda b: (url_dedup_step(b), f"{url_dedup_path(b)}/seen")),
+        ("line",
+         lambda b: (line_dedup_step(b), f"{line_dedup_path(b)}/seen")),
+        ("incremental",
+         lambda b: (incremental_dedup_step(f"{b}/_hashes"), f"{b}/_hashes")),
+    ):
+        step, store = gate(str(tmp_path / name))
+        cb = gate_chain(lambda df, bid: df.count(), step)
         counts = []
         for i, b in enumerate(batches):
             group = f"first-seen-{name}-{i}"
@@ -3647,9 +3680,90 @@ def test_first_seen_gates_run_same_jobs_every_trigger(spark, tmp_path):
                 for prop in ("spark.jobGroup.id", "spark.job.description"):
                     sc.setLocalProperty(prop, None)
             counts.append(len(tracker.getJobIdsForGroup(group)))
-        seen = spark.read.parquet(f"{path(base)}/seen")
+        seen = spark.read.parquet(store)
         storing = {r.batch_id
                    for r in seen.select("batch_id").distinct().collect()}
         jobs[name] = [c for i, c in enumerate(counts) if i in storing]
+        assert len(glob.glob(f"{store}/*.parquet")) <= len(batches), name
     assert all(len(c) >= 3 for c in jobs.values()), jobs   # non-vacuous
     assert all(len(set(c)) == 1 for c in jobs.values()), jobs
+
+
+def test_gate_chain_crash_between_appends_retry_matches(spark, tmp_path):
+    """A crash AFTER the incremental-dedup step's hash append but
+    before the URL-dedup step's appends: the retried batch admits the
+    same doc_ids as a clean run, and every journal and store holds the
+    clean run's rows (up to the replay's duplicates).  The hash store
+    probe reads only earlier batches, so the retry does not classify
+    its own just-stored hashes as seen."""
+    from level2_to_cassandra_spark.operators.dedup import (
+        incremental_dedup_step,
+    )
+    from level2_to_cassandra_spark.streaming import monitor
+
+    batches = _gate_docs(spark)
+
+    def run(base, fail_batch=None):
+        admitted: dict = {}
+        state = {"failed": False}
+
+        def flaky(batch, bid, persist):
+            def append():
+                if bid == fail_batch and not state["failed"]:
+                    state["failed"] = True
+                    raise RuntimeError("journal down")
+            return batch, [append]
+
+        cb = monitor.gate_chain(
+            lambda df, bid: admitted.__setitem__(bid, sorted(
+                r.doc_id for r in df.select("doc_id").collect()
+            )),
+            incremental_dedup_step(f"{base}/_hashes"),
+            flaky,
+            monitor.url_dedup_step(base),
+        )
+        for i, b in enumerate(batches):
+            if i == fail_batch:
+                with pytest.raises(RuntimeError, match="journal down"):
+                    cb(b, i)
+            cb(b, i)
+        return admitted, _journal_tree(spark, base, distinct=True)
+
+    clean = run(str(tmp_path / "clean"))
+    retried = run(str(tmp_path / "retried"), fail_batch=1)
+    assert retried == clean
+    admitted, journals = clean
+    assert admitted[0] and admitted[1]                      # non-vacuous
+    assert {"_hashes", "_url_dedup/seen", "_url_dedup/rejects"} <= set(
+        journals)
+
+
+def test_incremental_dedup_store_without_batch_id_still_gates(
+    spark, tmp_path
+):
+    """A hash store whose rows carry no batch_id (seeded, or written
+    before stores carried it) gates every batch: an incremental-dedup
+    step over it rejects the stored content on its first trigger and
+    on its second."""
+    from level2_to_cassandra_spark.operators.dedup import (
+        content_hash,
+        incremental_dedup_step,
+    )
+    from level2_to_cassandra_spark.streaming.monitor import gate_chain
+
+    store = str(tmp_path / "_hashes")
+    spark.createDataFrame([("seen text",)], "text string").select(
+        content_hash("text").alias("__h")
+    ).write.parquet(store)
+    admitted: list = []
+    cb = gate_chain(
+        lambda df, bid: admitted.extend(
+            r.doc_id for r in df.select("doc_id").collect()
+        ),
+        incremental_dedup_step(store),
+    )
+    schema = "doc_id long, text string"
+    cb(spark.createDataFrame([(1, "seen text"), (2, "new text")], schema), 0)
+    assert admitted == [2]
+    cb(spark.createDataFrame([(3, "seen text"), (4, "new text")], schema), 1)
+    assert admitted == [2]
