@@ -13,17 +13,24 @@ reads start no footer-reading Spark job.
 Session staging artifacts — relations derived from the fixtures once
 per session and read by several queries — are declared with
 :func:`staged`, the one memo they share.
+
+While a query construction is open in :func:`recording_inputs`, both
+record each input they touch as (path, ``st_mtime_ns``): the
+registry's plan memo re-serves a plan only while every recorded input
+keeps its mtime (:func:`inputs_unchanged`).
 """
 
 from __future__ import annotations
 
 import atexit
+import contextlib
 import functools
 import hashlib
 import os
 import shutil
 import tempfile
-from collections.abc import Callable
+import threading
+from collections.abc import Callable, Iterable, Iterator
 from typing import NamedTuple
 from urllib.parse import urlparse
 
@@ -130,6 +137,49 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 #: that path inferred.
 _SCHEMAS: dict[tuple[str, str, int], T.StructType] = {}
 
+#: per thread, the input records of the constructions open in
+#: :func:`recording_inputs`, innermost last
+_RECORDING = threading.local()
+
+
+def _mtime(path: str) -> int | None:
+    """``st_mtime_ns`` of a local ``path``; None for a non-local path
+    (the :func:`spread_scan` scheme rule) or one that cannot be
+    stat'ed."""
+    parsed = urlparse(path)
+    if parsed.scheme not in ("", "file"):
+        return None
+    try:
+        return os.stat(parsed.path or path).st_mtime_ns
+    except OSError:
+        return None
+
+
+def _record(path: str, mtime: int | None) -> None:
+    for rec in getattr(_RECORDING, "open", ()):
+        rec[path] = mtime
+
+
+@contextlib.contextmanager
+def recording_inputs() -> Iterator[dict[str, int | None]]:
+    """Yield a dict that collects, until the block exits, every input
+    :func:`read_parquet` and the :func:`staged` serve touch on this
+    thread: path → ``st_mtime_ns``, or None where the path is
+    non-local or cannot be stat'ed."""
+    rec: dict[str, int | None] = {}
+    stack = _RECORDING.__dict__.setdefault("open", [])
+    stack.append(rec)
+    try:
+        yield rec
+    finally:
+        stack.remove(rec)
+
+
+def inputs_unchanged(inputs: Iterable[tuple[str, int]]) -> bool:
+    """Whether every recorded (path, ``st_mtime_ns``) still stats to
+    the same mtime — a stat per input, no Spark call."""
+    return all(_mtime(path) == mtime for path, mtime in inputs)
+
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` for a path nothing rewrites while
@@ -140,18 +190,15 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     first read of a path per (applicationId, path, ``st_mtime_ns``)
     infers as usual and records the schema, and later reads reuse it —
     a rewrite that changes the path's mtime infers afresh.  A
-    non-local path (the :func:`spread_scan` scheme rule) or one that
-    cannot be stat'ed always infers, so a missing path raises exactly
-    as before.  Any access drops the entries of other applications.
-    Stores that evolve their schema in place (sinks, seen-stores,
-    journals, appended indexes) read with ``spark.read.parquet``.
+    non-local path or one that cannot be stat'ed always infers, so a
+    missing path raises exactly as before.  Any access drops the
+    entries of other applications.  Stores that evolve their schema
+    in place (sinks, seen-stores, journals, appended indexes) read
+    with ``spark.read.parquet``.
     """
-    parsed = urlparse(path)
-    if parsed.scheme not in ("", "file"):
-        return spark.read.parquet(path)
-    try:
-        mtime = os.stat(parsed.path or path).st_mtime_ns
-    except OSError:
+    mtime = _mtime(path)
+    _record(path, mtime)
+    if mtime is None:
         return spark.read.parquet(path)
     app = spark.sparkContext.applicationId
     for key in [k for k in _SCHEMAS if k[0] != app]:
@@ -205,7 +252,9 @@ def staged(label: str, *, bucket: str | None = None,
     access reclaims the entries of other applications (their table and
     directory); a failed build reclaims its own.  The memo assumes the
     fixture dir is immutable for the session (true of the fixture
-    testdata).
+    testdata).  Each call records the artifact's directory with
+    :func:`recording_inputs`, so a query plan memoized over it is
+    rebuilt once the directory is reclaimed.
 
     Three result kinds:
 
@@ -263,6 +312,7 @@ def staged(label: str, *, bucket: str | None = None,
                     raise
                 ent = _Entry(path, table, value)
                 _STAGED[(label, app, sf_dir)] = ent
+            _record(ent.path, _mtime(ent.path))
             if ent.table:
                 return spark.table(ent.table)
             if serve is not None:

@@ -2131,14 +2131,16 @@ _SKETCH_MASK = minhash.SIG_MASK  # one definition beside the operator
                     & {_SKETCH_MASK}::UBIGINT)::BIGINT
             FROM hsrc)
         GROUP BY 1, 2),
+    sigs AS (
+        SELECT doc_id, list(h ORDER BY i) AS hs FROM sig GROUP BY doc_id),
     est AS (
         SELECT p.id_a, p.id_b, p.panel, p.j,
-               SUM(CASE WHEN sa.h = sb.h THEN 1 ELSE 0 END)::DOUBLE
+               len(list_filter(range(1, {_SKETCH_PERMS} + 1),
+                               k -> sa.hs[k] = sb.hs[k]))::DOUBLE
                    / {_SKETCH_PERMS} AS e
         FROM pairs p
-        JOIN sig sa ON sa.doc_id = p.id_a
-        JOIN sig sb ON sb.doc_id = p.id_b AND sb.i = sa.i
-        GROUP BY 1, 2, 3, 4)
+        JOIN sigs sa ON sa.doc_id = p.id_a
+        JOIN sigs sb ON sb.doc_id = p.id_b)
     SELECT id_a, id_b, panel,
            ROUND(j, 6) AS jaccard,
            ROUND(e, 6) AS est_jaccard,

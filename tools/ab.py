@@ -1,10 +1,13 @@
 #!/usr/bin/env python
 r"""Interleaved same-session A/B of a code variant, toggled by
 monkeypatching: variant A is the code as it is, variant B sets each
-MODULE.ATTR to EXPR (evaluated in MODULE's namespace).  Plans rebuild
-per call, so the variants alternate inside ONE session and ambient
-drift hits both equally.  Before anything is timed, each query's two
-outputs must be equal (exceptAll both ways).
+MODULE.ATTR to EXPR (evaluated in MODULE's namespace).  Each switch of
+variant clears the registry's plan memo, so every call after it builds
+its plan under that variant (each timed call is a cold build); the variants alternate inside ONE session
+and ambient drift hits both equally.  Before anything is timed, each
+query's two outputs must be equal (exceptAll both ways), and a query
+whose two optimized plans are the same is named on stderr: its toggle
+did not reach the plan.
 
 Usage: python tools/ab.py --toggle MODULE.ATTR=EXPR [--toggle ...]
                           [-r REPS] query [query ...]
@@ -26,6 +29,7 @@ from __future__ import annotations
 
 import argparse
 import importlib
+import re
 import statistics
 import sys
 import time
@@ -52,7 +56,7 @@ def main() -> None:
     reps = bench.parse_reps(args.reps, "-r")
     names = args.queries
     from level2_to_cassandra_spark.catalog import DEFAULT_SF_DIR as sf_dir
-    from level2_to_cassandra_spark.registry import all_queries
+    from level2_to_cassandra_spark.registry import all_queries, clear_plans
 
     spark = bench.open_session("l2c-ab")
     bench.warm_session(spark, sf_dir)
@@ -61,6 +65,12 @@ def main() -> None:
     def variant(b: bool) -> None:
         for mod, attr, a_val, b_val in toggles:
             setattr(mod, attr, b_val if b else a_val)
+        clear_plans()
+
+    def plan(df) -> str:
+        """The optimized plan without its expression ids."""
+        text = df._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+L?", "", text)
 
     for b in (False, True):
         variant(b)
@@ -79,6 +89,8 @@ def main() -> None:
         if not (out[0].exceptAll(out[1]).isEmpty()
                 and out[1].exceptAll(out[0]).isEmpty()):
             differ.append(name)
+        if plan(out[0]) == plan(out[1]):
+            print(f"{name}: A and B plans are the same", file=sys.stderr)
         spark.catalog.clearCache()
     variant(False)
     if differ:

@@ -5,12 +5,14 @@ logging on, then print per-stage executor run time, task count and the
 stage's callsite name, so the expensive operator is identifiable.
 
 Above each stage table, the median split of the query's wall time:
-plan construction (the query function's call, which builds the plan
-in Python on the driver), physical planning (forcing
-``queryExecution().executedPlan()``), execution (the ``noop`` write,
-which also plans its write command around the analyzed plan), and
-the Spark jobs and completed stages per call — a fixed per-query
+plan construction (the query function's call), physical planning
+(forcing ``queryExecution().executedPlan()``), execution (the ``noop``
+write, which also plans its write command around the analyzed plan),
+and the Spark jobs and completed stages per call — a fixed per-query
 driver cost shows up in the first two, task time in the stage table.
+The first call builds the plan in Python and Spark analyzes it; later
+calls are served from the registry's plan memo, so the cold (first)
+construction is printed next to the median served one.
 Below it, the task count of every stage and the size of every
 BroadcastExchange, per call.
 
@@ -86,11 +88,16 @@ def main() -> None:
         print(f"\n=== {name}: walls "
               f"{[round(w, 3) for w in walls]} "
               f"(sum of stage numbers below covers all {reps} reps)")
+        served = [parts[0] * 1e3 for parts in splits[name][1:]]
         print(f"  median split: construct={construct:.0f} ms "
               f"plan={plan:.0f} ms execute={execute:.0f} ms of "
               f"{statistics.median(walls) * 1e3:.0f} ms wall; "
               f"{rec['jobs'] / reps:g} jobs, {len(stages) / reps:g} "
               f"stages per call")
+        print(f"  construct: cold={splits[name][0][0] * 1e3:.0f} ms, "
+              "served median="
+              + (f"{statistics.median(served):.0f} ms" if served
+                 else "n/a (one call)"))
         rows = sorted(stages.values(), key=lambda s: -s["run_ms"])
         tot = sum(s["run_ms"] for s in rows)
         print(f"  total executor run {tot} ms over {len(rows)} stages")
